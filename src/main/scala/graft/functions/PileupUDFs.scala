@@ -1,6 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.functions.udf
 
 import scala.collection.mutable
 
@@ -50,15 +52,23 @@ object PileupUDFs {
       .map { case (k, v) => s"$k -> (" + v.toSeq.sortBy(_._1).map { case (c, n) => s"$c -> $n" }.mkString(", ") + ")" }
       .mkString("; ")
 
+  /** Register the functions into the session, skipping names its
+    * registry already holds — `Graft.ensure` runs on every entry point,
+    * and re-registering logs a `replaced a previously registered
+    * function` warning each time. */
   def register(spark: SparkSession): Unit = {
-    val u = spark.udf
-    u.register("quals_to_map", qualsToMap _)
-    u.register("to_charmap", qualsToCharMap _)
-    u.register("quals_to_cov", qualsToCoverage _)
-    u.register("quals_to_char", (m: Map[Byte, Map[String, Short]]) => byteKeysToChar(m))
-    u.register("alts_to_char", (m: Map[Byte, Short]) => byteKeysToChar(m))
-    u.register("altmap_to_str", altMapToString _)
-    u.register("qualsmap_to_str", qualsMapToString _)
-    u.register("cov_equals", (a: Short, b: Short) => a == b)
+    val registry = spark.sessionState.functionRegistry
+    Seq(
+      "quals_to_map" -> udf(qualsToMap _),
+      "to_charmap" -> udf(qualsToCharMap _),
+      "quals_to_cov" -> udf(qualsToCoverage _),
+      "quals_to_char" -> udf((m: Map[Byte, Map[String, Short]]) => byteKeysToChar(m)),
+      "alts_to_char" -> udf((m: Map[Byte, Short]) => byteKeysToChar(m)),
+      "altmap_to_str" -> udf(altMapToString _),
+      "qualsmap_to_str" -> udf(qualsMapToString _),
+      "cov_equals" -> udf((a: Short, b: Short) => a == b)
+    ).foreach { case (name, f) =>
+      if (!registry.functionExists(FunctionIdentifier(name))) spark.udf.register(name, f)
+    }
   }
 }

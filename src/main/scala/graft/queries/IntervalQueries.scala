@@ -193,8 +193,8 @@ object IntervalQueries {
         .select(col("a_key"), col("b_key"), col("distance"))
     },
     // The both-sides-large nearest regime through the hard gate: phase-1
-    // distributed merge sweep for d*, phase-2 residual interval join for
-    // the ties (no collect anywhere). Same oracle SQL as
+    // distributed endpoint sweep for d*, phase-2 residual interval join
+    // for the ties (no collect anywhere). Same oracle SQL as
     // interval_join_nearest — the physical method must not change results.
     "interval_join_nearest_merge" -> { (s, dir) =>
       Graft.ensure(s)
@@ -221,10 +221,10 @@ object IntervalQueries {
         .select(col("a_key"), col("b_key"), col("distance"))
     },
     // K-nearest through the distributed merge regime (r10 VERDICT #5):
-    // phase-1 endpoint sweep for d*, expanding-window search for the k-th
-    // distinct distance, phase-2 residual interval join — no broadcast of
-    // the right side anywhere. Same oracle SQL as interval_join_nearest_k:
-    // the regime must not change results.
+    // phase-1 endpoint sweep for the k-th distinct distance, phase-2
+    // residual interval join — no broadcast of the right side anywhere.
+    // Same oracle SQL as interval_join_nearest_k: the regime must not
+    // change results.
     "interval_join_nearest_k_merge" -> { (s, dir) =>
       Graft.ensure(s)
       graft.operators.NearestJoinOps

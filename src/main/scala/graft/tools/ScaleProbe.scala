@@ -2,16 +2,17 @@ package graft.tools
 
 import graft.Graft
 import graft.operators.CoverageOps
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.functions._
 
-/** Empirical scale probe for the two flagship families (r15 VERDICT #1):
-  * the featureCounts-shaped interval count join (both physical regimes)
-  * and RLE coverage, at synthetic sizes two orders of magnitude above the
-  * bench fixtures (~50M reads × 1M annotation intervals by default).
+/** Empirical scale probe for the flagship families (r15 VERDICT #1):
+  * the featureCounts-shaped interval count join (both physical regimes),
+  * RLE coverage and the merge-regime nearest-k join, at synthetic sizes
+  * two orders of magnitude above the bench fixtures (~50M reads × 1M
+  * annotation intervals by default).
   *
   * The probe measures what SCALE.md argues:
   *  - **core scaling**: run once per `local[N]` (one JVM per N — the
@@ -40,13 +41,16 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
 
-  /** Stage-aggregated shuffle totals. Registered once per session; the
-    * runner snapshots-and-resets around each probe (stages complete
-    * asynchronously, so the runner sleeps briefly before reading). */
+  /** Stage-aggregated shuffle totals and the job count. Registered once
+    * per session; the runner snapshots-and-resets around each probe
+    * (stages complete asynchronously, so the runner sleeps briefly before
+    * reading). */
   final class StageTotals extends SparkListener {
     private var swBytes = 0L; private var swRecords = 0L
     private var srBytes = 0L; private var srRecords = 0L
     private var stages = 0
+    private var jobs = 0
+    override def onJobStart(ev: SparkListenerJobStart): Unit = synchronized { jobs += 1 }
     override def onStageCompleted(ev: SparkListenerStageCompleted): Unit =
       synchronized {
         val m = ev.stageInfo.taskMetrics
@@ -59,12 +63,12 @@ object ScaleProbe {
         }
       }
     def reset(): Unit = synchronized {
-      swBytes = 0L; swRecords = 0L; srBytes = 0L; srRecords = 0L; stages = 0
+      swBytes = 0L; swRecords = 0L; srBytes = 0L; srRecords = 0L; stages = 0; jobs = 0
     }
     def snapshot(): Map[String, Long] = synchronized {
       Map("shuffle_write_bytes" -> swBytes, "shuffle_write_records" -> swRecords,
         "shuffle_read_bytes" -> srBytes, "shuffle_read_records" -> srRecords,
-        "stages" -> stages.toLong)
+        "stages" -> stages.toLong, "jobs" -> jobs.toLong)
     }
   }
 
@@ -180,8 +184,11 @@ object ScaleProbe {
     ProbeResult(name, sec, rows, sampler.peak >> 20, totals.snapshot(), extra(df))
   }
 
-  /** All three probes on one session. Shared by the spec (small sizes,
-    * asserts) and main (big sizes, reports). */
+  /** All four genomics probes on one session. Shared by the spec (small
+    * sizes, asserts) and main (big sizes, reports). The nearest-k probe
+    * pins the merge regime (endpoint sweep + interval re-join) for every
+    * 20th read against the annotations: its shuffle is O(reads +
+    * annotations) rows, and its job count is fixed. */
   def runAll(spark: SparkSession, totals: StageTotals, nReads: Long,
       nAnnots: Long, genome: Int, parts: Int): Seq[ProbeResult] = {
     Graft.ensure(spark)
@@ -197,7 +204,11 @@ object ScaleProbe {
     val br = runProbe(spark, totals, "count_join_binrange") { () =>
       countJoin(reads, annots, method = "binrange")
     }(countJoinMetrics(_, expectBinRange = true))
-    Seq(cov, bc, br)
+    val nk = runProbe(spark, totals, "nearest_k_merge") { () =>
+      graft.operators.NearestJoinOps.nearestKJoin(
+        reads.filter(col("pos_start") % 20 === 0), annots, 3, "merge")
+    }(_ => Map.empty)
+    Seq(cov, bc, br, nk)
   }
 
   // ---- LLM-pipeline flagship probes (dedup + ANN), sharing the

@@ -20,7 +20,7 @@ class ScaleProbeSpec extends SparkSpec {
     val totals = new ScaleProbe.StageTotals
     spark.sparkContext.addSparkListener(totals)
     try {
-      val Seq(cov, bc, br) =
+      val Seq(cov, bc, br, nk) =
         ScaleProbe.runAll(spark, totals, nReads, nAnnots, genome, parts = 16)
 
       // Coverage: the event sweep shuffles the ±1 points — ~2 per solid
@@ -52,6 +52,14 @@ class ScaleProbeSpec extends SparkSpec {
         (nReads * 2.2).toLong + nAnnots * 4,
         s"bin-range shuffled ${br.shuffle} records for $nReads reads — " +
           "pair rows are hitting the exchange")
+
+      // Merge-regime nearest-k over every 20th read: the endpoint sweep
+      // moves 2 rows per probe and per annotation, the re-join a few
+      // rows each — linear in the inputs, never in candidate pairs.
+      val nProbes = nReads / 20
+      assert(nk.rows > 0)
+      assert(nk.shuffle("shuffle_write_records") <= (nProbes + nAnnots) * 5,
+        s"nearest-k merge shuffled ${nk.shuffle} for $nProbes probes")
     } finally spark.sparkContext.removeSparkListener(totals)
   }
 

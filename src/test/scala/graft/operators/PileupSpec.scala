@@ -53,6 +53,21 @@ class PileupSpec extends SparkSpec {
     assert(rendered.filter(length(col("ch")) =!= 1 || ascii(col("ch")) < 33).isEmpty)
   }
 
+  test("repeated Graft.ensure keeps the registered pileup UDFs in place") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    Graft.ensure(spark)
+    val registry = spark.sessionState.functionRegistry
+    val names = Seq("quals_to_map", "to_charmap", "quals_to_cov", "quals_to_char",
+      "alts_to_char", "altmap_to_str", "qualsmap_to_str", "cov_equals")
+    def builders = names.map(n => registry.lookupFunctionBuilder(FunctionIdentifier(n)))
+    val before = builders
+    assert(before.forall(_.isDefined))
+    Graft.ensure(spark)
+    // Same builder objects: nothing was re-registered (each replacement
+    // logs a warning).
+    assert(builders.zip(before).forall { case (a, b) => a.get eq b.get })
+  }
+
   test("binned TVF equals the Scala binning API") {
     Graft.ensure(spark)
     s1.createOrReplaceTempView("pileup_spec_reads")

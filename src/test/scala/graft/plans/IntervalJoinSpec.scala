@@ -636,9 +636,7 @@ class IntervalJoinSpec extends SparkSpec {
     val nearest = spark.sql("SELECT a_key, b_key, distance FROM nearest_join('njk_l', 'njk_r')")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     assert(k1 === nearest)
-    // An over-budget right side resolves to the expanding-window MERGE
-    // regime (r10 VERDICT #5) with identical results — the TVF is no
-    // longer broadcast-only.
+    // An over-budget right side gives identical results.
     val overBudget = withConf("spark.graft.rangejoin.maxBroadcastBytes", "1") {
       spark.sql("SELECT a_key, b_key, distance FROM nearest_k_join('njk_l', 'njk_r', 3)")
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
@@ -650,8 +648,8 @@ class IntervalJoinSpec extends SparkSpec {
     import graft.SharedSpark.spark.implicits._
     // A contig with fewer than k distinct distances (DENSE_RANK keeps
     // everything), overlap tie sets, duplicate left rows, and a contig
-    // with no rights at all — the expanding-window search must agree with
-    // the broadcast probe on every row.
+    // with no rights at all — the merge sweep must agree with the
+    // broadcast probe on every row.
     val a = randomIntervals(300, 96, "a_key")
       .unionByName(Seq((9001L, "zz", 10, 20), (9001L, "zz", 10, 20),
         (9002L, "empty", 5, 9)).toDF("a_key", "contig", "pos_start", "pos_end"))
@@ -671,12 +669,54 @@ class IntervalJoinSpec extends SparkSpec {
     }
   }
 
+  test("merge k-nearest runs a fixed job count and leaves no persisted RDDs") {
+    // The merge regime's jobs must not depend on the data: a sparse
+    // catalogue (features ~10^5 bases apart) costs exactly the jobs of a
+    // dense one (a few bases apart) — no data-dependent search rounds —
+    // and nothing persisted or checkpointed outlives the call. Counted
+    // with a job-group-scoped listener so concurrent suites can't pollute
+    // the tally.
+    import graft.SharedSpark.spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val rnd = new Random(98)
+    val lefts = Seq.fill(300)(rnd.nextInt(1000000) + 1)
+      .map(s => (s.toLong, "1", s, s + 20)).toDF("a_key", "contig", "pos_start", "pos_end")
+    def catalogue(step: Int) = (0 until 400).map(i => (i.toLong, "1", i * step + 1, i * step + 10))
+      .toDF("b_key", "contig", "pos_start", "pos_end")
+    val group = "nearest-k-merge-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && group == e.properties.getProperty("spark.jobGroup.id"))
+          jobs.incrementAndGet()
+    }
+    def run(right: DataFrame): (Int, Int) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      jobs.set(0)
+      spark.sparkContext.setJobGroup(group, "nearest-k merge job count")
+      val n = try graft.operators.NearestJoinOps.nearestKJoin(lefts, right, 3, "merge")
+          .collect().length
+        finally spark.sparkContext.clearJobGroup()
+      org.apache.spark.sql.graft.TestListeners.drain(spark)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(leaked.isEmpty, s"merge k-nearest left persisted RDDs behind: $leaked")
+      (jobs.get(), n)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (denseJobs, denseRows) = run(catalogue(step = 5))
+      val (sparseJobs, sparseRows) = run(catalogue(step = 100000))
+      assert(denseRows > 0 && sparseRows > 0)
+      assert(sparseJobs === denseJobs,
+        s"sparse catalogue ran $sparseJobs jobs vs $denseJobs on the dense one")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("merge regime carries the -io/-id/-iu/-D variants (equals broadcast probe)") {
     import graft.SharedSpark.spark.implicits._
     // Duplicate left rows, a one-sided contig (every right strictly
-    // downstream — the upstream direction must emit nothing for it and
-    // the window search must still terminate on the candidate-less
-    // triples), and an empty contig.
+    // downstream — the upstream direction must emit nothing for its
+    // candidate-less triples), and an empty contig.
     val a = randomIntervals(250, 31, "a_key")
       .unionByName(Seq((9001L, "zz", 10, 20), (9001L, "zz", 10, 20),
         (9002L, "empty", 5, 9)).toDF("a_key", "contig", "pos_start", "pos_end"))

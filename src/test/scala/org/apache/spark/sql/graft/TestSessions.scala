@@ -32,3 +32,11 @@ object TestSessions {
       .asInstanceOf[org.apache.spark.sql.SparkSession]
   }
 }
+
+/** Test-only access to the context's listener bus: block until every
+  * posted event has reached the listeners, so a listener-side tally
+  * (jobs, stages) is complete when read. */
+object TestListeners {
+  def drain(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
+}
