@@ -53,18 +53,24 @@ object DedupOps {
 
   /** (doc_id, st: array<string>) — distinct word n-shingles per document.
     * Documents with fewer than n words get an empty set. */
-  def shingleSets(docs: DataFrame, n: Int = 3): DataFrame = {
-    val w = split(lower(trim(col("text"))), "\\s+")
+  def shingleSets(docs: DataFrame, n: Int = 3): DataFrame =
     // Test-scale parquet arrives in O(1) input splits; shingling is the
     // heaviest per-row pass in the family, so spread it first (gated —
     // no-op when the input is already parallel).
-    spreadByKey(docs, col("doc_id")).select(col("doc_id"), w.as("w"))
-      .select(col("doc_id"),
+    withShingles(spreadByKey(docs, col("doc_id")), Seq("doc_id"), n)
+
+  /** `keep ++ (st: array<string>)` — the distinct word n-shingles of the
+    * `text` column, shared by [[shingleSets]] and the streaming gate so
+    * both tokenize identically. */
+  private[graft] def withShingles(docs: DataFrame, keep: Seq[String], n: Int = 3): DataFrame = {
+    val w = split(lower(trim(col("text"))), "\\s+")
+    docs.select(keep.map(col) :+ w.as("w"): _*)
+      .select(keep.map(col) :+
         when(size(col("w")) < n, array().cast("array<string>"))
           .otherwise(array_distinct(expr(
             s"transform(sequence(0, size(w) - $n), i -> " +
             (0 until n).map(j => s"w[i + $j]").mkString("concat_ws(' ', ", ", ", ")") + ")")))
-          .as("st"))
+          .as("st"): _*)
   }
 
   /** Murmur-style 64-bit finalizer (public-domain mixing constants). */
@@ -122,17 +128,19 @@ object DedupOps {
     sig
   }
 
-  /** Exact Jaccard of two sorted 64-bit shingle-hash arrays (the verify
-    * merge-scan, shared with the streaming gate). */
-  private[graft] def mergeJaccard(sa: Array[Long], sb: Array[Long]): Double = {
-    var i = 0; var j = 0; var m = 0
-    while (i < sa.length && j < sb.length) {
+  /** Exact Jaccard of two sorted 64-bit shingle-hash sets, `sa` and the
+    * slice `sb[from, until)` (the verify merge-scan, shared with the
+    * streaming gate, whose base index packs every document's hashes into
+    * one array). */
+  private[graft] def mergeJaccard(sa: Array[Long], sb: Array[Long], from: Int, until: Int): Double = {
+    var i = 0; var j = from; var m = 0
+    while (i < sa.length && j < until) {
       val x = sa(i); val y = sb(j)
       if (x == y) { m += 1; i += 1; j += 1 }
       else if (x < y) i += 1
       else j += 1
     }
-    val union = sa.length + sb.length - m
+    val union = sa.length + (until - from) - m
     if (union == 0) 0.0 else m.toDouble / union
   }
 
@@ -239,7 +247,7 @@ object DedupOps {
       .as[(Long, Long, Array[Long], Array[Long])]
       .mapPartitions { it =>
         it.flatMap { case (a, b, sa, sb) =>
-          val jac = mergeJaccard(sa, sb)
+          val jac = mergeJaccard(sa, sb, 0, sb.length)
           if (jac >= threshold) Iterator.single((a, b, jac)) else Iterator.empty
         }
       }

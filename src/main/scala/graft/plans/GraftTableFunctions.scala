@@ -197,9 +197,10 @@ object GraftTableFunctions {
     * k-nearest join ([[graft.operators.NearestJoinOps.nearestKJoin]],
     * `bedtools closest -k` over DISTINCT distances): every left row
     * paired with all same-contig right rows whose distance is among the
-    * k smallest distinct distances, all ties at each. Broadcast-only —
-    * [[GenomicStrategy]] gates the right side's logical stats against
-    * `spark.graft.rangejoin.maxBroadcastBytes` at planning time. */
+    * k smallest distinct distances, all ties at each. The regime is
+    * `auto`, as for `nearest_join`: [[GenomicStrategy]] gates the right
+    * side's logical stats against `spark.graft.rangejoin.maxBroadcastBytes`
+    * at planning time — broadcast when it fits, the merge sweep when not. */
   private val nearestKJoinB: Builder = { args =>
     require(args.length == 3,
       s"nearest_k_join expects (leftView, rightView, k), got ${args.length} args")
@@ -207,7 +208,7 @@ object GraftTableFunctions {
     val k = intVal(args(2), "nearest_k_join k")
     require(k >= 1, s"nearest_k_join needs k >= 1, got $k")
     val (l, r) = nearestSides(str(args.head), str(args(1)))
-    NearestJoinNode(l, r, method = "broadcast", k = k)
+    NearestJoinNode(l, r, method = "auto", k = k)
   }
 
   val registrations: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] =

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{EmbeddingOps, IntervalForest, TextOps}
+import graft.operators.{DedupOps, EmbeddingOps, IntervalForest, TextOps}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
@@ -54,79 +54,59 @@ object StreamingOps {
     * incremental form of [[graft.operators.DedupOps.crossDupPairs]]: a new
     * crawl streaming in is checked AGAINST the accepted corpus.
     *
-    * Shape: the base's MinHash band index and sorted shingle hashes are
-    * computed once with the batch kernels, collected, and broadcast (the
-    * [[annotateStream]] pattern — size-gated below against the same
-    * broadcast budget; for a base corpus beyond it, run the batch
-    * crossDupPairs shuffle join instead). Each stream doc then probes the
-    * broadcast maps in ONE stateless pass: shingle → signature → band
-    * keys → candidate base ids → exact merge-scan Jaccard. Zero streaming
-    * state, no watermark requirement, nothing shuffles — per-doc cost is
-    * O(shingles + candidates·set size) regardless of stream length. Band
-    * keys and shingle hashes are built from the same expressions/kernels
-    * as the batch index, so both sides hash identically. */
+    * Shape: both sides go through one row function, [[gateRows]]
+    * (`text` → band keys + sorted shingle hashes, the batch kernels'
+    * expressions). The base side is collected in ONE Spark job — nothing
+    * is persisted, nothing shuffles — and laid out on the driver as a
+    * flat-array [[GateIndex]] (packed shingle hashes, sorted distinct band
+    * keys with their base ordinals), which is broadcast (the
+    * [[annotateStream]] pattern). The base is size-gated twice against
+    * `spark.graft.rangejoin.maxBroadcastBytes`: its Catalyst estimate
+    * before the collect, and the index's laid-out bytes after it (over
+    * `buildBytesSlack` × the budget fails, the forest join's rule). For a
+    * base corpus beyond it, run the batch crossDupPairs shuffle join
+    * instead. Each stream doc then probes the index in ONE stateless
+    * pass: band keys → binary search → candidate base ordinals → exact
+    * merge-scan Jaccard. Zero streaming state, no watermark requirement —
+    * per-doc cost is O(shingles + candidates·set size) regardless of
+    * stream length. */
   def dedupGateStream(docs: DataFrame, base: DataFrame, threshold: Double = 0.8): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    import graft.operators.DedupOps
     val maxBytes = spark.conf
       .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
+    val advice = s"spark.graft.rangejoin.maxBroadcastBytes=$maxBytes — its shingle index is " +
+      "collected and broadcast. Dedup against a corpus this size with the batch " +
+      "DedupOps.crossDupPairs instead, or raise the conf if the driver can hold it."
     val estimated = base.queryExecution.optimizedPlan.stats.sizeInBytes
     require(estimated <= BigInt(maxBytes),
-      s"dedupGateStream base corpus is estimated at $estimated bytes, over " +
-      s"spark.graft.rangejoin.maxBroadcastBytes=$maxBytes — its shingle index is " +
-      "collected and broadcast. Dedup against a corpus this size with the batch " +
-      "DedupOps.crossDupPairs instead, or raise the conf if the driver can hold it.")
-    // Persist barrier: shR feeds BOTH the exact-shingle map collect and
-    // the minhash/band index collect below — unpersisted, the tokenize +
-    // shingle scan of the base corpus runs twice.
-    val shR = DedupOps.shingleSets(base)
-      .transform(graft.operators.CacheScope.persistTracked)
-    val shMap: Map[Long, Array[Long]] = shR
-      .select(col("doc_id"), array_sort(transform(col("st"), s => xxhash64(s))).as("sth"))
-      .as[(Long, Seq[Long])].collect().map { case (i, s) => (i, s.toArray) }.toMap
-    val bandMap: Map[Long, Array[Long]] = DedupOps.bandIndex(DedupOps.minhashSignatures(shR))
-      .as[(Long, Long)].collect().groupBy(_._2).map { case (k, v) => (k, v.map(_._1)) }
-    val bc = spark.sparkContext.broadcast((bandMap, shMap))
-
-    val shingled = docs
-      .select(col("doc_id"), col("ts"), split(lower(trim(col("text"))), "\\s+").as("w"))
-      .select(col("doc_id"), col("ts"),
-        when(size(col("w")) < 3, array().cast("array<string>"))
-          .otherwise(array_distinct(expr(
-            "transform(sequence(0, size(w) - 3), i -> concat_ws(' ', w[i], w[i+1], w[i+2]))")))
-          .as("st"))
-      .select(col("doc_id"), col("ts"), col("st"),
-        array_sort(transform(col("st"), s => xxhash64(s))).as("sth"))
-    val withBands = shingled
-      .as[(Long, Timestamp, Seq[String], Seq[Long])]
-      .mapPartitions(_.map { case (id, ts, st, sth) =>
-        (id, ts, DedupOps.minhashSig(st).toSeq, sth)
-      })
-      .toDF("doc_id", "ts", "sig", "sth")
-      .select(col("doc_id"), col("ts"), DedupOps.bandKeysArray.as("bands"), col("sth"))
-    withBands.as[(Long, Timestamp, Seq[Long], Seq[Long])]
+      s"dedupGateStream base corpus is estimated at $estimated bytes, over $advice")
+    val index = GateIndex(gateRows(base).as[(Long, Array[Long], Array[Long])].collect())
+    val slack = spark.conf.get("spark.graft.rangejoin.buildBytesSlack", "4.0").toDouble
+    if (index.bytes > maxBytes * slack) throw new IllegalStateException(
+      s"dedupGateStream base index is ${index.bytes} bytes at runtime, over ${slack}x $advice")
+    val bc = spark.sparkContext.broadcast(index)
+    gateRows(docs, "ts").as[(Long, Timestamp, Array[Long], Array[Long])]
       .map { case (id, ts, bands, sth) =>
-        val (bm, sm) = bc.value
-        val a = sth.toArray
-        var bestId = -1L
-        var bestJ = 0.0
-        val seen = scala.collection.mutable.HashSet.empty[Long]
-        bands.foreach { b =>
-          bm.getOrElse(b, Array.empty[Long]).foreach { c =>
-            if (seen.add(c)) {
-              val jac = DedupOps.mergeJaccard(a, sm(c))
-              // Deterministic tie-break: higher jaccard, then lower id.
-              if (jac > bestJ || (jac == bestJ && bestJ > 0 && c < bestId)) {
-                bestJ = jac; bestId = c
-              }
-            }
-          }
-        }
+        val (bestId, bestJ) = bc.value.best(bands, sth)
         val dup = bestJ >= threshold
         (id, ts, dup, if (dup) bestId else -1L, bestJ)
       }
       .toDF("doc_id", "ts", "is_dup", "dup_of", "jaccard")
+  }
+
+  private val minhashSigUdf = udf((st: Seq[String]) => DedupOps.minhashSig(st))
+
+  /** `(doc_id, carry..., bands, sth)` — the gate's per-document row: the
+    * 64 MinHash band keys and the sorted xxhash64 shingle hashes of
+    * `text`, from the batch index's shingle expressions, signature kernel
+    * and band-key expression, so base and stream hash identically. */
+  private def gateRows(docs: DataFrame, carry: String*): DataFrame = {
+    val keep = "doc_id" +: carry
+    DedupOps.withShingles(docs, keep)
+      .select(keep.map(col) ++ Seq(minhashSigUdf(col("st")).as("sig"),
+        array_sort(transform(col("st"), s => xxhash64(s))).as("sth")): _*)
+      .select(keep.map(col) ++ Seq(DedupOps.bandKeysArray.as("bands"), col("sth")): _*)
   }
 
   /** Streaming similarity search: every arriving embedding row

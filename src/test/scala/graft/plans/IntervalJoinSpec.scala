@@ -589,6 +589,12 @@ class IntervalJoinSpec extends SparkSpec {
     }
   }
 
+  private def findNearestExec(p: SparkPlan): Option[NearestJoinExec] = p match {
+    case n: NearestJoinExec => Some(n)
+    case a: AdaptiveSparkPlanExec => findNearestExec(a.executedPlan)
+    case other => other.children.flatMap(findNearestExec(_)).headOption
+  }
+
   test("nearest_join TVF in auto mode resolves the regime from logical stats") {
     // r9 VERDICT #1: NearestJoinExec bridges its children through
     // ColumnBridge.internalFrame, whose LogicalRDD stats default to
@@ -598,19 +604,14 @@ class IntervalJoinSpec extends SparkSpec {
     // `auto` from the logical children's Catalyst stats before planning.
     randomIntervals(200, 91, "a_key").createOrReplaceTempView("nj_auto_l")
     randomIntervals(50, 92, "b_key").createOrReplaceTempView("nj_auto_r")
-    def findExec(p: SparkPlan): Option[NearestJoinExec] = p match {
-      case n: NearestJoinExec => Some(n)
-      case a: AdaptiveSparkPlanExec => findExec(a.executedPlan)
-      case other => other.children.flatMap(findExec(_)).headOption
-    }
     val auto = spark.sql("SELECT * FROM nearest_join('nj_auto_l', 'nj_auto_r')")
-    val exec = findExec(auto.queryExecution.executedPlan)
+    val exec = findNearestExec(auto.queryExecution.executedPlan)
     assert(exec.isDefined, "no NearestJoinExec in the TVF plan")
     assert(exec.get.method === "broadcast",
       "auto with a broadcast-sized right side must resolve to broadcast at the strategy")
     // An explicit method still passes through untouched.
     val forced = spark.sql("SELECT * FROM nearest_join('nj_auto_l', 'nj_auto_r', 'merge')")
-    assert(findExec(forced.queryExecution.executedPlan).get.method === "merge")
+    assert(findNearestExec(forced.queryExecution.executedPlan).get.method === "merge")
     // And the two regimes agree on the result.
     def sorted(df: DataFrame) =
       df.select(col("a_key"), col("b_key"), col("distance"))
@@ -622,25 +623,24 @@ class IntervalJoinSpec extends SparkSpec {
   test("nearest_k_join TVF matches the Scala API and stats-gates at planning") {
     randomIntervals(200, 94, "a_key").createOrReplaceTempView("njk_l")
     randomIntervals(50, 95, "b_key").createOrReplaceTempView("njk_r")
-    val viaSql = spark.sql("SELECT a_key, b_key, distance FROM nearest_k_join('njk_l', 'njk_r', 3)")
+    def rows(df: DataFrame) = df.select(col("a_key"), col("b_key"), col("distance"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    val viaApi = graft.operators.NearestJoinOps
-      .nearestKJoin(spark.table("njk_l"), spark.table("njk_r"), 3)
-      .select(col("a_key"), col("b_key"), col("distance"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    assert(viaSql === viaApi)
+    def tvf(k: Int) = spark.sql(s"SELECT * FROM nearest_k_join('njk_l', 'njk_r', $k)")
+    def method(df: DataFrame) = findNearestExec(df.queryExecution.executedPlan).map(_.method)
+    val (l, r) = (spark.table("njk_l"), spark.table("njk_r"))
+    val viaSql = rows(tvf(3))
+    assert(method(tvf(3)) === Some("broadcast"))
+    assert(viaSql === rows(graft.operators.NearestJoinOps.nearestKJoin(l, r, 3)))
     assert(viaSql.nonEmpty)
     // k = 1 degenerates to the nearest join.
-    val k1 = spark.sql("SELECT a_key, b_key, distance FROM nearest_k_join('njk_l', 'njk_r', 1)")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    val nearest = spark.sql("SELECT a_key, b_key, distance FROM nearest_join('njk_l', 'njk_r')")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    assert(k1 === nearest)
-    // An over-budget right side gives identical results.
-    val overBudget = withConf("spark.graft.rangejoin.maxBroadcastBytes", "1") {
-      spark.sql("SELECT a_key, b_key, distance FROM nearest_k_join('njk_l', 'njk_r', 3)")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    assert(rows(tvf(1)) === rows(spark.sql("SELECT * FROM nearest_join('njk_l', 'njk_r')")))
+    // An over-budget right side plans the merge regime and equals the
+    // Scala API's merge call (and the broadcast answer above).
+    val (overMethod, overBudget) = withConf("spark.graft.rangejoin.maxBroadcastBytes", "1") {
+      (method(tvf(3)), rows(tvf(3)))
     }
+    assert(overMethod === Some("merge"))
+    assert(overBudget === rows(graft.operators.NearestJoinOps.nearestKJoin(l, r, 3, "merge")))
     assert(overBudget === viaSql)
   }
 

@@ -169,6 +169,100 @@ class StreamingSpec extends SparkSpec {
       val e = intercept[IllegalArgumentException](StreamingOps.dedupGateStream(df, base))
       assert(e.getMessage.contains("crossDupPairs"))
     } finally spark.conf.unset("spark.graft.rangejoin.maxBroadcastBytes")
+    // One-shingle docs: a Catalyst estimate under the budget, but every
+    // doc lays out 64 distinct band keys — the runtime index bytes trip.
+    val shortDocs = (0 until 200).map(i => (i.toLong, s"a$i b$i c$i")).toDF("doc_id", "text")
+    val budget = 20000L
+    assert(shortDocs.queryExecution.optimizedPlan.stats.sizeInBytes <= budget)
+    spark.conf.set("spark.graft.rangejoin.maxBroadcastBytes", budget.toString)
+    try {
+      val e = intercept[IllegalStateException](StreamingOps.dedupGateStream(df, shortDocs))
+      assert(e.getMessage.contains("crossDupPairs"))
+    } finally spark.conf.unset("spark.graft.rangejoin.maxBroadcastBytes")
+  }
+
+  /** Distinct word 3-shingles, tokenized as the gate does. */
+  private def shingles(text: String): Set[String] = {
+    val w = text.toLowerCase.trim.split("\\s+", -1)
+    if (w.length < 3) Set.empty else w.sliding(3).map(_.mkString(" ")).toSet
+  }
+
+  test("streaming dedup gate equals a brute-force best match over the whole base") {
+    import graft.SharedSpark.spark.implicits._
+    val rnd = new scala.util.Random(31)
+    def words(n: Int) = Seq.fill(n)(s"w${rnd.nextInt(150)}")
+    val plain = (0 until 80).map(i => (1000L + i, words(15 + rnd.nextInt(25))))
+    val twin = words(30).mkString(" ")
+    val base = plain.map { case (id, ws) => (id, ws.mkString(" ")) } ++ Seq(
+      (2002L, twin), (2001L, twin), // identical docs under two ids
+      (3000L, "two words"), (3001L, ""), (3002L, "a b c"))
+    // Near dups: base docs with 0..5 words replaced, spanning the threshold.
+    val near = plain.take(40).zipWithIndex.map { case ((_, ws), i) =>
+      (10L + i, ws.zipWithIndex.map { case (w, j) =>
+        if (j < 3 * (i % 6) && j % 3 == 0) s"x$j" else w
+      }.mkString(" "))
+    }
+    val stream = near ++ Seq((100L, twin), (101L, "two words"), (102L, ""),
+      (103L, "a b c"), (104L, "nothing here matches any document in the base corpus"))
+    val threshold = 0.6
+    val baseSets = base.map { case (id, t) => (id, shingles(t)) }.sortBy(_._1)
+    val truth = stream.map { case (id, t) =>
+      val s = shingles(t)
+      val (bestId, bestJ) = baseSets.foldLeft((-1L, 0.0)) { case ((bi, bj), (c, bs)) =>
+        val union = (s | bs).size
+        val jac = if (union == 0) 0.0 else (s & bs).size.toDouble / union
+        if (jac > bj) (c, jac) else (bi, bj) // ascending ids: ties keep the lower
+      }
+      id -> (bestJ >= threshold, bestId, bestJ)
+    }.toMap
+    assert(truth(100L) === ((true, 2001L, 1.0)))
+    assert(truth.values.count(_._1) >= 10 && truth.values.count(!_._1) >= 10)
+    for (parts <- Seq("1", "8")) {
+      spark.conf.set("spark.sql.shuffle.partitions", parts)
+      try {
+        val baseDf = base.toDF("doc_id", "text").repartition(col("doc_id"))
+        val docs = stream.map { case (id, t) => (ts(1), id, t) }.toDF("ts", "doc_id", "text")
+          .repartition(col("doc_id"))
+        val got = StreamingOps.dedupGateStream(docs, baseDf, threshold)
+          .collect().map(r => r.getLong(0) -> (r.getBoolean(2), r.getLong(3), r.getDouble(4)))
+          .toMap
+        assert(got.keySet === truth.keySet)
+        truth.foreach { case (id, (dup, bestId, bestJ)) =>
+          if (dup) assert(got(id) === ((dup, bestId, bestJ)), s"doc $id at $parts partitions")
+          else assert(!got(id)._1 && got(id)._2 == -1L, s"doc $id at $parts partitions: ${got(id)}")
+        }
+      } finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+    }
+  }
+
+  test("streaming dedup gate builds its index in one job and persists nothing") {
+    import graft.SharedSpark.spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val base = spark.range(0, 50, 1, 3).select(col("id").as("doc_id"),
+      concat_ws(" ", lit("document"), col("id"), lit("says"), col("id") % 7, lit("and"),
+        col("id") % 5, lit("words")).as("text"))
+    val docs = Seq((ts(1), 1L, "document 3 says 3 and 3 words")).toDF("ts", "doc_id", "text")
+    val group = "dedup-gate-index-jobs"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && group == e.properties.getProperty("spark.jobGroup.id"))
+          jobs.incrementAndGet()
+    }
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    spark.sparkContext.addSparkListener(listener)
+    val gate = try {
+      spark.sparkContext.setJobGroup(group, "dedup gate index build")
+      try StreamingOps.dedupGateStream(docs, base)
+      finally spark.sparkContext.clearJobGroup()
+    } finally {
+      org.apache.spark.sql.graft.TestListeners.drain(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get() === 1, s"index build ran ${jobs.get()} jobs")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"dedup gate left persisted RDDs behind: $leaked")
+    assert(gate.filter(col("is_dup")).select(col("dup_of")).as[Long].collect().toSeq === Seq(3L))
   }
 
   test("streaming curation: dedup + quality gate + split label in one stream") {
