@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
@@ -24,26 +23,7 @@ object Bench {
     val loadBefore = loadAvg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet may be parquet TIMESTAMP(NANOS); the session owns
-      // this conf (Tables.events no longer sets it as a side effect).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Local-bench split tuning: the sf0.1 parquet files are 0.5-11 MB,
-      // so Spark's default split heuristic (128 MB cap, 4 MB open cost,
-      // bytes-per-core floor) gives lineitem only 3 input partitions and
-      // leaves 29 of the 32 cores idle through every scan-bound stage
-      // (the CIGAR/MD walks are CPU-heavy per row). 2 MB/512 KB splits
-      // the same files ~20 ways: measured blocks 2.1->1.4s, pileupMaps
-      // 3.2->2.1s, calls_by 6.4->4.4s at sf0.1. On a real cluster the
-      // defaults are right (files >> cores); these two confs are
-      // benchmark-session tuning, not engine behavior.
-      .config("spark.sql.files.maxPartitionBytes", (2L << 20).toString)
-      .config("spark.sql.files.openCostInBytes", (512L << 10).toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = GraftSession.localBuilder(cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Warm up the session (codegen paths, parquet footers) so the first

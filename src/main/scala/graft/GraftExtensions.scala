@@ -12,7 +12,9 @@ import org.apache.spark.sql.SparkSessionExtensions
   *
   * Use either
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.GraftExtensions`.
+  * `--conf spark.sql.extensions=graft.GraftExtensions`. This is the one
+  * list of the engine's parts: [[Graft.ensure]] installs what it builds
+  * into an existing session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -34,6 +36,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     ext.injectPlannerStrategy(plans.GenomicStrategy(_))
     functions.GraftFunctions.registrations.foreach(ext.injectFunction)
     functions.TextFunctions.registrations.foreach(ext.injectFunction)
+    functions.PileupUDFs.registrations.foreach(ext.injectFunction)
     plans.GraftTableFunctions.registrations.foreach(ext.injectTableFunction)
   }
 }

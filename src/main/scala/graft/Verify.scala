@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,19 +9,7 @@ object Verify {
     // the driver always runs with two args (full suite).
     val nameFilter = args.lift(2).map(_.r)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet may be parquet TIMESTAMP(NANOS); the session owns
-      // this conf (Tables.events no longer sets it as a side effect).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Same local split tuning as Bench (small testdata files otherwise
-      // scan on <=3 of the worker threads; see Bench.scala).
-      .config("spark.sql.files.maxPartitionBytes", (2L << 20).toString)
-      .config("spark.sql.files.openCostInBytes", (512L << 10).toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val builder = GraftSession.localBuilder(cpus.toInt)
     // Robustness-sweep hook (local use only; the driver never sets it):
     // SPARK_GRAFT_CONF="k=v;k2=v2" overrides session confs, e.g.
     // spark.sql.adaptive.enabled=false to prove no plan depends on AQE.

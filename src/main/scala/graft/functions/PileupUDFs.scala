@@ -1,8 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.expressions.UserDefinedFunction
 import org.apache.spark.sql.functions.udf
+import org.apache.spark.sql.graft.ColumnBridge
 
 import scala.collection.mutable
 
@@ -52,23 +54,28 @@ object PileupUDFs {
       .map { case (k, v) => s"$k -> (" + v.toSeq.sortBy(_._1).map { case (c, n) => s"$c -> $n" }.mkString(", ") + ")" }
       .mkString("; ")
 
-  /** Register the functions into the session, skipping names its
-    * registry already holds — `Graft.ensure` runs on every entry point,
-    * and re-registering logs a `replaced a previously registered
-    * function` warning each time. */
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    Seq(
-      "quals_to_map" -> udf(qualsToMap _),
-      "to_charmap" -> udf(qualsToCharMap _),
-      "quals_to_cov" -> udf(qualsToCoverage _),
-      "quals_to_char" -> udf((m: Map[Byte, Map[String, Short]]) => byteKeysToChar(m)),
-      "alts_to_char" -> udf((m: Map[Byte, Short]) => byteKeysToChar(m)),
-      "altmap_to_str" -> udf(altMapToString _),
-      "qualsmap_to_str" -> udf(qualsMapToString _),
-      "cov_equals" -> udf((a: Short, b: Short) => a == b)
-    ).foreach { case (name, f) =>
-      if (!registry.functionExists(FunctionIdentifier(name))) spark.udf.register(name, f)
+  type Builder = Seq[Expression] => Expression
+
+  private val udfs: Seq[(String, Int, UserDefinedFunction)] = Seq(
+    ("quals_to_map", 1, udf(qualsToMap _)),
+    ("to_charmap", 1, udf(qualsToCharMap _)),
+    ("quals_to_cov", 2, udf(qualsToCoverage _)),
+    ("quals_to_char", 1, udf((m: Map[Byte, Map[String, Short]]) => byteKeysToChar(m))),
+    ("alts_to_char", 1, udf((m: Map[Byte, Short]) => byteKeysToChar(m))),
+    ("altmap_to_str", 1, udf(altMapToString _)),
+    ("qualsmap_to_str", 1, udf(qualsMapToString _)),
+    ("cov_equals", 2, udf((a: Short, b: Short) => a == b)))
+
+  /** `(name, info, builder)` triples for [[graft.GraftExtensions]]; the
+    * UDF is named after its function, so result columns render as
+    * `quals_to_map(quals)`. */
+  val registrations: Seq[(FunctionIdentifier, ExpressionInfo, Builder)] =
+    udfs.map { case (n, arity, f) =>
+      val named = f.withName(n)
+      val checked: Builder = { args =>
+        require(args.length == arity, s"$n expects $arity arguments, got ${args.length}")
+        ColumnBridge.catalystExpression(named(args.map(ColumnBridge.column): _*))
+      }
+      (FunctionIdentifier(n), new ExpressionInfo(PileupUDFs.getClass.getName, n), checked)
     }
-  }
 }

@@ -462,7 +462,6 @@ object NearestJoinOps {
   private[graft] def mergeNearestKJoin(left: DataFrame, right: DataFrame, k: Int,
       ignoreOverlaps: Boolean = false, direction: String = "both",
       signed: Boolean = false): DataFrame = {
-    graft.Graft.ensure(left.sparkSession)
     val dk = kthDistances(left, right, k, incOverlaps = !ignoreOverlaps,
       incUp = direction != "downstream", incDown = direction != "upstream")
 

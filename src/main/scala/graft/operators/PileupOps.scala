@@ -156,7 +156,6 @@ object PileupOps {
   def pileupMapsBy(reads: DataFrame, keys: Seq[String],
       qualsBinSize: Option[Int] = None, withQuals: Boolean = true,
       ref: ReferenceSource = MockReference): DataFrame = {
-    graft.Graft.ensure(reads.sparkSession)
     val k = keys.map(col)
     // Counts aggregate in long and only narrow to the reference's Short
     // schema at the output boundary, clamped at Short.MaxValue — at depth
@@ -248,7 +247,6 @@ object PileupOps {
       qualsBinSize: Option[Int] = None, withQuals: Boolean = true,
       ref: ReferenceSource = MockReference): DataFrame = {
     val spark = reads.sparkSession
-    graft.Graft.ensure(spark)
     val k = keys.map(col)
 
     // Level 1: per (keys, contig, pos, base) — count + (when asked)
@@ -294,7 +292,6 @@ object PileupOps {
     * both sides are already hash-partitioned on (no extra exchange). */
   private def withDepthBy(perPos0: DataFrame, reads: DataFrame,
       keys: Seq[String], ref: ReferenceSource): DataFrame = {
-    graft.Graft.ensure(perPos0.sparkSession)
     val idCols = keys ++ Seq("contig", "pos")
     // Persisted once: the slim position frame below (the count-join build
     // side) and the final map-column join both read it — without the

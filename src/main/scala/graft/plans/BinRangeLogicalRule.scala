@@ -96,7 +96,6 @@ case class BinRangeLogicalRule(session: SparkSession) extends Rule[LogicalPlan] 
 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!conf("enabled", "true").toBoolean) return plan
-    if (conf("binrangeImpl", "sql") != "sql") return plan
     plan.transformUp {
       case j @ Join(_, _, Inner, Some(_), _) =>
         ExtractIntervalJoin.unapply(j) match {

@@ -10,16 +10,13 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
   * budget). Both sides explode to the fixed-width genome bins their
   * interval overlaps, join on `(eq keys..., bin)` — a stock equi-join,
   * so Tungsten shuffle serialization, whole-stage codegen, and AQE skew
-  * splitting all apply (the RDD-cogroup implementation, kept for
-  * differential testing under `spark.graft.rangejoin.binrangeImpl=
-  * cogroup`, gets none of these and buffers each (key,bin) group) — with
-  * the widened overlap core and the exactly-once first-intersection-bin
-  * dedup as non-equi join conjuncts evaluated inside the join's
-  * generated loop.
+  * splitting all apply — with the widened overlap core and the
+  * exactly-once first-intersection-bin dedup as non-equi join conjuncts
+  * evaluated inside the join's generated loop.
   *
-  * Semantics identical to [[IntervalForestJoinExec]]'s BinRangeMode
-  * (maxGap widens the build side before binning and overlap/minOverlap
-  * use the widened values, reference
+  * Semantics identical to [[IntervalForestJoinExec]]'s non-inner
+  * BinRangeMode (maxGap widens the build side before binning and
+  * overlap/minOverlap use the widened values, reference
   * `IntervalTreeJoinOptimChromosomeImpl.scala:82-87`): a pair is emitted
   * exactly once because the first bin of its (widened) intersection is
   * provably covered by both sides' replica ranges whenever the join

@@ -60,18 +60,19 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
         conf, joinType, left, right, hint, method)
       val mode = if (binRange) BinRangeMode else BroadcastForestMode
       // Inner at shuffle scale plans as a pure Catalyst equi-join rewrite
-      // (Tungsten shuffle + codegen + AQE skew splitting); the RDD-cogroup
-      // exec stays available under binrangeImpl=cogroup for differential
-      // tests, and still carries the non-inner verdict machinery.
+      // (Tungsten shuffle + codegen + AQE skew splitting);
+      // BinRangeLogicalRule normally applies it first, this branch covers
+      // joins that reach the planner unrewritten. The exec's bin-range
+      // mode carries only the non-inner verdict machinery.
       //
       // Default bin width differs by engine: the rewrite SCANS each
       // (key,bin) group's pairs, so narrow bins win (pairs/bin shrinks
       // faster than replication grows until width ~ interval length);
       // the forest PROBES, so wide bins amortize its build. Measured at
-      // sf0.1 (600k x 20k, 3.55M pairs): rewrite 1.15s @300 vs cogroup
-      // 1.75s @5000 (rewrite @5000: 2.8s — pair-scan blowup).
-      val sqlBinRange = mode == BinRangeMode && joinType == Inner &&
-        conf("binrangeImpl", "sql") == "sql"
+      // sf0.1 (600k x 20k, 3.55M pairs): rewrite 1.15s @300 vs the
+      // forest-per-bin exec 1.75s @5000 (rewrite @5000: 2.8s — pair-scan
+      // blowup).
+      val sqlBinRange = mode == BinRangeMode && joinType == Inner
       val binWidth = conf("binWidth", if (sqlBinRange) "300" else "5000").toInt
       if (sqlBinRange) {
         return planLater(BinRangeRewrite.rewrite(

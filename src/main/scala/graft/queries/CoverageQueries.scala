@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Graft, OracleCtes, Tables}
+import graft.{OracleCtes, Tables}
 import graft.operators.CoverageOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -20,14 +20,12 @@ object CoverageQueries {
   val queries: Map[String, Q] = Map(
     // Event-array coverage → RLE blocks (A1/A2) for one sample.
     "coverage_blocks" -> { (s, dir) =>
-      Graft.ensure(s)
       CoverageOps.blocks(s1Reads(s, dir))
     },
     // GATK-CallableLoci-style depth classification over s1: maximal
     // NO_COVERAGE / LOW_COVERAGE / CALLABLE / EXCESSIVE_COVERAGE runs,
     // all derived from the RLE blocks (output-sized windows only).
     "coverage_callable" -> { (s, dir) =>
-      Graft.ensure(s)
       CoverageOps.callableLoci(s1Reads(s, dir), minDepth = 3, maxDepth = 6)
     },
     // Mergeable coverage (incremental-ingest law): per-sample RLE blocks
@@ -35,7 +33,6 @@ object CoverageQueries {
     // reads — must equal the coverage of both samples together, which is
     // exactly what the oracle computes from the raw reads.
     "coverage_merge" -> { (s, dir) =>
-      Graft.ensure(s)
       val r = Tables.reads(s, dir)
       CoverageOps.mergeCoverage(
         CoverageOps.blocks(r.filter(col("sample_id") === "s1")),
@@ -48,7 +45,6 @@ object CoverageQueries {
     // of targets has NO coverage — the zero-row outer path is part of the
     // oracle check (a dense fixture would never exercise it).
     "coverage_targets" -> { (s, dir) =>
-      Graft.ensure(s)
       CoverageOps.targetCoverage(
         s1Reads(s, dir).filter(col("pos_start") <= 400),
         Tables.targets(s, dir))
@@ -59,7 +55,6 @@ object CoverageQueries {
     // as block lengths, never re-exploded per position, so the histogram
     // costs O(blocks) regardless of genome size.
     "coverage_hist" -> { (s, dir) =>
-      Graft.ensure(s)
       CoverageOps.blocks(s1Reads(s, dir))
         .groupBy(col("coverage"))
         .agg((sum(col("pos_end") - col("pos_start") + 1)).cast("long").as("n_loci"),
@@ -67,37 +62,31 @@ object CoverageQueries {
     },
     // Fixed-length window coverage (W1): mean depth per 500-bp tile.
     "coverage_window" -> { (s, dir) =>
-      Graft.ensure(s)
       CoverageOps.windowed(s1Reads(s, dir), 500)
     },
     // TVF surface (T2): same result through SQL `coverage('view','sample')`.
     "coverage_tvf" -> { (s, dir) =>
-      Graft.ensure(s)
       Tables.reads(s, dir).createOrReplaceTempView("reads_v")
       s.sql("SELECT * FROM coverage('reads_v', 's1')")
     },
     // 1-arg TVF overload: coverage over all samples pooled.
     "coverage_tvf_all" -> { (s, dir) =>
-      Graft.ensure(s)
       Tables.reads(s, dir).createOrReplaceTempView("reads_v")
       s.sql("SELECT * FROM bdg_coverage('reads_v')")
     },
     // 3-arg TVF overload: fixed-window mean depth through SQL.
     "coverage_window_tvf" -> { (s, dir) =>
-      Graft.ensure(s)
       Tables.reads(s, dir).createOrReplaceTempView("reads_v")
       s.sql("SELECT * FROM coverage('reads_v', 's1', 500)")
     },
     // 'bases' target: per-position depth rows through SQL.
     "coverage_bases_tvf" -> { (s, dir) =>
-      Graft.ensure(s)
       Tables.reads(s, dir).createOrReplaceTempView("reads_v")
       s.sql("SELECT * FROM coverage('reads_v', 's1', 'bases')")
     },
     // All samples at once, one scan (beyond-reference: the reference TVF
     // re-scans per sample; composite-key event points do them together).
     "coverage_by_sample" -> { (s, dir) =>
-      Graft.ensure(s)
       CoverageOps.blocksBy(Tables.reads(s, dir), Seq("sample_id"))
     })
 

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Graft, OracleCtes, Tables}
+import graft.{OracleCtes, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -34,7 +34,6 @@ object IntervalQueries {
     // reads (ivA) x targets (ivB) interval join with contig equality, then
     // count per target. Plans as a broadcast interval-forest join (J1).
     "interval_join_count" -> { (s, dir) =>
-      Graft.ensure(s)
       val a = Tables.ivA(s, dir)
       val b = Tables.ivB(s, dir)
       a.join(b, overlaps(a, b))
@@ -46,7 +45,6 @@ object IntervalQueries {
     // when the nullability allows the cross-side sum; correct on the
     // general path either way — the oracle pins both.
     "interval_join_mass" -> { (s, dir) =>
-      Graft.ensure(s)
       val a = Tables.ivA(s, dir)
       val b = Tables.ivB(s, dir)
       a.join(b, overlaps(a, b))
@@ -60,7 +58,6 @@ object IntervalQueries {
     // each rewritten to an exact pushed SUM / non-null COUNT pair divided
     // once in double. No pair materialization.
     "interval_join_avg" -> { (s, dir) =>
-      Graft.ensure(s)
       val a = Tables.ivA(s, dir)
       val b = Tables.ivB(s, dir)
       a.join(b, overlaps(a, b))
@@ -77,7 +74,6 @@ object IntervalQueries {
     // budget. Same oracle SQL as interval_join_mass: the physical regime
     // must not change results.
     "interval_join_count_binrange" -> { (s, dir) =>
-      Graft.ensure(s)
       val a = Tables.ivA(s, dir)
       val b = Tables.ivB(s, dir)
       a.join(b, overlaps(a, b, method = "binrange"))
@@ -87,7 +83,6 @@ object IntervalQueries {
     },
     // Raw pair set — hash-compares every matched (a_key, b_key) pair.
     "interval_join_pairs" -> { (s, dir) =>
-      Graft.ensure(s)
       val a = Tables.ivA(s, dir)
       val b = Tables.ivB(s, dir)
       a.join(b, overlaps(a, b))
@@ -98,7 +93,6 @@ object IntervalQueries {
     // neither side fits a broadcast (the 100 TB shape). Same oracle SQL
     // as interval_join_pairs: the physical method must not change results.
     "interval_join_binrange" -> { (s, dir) =>
-      Graft.ensure(s)
       val a = Tables.ivA(s, dir)
       val b = Tables.ivB(s, dir)
       a.join(b, overlaps(a, b, method = "binrange"))
@@ -108,7 +102,6 @@ object IntervalQueries {
     // `IntervalTreeJoinOptimChromosomeImpl.scala:82-87`). The oracle
     // widens one side by the gap in plain SQL.
     "interval_join_maxgap" -> { (s, dir) =>
-      Graft.ensure(s)
       val a = Tables.ivA(s, dir)
       val b = Tables.ivB(s, dir)
       a.join(b, overlaps(a, b, maxGap = 3))
@@ -119,7 +112,6 @@ object IntervalQueries {
     // annotation or null, semi/anti are the "has / lacks an overlapping
     // feature" filters — all through the same forest exec.
     "interval_join_left" -> { (s, dir) =>
-      Graft.ensure(s)
       val a = Tables.ivA(s, dir)
       val b = Tables.ivB(s, dir)
       a.join(b, overlaps(a, b), "left_outer")
@@ -130,21 +122,18 @@ object IntervalQueries {
     // build rows, unmatched pad from the driver. ivA filtered to a sliver
     // so unmatched rows exist on BOTH sides.
     "interval_join_full" -> { (s, dir) =>
-      Graft.ensure(s)
       val a = Tables.ivA(s, dir).filter(col("pos_start") < 50000)
       val b = Tables.ivB(s, dir)
       a.join(b, overlaps(a, b), "full_outer")
         .select(col("a_key"), col("b_key"))
     },
     "interval_join_semi" -> { (s, dir) =>
-      Graft.ensure(s)
       val a = Tables.ivA(s, dir)
       val b = Tables.ivB(s, dir)
       a.join(b, overlaps(a, b), "left_semi")
         .select(col("a_key"), col("contig"), col("pos_start"))
     },
     "interval_join_anti" -> { (s, dir) =>
-      Graft.ensure(s)
       val a = Tables.ivA(s, dir)
       val b = Tables.ivB(s, dir)
       a.join(b, overlaps(a, b), "left_anti")
@@ -153,7 +142,6 @@ object IntervalQueries {
     // No-equality variant (J2): both sides pre-filtered to one contig, the
     // join condition is the bare interval overlap.
     "interval_join_nochr" -> { (s, dir) =>
-      Graft.ensure(s)
       val a = Tables.ivA(s, dir).filter(col("contig") === "3")
       val b = Tables.ivB(s, dir).filter(col("contig") === "3")
       a.join(b, graft.functions.IntervalOverlaps.of(
@@ -164,7 +152,6 @@ object IntervalQueries {
     // engine's own overlaplength function: forest join + codegen'd filter
     // (the base overlap is plan-pinned; the residual rides on top).
     "interval_join_overlap10" -> { (s, dir) =>
-      Graft.ensure(s)
       val a = Tables.ivA(s, dir).as("a")
       val b = Tables.ivB(s, dir).as("b")
       a.join(b, overlaps(a, b) && expr(
@@ -175,7 +162,6 @@ object IntervalQueries {
     // plan-embedded (no residual, no conf): the forest emission condition
     // applies the length test inside the probe.
     "interval_join_minoverlap" -> { (s, dir) =>
-      Graft.ensure(s)
       val a = Tables.ivA(s, dir)
       val b = Tables.ivB(s, dir)
       a.join(b, overlaps(a, b, minOverlap = 10))
@@ -185,7 +171,6 @@ object IntervalQueries {
     // reference joins on overlap only): every read paired with ALL
     // equally-closest targets on its contig, distance 0 on overlap.
     "interval_join_nearest" -> { (s, dir) =>
-      Graft.ensure(s)
       // Regime as an explicit parameter — no session-conf writes leaking
       // across query lambdas (r8 ADVICE).
       graft.operators.NearestJoinOps
@@ -197,7 +182,6 @@ object IntervalQueries {
     // for the ties (no collect anywhere). Same oracle SQL as
     // interval_join_nearest — the physical method must not change results.
     "interval_join_nearest_merge" -> { (s, dir) =>
-      Graft.ensure(s)
       graft.operators.NearestJoinOps
         .nearestJoin(Tables.ivA(s, dir), Tables.ivB(s, dir), "merge")
         .select(col("a_key"), col("b_key"), col("distance"))
@@ -206,7 +190,6 @@ object IntervalQueries {
     // nearest_join TVF resolves both views through a lazy plan node and
     // runs the same operator — same oracle as interval_join_nearest.
     "interval_join_nearest_tvf" -> { (s, dir) =>
-      Graft.ensure(s)
       Tables.ivA(s, dir).createOrReplaceTempView("iva_nj_v")
       Tables.ivB(s, dir).createOrReplaceTempView("ivb_nj_v")
       s.sql("SELECT a_key, b_key, distance FROM nearest_join('iva_nj_v', 'ivb_nj_v')")
@@ -215,7 +198,6 @@ object IntervalQueries {
     // row against the 3 smallest distinct distances, all ties at each —
     // broadcast-only ranking probe against the catalog side.
     "interval_join_nearest_k" -> { (s, dir) =>
-      Graft.ensure(s)
       graft.operators.NearestJoinOps
         .nearestKJoin(Tables.ivA(s, dir), Tables.ivB(s, dir), 3)
         .select(col("a_key"), col("b_key"), col("distance"))
@@ -226,7 +208,6 @@ object IntervalQueries {
     // Same oracle SQL as interval_join_nearest_k: the regime must not
     // change results.
     "interval_join_nearest_k_merge" -> { (s, dir) =>
-      Graft.ensure(s)
       graft.operators.NearestJoinOps
         .nearestKJoin(Tables.ivA(s, dir), Tables.ivB(s, dir), 3, "merge")
         .select(col("a_key"), col("b_key"), col("distance"))
@@ -235,7 +216,6 @@ object IntervalQueries {
     // nearest distinct distances per left row EXCLUDING overlaps, with
     // reference-genome-signed distance (upstream rights negative).
     "interval_join_nearest_dir" -> { (s, dir) =>
-      Graft.ensure(s)
       graft.operators.NearestJoinOps
         .nearestKJoin(Tables.ivA(s, dir), Tables.ivB(s, dir), 2,
           ignoreOverlaps = true, direction = "both", signed = true)
@@ -246,7 +226,6 @@ object IntervalQueries {
     // semantics too — no broadcast, no driver collect). Same oracle as
     // interval_join_nearest_dir: the regime must not change results.
     "interval_join_nearest_dir_merge" -> { (s, dir) =>
-      Graft.ensure(s)
       graft.operators.NearestJoinOps
         .mergeNearestKJoin(Tables.ivA(s, dir), Tables.ivB(s, dir), 2,
           ignoreOverlaps = true, direction = "both", signed = true)
@@ -257,7 +236,6 @@ object IntervalQueries {
     // the broadcast ranking probe; GenomicStrategy stats-gates it) —
     // same oracle as interval_join_nearest_k.
     "interval_join_nearest_k_tvf" -> { (s, dir) =>
-      Graft.ensure(s)
       Tables.ivA(s, dir).createOrReplaceTempView("iva_njk_v")
       Tables.ivB(s, dir).createOrReplaceTempView("ivb_njk_v")
       s.sql("SELECT a_key, b_key, distance FROM nearest_k_join('iva_njk_v', 'ivb_njk_v', 3)")
@@ -272,17 +250,14 @@ object IntervalQueries {
     // boundary stitching and the subtract gap walk face real multi-run
     // rows.
     "interval_merge" -> { (s, dir) =>
-      Graft.ensure(s)
       graft.operators.RangeSetOps.merge(
         Tables.ivB(s, dir).filter(col("b_key") % 5 === 0))
     },
     "interval_complement" -> { (s, dir) =>
-      Graft.ensure(s)
       graft.operators.RangeSetOps.complement(
         Tables.ivB(s, dir).filter(col("b_key") % 5 === 0))
     },
     "interval_subtract" -> { (s, dir) =>
-      Graft.ensure(s)
       graft.operators.RangeSetOps.subtract(
         Tables.ivA(s, dir).distinct(),
         Tables.ivB(s, dir).filter(col("b_key") % 5 === 0), "a_key")
@@ -292,21 +267,18 @@ object IntervalQueries {
     // keep a row (count 0, null aggregates) — one left-outer forest
     // join + one hash aggregate, exact decimal arithmetic.
     "interval_map" -> { (s, dir) =>
-      Graft.ensure(s)
       graft.operators.RangeSetOps.mapIntervals(
         Tables.ivA(s, dir).distinct(),
         Tables.ivB(s, dir).filter(col("b_key") % 5 === 0),
         "a_key", "b_key")
     },
     "interval_intersect" -> { (s, dir) =>
-      Graft.ensure(s)
       graft.operators.RangeSetOps.intersect(
         Tables.ivA(s, dir), Tables.ivB(s, dir), Seq("a_key"), Seq("b_key"))
     },
     // bedtools-jaccard: one-row genome-wide similarity of the ivA and
     // sparse-ivB base sets (merged first, so every base counts once).
     "interval_set_jaccard" -> { (s, dir) =>
-      Graft.ensure(s)
       graft.operators.RangeSetOps.setJaccard(
         Tables.ivA(s, dir),
         Tables.ivB(s, dir).filter(col("b_key") % 5 === 0))
@@ -314,7 +286,6 @@ object IntervalQueries {
     // bedtools-cluster: every sparse-ivB interval tagged with its
     // overlap-cluster identity (the containing merged run's coordinates).
     "interval_cluster" -> { (s, dir) =>
-      Graft.ensure(s)
       graft.operators.RangeSetOps.cluster(
         Tables.ivB(s, dir).filter(col("b_key") % 5 === 0), Seq("b_key"))
     },
@@ -323,7 +294,6 @@ object IntervalQueries {
     // space; uncovered pieces come out as unmapped rows (liftOver's
     // unmapped file), via the subtract gap walk.
     "interval_liftover" -> { (s, dir) =>
-      Graft.ensure(s)
       val chain = graft.operators.RangeSetOps.merge(
           Tables.ivB(s, dir).filter(col("b_key") % 5 === 0))
         .select(col("contig"), col("pos_start"), col("pos_end"),
@@ -338,7 +308,6 @@ object IntervalQueries {
     // blocks shift as before. Exercises the `-` branch every real UCSC
     // chain user hits.
     "interval_liftover_strand" -> { (s, dir) =>
-      Graft.ensure(s)
       val chain = graft.operators.RangeSetOps.merge(
           Tables.ivB(s, dir).filter(col("b_key") % 5 === 0))
         .select(col("contig"), col("pos_start"), col("pos_end"),
@@ -352,7 +321,6 @@ object IntervalQueries {
     // grange TVF (§2.7): literal one-row genomic interval joined to the
     // targets table, resolved via the injected table function.
     "grange_tvf" -> { (s, dir) =>
-      Graft.ensure(s)
       Tables.targets(s, dir).createOrReplaceTempView("targets_v")
       s.sql("""SELECT t.name, t.pos_start, t.pos_end
               |FROM bdg_grange('2', 100, 600) g
@@ -364,7 +332,6 @@ object IntervalQueries {
     // Scalar interval-function pack (§2.6) over targets; struct results
     // flattened to int columns so the oracle is plain arithmetic.
     "udf_interval_ops" -> { (s, dir) =>
-      Graft.ensure(s)
       Tables.targets(s, dir).createOrReplaceTempView("targets_v")
       s.sql("""SELECT name,
               |  shift(pos_start, pos_end, 7).start  AS sh_start,

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Graft, OracleCtes, Tables}
+import graft.{OracleCtes, Tables}
 import graft.operators.{MockReference, MpileupOps, PileupOps}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -45,23 +45,19 @@ object PileupQueries {
       graft.operators.VariantOps.decomposeAndNormalize(v)
     },
     "pileup_alts" -> { (s, dir) =>
-      Graft.ensure(s)
       PileupOps.pileup(Tables.readsMd(s, dir).filter(col("sample_id") === "s1"))
     },
     "pileup_tvf" -> { (s, dir) =>
-      Graft.ensure(s)
       Tables.readsMd(s, dir).createOrReplaceTempView("reads_v")
       s.sql("SELECT * FROM pileup('reads_v', 's1', true, true)")
     },
     // A5: quality binning — qualities floored to bins of 10.
     "pileup_binned" -> { (s, dir) =>
-      Graft.ensure(s)
       PileupOps.pileup(Tables.readsMd(s, dir).filter(col("sample_id") === "s1"),
         qualsBinSize = Some(10))
     },
     // 5-arg TVF overload: binSize through SQL.
     "pileup_binned_tvf" -> { (s, dir) =>
-      Graft.ensure(s)
       Tables.readsMd(s, dir).createOrReplaceTempView("reads_v")
       s.sql("SELECT * FROM pileup('reads_v', 's1', true, true, 10)")
     },
@@ -70,12 +66,10 @@ object PileupQueries {
     // the quals column; alts=false is depth-only — the coverage-blocks
     // schema.
     "pileup_tvf_noquals" -> { (s, dir) =>
-      Graft.ensure(s)
       Tables.readsMd(s, dir).createOrReplaceTempView("reads_v")
       s.sql("SELECT * FROM pileup('reads_v', 's1', true, false)")
     },
     "pileup_tvf_cov" -> { (s, dir) =>
-      Graft.ensure(s)
       Tables.readsMd(s, dir).createOrReplaceTempView("reads_v")
       s.sql("SELECT * FROM pileup('reads_v', 's1', false, false)")
     },
@@ -83,7 +77,6 @@ object PileupQueries {
     // the map-schema pileup rendered as canonical mpileup text rows.
     // Oracle rebuilds the pileup/qual strings with ordered string_agg.
     "pileup_format_samtools" -> { (s, dir) =>
-      Graft.ensure(s)
       MpileupOps.toMpileup(
         PileupOps.pileupMaps(Tables.readsMd(s, dir).filter(col("sample_id") === "s1")))
     },
@@ -92,7 +85,6 @@ object PileupQueries {
     // engine's own pileup and round-tripped, alts re-rendered for the
     // oracle compare.
     "pileup_format_gatk" -> { (s, dir) =>
-      Graft.ensure(s)
       val maps = PileupOps.pileupMaps(Tables.readsMd(s, dir).filter(col("sample_id") === "s1"))
       MpileupOps.fromGatkPileup(MpileupOps.toMpileup(maps).drop("quals"))
         .select(col("contig"), col("pos"), col("ref"), col("coverage"),
@@ -110,7 +102,6 @@ object PileupQueries {
     // fixture generation, not an operator (spans reach <= 4 loci, so the
     // previous 4 rows bound the anchors).
     "pileup_format_samtools_del" -> { (s, dir) =>
-      Graft.ensure(s)
       import org.apache.spark.sql.expressions.Window
       val txt = MpileupOps.toMpileup(
         PileupOps.pileupMaps(Tables.readsMd(s, dir).filter(col("sample_id") === "s1")))
@@ -138,7 +129,6 @@ object PileupQueries {
     // (`tests/pileup/SamtoolsTestSuite.scala:50-72`). The oracle rebuilds
     // the same renderings with ordered string_agg.
     "pileup_alts_maps" -> { (s, dir) =>
-      Graft.ensure(s)
       PileupOps.pileupMaps(Tables.readsMd(s, dir).filter(col("sample_id") === "s1"))
         .select(col("contig"), col("pos"), col("ref"), col("coverage"), col("count_ref"),
           col("count_nonref"),
@@ -150,7 +140,6 @@ object PileupQueries {
     // samples' alt/qual/depth rows from one scan, one alt exchange, one
     // blocksBy depth pass.
     "pileup_by_sample" -> { (s, dir) =>
-      Graft.ensure(s)
       PileupOps.pileupBy(Tables.readsMd(s, dir), Seq("sample_id"))
     },
     // The multi-sample composition: per-sample calls from one corpus
@@ -158,7 +147,6 @@ object PileupQueries {
     // caller reads only depth + alt counts, so the pileup skips the
     // quality-histogram aggregation level entirely.
     "pileup_calls_by" -> { (s, dir) =>
-      Graft.ensure(s)
       PileupOps.naiveVariantCalls(
         PileupOps.pileupMapsBy(Tables.readsMd(s, dir), Seq("sample_id"),
           withQuals = false),
@@ -167,7 +155,6 @@ object PileupQueries {
     // Naive threshold variant caller on top of the map-typed pileup:
     // alt fraction >= 8% at depth >= 3, exact integer gate.
     "pileup_calls" -> { (s, dir) =>
-      Graft.ensure(s)
       PileupOps.naiveVariantCalls(
         PileupOps.pileupMaps(Tables.readsMd(s, dir).filter(col("sample_id") === "s1"),
           withQuals = false),
@@ -181,7 +168,6 @@ object PileupQueries {
     // stripping, and executor-side caching are what the row compare
     // actually pins.
     "pileup_fasta_ref" -> { (s, dir) =>
-      Graft.ensure(s)
       val fasta = fastaFixture(s, dir)
       PileupOps.pileup(Tables.readsMd(s, dir).filter(col("sample_id") === "s1"),
         withQuals = false, ref = new graft.operators.FastaReference(fasta))

@@ -506,7 +506,6 @@ object SourceQueries {
     // the engine's interval join (the flagship pipeline, fed straight
     // from the annotation file a user actually has).
     "gff_feature_counts" -> { (s, dir) =>
-      graft.Graft.ensure(s)
       val path = gffFixture(s, dir)
       ensureTable(s, "gff_fc", dir)(
         s"""CREATE TABLE gff_fc USING graft.sources.GffSource

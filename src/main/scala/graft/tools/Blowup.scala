@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
@@ -44,12 +44,8 @@ object Blowup {
     val dst = if (args.length > 1) args(1) else "testdata_x10"
     val copies = if (args.length > 2) args(2).toInt else 10
 
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = graft.GraftSession.localBuilder(cpus)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Dumps `.explain("formatted")` of named SparkEntry queries to files —
@@ -8,8 +7,7 @@ import java.nio.file.{Files, Paths}
   * (`plans/r<N>/<query>_{before,after}.txt`).
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <suffix> [names...]
-  * (no names = every query). The session mirrors Bench's confs so the
-  * captured plans are the ones the bench actually runs.
+  * (no names = every query).
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -21,15 +19,7 @@ object PlanDump {
       else graft.SparkEntry.queries.keys.toSeq.sorted
     Files.createDirectories(outDir)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.files.maxPartitionBytes", (2L << 20).toString)
-      .config("spark.sql.files.openCostInBytes", (512L << 10).toString)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = graft.GraftSession.localBuilder(cpus.toInt)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>

@@ -1,6 +1,5 @@
 package graft.tools
 
-import graft.Graft
 import graft.operators.CoverageOps
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -191,7 +190,6 @@ object ScaleProbe {
     * annotations) rows, and its job count is fixed. */
   def runAll(spark: SparkSession, totals: StageTotals, nReads: Long,
       nAnnots: Long, genome: Int, parts: Int): Seq[ProbeResult] = {
-    Graft.ensure(spark)
     val contigs = 4
     val cov = runProbe(spark, totals, "coverage_blocks") { () =>
       CoverageOps.blocks(synthReads(spark, nReads, 1, genome, parts, withCigar = true))
@@ -284,7 +282,6 @@ object ScaleProbe {
   def runPipeline(spark: SparkSession, totals: StageTotals, nDocs: Long,
       nVecs: Long, nQueries: Int, parts: Int,
       dupEvery: Int = 10): Seq[ProbeResult] = {
-    Graft.ensure(spark)
     import org.apache.spark.storage.StorageLevel
     // Materialize inputs OUTSIDE the probe windows: generation is not
     // what these probes measure.
@@ -329,12 +326,7 @@ object ScaleProbe {
     val nAnnots = args.lift(2).map(_.toLong).getOrElse(1000000L)
     val genome = 100000000
     val parts = 128 // FIXED across core counts — scheduling, not splits, varies
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = graft.GraftSession.localBuilder(cores)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val totals = new StageTotals
@@ -366,12 +358,7 @@ object ScaleProbe {
     val nVecs = args.lift(2).map(_.toLong).getOrElse(2000000L)
     val nQueries = args.lift(3).map(_.toInt).getOrElse(1000)
     val parts = 128 // FIXED across core counts, like the genomics probes
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val spark = graft.GraftSession.localBuilder(cores)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val totals = new StageTotals

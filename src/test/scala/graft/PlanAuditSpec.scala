@@ -397,4 +397,42 @@ class PlanAuditSpec extends SparkSpec {
       "ensure-path self nearest-join diverged from the extensions session")
     assert(selfBare.count() >= 50, "degenerate self nearest-join fixture")
   }
+
+  /** Both attachment paths install the same parts, once: every function
+    * and TVF the engine registers resolves, and the planner holds exactly
+    * one of each graft strategy. */
+  private def assertAttachedOnce(s: org.apache.spark.sql.SparkSession): Unit = {
+    val c = s.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val names = Seq(functions.GraftFunctions.registrations, functions.TextFunctions.registrations,
+      functions.PileupUDFs.registrations).flatten.map(_._1)
+    val missing = names.filterNot(c.sessionState.functionRegistry.functionExists) ++
+      plans.GraftTableFunctions.registrations.map(_._1)
+        .filterNot(c.sessionState.tableFunctionRegistry.functionExists)
+    assert(missing.isEmpty, s"unresolved engine functions: $missing")
+    assert(s.sql("SELECT token_count('a b c'), " +
+      "quals_to_cov(CAST(NULL AS MAP<TINYINT, ARRAY<SMALLINT>>), CAST(7 AS SMALLINT))")
+      .head().toSeq.map(_.toString) === Seq("3", "7"))
+    val strategies = c.sessionState.planner.strategies
+    assert(strategies.count(_.isInstanceOf[plans.IntervalJoinStrategy]) === 1 &&
+      strategies.count(_.isInstanceOf[plans.GenomicStrategy]) === 1,
+      s"planner strategies: $strategies")
+  }
+
+  test("Graft.ensure on a bare session attaches every function, TVF and strategy once") {
+    val bare = org.apache.spark.sql.graft.TestSessions.bareSession(spark)
+    Graft.ensure(bare)
+    Graft.ensure(bare)
+    assertAttachedOnce(bare)
+  }
+
+  test("an extensions-built session has the pileup UDFs and Graft.ensure adds nothing") {
+    val fresh = spark.newSession()
+    assert(fresh.sql("SELECT quals_to_map(map(CAST(66 AS TINYINT), " +
+      "array(CAST(0 AS SMALLINT), CAST(2 AS SMALLINT))))").head().getMap[Any, Any](0)
+      .size === 1)
+    Graft.ensure(fresh)
+    assertAttachedOnce(fresh)
+    val c = fresh.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    assert(c.experimental.extraStrategies.isEmpty && c.experimental.extraOptimizations.isEmpty)
+  }
 }

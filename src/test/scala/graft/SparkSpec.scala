@@ -3,20 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared local session for all suites (same confs as production
-  * entry points, extensions attached). */
+/** One shared local session for all suites, built like the tools'
+  * sessions ([[GraftSession.localBuilder]]). */
 object SharedSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.localBuilder(4)
       .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // events.parquet may be parquet TIMESTAMP(NANOS); the session owns
-      // this conf (Tables.events no longer sets it as a side effect).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

@@ -293,21 +293,36 @@ class IntervalJoinSpec extends SparkSpec {
     assert(run("true") === run("false"))
   }
 
-  test("bin-range SQL rewrite and cogroup exec agree (incl. gap/overlap confs)") {
+  test("bin-range SQL rewrite matches brute force (incl. gap/overlap confs)") {
     val a = randomIntervals(300, 77, "a_key")
     val b = randomIntervals(60, 78, "b_key")
+    def rows(df: DataFrame) = df.collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3)))
+    val (as, bs) = (rows(a), rows(b))
     for ((ov, gap) <- Seq((1, 0), (10, 0), (1, 25))) {
-      val run = (impl: String) =>
-        withConf("spark.graft.rangejoin.method", "binrange") {
-          withConf("spark.graft.rangejoin.binrangeImpl", impl) {
-            withConf("spark.graft.rangejoin.minOverlap", ov.toString) {
-              withConf("spark.graft.rangejoin.maxGap", gap.toString) {
-                collectSorted(joined(a, b))
-              }
+      // maxGap widens the build side (b) before both the overlap and the
+      // minOverlap test.
+      val want = (for {
+        (ak, ac, aStart, aEnd) <- as
+        (bk, bc, bStart0, bEnd0) <- bs
+        (bStart, bEnd) = (bStart0 - gap, bEnd0 + gap)
+        if ac == bc && bEnd >= aStart && bStart <= aEnd &&
+          math.min(aEnd, bEnd) - math.max(aStart, bStart) + 1 >= ov
+      } yield (ak, bk)).sorted
+      val got = withConf("spark.graft.rangejoin.method", "binrange") {
+        withConf("spark.graft.rangejoin.buildSide", "right") {
+          withConf("spark.graft.rangejoin.minOverlap", ov.toString) {
+            withConf("spark.graft.rangejoin.maxGap", gap.toString) {
+              val df = joined(a, b)
+              assert(df.queryExecution.optimizedPlan.toString.contains(BinRangeRewrite.BinAttr),
+                s"join was not rewritten to bins:\n${df.queryExecution.optimizedPlan}")
+              collectSorted(df).map(r => (r.getLong(0), r.getLong(1)))
             }
           }
         }
-      assert(run("sql") === run("cogroup"), s"minOverlap=$ov maxGap=$gap")
+      }
+      assert(want.nonEmpty)
+      assert(got === want, s"minOverlap=$ov maxGap=$gap")
     }
   }
 
