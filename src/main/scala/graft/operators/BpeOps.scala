@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.plans.BroadcastBudget
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -109,9 +111,10 @@ object BpeOps {
       val st = wfP.agg(count(lit(1)), sum(length(col("word")))).head
       val rows = st.getLong(0)
       val chars = if (st.isNullAt(1)) 0L else st.getLong(1)
-      // Char budget: the collected table must stay model-sized on the
-      // driver even for degenerate "words" (minified blobs).
-      if (rows <= localThreshold && chars <= (256L << 20)) {
+      // The collected table must stay model-sized on the driver even for
+      // degenerate "words" (minified blobs): its chars (a byte each at
+      // least) are held to the broadcast budget.
+      if (rows <= localThreshold && BroadcastBudget.fits(chars, spark.sessionState.conf)) {
         val all = wfP.as[(String, Long)].collect()
         wfP.unpersist(blocking = false)
         return spark.createDataFrame(driverTrain(all, numMerges, batch, minFreq))

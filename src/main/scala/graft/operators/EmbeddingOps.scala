@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.plans.BroadcastBudget
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -45,22 +47,15 @@ object EmbeddingOps {
   private def embProjection(corpus: DataFrame): DataFrame =
     corpus.select(col("vec_id"), asDouble(col("embedding")).as("emb"))
 
-  /** Loud driver-protection gate for every path that collects or
-    * broadcasts a caller-supplied query frame (the same pattern
+  /** Every path that collects or broadcasts a caller-supplied query frame
+    * refuses an over-budget one with this advice (the same gate
     * [[graft.streaming.StreamingOps.similarStream]] applies to its static
     * corpus): a "queries" frame is small by contract, but a caller passing
     * a large one would otherwise OOM the driver with no actionable
     * message. */
-  private def requireBroadcastable(df: DataFrame, what: String): Unit = {
-    val maxBytes = df.sparkSession.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    val estimated = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    require(estimated <= BigInt(maxBytes),
-      s"$what is estimated at $estimated bytes, over " +
-      s"spark.graft.rangejoin.maxBroadcastBytes=$maxBytes — it is collected and " +
-      "shipped to every task. The query side must be the small side: swap the " +
-      "arguments, pre-filter, or raise the conf if the driver can hold it.")
-  }
+  private val QuerySetAdvice = "it is collected and shipped to every task. The query " +
+    "side must be the small side: swap the arguments, pre-filter, or raise the conf if " +
+    "the driver can hold it."
 
   private def rerankTopK(candidates: DataFrame, corpus: DataFrame,
       queries: DataFrame, k: Int): DataFrame = {
@@ -82,7 +77,7 @@ object EmbeddingOps {
     * Output (vec_id, rank, neighbor_id) — ranks only, deterministic
     * tie-break on neighbor id. */
   def exactTopK(corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    requireBroadcastable(queries, "exactTopK query set")
+    BroadcastBudget.requireFits(queries, "exactTopK query set", QuerySetAdvice)
     val q = broadcast(queries.select(col("vec_id").as("q_id"), asDouble(col("embedding")).as("q_emb")))
     val c = corpus.select(col("vec_id").as("c_id"), asDouble(col("embedding")).as("c_emb"))
     val sims = c.join(q, col("q_id") =!= col("c_id"))
@@ -633,7 +628,7 @@ object EmbeddingOps {
     * broadcast side is `queries × m × codes` doubles (tiny). */
   def pqTopK(corpus: DataFrame, queries: DataFrame, k: Int, m: Int = 16,
       codes: Int = 32, iters: Int = 3, rerankFactor: Int = 8): DataFrame = {
-    requireBroadcastable(queries, "pqTopK query set")
+    BroadcastBudget.requireFits(queries, "pqTopK query set", QuerySetAdvice)
     // ONE persisted projection feeds both training and encoding.
     val ce = embProjection(corpus).transform(CacheScope.persistTracked)
     val books = pqCodebooksOn(ce, m, codes, iters)
@@ -651,7 +646,7 @@ object EmbeddingOps {
     // The serve entry is reachable directly (similarityTopKPqServed), so
     // it needs its own driver-protection gate — pqAdcFrame collects the
     // query frame (r15 review).
-    requireBroadcastable(queries, "pqTopKWith query set")
+    BroadcastBudget.requireFits(queries, "pqTopKWith query set", QuerySetAdvice)
     val qdf = broadcast(pqAdcFrame(queries, books))
     // Approximate score: the codes-indexed lookups folded in subspace
     // order (zip_with keeps positions; aggregate is a sequential left
@@ -764,7 +759,7 @@ object EmbeddingOps {
       books: Array[Array[Array[Double]]], encoded: DataFrame,
       corpus: DataFrame, queries: DataFrame, k: Int,
       nProbe: Int = 6, rerankFactor: Int = 8): DataFrame = {
-    requireBroadcastable(queries, "ivfPqTopK query set")
+    BroadcastBudget.requireFits(queries, "ivfPqTopK query set", QuerySetAdvice)
     val probes = assignLists(
       queries.select(col("vec_id"), asDouble(col("embedding")).as("emb")),
       "q_id", centroids, nProbe)
@@ -840,7 +835,7 @@ object EmbeddingOps {
       rerankFactor: Int = 4): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    requireBroadcastable(queries, "ivfQuantizedTopKWith query set")
+    BroadcastBudget.requireFits(queries, "ivfQuantizedTopKWith query set", QuerySetAdvice)
     val probes = assignLists(
       queries.select(col("vec_id"), asDouble(col("embedding")).as("emb")),
       "q_id", centroids, nProbe)
@@ -895,7 +890,7 @@ object EmbeddingOps {
       rerankFactor: Int = 4): DataFrame = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    requireBroadcastable(queries, "quantizedTopK query set")
+    BroadcastBudget.requireFits(queries, "quantizedTopK query set", QuerySetAdvice)
     val qq: Array[(Long, Array[Byte])] = quantize(queries)
       .select(col("vec_id"), col("qemb")).as[(Long, Array[Byte])].collect()
     val bc = spark.sparkContext.broadcast(qq)

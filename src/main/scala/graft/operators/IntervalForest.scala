@@ -56,45 +56,6 @@ final class IntervalForest[T] private (
     buf.toSeq
   }
 
-  /** Genomic distance from `[qs, qe]` to the closest stored interval:
-    * 0 when some interval overlaps, else the smallest positive gap
-    * (`bedtools closest` semantics). -1 on an empty forest. Pure
-    * O(log n): with starts sorted, an overlap exists iff the max end
-    * among `starts <= qe` reaches `qs`; otherwise every such interval
-    * lies fully left (nearest gap `qs - maxEnd`) and the nearest right
-    * interval is the first `start > qe`. */
-  def nearestDistance(qs: Int, qe: Int): Int = {
-    val n = starts.length
-    if (n == 0) return -1
-    val j = countStartsAtMost(qe)
-    if (j > 0 && prefixMaxEnds(j - 1) >= qs) return 0
-    val left = if (j > 0) qs - prefixMaxEnds(j - 1) else Int.MaxValue
-    val right = if (j < n) starts(j) - qe else Int.MaxValue
-    math.min(left, right)
-  }
-
-  /** Invoke `f(storedStart, storedEnd, value)` for EVERY stored interval
-    * at the minimum distance from `[qs, qe]` (all ties), and return that
-    * distance (-1 and no calls on an empty forest). Tied intervals on
-    * both sides of a gap are all emitted; the two point probes cannot
-    * double-report (an interval with `end == qs-d` and `start == qe+d`
-    * would need start > end). */
-  def foreachNearest(qs: Int, qe: Int)(f: (Int, Int, T) => Unit): Int = {
-    val d = nearestDistance(qs, qe)
-    if (d < 0) return d
-    if (d == 0) {
-      foreachOverlap(qs, qe)(f)
-    } else {
-      // Nearest-left intervals all have end == qs - d, hence contain that
-      // point; nearest-right all have start == qe + d, likewise.
-      val lp = qs - d
-      val rp = qe + d
-      foreachOverlap(lp, lp)((s, e, v) => if (e == lp) f(s, e, v))
-      foreachOverlap(rp, rp)((s, e, v) => if (s == rp) f(s, e, v))
-    }
-    d
-  }
-
   /** Invoke `f(storedStart, storedEnd, value, distance)` for every stored
     * interval whose distance to `[qs, qe]` is among the `k` smallest
     * DISTINCT distances present (`bedtools closest -k` over distinct

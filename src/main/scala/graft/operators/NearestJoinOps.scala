@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.plans.BroadcastBudget
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
@@ -92,7 +94,7 @@ object NearestJoinOps {
   def nearestKJoin(left: DataFrame, right: DataFrame, k: Int, method: String): DataFrame = {
     require(k >= 1, s"nearestKJoin needs k >= 1, got $k")
     method match {
-      case "broadcast" => nearestKJoinUngated(left, right, k)
+      case "broadcast" => nearestKJoinUngated(left, right, k, enforceBuildBudget = false)
       case "merge" => mergeNearestKJoin(left, right, k)
       case "auto" => nearestKJoin(left, right, k)
       case other => throw new IllegalArgumentException(
@@ -117,11 +119,7 @@ object NearestJoinOps {
     require(k >= 1, s"nearestKJoin needs k >= 1, got $k")
     require(Set("both", "upstream", "downstream")(direction),
       s"nearestKJoin direction must be both|upstream|downstream, got '$direction'")
-    val spark = left.sparkSession
-    val maxBytes = spark.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    val estimated = right.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (estimated <= BigInt(maxBytes))
+    if (BroadcastBudget.fits(right))
       return nearestKJoinUngated(left, right, k, ignoreOverlaps, direction, signed)
     // Over budget: the distributed merge regime carries the
     // direction/overlap/sign flags too (r14 VERDICT #6) — big
@@ -135,11 +133,13 @@ object NearestJoinOps {
     * `defaultSizeInBytes` stats (the gate already ran in
     * [[graft.plans.GenomicStrategy]] against the LOGICAL children's
     * stats; re-checking the bridge's Long.MaxValue default here would
-    * reject every TVF call). */
+    * reject every TVF call). The collected right side is held to the
+    * [[BroadcastBudget]]'s runtime guard unless the caller pinned the
+    * broadcast (`enforceBuildBudget = false`). */
   private[graft] def nearestKJoinUngated(
       left: DataFrame, right: DataFrame, k: Int,
       ignoreOverlaps: Boolean = false, direction: String = "both",
-      signed: Boolean = false): DataFrame = {
+      signed: Boolean = false, enforceBuildBudget: Boolean = true): DataFrame = {
     val incOverlaps = !ignoreOverlaps
     val incUp = direction != "downstream"
     val incDown = direction != "upstream"
@@ -150,6 +150,10 @@ object NearestJoinOps {
     val rEnd = rSchema.fieldIndex("pos_end")
     val rRows: Array[InternalRow] =
       right.queryExecution.toRdd.mapPartitions(_.map(_.copy())).collect()
+    if (enforceBuildBudget) BroadcastBudget.checkCollected(BroadcastBudget.rowBytes(rRows),
+      "nearest-join right side", "raise the budget if the cluster can hold the broadcast, " +
+        "or pin the method: merge to take the distributed sweep, broadcast to take " +
+        "responsibility.", spark.sessionState.conf)
     val bc = spark.sparkContext.broadcast(
       IntervalForest.forest[String, Int](rRows.iterator.zipWithIndex.collect {
         case (r, i) if !r.isNullAt(rContig) && !r.isNullAt(rStart) && !r.isNullAt(rEnd) =>

@@ -1,5 +1,7 @@
 package graft.operators
 
+import graft.plans.BroadcastBudget
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -488,11 +490,8 @@ object TextOps {
       else math.max(evalGrams.count(), 1L)
     // ~1.2 MB per 1M grams at 1% fpp; refuse sketches that would not fit
     // the same broadcast budget the exact path is held to.
-    val maxBytes = spark.conf
-      .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    require(expected * 10 / 8 <= maxBytes,
-      s"eval gram cardinality $expected needs a Bloom sketch over " +
-        s"spark.graft.rangejoin.maxBroadcastBytes=$maxBytes; shard the eval set")
+    BroadcastBudget.requireFits(expected * 10 / 8, s"the Bloom sketch of $expected eval grams",
+      "shard the eval set.", spark.sessionState.conf)
     val bloom = evalGrams.stat.bloomFilter("gram", expected, fpp)
     val bloomB = spark.sparkContext.broadcast(bloom)
     val mightContain = udf((g: String) => bloomB.value.mightContainString(g))

@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, JoinHint, LogicalPlan, BROADCAST}
 import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.internal.SQLConf
 
 /** The build-side + broadcast-vs-bin-range decision for a range join —
   * ONE implementation shared by [[BinRangeLogicalRule]] (the logical
@@ -55,12 +56,11 @@ object RangeJoinChoice {
     }
     val buildSize = if (buildLeft) left.stats.sizeInBytes else right.stats.sizeInBytes
     val buildHinted = if (buildLeft) hintLeft else hintRight
-    val maxBroadcast = conf("maxBroadcastBytes", (256L << 20).toString).toLong
     val binRange = method match {
       case "binrange" | "twophase" => true
       case "broadcast" => false
       case _ if buildHinted => false
-      case _ => buildSize > maxBroadcast
+      case _ => !BroadcastBudget.fits(buildSize, SQLConf.get)
     }
     (buildLeft, binRange)
   }
@@ -83,7 +83,7 @@ object RangeJoinChoice {
   * for any stock equi-join (pinned by IntervalJoinSpec's AQE skew test).
   *
   * The decision mirrors [[IntervalJoinStrategy]]'s Inner-join mode
-  * selection (method/buildSide/maxBroadcastBytes confs, broadcast hints,
+  * selection (method/buildSide confs, the [[BroadcastBudget]], broadcast hints,
   * Catalyst stats); the strategy keeps its own `sqlBinRange` branch as a
   * fallback for sessions that register the strategy without this rule,
   * and refuses joins this rule already rewrote via

@@ -164,7 +164,7 @@ case class NearestJoinNode(left: LogicalPlan, right: LogicalPlan, method: String
 }
 
 case class NearestJoinExec(override val output: Seq[Attribute], method: String,
-    k: Int, left: SparkPlan, right: SparkPlan)
+    k: Int, left: SparkPlan, right: SparkPlan, enforceBuildBudget: Boolean)
     extends org.apache.spark.sql.execution.BinaryExecNode {
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
@@ -179,7 +179,8 @@ case class NearestJoinExec(override val output: Seq[Attribute], method: String,
     // pick merge).
     val out =
       if (method == "merge") graft.operators.NearestJoinOps.mergeNearestKJoin(l, r, k)
-      else graft.operators.NearestJoinOps.nearestKJoinUngated(l, r, k)
+      else graft.operators.NearestJoinOps.nearestKJoinUngated(l, r, k,
+        enforceBuildBudget = enforceBuildBudget)
     out.queryExecution.toRdd
   }
   override protected def withNewChildrenInternal(
@@ -259,16 +260,16 @@ case class GenomicStrategy(session: SparkSession) extends SparkStrategy {
       // an `auto` left for the operator to resolve would never see the
       // right side fit the broadcast budget and silently always pick the
       // merge regime (r9 VERDICT #1 — the SQL surface lost the fast path).
-      val maxBytes = session.conf
-        .get("spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-      val fits = r.stats.sizeInBytes <= BigInt(maxBytes)
       // Over budget resolves to the merge regime for every k (r10 VERDICT
       // #5) — the TVF surface is the base k-nearest, which the merge
-      // regime covers fully.
+      // regime covers fully. A broadcast the estimate chose keeps the
+      // runtime guard; a pinned method stands it down.
       val resolved = if (method == "auto") {
-        if (fits) "broadcast" else "merge"
+        if (BroadcastBudget.fits(r.stats.sizeInBytes, session.sessionState.conf)) "broadcast"
+        else "merge"
       } else method
-      NearestJoinExec(n.output, resolved, k, planLater(l), planLater(r)) :: Nil
+      NearestJoinExec(n.output, resolved, k, planLater(l), planLater(r),
+        enforceBuildBudget = method == "auto") :: Nil
     case n: IntervalCountJoinNode =>
       if (n.binRange) {
         // Shuffle regime (build side over the broadcast budget, or the

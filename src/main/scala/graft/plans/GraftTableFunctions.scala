@@ -199,8 +199,8 @@ object GraftTableFunctions {
     * paired with all same-contig right rows whose distance is among the
     * k smallest distinct distances, all ties at each. The regime is
     * `auto`, as for `nearest_join`: [[GenomicStrategy]] gates the right
-    * side's logical stats against `spark.graft.rangejoin.maxBroadcastBytes`
-    * at planning time — broadcast when it fits, the merge sweep when not. */
+    * side's logical stats against the [[BroadcastBudget]] at planning
+    * time — broadcast when it fits, the merge sweep when not. */
   private val nearestKJoinB: Builder = { args =>
     require(args.length == 3,
       s"nearest_k_join expects (leftView, rightView, k), got ${args.length} args")

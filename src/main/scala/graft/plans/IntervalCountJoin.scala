@@ -14,6 +14,8 @@ import org.apache.spark.sql.types.LongType
 
 import scala.collection.mutable
 
+import CountRankIndex.{rankLe, rankLt}
+
 /** Count-only aggregate pushdown into the interval join.
   *
   * `SELECT key, COUNT(*) FROM a JOIN b ON overlap GROUP BY key` is the
@@ -457,48 +459,19 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
     val pairCountMetric = longMetric("pairCount")
     val invertedDropped = longMetric("invertedDropped")
 
-    // Build-side collect: same row shape as IntervalForestJoinExec's
-    // forest build, with an Int ordinal as the forest value so the count
-    // array indexes it directly.
-    val collected = buildPlan.execute().mapPartitions { it =>
-      val keyProj = UnsafeProjection.create(bEqsB)
-      val ivProj = UnsafeProjection.create(bIvB)
-      it.flatMap { row =>
-        val iv = ivProj(row)
-        // Inverted (start > end) rows are dropped: the rank identity
-        // assumes well-formed intervals, and a malformed build row would
-        // silently skew counts instead of matching the general path's
-        // per-pair predicate evaluation. Counted in invertedDropped so
-        // the contract breach is visible.
-        if (iv.isNullAt(0) || iv.isNullAt(1) || iv.getInt(0) > iv.getInt(1)) {
-          if (!iv.isNullAt(0) && !iv.isNullAt(1)) invertedDropped += 1
-          Iterator.empty
-        } else {
-          val copy = row.copy()
-          val key = keyProj(copy)
-          if (nEqs > 0 && key.anyNull) Iterator.empty
-          else Iterator.single((key.copy(), iv.getInt(0), iv.getInt(1), copy))
-        }
-      }
-    }.collect()
+    // Build-side collect, the forest join's; a row's position in it is
+    // the ordinal the count arrays index. Inverted (start > end) rows are
+    // dropped: the rank identity assumes well-formed intervals, and a
+    // malformed build row would silently skew counts instead of matching
+    // the general path's per-pair predicate evaluation. Counted in
+    // invertedDropped so the contract breach is visible.
+    val (collected, bytes) = BroadcastBudget.collectKeyed(
+      buildPlan, bEqsB, bIvB, dropInverted = Some(invertedDropped))
     longMetric("buildRows") += collected.length
-    if (enforceBuildBudget) {
-      // Runtime stats-lie guard, same contract as IntervalForestJoinExec.
-      val actualBytes = collected.foldLeft(0L) { case (acc, (k, _, _, r)) =>
-        acc + k.getSizeInBytes.toLong + 16L + (r match {
-          case u: UnsafeRow => u.getSizeInBytes.toLong
-          case _ => 64L
-        })
-      }
-      val budget = conf.getConfString(
-        "spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-      val slack = conf.getConfString("spark.graft.rangejoin.buildBytesSlack", "4.0").toDouble
-      if (actualBytes > budget * slack) throw new IllegalStateException(
-        s"interval-count-join build side is $actualBytes bytes at runtime, over " +
-        s"${slack}x the spark.graft.rangejoin.maxBroadcastBytes budget ($budget). " +
-        "Raise the budget, broadcast()-hint the side to take responsibility, or " +
-        "set spark.graft.rangejoin.countPushdown=false to take the general path.")
-    }
+    if (enforceBuildBudget) BroadcastBudget.checkCollected(bytes,
+      "interval-count-join build side", "raise the budget, broadcast()-hint the side to " +
+        "take responsibility, or set spark.graft.rangejoin.countPushdown=false to take " +
+        "the general path.", conf)
     val rowsArr: Array[InternalRow] = collected.map(_._4)
     // Cross-side SUM plumbing: the exprs live on whichever side the
     // counted side is NOT.
@@ -615,8 +588,8 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
             val key = keyProj(srow)
             if (nEqs == 0 || !key.anyNull) idxMap.get(key).foreach { idx =>
               val h = hists.getOrElseUpdate(key.copy(), new Hists(idx.starts.length))
-              val j = upperBound(idx.starts, iv.getInt(1))
-              val p = lowerBound(idx.endsSorted, iv.getInt(0))
+              val j = rankLe(idx.starts, iv.getInt(1))
+              val p = rankLt(idx.endsSorted, iv.getInt(0))
               h.hA(j) += 1L
               h.hB(p) += 1L
               if (nSums > 0) {
@@ -680,8 +653,8 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
             else idxMap.get(key) match {
               case None => Iterator.empty
               case Some(idx) =>
-                val j = upperBound(idx.starts, iv.getInt(1))
-                val p = lowerBound(idx.endsSorted, iv.getInt(0))
+                val j = rankLe(idx.starts, iv.getInt(1))
+                val p = rankLt(idx.endsSorted, iv.getInt(0))
                 val c = (j - p).toLong
                 // <= 0 (not == 0): a degenerate input slipping past the
                 // well-formedness skips must never emit a negative count.
@@ -703,20 +676,6 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
         }
       }
     }
-  }
-
-  /** #elements <= q in an ascending array. */
-  private def upperBound(a: Array[Int], q: Int): Int = {
-    var lo = 0; var hi = a.length
-    while (lo < hi) { val m = (lo + hi) >>> 1; if (a(m) <= q) lo = m + 1 else hi = m }
-    lo
-  }
-
-  /** #elements < q in an ascending array. */
-  private def lowerBound(a: Array[Int], q: Int): Int = {
-    var lo = 0; var hi = a.length
-    while (lo < hi) { val m = (lo + hi) >>> 1; if (a(m) < q) lo = m + 1 else hi = m }
-    lo
   }
 }
 
@@ -777,20 +736,6 @@ case class IntervalBinCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
 
   private def bound(e: Expression, p: SparkPlan): Expression =
     BindReferences.bindReference(e, p.output)
-
-  /** #elements <= q in an ascending Int array (Long query: bin bounds). */
-  private def ub(a: Array[Int], q: Long): Int = {
-    var lo = 0; var hi = a.length
-    while (lo < hi) { val m = (lo + hi) >>> 1; if (a(m) <= q) lo = m + 1 else hi = m }
-    lo
-  }
-
-  /** #elements < q in an ascending Int array. */
-  private def lb(a: Array[Int], q: Long): Int = {
-    var lo = 0; var hi = a.length
-    while (lo < hi) { val m = (lo + hi) >>> 1; if (a(m) < q) lo = m + 1 else hi = m }
-    lo
-  }
 
   override protected def doExecute(): RDD[InternalRow] = {
     val (countedPlan, indexPlan) = if (countLeft) (left, right) else (right, left)
@@ -932,9 +877,9 @@ case class IntervalBinCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
             val lo = bin.toLong * binW
             val hi = lo + binW - 1
             val boundHi = math.min(qe.toLong, hi)
-            val j = ub(idx.starts, boundHi)
+            val j = rankLe(idx.starts, boundHi)
             val firstBin = qs >= lo
-            val p = if (firstBin) lb(idx.ends, qs.toLong) else ub(idx.starts, lo - 1)
+            val p = if (firstBin) rankLt(idx.ends, qs) else rankLe(idx.starts, lo - 1)
             val c = (j - p).toLong
             if (c <= 0L) Iterator.empty
             else {
@@ -965,3 +910,20 @@ case class CountRankIndex(starts: Array[Int], ordByStart: Array[Int],
     endsSorted: Array[Int], ordByEnd: Array[Int],
     psStart: Array[Array[Long]] = null, psEnd: Array[Array[Long]] = null,
     pnStart: Array[Array[Long]] = null, pnEnd: Array[Array[Long]] = null)
+
+object CountRankIndex {
+
+  /** #elements <= q in an ascending array (a Long query takes bin bounds). */
+  def rankLe(a: Array[Int], q: Long): Int = {
+    var lo = 0; var hi = a.length
+    while (lo < hi) { val m = (lo + hi) >>> 1; if (a(m) <= q) lo = m + 1 else hi = m }
+    lo
+  }
+
+  /** #elements < q in an ascending array. */
+  def rankLt(a: Array[Int], q: Long): Int = {
+    var lo = 0; var hi = a.length
+    while (lo < hi) { val m = (lo + hi) >>> 1; if (a(m) < q) lo = m + 1 else hi = m }
+    lo
+  }
+}

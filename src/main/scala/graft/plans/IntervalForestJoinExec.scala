@@ -110,65 +110,25 @@ case class IntervalForestJoinExec(
     (bound(s, streamedPlan), bound(e, streamedPlan), eqs.map(bound(_, streamedPlan)))
   }
 
-  /** Runtime stats-lie guard (only for stats-made decisions, see
-    * enforceBuildBudget): the strategy picked broadcast from Catalyst
-    * ESTIMATES, which can under-shoot by orders of magnitude after
-    * selective filters. Broadcasting a multi-GB forest to a 1000-executor
-    * cluster is a cluster-killer, so fail fast — with actionable advice —
-    * when the ACTUAL collected bytes blow past `buildBytesSlack`x the
-    * budget (default 4x, so estimate noise never flips a working query;
-    * Spark's own driver.maxResultSize still backstops the collect).
-    * Shared by EVERY broadcast-mode collect — the common forest build and
-    * full outer's own collect (which keeps null-key rows, hence the
-    * nullable key). */
-  private def checkBuildBudget(collected: Iterator[(UnsafeRow, InternalRow)]): Unit = {
-    if (!enforceBuildBudget) return
-    val actualBytes = collected.foldLeft(0L) { case (acc, (k, r)) =>
-      acc + (if (k == null) 0L else k.getSizeInBytes.toLong) + 16L + (r match {
-        case u: UnsafeRow => u.getSizeInBytes.toLong
-        case _ => 64L
-      })
-    }
-    val budget = conf.getConfString(
-      "spark.graft.rangejoin.maxBroadcastBytes", (256L << 20).toString).toLong
-    val slack = conf.getConfString("spark.graft.rangejoin.buildBytesSlack", "4.0").toDouble
-    if (actualBytes > budget * slack) {
-      throw new IllegalStateException(
-        s"interval-join build side is $actualBytes bytes at runtime, over ${slack}x the " +
-          s"spark.graft.rangejoin.maxBroadcastBytes budget ($budget) the broadcast " +
-          "decision was made against (plan statistics under-estimated it). Either " +
-          "raise the budget if the cluster can hold the broadcast, force the side " +
-          "with a broadcast() hint to take responsibility, or set " +
-          "spark.graft.rangejoin.method=binrange to take the shuffle path.")
-    }
+  /** The broadcast-mode build side, collected once and held to the
+    * [[BroadcastBudget]] when the broadcast was the estimate's decision
+    * (see enforceBuildBudget). Full outer keeps the unmatchable rows. */
+  private def collectBuild(keepUnmatchable: Boolean): Array[(UnsafeRow, Int, Int, InternalRow)] = {
+    val (collected, bytes) = BroadcastBudget.collectKeyed(
+      buildPlan, bEqsB, Seq(bStartB, bEndB), keepUnmatchable)
+    longMetric("buildRows") += collected.length
+    if (enforceBuildBudget) BroadcastBudget.checkCollected(bytes, "interval-join build side",
+      "either raise the budget if the cluster can hold the broadcast, force the side " +
+        "with a broadcast() hint to take responsibility, or set " +
+        "spark.graft.rangejoin.method=binrange to take the shuffle path.", conf)
+    collected
   }
 
   /** Build-side collect → per-key holder → broadcast, shared by the
     * interpreted and codegen probe paths (built at most once per execute). */
   @transient private lazy val broadcastForests
       : Broadcast[Map[UnsafeRow, IntervalHolder[InternalRow]]] = {
-    val nEqs = bEqsB.length
-    val bEqsLocal = bEqsB
-    val bIvLocal = Seq(bStartB, bEndB)
-    val collected = buildPlan.execute().mapPartitions { it =>
-      val keyProj = UnsafeProjection.create(bEqsLocal)
-      val ivProj = UnsafeProjection.create(bIvLocal)
-      it.flatMap { row =>
-        val iv = ivProj(row)
-        if (iv.isNullAt(0) || iv.isNullAt(1)) Iterator.empty
-        else {
-          val s = iv.getInt(0)
-          val e = iv.getInt(1)
-          val copy = row.copy()
-          val key = keyProj(copy)
-          // A null equality key can never satisfy EqualTo.
-          if (nEqs > 0 && key.anyNull) Iterator.empty
-          else Iterator.single((key.copy(), s, e, copy))
-        }
-      }
-    }.collect()
-    longMetric("buildRows") += collected.length
-    checkBuildBudget(collected.iterator.map { case (k, _, _, r) => (k, r) })
+    val collected = collectBuild(keepUnmatchable = false)
     // Pluggable holder (reference intervalHolderClassName conf): the
     // broadcast structure is whatever the configured factory builds;
     // the bin-range fallback always uses the array forest (per-bin
@@ -202,20 +162,14 @@ case class IntervalForestJoinExec(
 
   override protected def doExecute(): RDD[InternalRow] = {
     val (buildPlan, streamPlan) = (this.buildPlan, this.streamedPlan)
-    val (bStart, bEnd, bEqs) =
-      if (buildLeft) (keys.leftStart, keys.leftEnd, keys.leftEqs)
-      else (keys.rightStart, keys.rightEnd, keys.rightEqs)
-    val (sStart, sEnd, sEqs) =
-      if (buildLeft) (keys.rightStart, keys.rightEnd, keys.rightEqs)
-      else (keys.leftStart, keys.leftEnd, keys.leftEqs)
 
     // Start/end are projected through UnsafeProjection (codegen'd) rather
     // than interpreted Expression.eval — the probe runs once per stream row.
-    val bIvB = Seq(bound(bStart, buildPlan), bound(bEnd, buildPlan))
+    val bIvB = Seq(bStartB, bEndB)
     val sIvB = Seq(sStartB, sEndB)
     val bEqsBL = bEqsB
     val sEqsBL = sEqsB
-    val nEqs = bEqs.length
+    val nEqs = bEqsB.length
     val buildIsLeft = buildLeft
     val minOv = minOverlap
     val gap = maxGap
@@ -283,23 +237,7 @@ case class IntervalForestJoinExec(
         //       stream rows (LeftOuter shape),
         //   (4) unmatched build rows null-pad from the driver — the build
         //       side is broadcast-small by mode selection.
-        val collected: Array[(UnsafeRow, Int, Int, InternalRow)] =
-          buildPlan.execute().mapPartitions { it =>
-            val keyProj = UnsafeProjection.create(bEqsBL)
-            val ivProj = UnsafeProjection.create(bIvB)
-            it.map { row =>
-              val iv = ivProj(row)
-              val copy = row.copy()
-              if (iv.isNullAt(0) || iv.isNullAt(1)) (null, 0, 0, copy)
-              else {
-                val key = keyProj(copy)
-                if (nEqs > 0 && key.anyNull) (null, 0, 0, copy)
-                else (key.copy(), iv.getInt(0), iv.getInt(1), copy)
-              }
-            }
-          }.collect()
-        buildRowsMetric += collected.length
-        checkBuildBudget(collected.iterator.map { case (k, _, _, r) => (k, r) })
+        val collected = collectBuild(keepUnmatchable = true)
         val forests: Map[UnsafeRow, graft.operators.IntervalForest[(InternalRow, Int)]] =
           graft.operators.IntervalForest.forest(
             collected.iterator.zipWithIndex.collect {

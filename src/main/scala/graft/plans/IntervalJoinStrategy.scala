@@ -22,8 +22,9 @@ import org.apache.spark.sql.execution.{FilterExec, SparkPlan, SparkStrategy}
   *    `twophase` accepted as a legacy alias for the shuffle fallback)
   *  - `spark.graft.rangejoin.buildSide` (auto | left | right) — the
   *    reference's `useJoinOrder` analogue (auto picks the smaller by stats).
-  *  - `spark.graft.rangejoin.maxBroadcastBytes` (256 MiB) — auto threshold
-  *    between broadcast and the bin-range shuffle join.
+  *  - `spark.graft.rangejoin.maxBroadcastBytes`, `buildBytesSlack` — the
+  *    auto threshold between broadcast and the bin-range shuffle join and
+  *    its runtime guard; see [[BroadcastBudget]].
   *  - `spark.graft.rangejoin.binWidth` (5000) — genome-bin width of the
   *    shuffle fallback; both sides replicate per overlapped bin.
   *  - `spark.graft.rangejoin.intervalHolderClass`
@@ -53,7 +54,7 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
       val method = RangeJoinChoice.method(conf, keys)
       // Build side + mode come from the ONE decision shared with the
       // logical bin-range rewrite ([[RangeJoinChoice]] — hints over
-      // stats, non-inner build pinning, maxBroadcastBytes threshold);
+      // stats, non-inner build pinning, the [[BroadcastBudget]]);
       // FullOuter preserves both sides (build-side matched-ness is
       // tracked globally by the exec), so either side may build.
       val (buildLeft, binRange) = RangeJoinChoice.choose(

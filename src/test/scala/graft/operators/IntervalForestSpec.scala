@@ -51,19 +51,27 @@ class IntervalForestSpec extends AnyFunSuite {
   test("empty forest answers nothing") {
     val f = IntervalForest(IndexedSeq.empty[(Int, Int, Int)])
     assert(f.overlappers(1, 100).isEmpty)
-    assert(f.nearestDistance(1, 100) === -1)
-    assert(f.foreachNearest(1, 100)((_, _, _) => fail("no calls expected")) === -1)
+    assert(f.foreachNearestK(1, 100, 1)((_, _, _, _) => fail("no calls expected")) === 0)
   }
 
-  private def bruteNearest(items: Seq[(Int, Int, Int)], qs: Int, qe: Int): (Int, Set[Int]) = {
-    val ds = items.map { case (s, e, v) =>
-      (math.max(0, math.max(s - qe, qs - e)), v)
-    }
-    val d = ds.map(_._1).min
-    (d, ds.collect { case (`d`, v) => v }.toSet)
+  /** Every item whose distance to `[qs, qe]` is among the k smallest
+    * distinct distances (all ties), as `(start, end, value, distance)`,
+    * and the number of distinct distances reported. */
+  private def bruteNearestK(items: Seq[(Int, Int, Int)], qs: Int, qe: Int,
+      k: Int): (Int, Seq[(Int, Int, Int, Int)]) = {
+    val ds = items.map { case (s, e, v) => (s, e, v, math.max(0, math.max(s - qe, qs - e))) }
+    val kept = ds.map(_._4).distinct.sorted.take(k).toSet
+    (kept.size, ds.filter(x => kept(x._4)).sorted)
   }
 
-  test("nearestDistance/foreachNearest agree with brute force") {
+  private def nearestK(f: IntervalForest[Int], qs: Int, qe: Int,
+      k: Int): (Int, Seq[(Int, Int, Int, Int)]) = {
+    val got = scala.collection.mutable.ArrayBuffer.empty[(Int, Int, Int, Int)]
+    val n = f.foreachNearestK(qs, qe, k)((s, e, v, d) => got += ((s, e, v, d)))
+    (n, got.sorted.toSeq)
+  }
+
+  test("foreachNearestK agrees with brute force for k in {1, 2, 3}") {
     val rnd = new Random(7)
     for (trial <- 1 to 20) {
       val n = 1 + rnd.nextInt(200)
@@ -72,15 +80,11 @@ class IntervalForestSpec extends AnyFunSuite {
         (s, s + rnd.nextInt(50), rnd.nextInt(1000000))
       }
       val forest = IntervalForest(items)
-      for (_ <- 1 to 100) {
+      for (_ <- 1 to 100; k <- 1 to 3) {
         val qs = rnd.nextInt(1400) - 150 // ranges beyond both flanks
         val qe = qs + rnd.nextInt(80)
-        val (bd, bset) = bruteNearest(items, qs, qe)
-        assert(forest.nearestDistance(qs, qe) === bd, s"trial $trial dist [$qs,$qe]")
-        val got = scala.collection.mutable.Set.empty[Int]
-        val d = forest.foreachNearest(qs, qe)((_, _, v) => got += v)
-        assert(d === bd, s"trial $trial foreach-dist [$qs,$qe]")
-        assert(got.toSet === bset, s"trial $trial tie set [$qs,$qe]")
+        assert(nearestK(forest, qs, qe, k) === bruteNearestK(items, qs, qe, k),
+          s"trial $trial k=$k [$qs,$qe]")
       }
     }
   }
@@ -88,12 +92,8 @@ class IntervalForestSpec extends AnyFunSuite {
   test("nearest ties on both flanks of a gap all emit") {
     // [10,20] and [30,40] are both 4 away from [24,26].
     val f = IntervalForest(IndexedSeq((10, 20, 1), (30, 40, 2)))
-    val got = scala.collection.mutable.Set.empty[Int]
-    assert(f.foreachNearest(24, 26)((_, _, v) => got += v) === 4)
-    assert(got.toSet === Set(1, 2))
+    assert(nearestK(f, 24, 26, 1) === ((1, Seq((10, 20, 1, 4), (30, 40, 2, 4)))))
     // Overlap beats any gap.
-    got.clear()
-    assert(f.foreachNearest(20, 29)((_, _, v) => got += v) === 0)
-    assert(got.toSet === Set(1))
+    assert(nearestK(f, 20, 29, 1) === ((1, Seq((10, 20, 1, 0)))))
   }
 }

@@ -915,6 +915,34 @@ class IntervalJoinSpec extends SparkSpec {
     }
     // ...and at the default slack the auto path runs fine.
     assert(joined(a, b).count() > 0)
+    // The count join and the nearest join's estimate-chosen broadcast are
+    // held to the same guard: the Scala API in auto and both TVFs.
+    import graft.operators.NearestJoinOps
+    a.createOrReplaceTempView("lie_a")
+    b.createOrReplaceTempView("lie_b")
+    def counts(r: DataFrame) =
+      a.join(r, a("contig") === r("contig") &&
+        a("pos_end") >= r("pos_start") && a("pos_start") <= r("pos_end"))
+        .groupBy(col("b_key")).agg(count(lit(1)).as("n"))
+    val guarded = Seq[(String, () => Any)](
+      "interval-count-join" -> (() => counts(b).collect()),
+      "nearest-join" -> (() => NearestJoinOps.nearestKJoin(a, b, 2).collect()),
+      "nearest-join" -> (() => spark.sql("SELECT * FROM nearest_join('lie_a', 'lie_b')").collect()),
+      "nearest-join" -> (() =>
+        spark.sql("SELECT * FROM nearest_k_join('lie_a', 'lie_b', 2)").collect()))
+    for (((guard, run), i) <- guarded.zipWithIndex) {
+      val e = intercept[Exception] {
+        withConf("spark.graft.rangejoin.buildBytesSlack", "1e-9")(run())
+      }
+      assert(messages(e).exists(m => m.contains(guard) && m.contains("maxBroadcastBytes")),
+        s"case $i expected the $guard guard, got: ${messages(e).mkString(" | ")}")
+    }
+    // A hint or a pinned broadcast method stands each of them down.
+    withConf("spark.graft.rangejoin.buildBytesSlack", "1e-9") {
+      assert(counts(broadcast(b)).collect().nonEmpty)
+      assert(NearestJoinOps.nearestKJoin(a, b, 2, "broadcast").count() > 0)
+      assert(spark.sql("SELECT * FROM nearest_join('lie_a', 'lie_b', 'broadcast')").count() > 0)
+    }
   }
 
   test("runtime stats-lie guard also covers the FullOuter broadcast branch") {

@@ -495,16 +495,24 @@ class StreamingSpec extends SparkSpec {
     import graft.SharedSpark.spark.implicits._
     val targets = Seq(("1", 100, 200, "tA")).toDF("contig", "pos_start", "pos_end", "name")
     val in = MemoryStream[StreamingOps.StreamRead]
+    val corpus = Seq((1L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
+    val vecs = MemoryStream[(Timestamp, Long, Seq[Float])].toDF().toDF("ts", "vec_id", "embedding")
+    // Every stream-static operator that collects its static side.
+    val ops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "annotateStream" -> (() => StreamingOps.annotateStream(in.toDS(), targets)),
+      "countStream" -> (() => StreamingOps.countStream(in.toDS(), targets)),
+      "nearestKStream" -> (() => StreamingOps.nearestKStream(in.toDS(), targets, 2)),
+      "similarStream" -> (() => StreamingOps.similarStream(vecs, corpus, 3)))
     val conf = "spark.graft.rangejoin.maxBroadcastBytes"
-    spark.conf.set(conf, "1") // 1 byte: any real table is over the gate
-    try {
-      val e = intercept[IllegalArgumentException] {
-        StreamingOps.annotateStream(in.toDS(), targets)
-      }
-      assert(e.getMessage.contains("maxBroadcastBytes"))
-    } finally spark.conf.unset(conf)
-    // With the default gate the same call plans fine.
-    StreamingOps.annotateStream(in.toDS(), targets)
+    for ((name, op) <- ops) {
+      spark.conf.set(conf, "1") // 1 byte: any real table is over the gate
+      try {
+        val e = intercept[IllegalArgumentException](op())
+        assert(e.getMessage.contains("maxBroadcastBytes"), s"$name: ${e.getMessage}")
+      } finally spark.conf.unset(conf)
+      // With the default gate the same call plans fine.
+      op()
+    }
   }
 
   test("e2e: curateStream file source → parquet sink, exactly-once across restart") {
