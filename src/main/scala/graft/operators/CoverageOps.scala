@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
 
@@ -17,18 +18,18 @@ import scala.collection.mutable
   *     scan via explode, so the input is read once.
   *  2. Events are range-partitioned and sorted by `(contig, pos)` — the
   *     only shuffle, and it moves 2 small rows per read, not the reads.
-  *  3. Distributed prefix scan: a cheap first pass collects per-partition
-  *     net deltas per contig (O(partitions) on the driver); the driver
-  *     folds them into a carry-in coverage for each partition.
+  *  3. Distributed prefix scan ([[RangeSweep]]): a first pass collects,
+  *     per (partition, contig), the net delta and the last position where
+  *     coverage changes (O(partitions × contigs) on the driver); the driver
+  *     folds them into the coverage and block start each partition's first
+  *     contig enters with.
   *  4. Each partition streams its sorted events once, maintaining the
-  *     running coverage (carry + prefix sum) and emitting maximal
-  *     `(contig, pos_start, pos_end, coverage)` runs with `coverage > 0`;
-  *     a run still open at partition end is closed at the next partition's
-  *     first event position (driver-provided).
-  *  5. A run that crosses a partition boundary *without changing coverage*
-  *     comes out split in two; only first/last blocks of each partition can
-  *     be affected, so the driver collects those O(partitions) rows, merges
-  *     adjacent equal runs, and patches the result.
+  *     running coverage (carry + prefix sum), and emits each maximal
+  *     `(contig, pos_start, pos_end, coverage)` run with `coverage > 0`
+  *     exactly once: in the partition holding the change that closes it,
+  *     with its start carried in when it opened in an earlier partition.
+  *     A run that crosses partitions without changing coverage is never
+  *     split, so no boundary patch-up follows.
   *
   * At 100 TB this scales: the shuffle is by genome position (uniformly
   * splittable, no hot keys), every pass is partition-local, and driver
@@ -41,8 +42,6 @@ import scala.collection.mutable
   * ≤32767 assumption — SURVEY §7 hard parts; Int removes the overflow).
   */
 object CoverageOps {
-
-  private case class Block(contig: String, posStart: Int, posEnd: Int, coverage: Int)
 
   val blockSchema: StructType = StructType(Seq(
     StructField("contig", StringType, nullable = true),
@@ -173,167 +172,82 @@ object CoverageOps {
     scanEvents(events)
   }
 
+  /** One partition's events of one contig: their summed delta, and the
+    * last position whose events do not cancel out. */
+  private final case class Net(var sum: Long = 0L, var lastChange: Option[Int] = None)
+
   private def scanEvents(events: DataFrame): DataFrame = {
-    val spark = events.sparkSession
-    import spark.implicits._
-
-    // Event generation upstream is a full input scan (often through the
-    // CIGAR-walk explode). The straightforward
-    // `repartitionByRange.sortWithinPartitions` ran it three times — the
-    // range partitioner's bounds-sampling job, the shuffle map stage —
-    // and re-sorted the exchange output once per downstream pass
-    // (summaries + main RLE). Instead: persist the small event rows
-    // (contig, int, int — 2 per read), so sampling and shuffle share one
-    // scan, and persist the sorted result so the sort runs once with both
-    // passes reading its partitions. Everything stays DataFrame-level —
-    // Tungsten UnsafeRow shuffle + codegen sort; the earlier RDD-tuple
-    // form paid a per-row Dataset decode plus Java-serialized shuffle
-    // (measured ~2x on the 4-sample blocksBy event volume). The scan
-    // passes read InternalRows and intern the contig string only when it
-    // changes (events are contig-sorted, so O(contigs) allocations).
-    // Persists are dropped before returning — every job needing them runs
-    // eagerly in this method.
-    val nShuffle = math.max(1, spark.sessionState.conf.numShufflePartitions)
+    val nShuffle = math.max(1, events.sparkSession.sessionState.conf.numShufflePartitions)
     // A null contig/pos carries no coverage information (and the raw
-    // InternalRow passes below assume non-null fields).
-    val ev = events.na.drop().persist(StorageLevel.MEMORY_AND_DISK)
-    val sortedDf = ev
-      .repartitionByRange(nShuffle, col("contig"), col("pos"))
-      .sortWithinPartitions(col("contig"), col("pos"))
-    sortedDf.persist(StorageLevel.MEMORY_AND_DISK)
-    val rdd = sortedDf.queryExecution.toRdd
-
-    // Pass 1: per-partition (first event key, net delta per contig in order).
-    case class Summary(idx: Int, first: Option[(String, Int)], perContig: Seq[(String, Long)])
-    val summaries = rdd.mapPartitionsWithIndex { (idx, it) =>
-      var first: Option[(String, Int)] = None
-      val order = mutable.ArrayBuffer.empty[String]
-      val net = mutable.HashMap.empty[String, Long]
-      var curU: org.apache.spark.unsafe.types.UTF8String = null
-      var cur: String = null
-      it.foreach { row =>
-        val c = row.getUTF8String(0)
-        if (curU == null || !c.equals(curU)) { curU = c.copy(); cur = curU.toString }
-        if (first.isEmpty) first = Some((cur, row.getInt(1)))
-        if (!net.contains(cur)) order += cur
-        net(cur) = net.getOrElse(cur, 0L) + row.getInt(2)
-      }
-      Iterator.single(Summary(idx, first, order.map(c => c -> net(c)).toSeq))
-    }.collect().sortBy(_.idx)
-
-    val nParts = summaries.length
-    // Driver fold: carry-in coverage per partition (for its first contig)
-    // and the first event key of the next non-empty partition.
-    val carryIn = new Array[Long](nParts)
-    val running = mutable.HashMap.empty[String, Long]
-    summaries.foreach { s =>
-      carryIn(s.idx) = s.first.map { case (c, _) => running.getOrElse(c, 0L) }.getOrElse(0L)
-      s.perContig.foreach { case (c, d) => running(c) = running.getOrElse(c, 0L) + d }
-    }
-    val nextFirst = new Array[Option[(String, Int)]](nParts)
-    var upcoming: Option[(String, Int)] = None
-    for (i <- nParts - 1 to 0 by -1) {
-      nextFirst(i) = upcoming
-      if (summaries(i).first.isDefined) upcoming = summaries(i).first
-    }
-    val carryB = spark.sparkContext.broadcast((carryIn, nextFirst))
-
-    // Pass 2: streaming RLE per partition. Tag first/last block per
-    // partition for the boundary merge.
-    val taggedRdd = rdd.mapPartitionsWithIndex { (idx, it) =>
-      val (carries, nexts) = carryB.value
-      val out = mutable.ArrayBuffer.empty[Block]
-      var curContig: String = null
-      var cov = 0L
-      var blockStart = 0
-      var started = false // processed at least one position group
-      var lastPos = Int.MinValue
-
-      def advance(contig: String, pos: Int, net: Long): Unit = {
-        if (contig != curContig) {
-          // All events of the previous contig are behind us globally, so
-          // its coverage is zero here (valid intervals guarantee it).
-          curContig = contig
-          cov = if (!started) carries(idx) else 0L
-          blockStart = pos
-          cov += net
-          started = true
-        } else {
-          val newCov = cov + net
-          if (newCov != cov) {
-            if (cov > 0) out += Block(curContig, blockStart, pos - 1, cov.toInt)
-            blockStart = pos
-            cov = newCov
+    // InternalRow walks assume non-null fields).
+    RangeSweep(events.na.drop(), Seq(col("contig"), col("pos")), nShuffle, blockSchema)(
+      summarize = rows => {
+        val out = mutable.ArrayBuffer.empty[(String, Net)]
+        positionGroups(rows) { (contig, pos, net, first) =>
+          if (first) out += contig.toString -> Net()
+          if (net != 0) { val n = out.last._2; n.sum += net; n.lastChange = Some(pos) }
+        }
+        out.toSeq
+      })(
+      // Depth changes exactly at the position groups whose events do not
+      // cancel, whatever the depth coming in, so a contig leaves a
+      // partition at (depth in + sum) in a block that started at its last
+      // change there (or, with none, where it started before).
+      fold = parts => RangeSweep.contigCarries(parts) { (in: Option[(Long, Int)], n: Net) =>
+        val (depth, start) = in.getOrElse((0L, 0))
+        (depth + n.sum, n.lastChange.getOrElse(start))
+      })(
+      // Each block is emitted once, by the partition holding the change
+      // that closes it, with the start carried in when it opened earlier.
+      pass = { case ((in, continues), rows) =>
+        val out = mutable.ArrayBuffer.empty[InternalRow]
+        var contig: UTF8String = null
+        var depth = 0L
+        var start = 0
+        var last = 0
+        def close(end: Int): Unit =
+          if (depth > 0) out += InternalRow(contig, start, end, depth.toInt)
+        positionGroups(rows) { (c, pos, net, first) =>
+          if (first) {
+            // Valid events bring depth back to 0 at a contig's last
+            // position; a depth left open closes there.
+            if (contig == null) in.foreach { case (d, s) => depth = d; start = s }
+            else { close(last); depth = 0L }
+            contig = c
           }
+          if (net != 0) { close(pos - 1); start = pos; depth += net }
+          last = pos
         }
-        lastPos = pos
-      }
+        if (contig != null && !continues) close(last)
+        out.iterator
+      })
+  }
 
-      // Merge equal-(contig,pos) runs of events, then advance. Contig
-      // strings are interned on change only (sorted input, so one
-      // allocation per contig run — `eq` then suffices in the hot compare).
-      var pendContig: String = null
-      var pendPos = 0
-      var pendNet = 0L
-      var hasPend = false
-      var curU: org.apache.spark.unsafe.types.UTF8String = null
-      var curS: String = null
-      it.foreach { row =>
-        val c = row.getUTF8String(0)
-        if (curU == null || !c.equals(curU)) { curU = c.copy(); curS = curU.toString }
-        val contig = curS
-        val pos = row.getInt(1)
-        val delta = row.getInt(2)
-        if (hasPend && (contig eq pendContig) && pos == pendPos) pendNet += delta
-        else {
-          if (hasPend) advance(pendContig, pendPos, pendNet)
-          pendContig = contig; pendPos = pos; pendNet = delta; hasPend = true
-        }
+  /** Walks sorted `(contig, pos, delta)` rows one position group at a
+    * time: `f(contig, pos, net, first)` gets each group's summed delta,
+    * `first` marking the first group of a contig in the partition. A
+    * position group never spans partitions (the range key is
+    * `(contig, pos)`). The contig string is copied only when it changes,
+    * so all groups of a contig share one reference. */
+  private def positionGroups(rows: Iterator[InternalRow])(
+      f: (UTF8String, Int, Long, Boolean) => Unit): Unit = {
+    var contig: UTF8String = null
+    var first = false
+    var pos = 0
+    var net = 0L
+    rows.foreach { row =>
+      val c = row.getUTF8String(0)
+      val p = row.getInt(1)
+      if (contig == null || !c.equals(contig)) {
+        if (contig != null) f(contig, pos, net, first)
+        contig = c.copy(); first = true; pos = p; net = 0L
+      } else if (p != pos) {
+        f(contig, pos, net, first)
+        first = false; pos = p; net = 0L
       }
-      if (hasPend) advance(pendContig, pendPos, pendNet)
-      if (started && cov > 0) {
-        // Open run at partition end: closes at the next partition's first
-        // event position (same contig — coverage > 0 implies more events).
-        val end = nexts(idx) match {
-          case Some((_, np)) => np - 1
-          case None => lastPos // unreachable for valid input
-        }
-        out += Block(curContig, blockStart, end, cov.toInt)
-      }
-      val n = out.length
-      out.iterator.zipWithIndex.map { case (b, i) =>
-        (b.contig, b.posStart, b.posEnd, b.coverage, idx, i == 0 || i == n - 1)
-      }
-      // RDD-level persist (not DataFrame cache): serves both the boundary
-      // collect below and the returned plan, and — unlike CacheManager
-      // entries — is auto-unpersisted by the ContextCleaner once the result
-      // is garbage-collected, so library callers don't leak cache blocks.
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    val tagged = taggedRdd.toDF("contig", "pos_start", "pos_end", "coverage", "pid", "boundary")
-
-    // Driver boundary merge: only first/last blocks of a partition can be
-    // two halves of one run. O(partitions) rows.
-    val boundaryRows = tagged.filter(col("boundary")).collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getInt(3)))
-      .sortBy(b => (b._1, b._2))
-    // All eager jobs are done; the returned plan reads taggedRdd only
-    // (lineage survives for recompute-on-eviction).
-    ev.unpersist(blocking = false)
-    sortedDf.unpersist(blocking = false)
-    val merged = mutable.ArrayBuffer.empty[(String, Int, Int, Int)]
-    boundaryRows.foreach { b =>
-      merged.lastOption match {
-        case Some(last) if last._1 == b._1 && last._3 + 1 == b._2 && last._4 == b._4 =>
-          merged(merged.length - 1) = (last._1, last._2, b._3, last._4)
-        case _ => merged += b
-      }
+      net += row.getInt(2)
     }
-    val mergedDf = spark.createDataFrame(
-      spark.sparkContext.parallelize(merged.toSeq.map(b => Row(b._1, b._2, b._3, b._4)), 1),
-      blockSchema)
-    tagged.filter(!col("boundary"))
-      .select(col("contig"), col("pos_start"), col("pos_end"), col("coverage"))
-      .unionAll(mergedDf)
+    if (contig != null) f(contig, pos, net, first)
   }
 
   /** Per-target coverage summary (bedtools-coverage / mosdepth-regions

@@ -287,9 +287,8 @@ object NearestJoinOps {
     * parallelism concentrates endpoints — raise
     * `spark.sql.shuffle.partitions` (range partitioning splits within a
     * contig freely; correctness never depends on contig-per-partition).
-    * The endpoint frame is persisted only to share one input scan between
-    * the range sampling and the shuffle map stage, and is unpersisted
-    * before returning; later passes re-read the shuffle files. */
+    * The sweep itself, with its persist and carry shipping, is
+    * [[RangeSweep]]: nothing it persists outlives the call. */
   private def kthDistances(left: DataFrame, right: DataFrame, k: Int,
       incOverlaps: Boolean, incUp: Boolean, incDown: Boolean): DataFrame = {
     val spark = left.sparkSession
@@ -308,146 +307,132 @@ object NearestJoinOps {
     val rPts = points(ivs(right),
       (if (incUp) Seq(("e", REnd, lit(0))) else Nil) ++
         (if (atEnds) Seq(("s", RStart, col("e"))) else Nil))
-    // Persist only to share one scan of both inputs between the range
-    // partitioner's bounds-sampling job and the shuffle map stage;
-    // released below once the shuffle files exist.
-    val pts = CacheScope.persistTracked(rPts.unionAll(lPts))
     val nShuffle = math.max(1, spark.sessionState.conf.numShufflePartitions)
-    // ONE physical plan for both scan passes: jobs over the same toRdd
-    // share the shuffle id, so the sort's exchange runs once and the lazy
-    // phase-2 consumer re-reads shuffle files — no persist to leak.
-    val rdd = pts
-      .repartitionByRange(nShuffle, col("contig"), col("pos"), col("tag"))
-      .sortWithinPartitions(col("contig"), col("pos"), col("tag"))
-      .queryExecution.toRdd
-
-    // Per-partition summaries, in partition order (sorted input: each
-    // contig is one run; its string is interned once per run).
-    val summaries: Array[Seq[Summary]] = rdd.mapPartitions { it =>
-      val out = mutable.ArrayBuffer.empty[Summary]
-      val ends = new LastK(k)
-      val starts = mutable.ArrayBuffer.empty[Int]
-      var cur: UTF8String = null
-      var maxEnd = Long.MinValue
-      def flush(): Unit =
-        if (cur != null) out += Summary(cur.toString, maxEnd, ends.oldestFirst, starts.toList)
-      it.foreach { row =>
-        val c = row.getUTF8String(0)
-        if (cur == null || !c.equals(cur)) {
-          flush()
-          cur = c.copy(); maxEnd = Long.MinValue; ends.reset(Nil); starts.clear()
+    val dists = RangeSweep(rPts.unionAll(lPts), Seq(col("contig"), col("pos"), col("tag")),
+        nShuffle, distSchema)(
+      // Per-partition summaries (sorted input: each contig is one run; its
+      // string is interned once per run).
+      summarize = rows => {
+        val out = mutable.ArrayBuffer.empty[Summary]
+        val ends = new LastK(k)
+        val starts = mutable.ArrayBuffer.empty[Int]
+        var cur: UTF8String = null
+        var maxEnd = Long.MinValue
+        def flush(): Unit =
+          if (cur != null) out += Summary(cur.toString, maxEnd, ends.oldestFirst, starts.toList)
+        rows.foreach { row =>
+          val c = row.getUTF8String(0)
+          if (cur == null || !c.equals(cur)) {
+            flush()
+            cur = c.copy(); maxEnd = Long.MinValue; ends.reset(Nil); starts.clear()
+          }
+          val p = row.getInt(1)
+          row.getInt(2) match {
+            case RStart =>
+              maxEnd = math.max(maxEnd, row.getInt(3).toLong)
+              if (starts.length < k && (starts.isEmpty || starts.last != p)) starts += p
+            case REnd => ends.add(p)
+            case _ =>
+          }
         }
-        val p = row.getInt(1)
-        row.getInt(2) match {
-          case RStart =>
-            maxEnd = math.max(maxEnd, row.getInt(3).toLong)
-            if (starts.length < k && (starts.isEmpty || starts.last != p)) starts += p
-          case REnd => ends.add(p)
-          case _ =>
+        flush()
+        out.toSeq
+      })(
+      fold = summaries => {
+        val nParts = summaries.length
+        // Forward fold over all EARLIER partitions: max right end and the k
+        // largest distinct right ends per contig.
+        val carryFwd = new Array[Map[String, (Long, Seq[Int])]](nParts)
+        var fwd = Map.empty[String, (Long, Seq[Int])]
+        for (i <- 0 until nParts) {
+          carryFwd(i) = fwd
+          summaries(i).foreach { s =>
+            val (m, e) = fwd.getOrElse(s.contig, (Long.MinValue, Nil))
+            fwd += s.contig -> ((math.max(m, s.maxEnd), (e ++ s.ends).distinct.sorted.takeRight(k)))
+          }
         }
-      }
-      flush()
-      Iterator.single(out.toSeq)
-    }.collect()
-    // Shuffle files are on disk now; nothing re-reads the sources.
-    pts.unpersist(blocking = false)
-    val nParts = summaries.length
-    // Forward fold over all EARLIER partitions: max right end and the k
-    // largest distinct right ends per contig.
-    val carryFwd = new Array[Map[String, (Long, Seq[Int])]](nParts)
-    var fwd = Map.empty[String, (Long, Seq[Int])]
-    for (i <- 0 until nParts) {
-      carryFwd(i) = fwd
-      summaries(i).foreach { s =>
-        val (m, e) = fwd.getOrElse(s.contig, (Long.MinValue, Nil))
-        fwd += s.contig -> ((math.max(m, s.maxEnd), (e ++ s.ends).distinct.sorted.takeRight(k)))
-      }
-    }
-    // Backward fold over all LATER partitions: the k smallest distinct
-    // right starts per contig.
-    val carryBwd = new Array[Map[String, Seq[Int]]](nParts)
-    var bwd = Map.empty[String, Seq[Int]]
-    for (i <- nParts - 1 to 0 by -1) {
-      carryBwd(i) = bwd
-      summaries(i).foreach { s =>
-        bwd += s.contig -> (s.starts ++ bwd.getOrElse(s.contig, Nil)).distinct.sorted.take(k)
-      }
-    }
-    val carryB = spark.sparkContext.broadcast((carryFwd, carryBwd))
-
-    val outRdd = rdd.mapPartitionsWithIndex { (idx, it) =>
-      val cFwd = carryB.value._1(idx)
-      val cBwd = carryB.value._2(idx)
-      val ctg = mutable.ArrayBuffer.empty[UTF8String]
-      val posB = new mutable.ArrayBuilder.ofInt
-      val tagB = new mutable.ArrayBuilder.ofInt
-      val payB = new mutable.ArrayBuilder.ofInt
-      var curU: UTF8String = null
-      it.foreach { row =>
-        val c = row.getUTF8String(0)
-        if (curU == null || !c.equals(curU)) curU = c.copy()
-        ctg += curU; posB += row.getInt(1); tagB += row.getInt(2); payB += row.getInt(3)
-      }
-      val pos = posB.result(); val tag = tagB.result(); val pay = payB.result()
-      val n = ctg.length
-      // (row index, distance) per emitted candidate. Distance math in
-      // Long (coordinates near Int extremes must not wrap, r8 ADVICE); a
-      // true distance beyond Int.MaxValue cannot be represented in the
-      // output schema and fails loudly.
-      val outIdx = new mutable.ArrayBuilder.ofInt
-      val outD = new mutable.ArrayBuilder.ofInt
-      def emit(i: Int, d: Long): Unit = {
-        if (d > Int.MaxValue) sys.error(
-          s"nearest distance $d exceeds Int.MaxValue at (${ctg(i)}, ${pos(i)})")
-        outIdx += i; outD += d.toInt
-      }
-      val flank = new LastK(k)
-      // Backward: right flank of each left end. Carry lookups happen once
-      // per contig run (`eq` compare — rows in a run share the ref).
-      var run: UTF8String = null
-      for (i <- n - 1 to 0 by -1) {
-        if (!(ctg(i) eq run)) {
-          run = ctg(i)
-          flank.reset(cBwd.getOrElse(run.toString, Nil).reverse)
+        // Backward fold over all LATER partitions: the k smallest distinct
+        // right starts per contig.
+        val carryBwd = new Array[Map[String, Seq[Int]]](nParts)
+        var bwd = Map.empty[String, Seq[Int]]
+        for (i <- nParts - 1 to 0 by -1) {
+          carryBwd(i) = bwd
+          summaries(i).foreach { s =>
+            bwd += s.contig -> (s.starts ++ bwd.getOrElse(s.contig, Nil)).distinct.sorted.take(k)
+          }
         }
-        tag(i) match {
-          case RStart => flank.add(pos(i))
-          case LEnd if incDown => flank.foreach(rs => emit(i, rs.toLong - pos(i)))
-          case _ =>
+        carryFwd.zip(carryBwd)
+      })(
+      pass = { case ((cFwd, cBwd), rows) =>
+        val ctg = mutable.ArrayBuffer.empty[UTF8String]
+        val posB = new mutable.ArrayBuilder.ofInt
+        val tagB = new mutable.ArrayBuilder.ofInt
+        val payB = new mutable.ArrayBuilder.ofInt
+        var curU: UTF8String = null
+        rows.foreach { row =>
+          val c = row.getUTF8String(0)
+          if (curU == null || !c.equals(curU)) curU = c.copy()
+          ctg += curU; posB += row.getInt(1); tagB += row.getInt(2); payB += row.getInt(3)
         }
-      }
-      // Forward: overlap of each left end, left flank of each left start.
-      run = null
-      var maxEnd = Long.MinValue
-      for (i <- 0 until n) {
-        if (!(ctg(i) eq run)) {
-          run = ctg(i)
-          val (m, ends) = cFwd.getOrElse(run.toString, (Long.MinValue, Nil))
-          maxEnd = m
-          flank.reset(ends)
+        val pos = posB.result(); val tag = tagB.result(); val pay = payB.result()
+        val n = ctg.length
+        // (row index, distance) per emitted candidate. Distance math in
+        // Long (coordinates near Int extremes must not wrap, r8 ADVICE); a
+        // true distance beyond Int.MaxValue cannot be represented in the
+        // output schema and fails loudly.
+        val outIdx = new mutable.ArrayBuilder.ofInt
+        val outD = new mutable.ArrayBuilder.ofInt
+        def emit(i: Int, d: Long): Unit = {
+          if (d > Int.MaxValue) sys.error(
+            s"nearest distance $d exceeds Int.MaxValue at (${ctg(i)}, ${pos(i)})")
+          outIdx += i; outD += d.toInt
         }
-        tag(i) match {
-          case RStart => maxEnd = math.max(maxEnd, pay(i).toLong)
-          case REnd => flank.add(pos(i))
-          case LStart => flank.foreach(re => emit(i, pos(i).toLong - re))
-          case LEnd => if (incOverlaps && maxEnd >= pay(i)) emit(i, 0L)
+        val flank = new LastK(k)
+        // Backward: right flank of each left end. Carry lookups happen once
+        // per contig run (`eq` compare — rows in a run share the ref).
+        var run: UTF8String = null
+        for (i <- n - 1 to 0 by -1) {
+          if (!(ctg(i) eq run)) {
+            run = ctg(i)
+            flank.reset(cBwd.getOrElse(run.toString, Nil).reverse)
+          }
+          tag(i) match {
+            case RStart => flank.add(pos(i))
+            case LEnd if incDown => flank.foreach(rs => emit(i, rs.toLong - pos(i)))
+            case _ =>
+          }
         }
-      }
-      val oi = outIdx.result(); val od = outD.result()
-      val outRow = new GenericInternalRow(4)
-      val project = UnsafeProjection.create(distSchema)
-      Iterator.range(0, oi.length).map { j =>
-        val i = oi(j)
-        val (ls, le) = if (tag(i) == LStart) (pos(i), pay(i)) else (pay(i), pos(i))
-        outRow.update(0, ctg(i))
-        outRow.setInt(1, ls); outRow.setInt(2, le); outRow.setInt(3, od(j))
-        project(outRow): InternalRow
-      }
-    }
+        // Forward: overlap of each left end, left flank of each left start.
+        run = null
+        var maxEnd = Long.MinValue
+        for (i <- 0 until n) {
+          if (!(ctg(i) eq run)) {
+            run = ctg(i)
+            val (m, ends) = cFwd.getOrElse(run.toString, (Long.MinValue, Nil))
+            maxEnd = m
+            flank.reset(ends)
+          }
+          tag(i) match {
+            case RStart => maxEnd = math.max(maxEnd, pay(i).toLong)
+            case REnd => flank.add(pos(i))
+            case LStart => flank.foreach(re => emit(i, pos(i).toLong - re))
+            case LEnd => if (incOverlaps && maxEnd >= pay(i)) emit(i, 0L)
+          }
+        }
+        val oi = outIdx.result(); val od = outD.result()
+        val outRow = new GenericInternalRow(4)
+        val project = UnsafeProjection.create(distSchema)
+        Iterator.range(0, oi.length).map { j =>
+          val i = oi(j)
+          val (ls, le) = if (tag(i) == LStart) (pos(i), pay(i)) else (pay(i), pos(i))
+          outRow.update(0, ctg(i))
+          outRow.setInt(1, ls); outRow.setInt(2, le); outRow.setInt(3, od(j))
+          project(outRow): InternalRow
+        }
+      })
     // At most 2k + 1 distances per triple, so the distinct set is bounded
     // and its sorted [min(k, n)] element is d_k.
-    ColumnBridge.internalFrame(spark, outRdd, distSchema)
-      .groupBy(col("contig"), col("pos_start"), col("pos_end"))
+    dists.groupBy(col("contig"), col("pos_start"), col("pos_end"))
       .agg(sort_array(collect_set(col("_nd"))).as("_ds"))
       .select(col("contig"), col("pos_start"), col("pos_end"),
         element_at(col("_ds"), least(lit(k), size(col("_ds")))).as("_dk"))

@@ -2,11 +2,12 @@ package graft.operators
 
 import graft.plans.BroadcastBudget
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
 
@@ -29,30 +30,30 @@ import scala.collection.mutable
   *
   *  1. one range-partition shuffle on `(contig, pos_start)` — uniformly
   *     splittable, no per-contig hot key;
-  *  2. a cheap first pass collects per-`(partition, contig)` max
-  *     `pos_end` — O(partitions × contigs-per-partition) driver rows;
-  *  3. the driver prefix-folds those into a carry-in "running max end"
-  *     seed per partition (this closes the correctness hole a naive
-  *     local-merge + boundary-patch scheme has: one giant interval can
+  *  2. a first pass ([[RangeSweep]]) collects, per `(partition, contig)`,
+  *     the max `pos_end`, the row count and the last run of an unseeded
+  *     walk — O(partitions × contigs-per-partition) driver rows;
+  *  3. the driver folds those into the run, and its running max end, that
+  *     each partition's first contig enters with (one giant interval can
   *     span *entire* later partitions and must bridge their interior
-  *     runs — the seed carries exactly that information);
-  *  4. each partition walks its sorted rows once with the seeded running
-  *     max, emitting locally-maximal runs;
-  *  5. only first/last runs per `(partition, contig)` can be fragments of
-  *     one global run; the driver merges those O(partitions) rows and
-  *     unions them with the untouched interior runs.
+  *     runs — the carried max end holds exactly that information);
+  *  4. each partition walks its sorted rows once, seeded with its carry,
+  *     and emits each maximal run exactly once, in the partition where it
+  *     closes; a run still open at the partition end is emitted there
+  *     only when no later partition holds its contig, so no boundary
+  *     patch-up follows.
   */
 object RangeSetOps {
 
   /** Should this (run-set-shaped) build side broadcast? Input stats when
     * they prove it fits; otherwise one cheap count × a schema-derived
     * row-width estimate. Stats are large OR unknown exactly when the
-    * frame is a merge output (part of it is driver-parallelized, so
-    * Catalyst defaults to "enormous") — treating that as non-broadcast
-    * would demote the COMMON case (a compressed run set) to the shuffle
-    * path, and merge has already materialized/persisted its heavy
-    * lineage by then, so the count is a pass over cached partitions (or
-    * parquet metadata for a raw assumeDisjoint side), never a recompute.
+    * frame is a merge output (built over the sweep's RDD, so Catalyst
+    * defaults to "enormous") — treating that as non-broadcast would demote
+    * the COMMON case (a compressed run set) to the shuffle path. Merge has
+    * already run its shuffle and summary job by then, so the count re-runs
+    * only the sweep's second pass, from shuffle files (or reads parquet
+    * metadata for a raw assumeDisjoint side), never the input lineage.
     * When the answer is no (an adversarial side with tens of millions of
     * disjoint runs), the hint is dropped and the interval-join strategy
     * takes its bin-range shuffle path for the same join shape — nothing
@@ -88,7 +89,6 @@ object RangeSetOps {
   def merge(intervals: DataFrame, maxGap: Int = 0): DataFrame = {
     require(maxGap >= 0, s"maxGap must be >= 0, got $maxGap")
     val spark = intervals.sparkSession
-    import spark.implicits._
 
     // Partition count from Catalyst stats (~64 MB per range partition,
     // capped at the session shuffle parallelism): a small interval set
@@ -100,114 +100,87 @@ object RangeSetOps {
     val wantN = statBytes / (64L << 20) + 1
     val nParts = if (wantN >= defaultN) defaultN else wantN.toInt
 
-    val sorted = intervals
-      .select(col("contig"), col("pos_start").cast("int"), col("pos_end").cast("int"))
-      .repartitionByRange(nParts, col("contig"), col("pos_start"))
-      .sortWithinPartitions(col("contig"), col("pos_start"), col("pos_end"))
-      .as[(String, Int, Int)]
-    val rdd = sorted.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-
-    // Pass 1: per-(partition, contig) max end. Driver state is
-    // O(partitions × contigs-per-partition), never O(rows).
-    val partMax: Array[Seq[(String, Int)]] = {
-      val collected = rdd.mapPartitionsWithIndex { (idx, it) =>
-        val m = mutable.LinkedHashMap.empty[String, Int]
-        it.foreach { case (contig, _, pe) =>
-          // Every input row flows through this pass, so this is the one
-          // fail-fast for the documented non-null-contig contract — a
-          // null would otherwise NPE opaquely in the driver's
-          // Ordering[String] boundary sort (r5 ADVICE).
-          if (contig == null) throw new IllegalArgumentException(
-            "RangeSetOps.merge: null contig — interval set algebra requires " +
-            "a non-null contig on every row; filter or fill nulls upstream")
-          m(contig) = math.max(m.getOrElse(contig, Int.MinValue), pe)
+    RangeSweep(
+      intervals.select(col("contig"), col("pos_start").cast("int"), col("pos_end").cast("int")),
+      Seq(col("contig"), col("pos_start"), col("pos_end")), nParts, runSchema)(
+      // Per (partition, contig): the last run of the unseeded walk, and
+      // the row count.
+      summarize = rows => {
+        val out = mutable.ArrayBuffer.empty[(String, (Run, Long))]
+        var n = 0L
+        def tail(contig: UTF8String, run: Run): Unit = {
+          out += contig.toString -> (run, n + run.n); n = 0L
         }
-        Iterator.single((idx, m.toSeq))
-      }.collect()
-      val n = rdd.getNumPartitions
-      val arr = Array.fill[Seq[(String, Int)]](n)(Seq.empty)
-      collected.foreach { case (idx, s) => arr(idx) = s }
-      arr
-    }
-    // Carry-in running max end per (partition, contig): fold pass-1 maxima
-    // of all earlier partitions.
-    val seeds: Array[Map[String, Int]] = {
-      val acc = mutable.HashMap.empty[String, Int]
-      partMax.map { here =>
-        val snapshot = acc.toMap
-        here.foreach { case (c, e) => acc(c) = math.max(acc.getOrElse(c, Int.MinValue), e) }
-        snapshot
-      }
-    }
-    val seedsB = spark.sparkContext.broadcast(seeds)
-
-    // Pass 2: seeded local walk. A row extends the current run when its
-    // start is within (running max end + 1 + maxGap); the carry-in seed
-    // participates in the running max, so a run bridged from an earlier
-    // partition is recognized even when the bridge interval itself lives
-    // partitions away. Runs are tagged boundary when first/last of their
-    // contig within the partition.
-    val tagged = rdd.mapPartitionsWithIndex { (idx, it) =>
-      val seed = seedsB.value(idx)
-      val out = mutable.ArrayBuffer.empty[(String, Int, Int, Long)]
-      var curContig: String = null
-      var curStart = 0
-      var curEnd = 0
-      var curN = 0L
-      var maxEnd = Int.MinValue // running max incl. seed for curContig
-      def flush(): Unit = if (curContig != null) out += ((curContig, curStart, curEnd, curN))
-      it.foreach { case (contig, ps, pe) =>
-        if (contig != curContig) {
-          flush()
-          curContig = contig; curStart = ps; curEnd = pe; curN = 1L
-          maxEnd = seed.getOrElse(contig, Int.MinValue)
-          // The partition's first interval of this contig may already be
-          // inside a run carried from earlier partitions; the boundary
-          // flag below hands it to the driver merge either way.
-        } else if (maxEnd != Int.MinValue && ps.toLong > maxEnd.toLong + 1 + maxGap) {
-          flush()
-          curStart = ps; curEnd = pe; curN = 1L
-        } else {
-          curEnd = math.max(curEnd, pe); curN += 1
+        walkRuns(rows, None, maxGap) { (contig, run, contigEnd) =>
+          if (contigEnd) tail(contig, run) else n += run.n
+        }.foreach { case (contig, run) => tail(contig, run) }
+        out.toSeq
+      })(
+      // Where a seeded walk first breaks, the row starts past the seed,
+      // so from there on it walks exactly like the unseeded one. Hence
+      // the run a contig leaves a partition with is the unseeded last
+      // run when that run starts past the incoming max end, else the
+      // incoming run extended by every row of the partition.
+      fold = parts => RangeSweep.contigCarries(parts) { (in: Option[Run], t: (Run, Long)) =>
+        val (last, n) = t
+        in match {
+          case Some(r) if last.start.toLong <= r.maxEnd.toLong + 1 + maxGap =>
+            Run(r.start, math.max(r.end, last.maxEnd), r.n + n, math.max(r.maxEnd, last.maxEnd))
+          case Some(r) => last.copy(maxEnd = math.max(r.maxEnd, last.maxEnd))
+          case None => last
         }
-        maxEnd = math.max(maxEnd, pe)
-      }
-      flush()
-      // boundary = first or last run of its contig in this partition.
-      val lastIdxPerContig = mutable.HashMap.empty[String, Int]
-      val firstIdxPerContig = mutable.HashMap.empty[String, Int]
-      out.zipWithIndex.foreach { case ((c, _, _, _), i) =>
-        if (!firstIdxPerContig.contains(c)) firstIdxPerContig(c) = i
-        lastIdxPerContig(c) = i
-      }
-      out.iterator.zipWithIndex.map { case ((c, s, e, n), i) =>
-        (c, s, e, n, firstIdxPerContig(c) == i || lastIdxPerContig(c) == i)
-      }
-    }.persist(StorageLevel.MEMORY_AND_DISK)
-    val taggedDf = tagged.toDF("contig", "pos_start", "pos_end", "n_merged", "boundary")
+      })(
+      // Each run is emitted once, by the partition where it closes.
+      pass = { case ((seed, continues), rows) =>
+        val out = mutable.ArrayBuffer.empty[InternalRow]
+        def emit(contig: UTF8String, run: Run): Unit =
+          out += InternalRow(contig, run.start, run.end, run.n)
+        val open = walkRuns(rows, seed, maxGap)((contig, run, _) => emit(contig, run))
+        if (!continues) open.foreach { case (contig, run) => emit(contig, run) }
+        out.iterator
+      })
+  }
 
-    // Driver boundary merge over O(partitions × contigs) rows. Rows are in
-    // global (contig, start) order after the sort; the same gap rule
-    // stitches cross-partition fragments (including k-partition chains).
-    val boundaryRows = taggedDf.filter(col("boundary")).collect()
-      .map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3)))
-      .sortBy(b => (b._1, b._2, b._3))
-    val merged = mutable.ArrayBuffer.empty[(String, Int, Int, Long)]
-    boundaryRows.foreach { b =>
-      merged.lastOption match {
-        case Some(last) if last._1 == b._1 && b._2.toLong <= last._3.toLong + 1 + maxGap =>
-          merged(merged.length - 1) =
-            (last._1, last._2, math.max(last._3, b._3), last._4 + b._4)
-        case _ => merged += b
+  /** A merge run: its extent, its source count, and its contig's running
+    * max end, which decides whether the next interval joins it. */
+  private final case class Run(start: Int, end: Int, n: Long, maxEnd: Int)
+
+  /** The merge walk over one partition's sorted `(contig, pos_start,
+    * pos_end)` rows. An interval joins the open run of its contig when its
+    * start is within `maxGap + 1` of the running max end, else it opens a
+    * new run; `seed` is the run open before the partition's first contig.
+    * `closed(contig, run, contigEnd)` gets every run that closes in the
+    * partition, `contigEnd` when its contig ends there; the run still open
+    * at the partition end is returned. */
+  private def walkRuns(rows: Iterator[InternalRow], seed: Option[Run], maxGap: Int)(
+      closed: (UTF8String, Run, Boolean) => Unit): Option[(UTF8String, Run)] = {
+    var contig: UTF8String = null
+    var (start, end, n, maxEnd) = seed.fold((0, 0, 0L, 0))(r => (r.start, r.end, r.n, r.maxEnd))
+    def run = Run(start, end, n, maxEnd)
+    def open(s: Int, e: Int): Unit = { start = s; end = e; n = 1L }
+    def extend(s: Int, e: Int): Unit = {
+      if (s.toLong > maxEnd.toLong + 1 + maxGap) { closed(contig, run, false); open(s, e) }
+      else { end = math.max(end, e); n += 1 }
+      maxEnd = math.max(maxEnd, e)
+    }
+    rows.foreach { row =>
+      // Every input row flows through here, so this is the one fail-fast
+      // for the documented non-null contract.
+      if (row.isNullAt(0) || row.isNullAt(1) || row.isNullAt(2))
+        throw new IllegalArgumentException("RangeSetOps.merge: null contig or position — " +
+          "interval set algebra requires a non-null contig, pos_start and pos_end on " +
+          "every row; filter or fill nulls upstream")
+      val c = row.getUTF8String(0)
+      val s = row.getInt(1)
+      val e = row.getInt(2)
+      if (contig == null && seed.isDefined) contig = c.copy() // the seed's contig
+      if (contig != null && c.equals(contig)) extend(s, e)
+      else {
+        if (contig != null) closed(contig, run, true)
+        contig = c.copy(); open(s, e); maxEnd = e
       }
     }
-    val mergedDf = taggedDf.sparkSession.createDataFrame(
-      taggedDf.sparkSession.sparkContext.parallelize(
-        merged.toSeq.map(b => Row(b._1, b._2, b._3, b._4)), 1),
-      runSchema)
-    taggedDf.filter(!col("boundary"))
-      .select(col("contig"), col("pos_start"), col("pos_end"), col("n_merged"))
-      .unionAll(mergedDf)
+    Option(contig).map(_ -> run)
   }
 
   /** bedtools-complement: the gaps NOT covered by `intervals`, per contig,

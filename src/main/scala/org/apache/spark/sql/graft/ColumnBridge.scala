@@ -31,4 +31,15 @@ object ColumnBridge {
       schema: org.apache.spark.sql.types.StructType): org.apache.spark.sql.DataFrame =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
+
+  /** The rows of `df`, planned without adaptive execution. An explicit
+    * exchange then runs its map stage inside the first job that reads its
+    * output, not as a job of its own at planning time, and a cached
+    * relation fills inside the first job that scans it. A cached
+    * relation's own plan keeps whatever the cache planned it with. */
+  def staticRdd(df: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow] =
+    org.apache.spark.sql.execution.QueryExecution.prepareExecutedPlan(
+      df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      df.queryExecution.optimizedPlan).execute()
 }

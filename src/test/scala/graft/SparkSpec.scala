@@ -14,6 +14,14 @@ object SharedSpark {
     s
   }
   val sf0001 = "/root/testdata/sf0.001"
+
+  /** Runs `body` with `spark.sql.shuffle.partitions` set to `n`, then
+    * restores the previous value. */
+  def withShufflePartitions[T](n: Int)(body: => T): T = {
+    val old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+    try body finally spark.conf.set("spark.sql.shuffle.partitions", old)
+  }
 }
 
 trait SparkSpec extends AnyFunSuite {

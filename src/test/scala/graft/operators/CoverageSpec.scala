@@ -8,7 +8,7 @@ import scala.util.Random
 
 /** Coverage correctness: differential vs a naive explode+group-by
   * formulation computed by Spark itself (SURVEY §5 patterns 1/3), RLE
-  * invariants, and partition-count invariance (the boundary-merge path).
+  * invariants, and partition-count invariance (blocks that span partitions).
   */
 class CoverageSpec extends SparkSpec {
 
@@ -53,11 +53,14 @@ class CoverageSpec extends SparkSpec {
   test("result is invariant to shuffle partition count (boundary merge)") {
     val reads = randomReads(800, 99)
     val expected = engineBlocks(reads)
-    for (parts <- Seq("1", "13", "61")) {
-      val old = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", parts)
-      try assert(engineBlocks(reads) === expected, s"partitions=$parts")
-      finally spark.conf.set("spark.sql.shuffle.partitions", old)
+    // Abutting reads [1,10], [11,20], ...: every position group nets to
+    // zero, so the answer is one depth-1 block across every partition.
+    import graft.SharedSpark.spark.implicits._
+    val tiles = (0 until 400).map(i => ("1", 10 * i + 1, 10 * i + 10))
+      .toDF("contig", "pos_start", "pos_end")
+    for (parts <- Seq(1, 13, 61)) graft.SharedSpark.withShufflePartitions(parts) {
+      assert(engineBlocks(reads) === expected, s"partitions=$parts")
+      assert(engineBlocks(tiles) === Seq(Row("1", 1, 4000, 1)), s"tiling, partitions=$parts")
     }
   }
 

@@ -1,8 +1,9 @@
 package graft.operators
 
-import graft.SparkSpec
-import org.apache.spark.sql.DataFrame
+import graft.{SharedSpark, SparkSpec}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 /** Interval set algebra laws, with emphasis on the cross-partition cases
   * the seeded prefix scan in [[RangeSetOps.merge]] exists for. */
@@ -12,6 +13,14 @@ class RangeSetOpsSpec extends SparkSpec {
     import graft.SharedSpark.spark.implicits._
     rows.toDF("contig", "pos_start", "pos_end")
   }
+
+  /** An interval frame built from an RDD. Its size estimate is unknown,
+    * so [[RangeSetOps.merge]] sweeps it over `spark.sql.shuffle.partitions`
+    * range partitions; a small local frame's estimate gives one. */
+  private def ivRdd(rows: Seq[(String, Int, Int)], slices: Int): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows.map(Row.fromTuple), slices),
+      StructType(Seq(StructField("contig", StringType), StructField("pos_start", IntegerType),
+        StructField("pos_end", IntegerType))))
 
   private def runs(df: DataFrame): Set[(String, Int, Int, Long)] =
     df.collect().map(r => (r.getString(0), r.getInt(1), r.getInt(2), r.getLong(3))).toSet
@@ -43,19 +52,23 @@ class RangeSetOpsSpec extends SparkSpec {
     // through the carried-in running max — the exact hole a naive
     // local-merge + first/last-boundary patch has.
     val rows = ("1", 5, 1000) +: (0 until 200).map(i => ("1", 10 + 4 * i, 11 + 4 * i))
-    val spread = iv(rows: _*).repartition(16)
-    val m = runs(RangeSetOps.merge(spread))
-    assert(m === Set(("1", 5, 1000, 201L)))
+    for (parts <- Seq(3, 8, 24)) SharedSpark.withShufflePartitions(parts) {
+      val merged = RangeSetOps.merge(ivRdd(rows, 16))
+      assert(merged.queryExecution.toRdd.getNumPartitions > 1, s"one sweep task at $parts")
+      assert(runs(merged) === Set(("1", 5, 1000, 201L)), s"partitions=$parts")
+    }
   }
 
   test("merge is partition-count invariant") {
     val rows = (0 until 500).map { i =>
       (s"c${i % 3}", (i * 37) % 2000 + 1, (i * 37) % 2000 + 1 + (i % 60))
     }
-    val one = runs(RangeSetOps.merge(iv(rows: _*).coalesce(1)))
-    val many = runs(RangeSetOps.merge(iv(rows: _*).repartition(13)))
-    assert(one === many)
+    val one = SharedSpark.withShufflePartitions(1)(runs(RangeSetOps.merge(ivRdd(rows, 1))))
     assert(one.nonEmpty)
+    for (parts <- Seq(3, 13, 24)) {
+      val many = SharedSpark.withShufflePartitions(parts)(runs(RangeSetOps.merge(ivRdd(rows, 13))))
+      assert(many === one, s"partitions=$parts")
+    }
   }
 
   test("complement emits leading and interior gaps only") {
@@ -353,9 +366,12 @@ class RangeSetOpsSpec extends SparkSpec {
     import graft.SharedSpark.spark.implicits._
     val in = Seq((null.asInstanceOf[String], 1, 5), ("1", 1, 5))
       .toDF("contig", "pos_start", "pos_end")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val e = intercept[org.apache.spark.SparkException] {
       RangeSetOps.merge(in).collect()
     }
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"a failed merge left persisted RDDs behind: $leaked")
     assert(e.getMessage != null)
     def rootMessages(t: Throwable): List[String] =
       if (t == null) Nil else Option(t.getMessage).toList ++ rootMessages(t.getCause)

@@ -692,39 +692,26 @@ class IntervalJoinSpec extends SparkSpec {
     // with a job-group-scoped listener so concurrent suites can't pollute
     // the tally.
     import graft.SharedSpark.spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val rnd = new Random(98)
     val lefts = Seq.fill(300)(rnd.nextInt(1000000) + 1)
       .map(s => (s.toLong, "1", s, s + 20)).toDF("a_key", "contig", "pos_start", "pos_end")
     def catalogue(step: Int) = (0 until 400).map(i => (i.toLong, "1", i * step + 1, i * step + 10))
       .toDF("b_key", "contig", "pos_start", "pos_end")
-    val group = "nearest-k-merge-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && group == e.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-    }
     def run(right: DataFrame): (Int, Int) = {
       val before = spark.sparkContext.getPersistentRDDs.keySet
-      jobs.set(0)
-      spark.sparkContext.setJobGroup(group, "nearest-k merge job count")
-      val n = try graft.operators.NearestJoinOps.nearestKJoin(lefts, right, 3, "merge")
-          .collect().length
-        finally spark.sparkContext.clearJobGroup()
-      org.apache.spark.sql.graft.TestListeners.drain(spark)
+      val (n, jobs) = org.apache.spark.sql.graft.TestListeners.jobsIn(spark,
+          "nearest-k-merge-jobs") {
+        graft.operators.NearestJoinOps.nearestKJoin(lefts, right, 3, "merge").collect().length
+      }
       val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
       assert(leaked.isEmpty, s"merge k-nearest left persisted RDDs behind: $leaked")
-      (jobs.get(), n)
+      (jobs, n)
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (denseJobs, denseRows) = run(catalogue(step = 5))
-      val (sparseJobs, sparseRows) = run(catalogue(step = 100000))
-      assert(denseRows > 0 && sparseRows > 0)
-      assert(sparseJobs === denseJobs,
-        s"sparse catalogue ran $sparseJobs jobs vs $denseJobs on the dense one")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (denseJobs, denseRows) = run(catalogue(step = 5))
+    val (sparseJobs, sparseRows) = run(catalogue(step = 100000))
+    assert(denseRows > 0 && sparseRows > 0)
+    assert(sparseJobs === denseJobs,
+      s"sparse catalogue ran $sparseJobs jobs vs $denseJobs on the dense one")
   }
 
   test("merge regime carries the -io/-id/-iu/-D variants (equals broadcast probe)") {

@@ -237,29 +237,14 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming dedup gate builds its index in one job and persists nothing") {
     import graft.SharedSpark.spark.implicits._
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     val base = spark.range(0, 50, 1, 3).select(col("id").as("doc_id"),
       concat_ws(" ", lit("document"), col("id"), lit("says"), col("id") % 7, lit("and"),
         col("id") % 5, lit("words")).as("text"))
     val docs = Seq((ts(1), 1L, "document 3 says 3 and 3 words")).toDF("ts", "doc_id", "text")
-    val group = "dedup-gate-index-jobs"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (e.properties != null && group == e.properties.getProperty("spark.jobGroup.id"))
-          jobs.incrementAndGet()
-    }
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    spark.sparkContext.addSparkListener(listener)
-    val gate = try {
-      spark.sparkContext.setJobGroup(group, "dedup gate index build")
-      try StreamingOps.dedupGateStream(docs, base)
-      finally spark.sparkContext.clearJobGroup()
-    } finally {
-      org.apache.spark.sql.graft.TestListeners.drain(spark)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-    assert(jobs.get() === 1, s"index build ran ${jobs.get()} jobs")
+    val (gate, jobs) = org.apache.spark.sql.graft.TestListeners.jobsIn(spark,
+      "dedup-gate-index-jobs")(StreamingOps.dedupGateStream(docs, base))
+    assert(jobs === 1, s"index build ran $jobs jobs")
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"dedup gate left persisted RDDs behind: $leaked")
     assert(gate.filter(col("is_dup")).select(col("dup_of")).as[Long].collect().toSeq === Seq(3L))

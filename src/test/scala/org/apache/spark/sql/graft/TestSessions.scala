@@ -33,10 +33,31 @@ object TestSessions {
   }
 }
 
-/** Test-only access to the context's listener bus: block until every
-  * posted event has reached the listeners, so a listener-side tally
-  * (jobs, stages) is complete when read. */
+/** Test-only access to the context's listener bus. */
 object TestListeners {
+
+  /** Blocks until every posted event has reached the listeners, so a
+    * listener-side tally (jobs, stages) is complete when read. */
   def drain(spark: org.apache.spark.sql.SparkSession): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(60000L)
+
+  /** Runs `body` in job group `group` and returns its result with the
+    * number of Spark jobs started in that group. Counting by group keeps
+    * jobs of concurrent work out of the tally. */
+  def jobsIn[T](spark: org.apache.spark.sql.SparkSession, group: String)(body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && group == e.properties.getProperty("spark.jobGroup.id"))
+          jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, group)
+      val out = try body finally spark.sparkContext.clearJobGroup()
+      drain(spark)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
