@@ -3,7 +3,7 @@ package graft.plans
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join, JoinHint, LogicalPlan, Project}
-import org.apache.spark.sql.types.{IntegerType, LongType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
 
 /** Inner bin-range interval join as a pure Catalyst rewrite — the shape
   * the engine plans at shuffle scale (build side over the broadcast
@@ -100,6 +100,25 @@ object BinRangeRewrite {
     val gen = Generate(Explode(seq), unrequiredChildIndex = Nil,
       outer = false, qualifier = None, generatorOutput = Seq(binAttr), child = projected)
     (gen, binAttr, dedupLo.toAttribute)
+  }
+
+  /** `plan` plus a `bin` column, one row per bin of width `binWidth` that
+    * `[s, e]` overlaps: the input of [[IntervalBinCountJoinExec]], whose
+    * exchanges hash on `(eqs..., bin)`. A row that can never match — a
+    * null bound or a null equality key — emits nothing. An inverted
+    * (`s > e`) row emits ONE row with a null bin, so the exec can drop it
+    * and count it once in its `invertedDropped` metric. */
+  def countBins(plan: LogicalPlan, s: Expression, e: Expression, eqs: Seq[Expression],
+      binWidth: Int): (LogicalPlan, AttributeReference) = {
+    val w = binWidth.toLong
+    val bins = new Sequence(floorDiv(s, w), floorDiv(e, w)).withTimeZone(
+      org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone)
+    val nullKey = eqs.map(k => IsNull(k): Expression).reduceOption(Or)
+    val branches = Seq(GreaterThan(s, e) -> CreateArray(Seq(Literal(null, LongType)))) ++
+      nullKey.map(_ -> Literal.create(null, ArrayType(LongType)))
+    val bin = AttributeReference("bin", LongType, nullable = true)()
+    (Generate(Explode(CaseWhen(branches, bins)), unrequiredChildIndex = Nil,
+      outer = false, qualifier = None, generatorOutput = Seq(bin), child = plan), bin)
   }
 
   /** The rewritten logical plan: binned(left) ⋈ binned(right) on

@@ -270,14 +270,16 @@ case class GenomicStrategy(session: SparkSession) extends SparkStrategy {
       } else method
       NearestJoinExec(n.output, resolved, k, planLater(l), planLater(r),
         enforceBuildBudget = method == "auto") :: Nil
-    case n: IntervalCountJoinNode =>
-      if (n.binRange) {
+    case n: IntervalCountJoinNode => n.bins match {
+      case Some((leftBin, rightBin)) =>
         // Shuffle regime (build side over the broadcast budget, or the
-        // method pinned binrange): per-(key,bin) rank indexes — no
-        // broadcast, no budget guard needed.
+        // method pinned binrange): the children are bin replicas, hash
+        // exchanged on (key, bin) by EnsureRequirements — no broadcast,
+        // no budget guard needed.
         IntervalBinCountJoinExec(n.keys, n.countLeft, n.crossSums.map(_._1),
-          n.output, planLater(n.left), planLater(n.right), n.binWidth) :: Nil
-      } else {
+          n.output, planLater(n.left), planLater(n.right), leftBin, rightBin,
+          n.binWidth) :: Nil
+      case None =>
         // Broadcast regime: the rewrite rule fired because the build
         // side's stats fit the budget; the runtime guard still backstops
         // a stats lie (hint/method exemptions resolved at rewrite time,
@@ -285,7 +287,7 @@ case class GenomicStrategy(session: SparkSession) extends SparkStrategy {
         IntervalCountJoinExec(n.keys, n.countLeft, n.buildLeft, n.crossSums.map(_._1),
           n.output, planLater(n.left), planLater(n.right),
           enforceBuildBudget = n.enforceBudget) :: Nil
-      }
+    }
     case _ => Nil
   }
 }

@@ -7,6 +7,7 @@ import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeRef
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Complete, Count, Sum}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
+import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.execution.metric.SQLMetrics
@@ -60,7 +61,8 @@ import CountRankIndex.{rankLe, rankLt}
   * attribute / pair count / integral sum as above, all grouping
   * attributes from one join side. Both join regimes are covered: forest
   * side within the broadcast budget → broadcast rank index
-  * ([[IntervalCountJoinExec]]); above it → per-(key,bin) shuffled rank
+  * ([[IntervalCountJoinExec]]); above it → both sides replicated per
+  * genome bin and hash-exchanged on (key, bin) into per-(key,bin) rank
   * indexes ([[IntervalBinCountJoinExec]]) with first-intersection-bin
   * partial counts the surviving aggregate merges.
   *
@@ -94,16 +96,22 @@ case class IntervalCountJoinNode(left: LogicalPlan, right: LogicalPlan,
       * rewrite turns `SUM(e)` into `SUM(partial)`. */
     crossSums: Seq[(Expression, AttributeReference)] = Nil,
     /** Shuffle regime: when the build side exceeds the broadcast budget
-      * (or the method pins binrange), the node plans
-      * [[IntervalBinCountJoinExec]] — both sides shuffled by (key, bin),
-      * per-(key,bin) rank indexes, partial counts merged by the surviving
-      * aggregate. Same aggregate surface, no broadcast, no pair
+      * (or the method pins binrange), both children are
+      * [[BinRangeRewrite.countBins]] replicas and these are their
+      * `(left, right)` bin columns. The node then plans
+      * [[IntervalBinCountJoinExec]] — both sides hash-exchanged on
+      * (key, bin), per-(key,bin) rank indexes, partial counts merged by the
+      * surviving aggregate. Same aggregate surface, no broadcast, no pair
       * materialization. */
-    binRange: Boolean = false,
+    bins: Option[(Attribute, Attribute)] = None,
     binWidth: Int = 5000)
     extends org.apache.spark.sql.catalyst.plans.logical.BinaryNode {
-  override def output: Seq[Attribute] =
-    ((if (countLeft) left.output else right.output) :+ cntAttr) ++ crossSums.map(_._2)
+  def binRange: Boolean = bins.isDefined
+  override def output: Seq[Attribute] = {
+    val counted = if (countLeft) left.output else right.output
+    val bin = bins.map(b => if (countLeft) b._1 else b._2)
+    (counted.filterNot(a => bin.contains(a)) :+ cntAttr) ++ crossSums.map(_._2)
+  }
   override def producedAttributes: AttributeSet =
     AttributeSet(cntAttr +: crossSums.map(_._2))
   // The probe consumes the key expressions of both sides; the counted
@@ -335,8 +343,19 @@ case class IntervalCountPushdownRule(session: SparkSession)
               (es.head,
                 AttributeReference("pair_sum", LongType, nullable = es.head.nullable)())
             }.toSeq
-          val node = IntervalCountJoinNode(jl, jr, keys, countLeft, buildLeft,
-            enforceBudget, cnt, crossSums, binRange, binWidth)
+          // Shuffle regime: each side becomes its bin replicas, so the
+          // exec's exchanges are planned (and seen by AQE) like any join's.
+          val (l, r, bins) =
+            if (!binRange) (jl, jr, None)
+            else {
+              val (lb, lBin) = BinRangeRewrite.countBins(
+                jl, keys.leftStart, keys.leftEnd, keys.leftEqs, binWidth)
+              val (rb, rBin) = BinRangeRewrite.countBins(
+                jr, keys.rightStart, keys.rightEnd, keys.rightEqs, binWidth)
+              (lb, rb, Some((lBin, rBin)))
+            }
+          val node = IntervalCountJoinNode(l, r, keys, countLeft, buildLeft,
+            enforceBudget, cnt, crossSums, bins, binWidth)
           def partialOf(e: Expression): AttributeReference =
             crossSums.find(_._1.canonicalized == e.canonicalized).get._2
           // Fresh AggregateExpression (fresh resultId): AVG splits one
@@ -681,16 +700,24 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
 
 /** Shuffle-regime count/sum probe — the bin-range analogue of
   * [[IntervalCountJoinExec]], for build sides over the broadcast budget
-  * (the featureCounts shape at its biggest). Both sides replicate to the
-  * fixed-width genome bins their interval overlaps and hash-shuffle on
-  * `(eq keys..., bin)`; within a partition the NON-counted side's
-  * replicas fold into per-(key,bin) rank indexes (sorted starts/ends +
-  * per-sum prefix arrays — primitive ints/longs, never buffered rows),
-  * then the counted side STREAMS through, emitting one partial
-  * `(counted row, pair_count, partial sums...)` per replica bin with a
-  * non-zero count. The surviving aggregate merges partials across bins —
-  * the same `SUM(pair_count)` rewrite the broadcast path uses, so both
-  * regimes share one logical contract.
+  * (the featureCounts shape at its biggest). Both children are bin
+  * replicas ([[BinRangeRewrite.countBins]]: each row once per fixed-width
+  * genome bin its interval overlaps, plus the `bin` column), and the exec
+  * requires both clustered on `(eq keys..., bin)`, so `EnsureRequirements`
+  * plans a hash `ShuffleExchangeExec` under each: rows cross the shuffle
+  * as `UnsafeRow`s, and AQE and `explain()` see both exchanges. Within a
+  * partition the NON-counted side's replicas fold into per-(key,bin) rank
+  * indexes (sorted starts/ends + per-sum prefix arrays — primitive
+  * ints/longs, never buffered rows), then the counted side STREAMS
+  * through, emitting one partial `(counted row, pair_count, partial
+  * sums...)` per replica bin with a non-zero count. The surviving
+  * aggregate merges partials across bins — the same `SUM(pair_count)`
+  * rewrite the broadcast path uses, so both regimes share one logical
+  * contract.
+  *
+  * Every cluster key is required (`requireAllClusterKeys`): a child
+  * already hash-partitioned on the contig alone must not satisfy the
+  * distribution, or one task would index a whole hot contig.
   *
   * Exactly-once across bins by first-intersection-bin rank arithmetic
   * (no per-pair scan, unlike the general bin-range join): for a counted
@@ -708,17 +735,19 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
   * iff zero non-null values contributed, so SUM's all-null → NULL
   * semantics survive bin splitting.
   *
-  * At 100 TB: no broadcast, no driver collect, no pair materialization —
-  * shuffle volume is the replica sets (the same as the general bin-range
-  * join), probe work O(replicas · log bin-occupancy), output volume
-  * O(counted replicas). Per-task memory is the index side's partition as
-  * primitive arrays (8–24 B/row vs full UnsafeRows) — sized by
-  * `spark.sql.shuffle.partitions` like any shuffled-hash build, with
-  * (key, bin) granularity far finer than a per-contig skew. */
+  * At 100 TB: no broadcast, no driver collect, no pair materialization.
+  * Shuffle volume is one `UnsafeRow` per replica, its side's columns plus
+  * the bin. Probe work is O(replicas · log bin-occupancy), output volume
+  * O(counted replicas). Per-task memory is the index side's
+  * partition as primitive arrays (8–24 B/row vs full UnsafeRows) — sized
+  * by `spark.sql.shuffle.partitions` (or AQE's coalescing, applied to
+  * both exchanges alike) like any shuffled-hash build, with (key, bin)
+  * granularity far finer than a per-contig skew. */
 case class IntervalBinCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
     crossSumExprs: Seq[Expression],
     override val output: Seq[Attribute],
-    left: SparkPlan, right: SparkPlan, binWidth: Int)
+    left: SparkPlan, right: SparkPlan, leftBin: Attribute, rightBin: Attribute,
+    binWidth: Int)
     extends BinaryExecNode {
 
   override def producedAttributes: AttributeSet = AttributeSet(output)
@@ -730,6 +759,10 @@ case class IntervalBinCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
     "invertedDropped" -> SQLMetrics.createMetric(sparkContext,
       "malformed (start > end) rows dropped"))
 
+  override def requiredChildDistribution: Seq[Distribution] = Seq(
+    ClusteredDistribution(keys.leftEqs :+ leftBin, requireAllClusterKeys = true),
+    ClusteredDistribution(keys.rightEqs :+ rightBin, requireAllClusterKeys = true))
+
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): SparkPlan =
     copy(left = newLeft, right = newRight)
@@ -739,98 +772,64 @@ case class IntervalBinCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
 
   override protected def doExecute(): RDD[InternalRow] = {
     val (countedPlan, indexPlan) = if (countLeft) (left, right) else (right, left)
-    val (cStart, cEnd, cEqs) =
-      if (countLeft) (keys.leftStart, keys.leftEnd, keys.leftEqs)
-      else (keys.rightStart, keys.rightEnd, keys.rightEqs)
-    val (iStart, iEnd, iEqs) =
-      if (countLeft) (keys.rightStart, keys.rightEnd, keys.rightEqs)
-      else (keys.leftStart, keys.leftEnd, keys.leftEqs)
+    val (cStart, cEnd, cKey) =
+      if (countLeft) (keys.leftStart, keys.leftEnd, keys.leftEqs :+ leftBin)
+      else (keys.rightStart, keys.rightEnd, keys.rightEqs :+ rightBin)
+    val (iStart, iEnd, iKey) =
+      if (countLeft) (keys.rightStart, keys.rightEnd, keys.rightEqs :+ rightBin)
+      else (keys.leftStart, keys.leftEnd, keys.leftEqs :+ leftBin)
     val cIvB = Seq(bound(cStart, countedPlan), bound(cEnd, countedPlan))
-    val cEqsB = cEqs.map(bound(_, countedPlan))
+    val cKeyB = cKey.map(bound(_, countedPlan))
     val iIvB = Seq(bound(iStart, indexPlan), bound(iEnd, indexPlan))
-    val iEqsB = iEqs.map(bound(_, indexPlan))
-    val nEqs = iEqs.length
+    val iKeyB = iKey.map(bound(_, indexPlan))
+    // The key row is (eq keys..., bin); a null bin marks an inverted
+    // interval, replicated once (see BinRangeRewrite.countBins).
+    val binOrd = keys.leftEqs.length
     val nSums = crossSumExprs.length
     val crossBound = crossSumExprs.map(bound(_, indexPlan))
     val binW = binWidth
     val outAttrs = output
+    // Counted rows keep their bin column; the result drops it.
+    val resultInput = countedPlan.output ++ output.takeRight(1 + nSums)
     val numOutputRows = longMetric("numOutputRows")
     val indexReplicas = longMetric("indexReplicas")
     val pairCountMetric = longMetric("pairCount")
     val invertedDropped = longMetric("invertedDropped")
     val emptyVals = Array.emptyLongArray
 
-    // Index side: (key, bin) -> (start, end, [sum values..., non-null
-    // 0/1 flags...]). Inverted (start > end) rows dropped on BOTH sides —
-    // the rank identity needs well-formed intervals (same contract as the
-    // broadcast count path).
-    val indexKeyed: RDD[((UnsafeRow, Int), (Int, Int, Array[Long]))] =
-      indexPlan.execute().mapPartitions { it =>
-        val keyProj = UnsafeProjection.create(iEqsB)
-        val ivProj = UnsafeProjection.create(iIvB)
-        val sumProj = if (nSums > 0) UnsafeProjection.create(crossBound) else null
-        it.flatMap { row =>
-          val iv = ivProj(row)
-          if (iv.isNullAt(0) || iv.isNullAt(1) || iv.getInt(0) > iv.getInt(1)) {
-            if (!iv.isNullAt(0) && !iv.isNullAt(1)) invertedDropped += 1
-            Iterator.empty
-          } else {
-            val key = keyProj(row)
-            if (nEqs > 0 && key.anyNull) Iterator.empty
-            else {
-              val s = iv.getInt(0); val e = iv.getInt(1)
-              val vals = if (nSums == 0) emptyVals else {
-                val vs = sumProj(row)
-                val a = new Array[Long](2 * nSums)
-                var i = 0
-                while (i < nSums) {
-                  if (!vs.isNullAt(i)) { a(i) = vs.getLong(i); a(nSums + i) = 1L }
-                  i += 1
-                }
-                a
-              }
-              val k = key.copy()
-              val lo = Math.floorDiv(s, binW); val hi = Math.floorDiv(e, binW)
-              (lo to hi).iterator.map(b => ((k, b), (s, e, vals)))
-            }
-          }
-        }
-      }
-    val countedKeyed: RDD[((UnsafeRow, Int), (Int, Int, InternalRow))] =
-      countedPlan.execute().mapPartitions { it =>
-        val keyProj = UnsafeProjection.create(cEqsB)
-        val ivProj = UnsafeProjection.create(cIvB)
-        it.flatMap { row =>
-          val iv = ivProj(row)
-          if (iv.isNullAt(0) || iv.isNullAt(1) || iv.getInt(0) > iv.getInt(1)) {
-            if (!iv.isNullAt(0) && !iv.isNullAt(1)) invertedDropped += 1
-            Iterator.empty
-          } else {
-            val key = keyProj(row)
-            if (nEqs > 0 && key.anyNull) Iterator.empty
-            else {
-              val s = iv.getInt(0); val e = iv.getInt(1)
-              val copy = row.copy(); val k = key.copy()
-              val lo = Math.floorDiv(s, binW); val hi = Math.floorDiv(e, binW)
-              (lo to hi).iterator.map(b => ((k, b), (s, e, copy)))
-            }
-          }
-        }
-      }
-
-    val numParts = conf.numShufflePartitions
-    val part = new org.apache.spark.HashPartitioner(numParts)
-    // partitionBy + zipPartitions (the RDD spelling of a shuffled-hash
-    // join): the index side folds into primitive-array rank indexes; the
-    // counted side STREAMS — never buffered, unlike a cogroup, whose
-    // grouped iterables would materialize both sides per (key, bin).
-    indexKeyed.partitionBy(part).zipPartitions(
-        countedKeyed.partitionBy(part), preservesPartitioning = false) { (idxIt, cntIt) =>
+    // The exchanges co-partition both children on (key, bin): the index
+    // side folds into primitive-array rank indexes; the counted side
+    // STREAMS — never buffered, unlike a cogroup, whose grouped iterables
+    // would materialize both sides per (key, bin).
+    indexPlan.execute().zipPartitions(countedPlan.execute()) { (idxIt, cntIt) =>
+      // Index side: (key, bin) -> (start, end, [sum values..., non-null
+      // 0/1 flags...]). Inverted rows are dropped on BOTH sides — the
+      // rank identity needs well-formed intervals (same contract as the
+      // broadcast count path).
+      val iKeyProj = UnsafeProjection.create(iKeyB)
+      val iIvProj = UnsafeProjection.create(iIvB)
+      val sumProj = if (nSums > 0) UnsafeProjection.create(crossBound) else null
       val groups = mutable.AnyRefMap
-        .empty[(UnsafeRow, Int), mutable.ArrayBuffer[(Int, Int, Array[Long])]]
-      idxIt.foreach { case (k, v) =>
-        indexReplicas += 1
-        groups.getOrElseUpdate(k, new mutable.ArrayBuffer[(Int, Int, Array[Long])]) += v
+        .empty[UnsafeRow, mutable.ArrayBuffer[(Int, Int, Array[Long])]]
+      idxIt.foreach { row =>
+        val key = iKeyProj(row)
+        if (key.isNullAt(binOrd)) invertedDropped += 1
+        else {
+          indexReplicas += 1
+          val iv = iIvProj(row)
+          val vals = if (nSums == 0) emptyVals else {
+            val vs = sumProj(row)
+            val a = new Array[Long](2 * nSums)
+            var i = 0
+            while (i < nSums) {
+              if (!vs.isNullAt(i)) { a(i) = vs.getLong(i); a(nSums + i) = 1L }
+              i += 1
+            }
+            a
+          }
+          groups.getOrElseUpdate(key.copy(), new mutable.ArrayBuffer[(Int, Int, Array[Long])]) +=
+            ((iv.getInt(0), iv.getInt(1), vals))
+        }
       }
       // Finalize: sorted rank arrays + prefix sums per order; the tuple
       // buffers are released group by group.
@@ -856,7 +855,7 @@ case class IntervalBinCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
           }
           (ps, pn)
         }
-      val index = mutable.AnyRefMap.empty[(UnsafeRow, Int), Idx]
+      val index = mutable.AnyRefMap.empty[UnsafeRow, Idx]
       groups.foreach { case (k, buf) =>
         val arr = buf.toArray
         val byStart = arr.sortBy(_._1)
@@ -867,14 +866,20 @@ case class IntervalBinCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
       }
       groups.clear()
 
+      val cKeyProj = UnsafeProjection.create(cKeyB)
+      val cIvProj = UnsafeProjection.create(cIvB)
       val joined = new JoinedRow
       val extraRow = new GenericInternalRow(1 + nSums)
-      val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-      cntIt.flatMap { case ((key, bin), (qs, qe, crow)) =>
-        index.get((key, bin)) match {
+      val resultProj = UnsafeProjection.create(outAttrs, resultInput)
+      cntIt.flatMap { crow =>
+        val key = cKeyProj(crow)
+        if (key.isNullAt(binOrd)) { invertedDropped += 1; Iterator.empty }
+        else index.get(key) match {
           case None => Iterator.empty
           case Some(idx) =>
-            val lo = bin.toLong * binW
+            val iv = cIvProj(crow)
+            val qs = iv.getInt(0); val qe = iv.getInt(1)
+            val lo = key.getLong(binOrd) * binW
             val hi = lo + binW - 1
             val boundHi = math.min(qe.toLong, hi)
             val j = rankLe(idx.starts, boundHi)

@@ -67,9 +67,10 @@ object IntervalQueries {
           avg(b("pos_end") - b("pos_start") + 1).as("avg_feat_len"))
     },
     // The featureCounts aggregate through the SHUFFLE regime (r10 VERDICT
-    // #1): method pinned binrange, so the count/sum pushdown plans
-    // IntervalBinCountJoinExec — per-(key,bin) rank indexes, partial
-    // counts merged by the surviving aggregate, zero pair
+    // #1): method pinned binrange, so the count/sum pushdown plans both
+    // sides as bin replicas under hash exchanges on (contig, bin) and
+    // IntervalBinCountJoinExec over them — per-(key,bin) rank indexes,
+    // partial counts merged by the surviving aggregate, zero pair
     // materialization even when the build side exceeds the broadcast
     // budget. Same oracle SQL as interval_join_mass: the physical regime
     // must not change results.

@@ -6,7 +6,9 @@ import graft.plans.CountRankIndex.{rankLe, rankLt}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
+import org.apache.spark.util.SizeEstimator
 
 import java.sql.Timestamp
 
@@ -122,12 +124,13 @@ object StreamingOps {
     val spark = vecs.sparkSession
     import spark.implicits._
     require(k >= 1, s"k must be positive, got $k")
-    BroadcastBudget.requireFits(corpus, "similarStream corpus", "it is collected and " +
-      "broadcast. Use the batch EmbeddingOps paths (IVF/LSH/quantized) for a " +
-      "corpus this size, or raise the conf if the driver can hold it.")
+    val advice = "it is collected and broadcast. Use the batch EmbeddingOps paths " +
+      "(IVF/LSH/quantized) for a corpus this size, or raise the conf if the driver can hold it."
+    BroadcastBudget.requireFits(corpus, "similarStream corpus", advice)
     val base: Array[(Long, Array[Double])] = corpus
       .select(col("vec_id"), col("embedding").cast("array<double>"))
       .as[(Long, Seq[Double])].collect().map { case (i, e) => (i, e.toArray) }
+    checkCollected(base, "similarStream corpus", advice, spark.sessionState.conf)
     val bc = spark.sparkContext.broadcast(base)
     vecs
       .select(col("vec_id"), col("ts"), col("embedding").cast("array<double>"))
@@ -473,13 +476,14 @@ object StreamingOps {
   def countStream(reads: Dataset[StreamRead], targets: DataFrame): DataFrame = {
     val spark = reads.sparkSession
     import spark.implicits._
-    BroadcastBudget.requireFits(targets, "countStream static side", "it is collected to " +
-      "the driver as per-contig rank arrays. Filter/project the annotation table down, " +
-      "or raise the conf if the driver can hold it.")
+    val advice = "it is collected to the driver as per-contig rank arrays. " +
+      "Filter/project the annotation table down, or raise the conf if the driver can hold it."
+    BroadcastBudget.requireFits(targets, "countStream static side", advice)
     val collected = targets
       .select(col("contig").cast("string"), col("pos_start").cast("int"),
         col("pos_end").cast("int"))
       .as[(String, Int, Int)].collect()
+    checkCollected(collected, "countStream static side", advice, spark.sessionState.conf)
     val index: Map[String, (Array[Int], Array[Int])] =
       collected.filter(r => r._2 <= r._3).groupBy(_._1).map { case (c, rows) =>
         c -> (rows.map(_._2).sorted, rows.map(_._3).sorted)
@@ -497,6 +501,13 @@ object StreamingOps {
     }.toDF("contig", "pos_start", "pos_end", "ts", "n_overlaps")
   }
 
+  /** The runtime half of a stream-static collect's budget: the estimate
+    * gate ran before the collect, this holds the collected side's driver
+    * bytes (`SizeEstimator`) to [[BroadcastBudget.checkCollected]]. */
+  private def checkCollected(collected: AnyRef, what: String, advice: String,
+      conf: SQLConf): Unit =
+    BroadcastBudget.checkCollected(SizeEstimator.estimate(collected), what, advice, conf)
+
   /** The static side of a stream-static forest join: size-gated,
     * collected as `(contig, pos_start, pos_end, name)` and broadcast as the
     * per-contig [[IntervalForest]] the batch join builds. */
@@ -504,13 +515,14 @@ object StreamingOps {
       : Broadcast[Map[String, IntervalForest[String]]] = {
     val spark = targets.sparkSession
     import spark.implicits._
-    BroadcastBudget.requireFits(targets, s"$op static side", "it is collected to the " +
-      "driver and broadcast as an interval forest. Filter/project the annotation table " +
-      "down, or raise the conf if the driver can hold it.")
+    val advice = "it is collected to the driver and broadcast as an interval forest. " +
+      "Filter/project the annotation table down, or raise the conf if the driver can hold it."
+    BroadcastBudget.requireFits(targets, s"$op static side", advice)
     val collected = targets
       .select(col("contig").cast("string"), col("pos_start").cast("int"),
         col("pos_end").cast("int"), col("name").cast("string"))
       .as[(String, Int, Int, String)].collect()
+    checkCollected(collected, s"$op static side", advice, spark.sessionState.conf)
     spark.sparkContext.broadcast(IntervalForest.forest[String, String](collected.toSeq))
   }
 

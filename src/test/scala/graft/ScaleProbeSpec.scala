@@ -52,6 +52,14 @@ class ScaleProbeSpec extends SparkSpec {
         (nReads * 2.2).toLong + nAnnots * 4,
         s"bin-range shuffled ${br.shuffle} records for $nReads reads — " +
           "pair rows are hitting the exchange")
+      // And each of those records is narrow: the replicas cross Spark
+      // hash exchanges as UnsafeRows (18.4 B/record here), not as
+      // Java-serialized ((key, bin), (start, end, row)) tuples (24.4).
+      val brBytesPerRecord =
+        br.shuffle("shuffle_write_bytes").toDouble / br.shuffle("shuffle_write_records")
+      assert(brBytesPerRecord <= 21.0,
+        f"bin-range shuffle wrote $brBytesPerRecord%.1f B/record (${br.shuffle}) — " +
+          "replicas are not crossing the exchange as UnsafeRows")
 
       // Merge-regime nearest-k over every 20th read: the endpoint sweep
       // moves 2 rows per probe and per annotation, the re-join a few

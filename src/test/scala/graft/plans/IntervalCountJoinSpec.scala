@@ -1,8 +1,11 @@
 package graft.plans
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec, ShuffleQueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,14 +38,16 @@ class IntervalCountJoinSpec extends AnyFunSuite {
     walk(df.queryExecution.executedPlan)
   }
 
-  private def hasBinCountExec(df: DataFrame): Boolean = {
-    def walk(p: SparkPlan): Boolean = p match {
-      case _: IntervalBinCountJoinExec => true
-      case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-      case other => other.children.exists(walk)
-    }
-    walk(df.queryExecution.executedPlan)
+  /** The bin-range exec of a plan, looking inside adaptive query stages. */
+  private def binExec(p: SparkPlan): Option[IntervalBinCountJoinExec] = p match {
+    case e: IntervalBinCountJoinExec => Some(e)
+    case ad: AdaptiveSparkPlanExec => binExec(ad.executedPlan)
+    case q: QueryStageExec => binExec(q.plan)
+    case other => other.children.flatMap(binExec).headOption
   }
+
+  private def hasBinCountExec(df: DataFrame): Boolean =
+    binExec(df.queryExecution.executedPlan).isDefined
 
   private def ivs(n: Int, seed: Int, key: String): DataFrame = {
     import graft.SharedSpark.spark.implicits._
@@ -52,6 +57,9 @@ class IntervalCountJoinSpec extends AnyFunSuite {
       (i.toLong, (rnd.nextInt(3) + 1).toString, s, s + rnd.nextInt(120))
     }.toDF(key, "contig", "pos_start", "pos_end")
   }
+
+  /** (key, contig, start, end, measure), every field but the key nullable. */
+  private type Iv = (Long, Option[String], Option[Int], Option[Int], Option[Long])
 
   private def joined(a: DataFrame, b: DataFrame): DataFrame =
     a.join(b, a("contig") === b("contig") &&
@@ -314,6 +322,104 @@ class IntervalCountJoinSpec extends AnyFunSuite {
             q().collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
           }
           assert(got === want, s"bin-spanning counts diverged grouping by $key")
+        }
+      }
+    }
+  }
+
+  test("bin-range count join == brute force under hash exchanges, any partitioning, AQE on/off") {
+    graft.Graft.ensure(spark)
+    import graft.SharedSpark.spark.implicits._
+    // The giant-interval fixture, random intervals with a nullable
+    // measure, and rows that can never match: null bounds, null contigs
+    // and inverted (start > end) intervals, one of them with a null
+    // contig too. Contig 3 holds one pair whose measures are both NULL.
+    val rnd = new scala.util.Random(47)
+    def random(base: Long, n: Int): Seq[Iv] = (1 to n).map { i =>
+      val s = rnd.nextInt(300) + 1
+      (base + i, Some((rnd.nextInt(2) + 1).toString), Some(s), Some(s + rnd.nextInt(40)),
+        if (rnd.nextInt(3) == 0) None else Some(rnd.nextInt(100).toLong - 50))
+    }
+    val as: Seq[Iv] = Seq[Iv]((1L, Some("1"), Some(100), Some(9999), Some(5L)),
+      (2L, Some("1"), Some(5000), Some(5000), None), (3L, Some("2"), Some(1), Some(10), Some(-3L)),
+      (4L, Some("1"), None, Some(50), Some(1L)), (5L, None, Some(10), Some(60), Some(1L)),
+      (6L, Some("1"), Some(50), Some(40), Some(1L)), (7L, Some("3"), Some(10), Some(20), None)) ++
+      random(100L, 60)
+    val bs: Seq[Iv] = Seq[Iv]((1L, Some("1"), Some(1), Some(20000), Some(2L)),
+      (2L, Some("1"), Some(150), Some(160), None), (3L, Some("1"), Some(5000), Some(5001), Some(4L)),
+      (4L, Some("1"), Some(9999), Some(12000), None), (5L, Some("1"), Some(99), Some(100), Some(6L)),
+      (6L, Some("1"), Some(20), Some(99), Some(7L)), (7L, Some("2"), Some(10), Some(10), Some(8L)),
+      (8L, Some("2"), Some(300), Some(200), Some(9L)), (9L, None, Some(9), Some(3), Some(1L)),
+      (10L, Some("2"), Some(5), None, Some(1L)), (11L, Some("3"), Some(15), Some(18), None)) ++
+      random(1000L, 40)
+    // The contig equality's inferred `isnotnull(contig)` filter removes
+    // the null-contig inverted row before the join, so two reach the exec.
+    val inverted = (as ++ bs).count { case (_, c, s, e, _) =>
+      c.isDefined && s.isDefined && e.isDefined && s.get > e.get }
+    assert(inverted === 2)
+    val a = as.toDF("a_key", "contig", "pos_start", "pos_end", "measure")
+    val b = bs.toDF("b_key", "contig", "pos_start", "pos_end", "bm")
+    // (key, pair count, SUM of the other side's measure — NULL when every
+    // summed value is NULL) per counted key with at least one pair; rows
+    // that can never match, inverted ones included, are dropped.
+    def brute(counted: Seq[Iv], other: Seq[Iv]): Seq[(Long, Long, Option[Long])] = {
+      def ok(iv: Iv) = iv._2.isDefined && iv._3.isDefined && iv._4.isDefined &&
+        iv._3.get <= iv._4.get
+      val os = other.filter(ok)
+      counted.filter(ok).groupBy(_._1).toSeq.flatMap { case (k, rows) =>
+        val ms = for (c <- rows; o <- os
+          if c._2 == o._2 && c._4.get >= o._3.get && c._3.get <= o._4.get) yield o._5
+        if (ms.isEmpty) None
+        else Some((k, ms.size.toLong, if (ms.forall(_.isEmpty)) None else Some(ms.flatten.sum)))
+      }.sorted
+    }
+    val want = Map("b_key" -> brute(bs, as), "a_key" -> brute(as, bs))
+    assert(want.values.forall(_.exists(_._3.isEmpty)), "fixture lacks an all-NULL sum")
+    def exchangeOf(p: SparkPlan): Option[ShuffleExchangeExec] = p match {
+      case e: ShuffleExchangeExec => Some(e)
+      case r: AQEShuffleReadExec => exchangeOf(r.child)
+      case q: ShuffleQueryStageExec => exchangeOf(q.plan)
+      case _ => None
+    }
+    withConf("spark.graft.rangejoin.binWidth", "7") {
+      withConf("spark.graft.rangejoin.method", "binrange") {
+        for (aqe <- Seq("true", "false"); parts <- Seq(1, 3, 13); byContig <- Seq(false, true)) {
+          // Sides already co-partitioned on the contig alone are still
+          // exchanged on (contig, bin), even where Spark's co-partition
+          // conf would accept them: every cluster key is required, so a
+          // hot contig spreads over its bins.
+          val (l, r) =
+            if (byContig) (a.repartition(3, col("contig")), b.repartition(3, col("contig")))
+            else (a, b)
+          withConf("spark.sql.requireAllClusterKeysForCoPartition", (!byContig).toString) {
+            withConf("spark.sql.adaptive.enabled", aqe) {
+              graft.SharedSpark.withShufflePartitions(parts) {
+                for ((key, measure) <- Seq("b_key" -> l("measure"), "a_key" -> r("bm"))) {
+                  val at = s"grouping by $key, AQE $aqe, $parts partitions, by contig $byContig"
+                  val q = joined(l, r).groupBy(col(key))
+                    .agg(count(lit(1)).as("n"), sum(measure).as("m"))
+                  val got = q.collect().map(row => (row.getLong(0), row.getLong(1),
+                    if (row.isNullAt(2)) None else Some(row.getLong(2)))).toSeq.sorted
+                  assert(got === want(key), at)
+                  val exec = binExec(q.queryExecution.executedPlan)
+                    .getOrElse(fail(s"no IntervalBinCountJoin, $at"))
+                  val exchanges = exec.children.flatMap(exchangeOf)
+                  assert(exchanges.length === 2, s"$at:\n${q.queryExecution.executedPlan}")
+                  exchanges.foreach { x =>
+                    val cols = x.outputPartitioning match {
+                      case h: HashPartitioning => h.expressions.map {
+                        case att: Attribute => att.name
+                        case other => other.sql
+                      }
+                      case other => Seq(other.toString)
+                    }
+                    assert(cols === Seq("contig", "bin"), at)
+                  }
+                  assert(exec.metrics("invertedDropped").value === inverted.toLong, at)
+                }
+              }
+            }
+          }
         }
       }
     }

@@ -495,6 +495,13 @@ class StreamingSpec extends SparkSpec {
         val e = intercept[IllegalArgumentException](op())
         assert(e.getMessage.contains("maxBroadcastBytes"), s"$name: ${e.getMessage}")
       } finally spark.conf.unset(conf)
+      // A side the estimate let through is held again once collected: at
+      // a near-zero slack the runtime guard refuses it.
+      spark.conf.set("spark.graft.rangejoin.buildBytesSlack", "1e-9")
+      try {
+        val e = intercept[IllegalStateException](op())
+        assert(e.getMessage.contains("at runtime"), s"$name: ${e.getMessage}")
+      } finally spark.conf.unset("spark.graft.rangejoin.buildBytesSlack")
       // With the default gate the same call plans fine.
       op()
     }
