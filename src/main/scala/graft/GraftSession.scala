@@ -363,7 +363,9 @@ class GraftSession(val spark: SparkSession) {
   def piiScrub(docs: DataFrame, textCol: String = "text"): DataFrame =
     TextOps.piiScrub(docs, textCol)
 
-  // ---- format sinks (sharded, fully-headed, scale-parallel writes)
+  // ---- format sinks (sharded, fully-headed, scale-parallel writes):
+  // each writes `part-NNNNN<ext>` shards (append adds `-<token>`), and an
+  // empty frame leaves one header-only `part-00000<ext>` (sources.ShardedSink).
 
   /** BAM sink: sharded BGZF `.bam` + `.gri` sidecar + standard `.bai`. */
   def writeBam(reads: DataFrame, path: String, overwrite: Boolean = true): Unit =

@@ -184,43 +184,6 @@ case class IntervalForestJoinExec(
     val nBuildCols = buildPlan.output.length
 
     mode match {
-      case BroadcastForestMode if jt == Inner =>
-        // (1) Build side collected, assembled into per-key holders and
-        //     broadcast (shared lazy val — also used by the codegen path).
-        val bcast = broadcastForests
-
-        // (2) Stream side probes per partition; no shuffle.
-        streamPlan.execute().mapPartitions { it =>
-          val keyProj = UnsafeProjection.create(sEqsBL)
-          val ivProj = UnsafeProjection.create(sIvB)
-          val joinedRow = new JoinedRow
-          val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-          val forestMap = bcast.value
-          it.flatMap { srow =>
-            val iv = ivProj(srow)
-            if (iv.isNullAt(0) || iv.isNullAt(1)) Iterator.empty
-            else {
-              val key = keyProj(srow)
-              if (nEqs > 0 && key.anyNull) Iterator.empty
-              else forestMap.get(key) match {
-                case None => Iterator.empty
-                case Some(forest) =>
-                  val qs = iv.getInt(0)
-                  val qe = iv.getInt(1)
-                  val buf = mutable.ArrayBuffer.empty[InternalRow]
-                  forest.foreachOverlap(qs, qe) { (bs, be, brow) =>
-                    if (minOv <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOv)
-                      buf += brow
-                  }
-                  buf.iterator.map { brow =>
-                    numOutputRows += 1
-                    resultProj(if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow))
-                  }
-              }
-            }
-          }
-        }
-
       case BroadcastForestMode if jt == FullOuter =>
         // Full outer, single-plan (replaces the r4 LeftOuter ∪ null-padded
         // RightAnti decomposition that scanned both children twice and
@@ -331,11 +294,12 @@ case class IntervalForestJoinExec(
         mainOut.union(padded)
 
       case BroadcastForestMode =>
-        // Outer/semi/anti probe: same broadcast forest, but a stream row
-        // with no (residual-surviving) match is preserved (outer: build
-        // side null-padded; anti: emitted bare) or used as the existence
-        // test (semi). Residuals must be decided per candidate pair HERE —
-        // a post-join filter would wrongly drop preserved rows.
+        // Stream side probes the broadcast forests per partition; no
+        // shuffle. Inner emits the matched pairs; a stream row with no
+        // (residual-surviving) match is preserved (outer: build side
+        // null-padded; anti: emitted bare) or used as the existence test
+        // (semi). Non-inner residuals must be decided per candidate pair
+        // HERE — a post-join filter would wrongly drop preserved rows.
         val bcast = broadcastForests
         val pairSchema = pairAttrs
         streamPlan.execute().mapPartitionsWithIndex { (pidx, it) =>
@@ -366,6 +330,11 @@ case class IntervalForestJoinExec(
               }
             }
             jt match {
+              case Inner =>
+                matches.iterator.map { brow =>
+                  numOutputRows += 1
+                  resultProj(pair(brow, srow))
+                }
               case LeftSemi =>
                 if (matches.nonEmpty) { numOutputRows += 1; Iterator.single(resultProj(srow)) }
                 else Iterator.empty

@@ -568,9 +568,11 @@ object BcfFormat {
     (infos.result(), fmts.result())
   }
 
-  /** Render a variant frame as sharded `.bcf` (one fully-headed shard
-    * per task, the writeVcf/writeBam output shape). Expected columns:
-    * the [[VcfFormat.writeVcf]] surface — `contig, pos_start, ref` plus
+  /** Render a variant frame as a [[ShardedSink]] directory of
+    * `part-NNNNN[-token].bcf` shards (one fully-headed shard per task, the
+    * writeVcf/writeBam output shape; an empty frame leaves one
+    * header-only `part-00000.bcf`). Expected columns: the
+    * [[VcfFormat.writeVcf]] surface — `contig, pos_start, ref` plus
     * optional `id/alt/qual/filter/info`, `sampleCols` raw genotype
     * strings with `formatCol`. Every INFO/FORMAT key used by the data
     * must be declared in `metaLines` (loud error otherwise — BCF bodies
@@ -581,15 +583,13 @@ object BcfFormat {
       sampleCols: Seq[String] = Nil, formatCol: Option[String] = None,
       metaLines: Seq[String] = Nil, overwrite: Boolean = true): Unit = {
     import org.apache.spark.sql.functions._
-    val spark = df.sparkSession
-    def opt(n: String): org.apache.spark.sql.Column =
-      if (df.columns.contains(n)) coalesce(col(n).cast("string"), lit(".")) else lit(".")
+    import VcfFormat.optField
     val cols = Seq(
       coalesce(col("contig").cast("string"), lit(".")).as("_c"),
       col("pos_start").cast("int").as("_p"),
-      opt("id").as("_id"), coalesce(col("ref").cast("string"), lit(".")).as("_ref"),
-      opt("alt").as("_alt"), opt("qual").as("_q"), opt("filter").as("_f"),
-      opt("info").as("_i")) ++
+      optField(df, "id").as("_id"), coalesce(col("ref").cast("string"), lit(".")).as("_ref"),
+      optField(df, "alt").as("_alt"), optField(df, "qual").as("_q"),
+      optField(df, "filter").as("_f"), optField(df, "info").as("_i")) ++
       (if (sampleCols.isEmpty) Nil
        else (formatCol.map(c => coalesce(col(c).cast("string"), lit("GT")))
          .getOrElse(lit("GT")).as("_fmt") +:
@@ -597,36 +597,16 @@ object BcfFormat {
            coalesce(col(c).cast("string"), lit(".")).as(s"_s$i")
          }))
     val rows = df.select(cols: _*)
-    val hconf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val metas = metaLines
-    val samples = sampleCols
-    val outPath = path
-    import org.apache.hadoop.fs.{Path => HPath}
-    val root = new HPath(outPath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (overwrite && fs.exists(root)) fs.delete(root, true)
-    fs.mkdirs(root)
-    val jobTag = java.util.UUID.randomUUID.toString.take(8)
-    val nSample = samples.length
-    rows.queryExecution.toRdd.mapPartitionsWithIndex { (idx, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val tfs = new HPath(outPath).getFileSystem(hconf.value)
-        val file = new HPath(outPath, f"part-$idx%05d-$jobTag.bcf")
-        val os = tfs.create(file, true)
-        writeShard(it.map { ir =>
-          val s = Array.tabulate(8 + (if (nSample == 0) 0 else 1 + nSample)) { i =>
-            if (ir.isNullAt(i)) "." else {
-              if (i == 1) ir.getInt(1).toString else ir.getUTF8String(i).toString
-            }
+    val nSample = sampleCols.length
+    ShardedSink.write(rows.queryExecution.toRdd, path, ".bcf", overwrite) { (fs, p, it) =>
+      writeShard(it.map { ir =>
+        Array.tabulate(8 + (if (nSample == 0) 0 else 1 + nSample)) { i =>
+          if (ir.isNullAt(i)) "." else {
+            if (i == 1) ir.getInt(1).toString else ir.getUTF8String(i).toString
           }
-          s
-        }, os, metas, samples)
-        Iterator.single(1)
-      }
-    }.count()
-    ()
+        }
+      }, fs.create(p, true), metaLines, sampleCols)
+    }
   }
 
   /** One shard: buffer encoded records while growing the contig

@@ -41,7 +41,7 @@ object GraftIndexer {
     val p = new HPath(path)
     val fs = p.getFileSystem(conf)
     val files = SourceUtil.listDataFiles(fs, path, ".gz")
-      .filter(st => overwrite || !fs.exists(gviPathOf(st.getPath)))
+      .filter(st => overwrite || !fs.exists(VcfFormat.gviPath(st.getPath)))
     if (files.isEmpty) return 0L
     val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
     val fmt = format
@@ -50,17 +50,12 @@ object GraftIndexer {
       val hp = new HPath(file)
       val tfs = hp.getFileSystem(serConf.value)
       val in = tfs.open(hp)
-      val tmp = new HPath(hp.getParent, "." + hp.getName + VcfFormat.IndexSuffix)
       val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-        tfs.create(tmp, true), StandardCharsets.UTF_8))
+        tfs.create(VcfFormat.gviPath(hp), true), StandardCharsets.UTF_8))
       try indexOne(in, len, fmt, out) finally { out.close(); in.close() }
       1L
     }.sum().toLong
   }
-
-  private def gviPathOf(file: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
-    new org.apache.hadoop.fs.Path(file.getParent,
-      "." + file.getName + VcfFormat.IndexSuffix)
 
   /** Build STANDARD tabix `.tbi` indexes for every bgzip file matched by
     * `path` that lacks one — the inverse of the engine's `.tbi`

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.functions.RangeFunctions
+import graft.sources.ShardedSink.optCol
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
@@ -433,239 +434,149 @@ object SourceUtil {
       .sortWithinPartitions(col("sample_id"), col("contig"), col("pos_start"))
       .write.partitionBy("sample_id").mode("overwrite").parquet(path)
 
-  /** BAM sink (S10): write an alignment frame as a directory of sharded
-    * `.bam` files — one fully-headed BAM per task, the hadoop-bam output
-    * shape, encoded by the pure-JVM [[BamFormat.BamWriter]]. The
-    * reference dictionary (distinct contigs + a max-end-derived length)
-    * comes from ONE cheap driver aggregation and ships with the tasks;
-    * everything else streams. Expects `(contig, pos_start, pos_end,
-    * mapq, flag, cigar)` plus optional `qname`/`seq`/`qual_str`/`md_tag`
-    * columns. */
+  /** BAM sink (S10): write an alignment frame as a [[ShardedSink]]
+    * directory of `.bam` shards — `part-NNNNN[-token].bam`, one fully-
+    * headed BAM per task, encoded by the pure-JVM [[BamFormat.BamWriter]],
+    * each with a `.gri` range index and a standard `.bai` beside it. An
+    * empty frame leaves one header-only `part-00000.bam`. The reference
+    * dictionary comes from ONE cheap driver aggregation and ships with
+    * the tasks; everything else streams. Expects `(contig, pos_start,
+    * pos_end, mapq, flag, cigar)` plus optional `qname`/`seq`/`qual_str`/
+    * `md_tag` columns. */
   def writeBam(reads: DataFrame, path: String, overwrite: Boolean = true): Unit = {
-    val spark = reads.sparkSession
-    // Null pos_end values (unmapped reads) must not sink the reference
-    // dictionary derivation; a contig whose every pos_end is null gets a
-    // nominal length.
-    val refs = reads.filter(col("contig").isNotNull)
-      .groupBy(col("contig"))
-      .agg(max(coalesce(col("pos_end").cast("int"), lit(0))).as("m"))
-      .collect().sortBy(_.getString(0))
-    val refNames = refs.map(_.getString(0))
-    val refLens = refs.map(r => r.getInt(1) + 1000)
-    def optCol(n: String, default: org.apache.spark.sql.Column) =
-      if (reads.columns.contains(n)) col(n) else default
+    val (refNames, refLens) = ShardedSink.referenceDictionary(reads)
     val prepared = reads.select(
       col("contig").cast("string"), col("pos_start").cast("int"),
       col("mapq").cast("int"), col("flag").cast("int"),
-      optCol("qname", lit("*")).cast("string"), col("cigar").cast("string"),
-      optCol("seq", lit("")).cast("string"),
-      optCol("qual_str", lit(null)).cast("string"),
-      optCol("md_tag", lit(null)).cast("string"),
-      optCol("tag_NM", lit(null)).cast("int"),
-      optCol("tag_RG", lit(null)).cast("string"),
+      optCol(reads, "qname", lit("*")).cast("string"), col("cigar").cast("string"),
+      optCol(reads, "seq", lit("")).cast("string"),
+      optCol(reads, "qual_str", lit(null)).cast("string"),
+      optCol(reads, "md_tag", lit(null)).cast("string"),
+      optCol(reads, "tag_NM", lit(null)).cast("int"),
+      optCol(reads, "tag_RG", lit(null)).cast("string"),
       // Arbitrary additional tags: `TAG -> "TYPE:value"` in
       // BamFormat.renderTag's canonical form (the read path's `tags`
       // column round-trips through here).
-      optCol("tags", lit(null).cast("map<string,string>")))
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs0 = dir.getFileSystem(conf)
-    if (overwrite && fs0.exists(dir)) fs0.delete(dir, true)
-    fs0.mkdirs(dir)
-    // Append mode (INSERT INTO): new shards must not collide with
-    // existing ones — suffix a per-job token like Spark's own writers.
-    val jobTag =
-      if (overwrite) "" else "-" + java.util.UUID.randomUUID.toString.take(8)
-    val wrote = prepared.rdd.mapPartitionsWithIndex { (idx, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val p = new org.apache.hadoop.fs.Path(path, f"part-$idx%05d$jobTag.bam")
-        val fs = p.getFileSystem(serConf.value)
-        val out = fs.create(p, true)
-        // Sidecar range index alongside every shard (the BAI analogue
-        // BamSource consults for contig+position predicates) PLUS a
-        // standard .bai, so samtools/htsjdk/IGV can region-query this
-        // sink's output directly.
-        val idxOut = fs.create(
-          new org.apache.hadoop.fs.Path(path,
-            f"part-$idx%05d$jobTag.bam${BamFormat.IndexSuffix}"), true)
-        val baiOut = fs.create(
-          new org.apache.hadoop.fs.Path(path,
-            f"part-$idx%05d$jobTag.bam.bai"), true)
-        val w = new BamFormat.BamWriter(out, refNames, refLens, idxOut, baiOut)
-        it.foreach { r =>
-          val qualStr = if (r.isNullAt(7)) null else r.getString(7)
-          val quals =
-            if (qualStr == null) null
-            else qualStr.toCharArray.map(c => (c - 33).toByte)
-          // A frame read back from BamSource carries MD/NM/RG both typed
-          // AND in the map — write each tag once (typed wins).
-          val extra: Seq[(String, String)] =
-            if (r.isNullAt(11)) Nil
-            else r.getMap[String, String](11).toSeq
-              .filterNot { case (k, _) =>
-                (k == "MD" && !r.isNullAt(8)) || (k == "NM" && !r.isNullAt(9)) ||
-                  (k == "RG" && !r.isNullAt(10))
-              }.sortBy(_._1)
-          w.write(
-            if (r.isNullAt(0)) null else r.getString(0),
-            r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4), r.getString(5),
-            r.getString(6), quals,
-            if (r.isNullAt(8)) null else r.getString(8),
-            if (r.isNullAt(9)) null else Integer.valueOf(r.getInt(9)),
-            if (r.isNullAt(10)) null else r.getString(10),
-            extraTags = extra)
-        }
-        w.close()
-        Iterator.single(1)
+      optCol(reads, "tags", lit(null).cast("map<string,string>")))
+    ShardedSink.write(prepared.rdd, path, ".bam", overwrite) { (fs, p, rows) =>
+      // Sidecar range index alongside every shard (the BAI analogue
+      // BamSource consults for contig+position predicates) PLUS a
+      // standard .bai, so samtools/htsjdk/IGV can region-query this
+      // sink's output directly.
+      val w = new BamFormat.BamWriter(fs.create(p, true), refNames, refLens,
+        fs.create(p.suffix(BamFormat.IndexSuffix), true), fs.create(p.suffix(".bai"), true))
+      rows.foreach { r =>
+        val qualStr = if (r.isNullAt(7)) null else r.getString(7)
+        val quals =
+          if (qualStr == null) null
+          else qualStr.toCharArray.map(c => (c - 33).toByte)
+        // A frame read back from BamSource carries MD/NM/RG both typed
+        // AND in the map — write each tag once (typed wins).
+        val extra: Seq[(String, String)] =
+          if (r.isNullAt(11)) Nil
+          else r.getMap[String, String](11).toSeq
+            .filterNot { case (k, _) =>
+              (k == "MD" && !r.isNullAt(8)) || (k == "NM" && !r.isNullAt(9)) ||
+                (k == "RG" && !r.isNullAt(10))
+            }.sortBy(_._1)
+        w.write(
+          if (r.isNullAt(0)) null else r.getString(0),
+          r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4), r.getString(5),
+          r.getString(6), quals,
+          if (r.isNullAt(8)) null else r.getString(8),
+          if (r.isNullAt(9)) null else Integer.valueOf(r.getInt(9)),
+          if (r.isNullAt(10)) null else r.getString(10),
+          extraTags = extra)
       }
-    }.count()
-    // An all-empty frame must still leave a readable (header-only) BAM —
-    // unless appending into a directory that already has shards.
-    if (wrote == 0L &&
-        !fs0.listStatus(dir).exists(_.getPath.getName.endsWith(".bam"))) {
-      val out = fs0.create(new org.apache.hadoop.fs.Path(dir, "part-00000.bam"), true)
-      new BamFormat.BamWriter(out, refNames, refLens).close()
+      w.close()
     }
   }
 
-  /** Shared sharded-text sink for the SAM/VCF line formats: one
-    * fully-headed file per task, plain or BGZF. `rows` carries the
-    * rendered `line` plus — for envelope-indexed bgzf output — cleaned
-    * `contig`, `pos_start`, `pos_end` stat columns. BGZF members are
+  /** Shared [[ShardedSink]] for the SAM/VCF line formats: one fully-headed
+    * file per task, plain (`ext`) or BGZF (`ext.gz`). `rows` carries the
+    * rendered `line` plus — for bgzf output — cleaned `contig`,
+    * `pos_start`, `pos_end` envelope columns. BGZF members are
     * LINE-ALIGNED (a member never splits a line) and each shard gets a
     * hidden `.gvi` sidecar with one coordinate envelope per member, so
     * region queries inflate only matching members. */
   private[sources] def writeShardedText(rows: DataFrame, path: String,
-      ext: String, header: String, overwrite: Boolean, bgzf: Boolean): Unit = {
-    val spark = rows.sparkSession
-    val withStats = bgzf && rows.columns.length >= 4
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs0 = dir.getFileSystem(conf)
-    if (overwrite && fs0.exists(dir)) fs0.delete(dir, true)
-    fs0.mkdirs(dir)
-    val jobTag =
-      if (overwrite) "" else "-" + java.util.UUID.randomUUID.toString.take(8)
-    val fullExt = if (bgzf) ext + ".gz" else ext
-    val wrote = rows.rdd.mapPartitionsWithIndex { (idx, it) =>
-      if (it.isEmpty) Iterator.empty
-      else if (!bgzf) {
-        val p = new org.apache.hadoop.fs.Path(path, f"part-$idx%05d$jobTag$fullExt")
-        val raw: java.io.OutputStream = p.getFileSystem(serConf.value).create(p, true)
-        val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-          raw, java.nio.charset.StandardCharsets.UTF_8))
-        w.write(header)
-        it.foreach { r => w.write(r.getString(0)); w.write('\n') }
-        w.close()
-        Iterator.single(1)
-      } else {
-        val fsT = new org.apache.hadoop.fs.Path(path).getFileSystem(serConf.value)
-        val p = new org.apache.hadoop.fs.Path(path, f"part-$idx%05d$jobTag$fullExt")
-        val bg = new BamFormat.BgzfOutputStream(fsT.create(p, true))
-        val gvi = if (!withStats) null
-          else new java.io.BufferedWriter(new java.io.OutputStreamWriter(
-            fsT.create(new org.apache.hadoop.fs.Path(path,
-              f".part-$idx%05d$jobTag$fullExt${VcfFormat.IndexSuffix}"), true),
-            java.nio.charset.StandardCharsets.UTF_8))
-        val memberCap = 56 * 1024 // < the stream's 60 KiB auto-flush
-        var memberOff = 0L
-        var minS = Int.MaxValue; var maxE = Int.MinValue
-        var nLines = 0L
-        val contigs = scala.collection.mutable.LinkedHashSet.empty[String]
-        def endMember(): Unit = {
-          bg.flush()
-          if (gvi != null && nLines > 0) {
-            val cs = if (contigs.size > 8) "*" else contigs.mkString(",")
-            gvi.write(s"$memberOff\t$minS\t$maxE\t$nLines\t$cs\n")
+      ext: String, header: String, overwrite: Boolean, bgzf: Boolean): Unit =
+    ShardedSink.write(rows.rdd, path, if (bgzf) ext + ".gz" else ext, overwrite) {
+      (fs, p, it) =>
+        if (!bgzf) {
+          val w = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+            fs.create(p, true), java.nio.charset.StandardCharsets.UTF_8))
+          w.write(header)
+          it.foreach { r => w.write(r.getString(0)); w.write('\n') }
+          w.close()
+        } else {
+          val bg = new BamFormat.BgzfOutputStream(fs.create(p, true))
+          val gvi = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
+            fs.create(VcfFormat.gviPath(p), true), java.nio.charset.StandardCharsets.UTF_8))
+          val memberCap = 56 * 1024 // < the stream's 60 KiB auto-flush
+          var memberOff = 0L
+          var minS = Int.MaxValue; var maxE = Int.MinValue
+          var nLines = 0L
+          val contigs = scala.collection.mutable.LinkedHashSet.empty[String]
+          def endMember(): Unit = {
+            bg.flush()
+            if (nLines > 0) {
+              val cs = if (contigs.size > 8) "*" else contigs.mkString(",")
+              gvi.write(s"$memberOff\t$minS\t$maxE\t$nLines\t$cs\n")
+            }
+            memberOff = bg.virtualOffset._1
+            minS = Int.MaxValue; maxE = Int.MinValue; nLines = 0L
+            contigs.clear()
           }
-          memberOff = bg.virtualOffset._1
-          minS = Int.MaxValue; maxE = Int.MinValue; nLines = 0L
-          contigs.clear()
-        }
-        bg.write(header.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        endMember() // header-only member, carries no data lines
-        it.foreach { r =>
-          val bytes = (r.getString(0) + "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-          require(bytes.length < memberCap,
-            s"$ext line exceeds one BGZF member (${bytes.length} bytes)")
-          if (bg.virtualOffset._2 + bytes.length >= memberCap) endMember()
-          bg.write(bytes)
-          if (withStats) {
+          bg.write(header.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          endMember() // header-only member, carries no data lines
+          it.foreach { r =>
+            val bytes = (r.getString(0) + "\n")
+              .getBytes(java.nio.charset.StandardCharsets.UTF_8)
+            require(bytes.length < memberCap,
+              s"$ext line exceeds one BGZF member (${bytes.length} bytes)")
+            if (bg.virtualOffset._2 + bytes.length >= memberCap) endMember()
+            bg.write(bytes)
             if (!r.isNullAt(1)) contigs += r.getString(1)
             if (!r.isNullAt(2)) minS = math.min(minS, r.getInt(2))
             if (!r.isNullAt(3)) maxE = math.max(maxE, r.getInt(3))
             nLines += 1
           }
+          endMember()
+          gvi.close()
+          bg.close()
         }
-        endMember()
-        if (gvi != null) gvi.close()
-        bg.close()
-        Iterator.single(1)
-      }
-    }.count()
-    if (wrote == 0L && !fs0.listStatus(dir).exists(s =>
-        s.getPath.getName.endsWith(ext) || s.getPath.getName.endsWith(ext + ".gz"))) {
-      val raw: java.io.OutputStream =
-        fs0.create(new org.apache.hadoop.fs.Path(dir, s"part-00000$fullExt"), true)
-      val out = if (bgzf) new BamFormat.BgzfOutputStream(raw) else raw
-      out.write(header.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      out.close()
     }
-  }
 
-  /** Region-pruned raw text frame over `.gvi`-indexed bgzf shards: fold
-    * pushed contig/pos_start/pos_end predicates, keep only members whose
-    * envelope may match, inflate exactly those (members are
-    * line-aligned). None when pruning does not apply (no constraining
-    * predicate, or any matched file lacks a sidecar) — callers fall
-    * back to the ordinary splittable scan. Always a SUPERSET of the
-    * predicate's rows. `withFile` adds the `_file` column (for S7
-    * sample-from-filename sources). */
-  private[sources] def prunedTextFrame(spark: org.apache.spark.sql.SparkSession,
-      path: String, filters: Array[Filter], withFile: Boolean,
-      samples: Option[Set[String]] = None,
-      commentPrefix: Char = '@'): Option[DataFrame] =
-    VcfFormat.prunedRawImpl(spark, path, filters, withFile, samples, commentPrefix)
-
-  /** SAM text sink: renders an alignment frame as sharded fully-headed
-    * `.sam` files — the human-readable twin of [[writeBam]], one codegen
-    * `concat_ws` per row (executors stream lines, nothing collects).
-    * Optional columns render as spec placeholders (`*`), typed
-    * MD/NM/RG tags and the `tags` map (already in `TYPE:value` text
-    * form) append as optional fields. The `@SQ` dictionary comes from
-    * the same one cheap driver aggregation as the binary sinks. */
+  /** SAM text sink: renders an alignment frame as a [[ShardedSink]]
+    * directory of fully-headed `part-NNNNN[-token].sam` (or `.sam.gz`)
+    * shards — the human-readable twin of [[writeBam]], one codegen
+    * `concat_ws` per row (executors stream lines, nothing collects). An
+    * empty frame leaves one header-only `part-00000.sam`. Optional
+    * columns render as spec placeholders (`*`), typed MD/NM/RG tags and
+    * the `tags` map (already in `TYPE:value` text form) append as optional
+    * fields. The `@SQ` dictionary comes from the same one cheap driver
+    * aggregation as the binary sinks. */
   def writeSam(reads: DataFrame, path: String, overwrite: Boolean = true,
       bgzf: Boolean = false): Unit = {
-    val spark = reads.sparkSession
-    val refs = reads.filter(col("contig").isNotNull)
-      .groupBy(col("contig"))
-      .agg(max(coalesce(col("pos_end").cast("int"), lit(0))).as("m"))
-      .collect().sortBy(_.getString(0))
-    val header = "@HD\tVN:1.6\tSO:unsorted\n" + refs.map(r =>
-      s"@SQ\tSN:${r.getString(0)}\tLN:${r.getInt(1) + 1000}\n").mkString
-    def optCol(n: String, default: org.apache.spark.sql.Column) =
-      if (reads.columns.contains(n)) col(n) else default
+    val (refNames, refLens) = ShardedSink.referenceDictionary(reads)
+    val header = "@HD\tVN:1.6\tSO:unsorted\n" + refNames.zip(refLens).map {
+      case (n, l) => s"@SQ\tSN:$n\tLN:$l\n" }.mkString
     val mandatory = Seq(
-      coalesce(optCol("qname", lit("*")).cast("string"), lit("*")),
+      coalesce(optCol(reads, "qname", lit("*")).cast("string"), lit("*")),
       coalesce(col("flag").cast("string"), lit("0")),
       coalesce(col("contig").cast("string"), lit("*")),
       coalesce(col("pos_start").cast("string"), lit("0")),
       coalesce(col("mapq").cast("string"), lit("0")),
       coalesce(col("cigar").cast("string"), lit("*")),
       lit("*"), lit("0"), lit("0"), // RNEXT/PNEXT/TLEN (not carried)
-      coalesce(when(optCol("seq", lit("")) === "", "*")
-        .otherwise(optCol("seq", lit("*"))), lit("*")),
-      coalesce(optCol("qual_str", lit(null)).cast("string"), lit("*")))
-    val mdC = optCol("md_tag", lit(null).cast("string")).cast("string")
-    val nmC = optCol("tag_NM", lit(null).cast("int"))
-    val rgC = optCol("tag_RG", lit(null).cast("string")).cast("string")
-    val tagsC = optCol("tags", lit(null).cast("map<string,string>"))
+      coalesce(when(optCol(reads, "seq", lit("")) === "", "*")
+        .otherwise(optCol(reads, "seq", lit("*"))), lit("*")),
+      coalesce(optCol(reads, "qual_str", lit(null)).cast("string"), lit("*")))
+    val mdC = optCol(reads, "md_tag", lit(null).cast("string")).cast("string")
+    val nmC = optCol(reads, "tag_NM", lit(null).cast("int"))
+    val rgC = optCol(reads, "tag_RG", lit(null).cast("string")).cast("string")
+    val tagsC = optCol(reads, "tags", lit(null).cast("map<string,string>"))
     val optional = Seq(
       when(mdC.isNotNull, concat(lit("MD:Z:"), mdC)),
       when(nmC.isNotNull, concat(lit("NM:i:"), nmC.cast("string"))),
@@ -687,104 +598,77 @@ object SourceUtil {
       if (!bgzf) reads.select(lineCol)
       else reads.select(lineCol, cleanContigCol(col("contig")).as("contig"),
         col("pos_start").cast("int"),
-        coalesce(optCol("pos_end", col("pos_start")), col("pos_start")).cast("int"))
+        coalesce(optCol(reads, "pos_end", col("pos_start")), col("pos_start")).cast("int"))
     writeShardedText(rows, path, ".sam", header, overwrite, bgzf)
   }
 
-  /** CRAM sink (S2's write half): sharded fully-headed `.cram` files via
-    * the pure-JVM [[CramFormat.CramWriter]] — sequences encoded
-    * REFERENCE-BASED against `fastaPath` (substitution/indel/clip/skip
-    * features; verbatim runs where the reference cannot express the
-    * bases). Same column contract as [[writeBam]] plus the optional
-    * `tag_NM`/`tag_RG` columns. The reference dictionary comes from one
-    * cheap driver aggregation; everything else streams per task. */
+  /** CRAM sink (S2's write half): a [[ShardedSink]] directory of
+    * fully-headed `part-NNNNN.cram` shards via the pure-JVM
+    * [[CramFormat.CramWriter]], each with a `.gci` container index beside
+    * it — sequences encoded REFERENCE-BASED against `fastaPath`
+    * (substitution/indel/clip/skip features; verbatim runs where the
+    * reference cannot express the bases). Always overwrites; an empty
+    * frame leaves one header-only `part-00000.cram`. Same column contract
+    * as [[writeBam]] plus the optional `tag_NM`/`tag_RG` columns. The
+    * reference dictionary comes from one cheap driver aggregation;
+    * everything else streams per task. */
   def writeCram(reads: DataFrame, path: String, fastaPath: String,
       recordsPerSlice: Int = 10000, embedReference: Boolean = false,
       externalCompression: String = "auto"): Unit = {
-    val spark = reads.sparkSession
-    val refs = reads.filter(col("contig").isNotNull)
-      .groupBy(col("contig"))
-      .agg(max(coalesce(col("pos_end").cast("int"), lit(0))).as("m"))
-      .collect().sortBy(_.getString(0))
-    val refNames = refs.map(_.getString(0))
-    val refLens = refs.map(r => r.getInt(1) + 1000)
-    def optCol(n: String, default: org.apache.spark.sql.Column) =
-      if (reads.columns.contains(n)) col(n) else default
+    val (refNames, refLens) = ShardedSink.referenceDictionary(reads)
     val prepared = reads.select(
       col("contig").cast("string"), col("pos_start").cast("int"),
       col("mapq").cast("int"), col("flag").cast("int"),
-      optCol("qname", lit("*")).cast("string"), col("cigar").cast("string"),
-      optCol("seq", lit("")).cast("string"),
-      optCol("qual_str", lit(null)).cast("string"),
-      optCol("tag_NM", lit(null)).cast("int"),
-      optCol("tag_RG", lit(null)).cast("string"),
+      optCol(reads, "qname", lit("*")).cast("string"), col("cigar").cast("string"),
+      optCol(reads, "seq", lit("")).cast("string"),
+      optCol(reads, "qual_str", lit(null)).cast("string"),
+      optCol(reads, "tag_NM", lit(null)).cast("int"),
+      optCol(reads, "tag_RG", lit(null)).cast("string"),
       // Arbitrary additional tags in canonical 'TYPE:value' form, same
       // contract as writeBam (A/i/f/Z/H through the tag dictionary; a
       // stored MD:Z here overrides the reader's reference-walk synthesis,
       // which is spec-legal).
-      optCol("tags", lit(null).cast("map<string,string>")))
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-    val dir = new org.apache.hadoop.fs.Path(path)
-    val fs0 = dir.getFileSystem(conf)
-    if (fs0.exists(dir)) fs0.delete(dir, true)
-    fs0.mkdirs(dir)
-    val fp = fastaPath
-    val wrote = prepared.rdd.mapPartitionsWithIndex { (idx, it) =>
-      if (it.isEmpty) Iterator.empty
-      else {
-        val p = new org.apache.hadoop.fs.Path(path, f"part-$idx%05d.cram")
-        val fsT = p.getFileSystem(serConf.value)
-        val out = fsT.create(p, true)
-        // Sidecar container index alongside every shard (one planning
-        // read per file instead of a per-container header walk).
-        val idxOut = fsT.create(new org.apache.hadoop.fs.Path(path,
-          f"part-$idx%05d.cram${CramFormat.IndexSuffix}"), true)
-        val w = new CramFormat.CramWriter(out, refNames, refLens,
-          contig => CramFormat.upperContig(fp, contig), recordsPerSlice,
-          embedReference, indexOut = idxOut,
-          externalCompression = externalCompression)
-        val droppedB = scala.collection.mutable.HashSet.empty[String]
-        it.foreach { r =>
-          val qualStr = if (r.isNullAt(7)) null else r.getString(7)
-          val quals =
-            if (qualStr == null) null
-            else qualStr.toCharArray.map(c => (c - 33).toByte)
-          // Typed NM/RG win over their map twins (each tag written once).
-          // B-array tags (aligner score arrays etc. — common in real
-          // BAMs) are NOT expressible through this writer's tag
-          // dictionary; dropping them with a warning beats a task-level
-          // crash mid-job (tagFromCanonical fails loudly on 'B').
-          val extra: Seq[(String, String)] =
-            if (r.isNullAt(10)) Nil
-            else r.getMap[String, String](10).toSeq
-              .filterNot { case (k, tv) =>
-                (k == "NM" && !r.isNullAt(8)) || (k == "RG" && !r.isNullAt(9)) || {
-                  val isB = tv.length >= 2 && tv.charAt(0) == 'B'
-                  if (isB && droppedB.add(k)) org.slf4j.LoggerFactory
-                    .getLogger("graft.sources.SourceUtil")
-                    .warn(s"writeCram: dropping B-array tag '$k' " +
-                      "(unsupported by the CRAM tag dictionary writer)")
-                  isB
-                }
-              }.sortBy(_._1)
-          w.write(
-            if (r.isNullAt(0)) null else r.getString(0),
-            r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4), r.getString(5),
-            r.getString(6), quals,
-            if (r.isNullAt(8)) null else Integer.valueOf(r.getInt(8)),
-            if (r.isNullAt(9)) null else r.getString(9),
-            extraTags = extra)
-        }
-        w.close()
-        Iterator.single(1)
+      optCol(reads, "tags", lit(null).cast("map<string,string>")))
+    ShardedSink.write(prepared.rdd, path, ".cram", overwrite = true) { (fs, p, rows) =>
+      // Sidecar container index alongside every shard (one planning
+      // read per file instead of a per-container header walk).
+      val w = new CramFormat.CramWriter(fs.create(p, true), refNames, refLens,
+        contig => CramFormat.upperContig(fastaPath, contig), recordsPerSlice,
+        embedReference, indexOut = fs.create(p.suffix(CramFormat.IndexSuffix), true),
+        externalCompression = externalCompression)
+      val droppedB = scala.collection.mutable.HashSet.empty[String]
+      rows.foreach { r =>
+        val qualStr = if (r.isNullAt(7)) null else r.getString(7)
+        val quals =
+          if (qualStr == null) null
+          else qualStr.toCharArray.map(c => (c - 33).toByte)
+        // Typed NM/RG win over their map twins (each tag written once).
+        // B-array tags (aligner score arrays etc. — common in real
+        // BAMs) are NOT expressible through this writer's tag
+        // dictionary; dropping them with a warning beats a task-level
+        // crash mid-job (tagFromCanonical fails loudly on 'B').
+        val extra: Seq[(String, String)] =
+          if (r.isNullAt(10)) Nil
+          else r.getMap[String, String](10).toSeq
+            .filterNot { case (k, tv) =>
+              (k == "NM" && !r.isNullAt(8)) || (k == "RG" && !r.isNullAt(9)) || {
+                val isB = tv.length >= 2 && tv.charAt(0) == 'B'
+                if (isB && droppedB.add(k)) org.slf4j.LoggerFactory
+                  .getLogger("graft.sources.SourceUtil")
+                  .warn(s"writeCram: dropping B-array tag '$k' " +
+                    "(unsupported by the CRAM tag dictionary writer)")
+                isB
+              }
+            }.sortBy(_._1)
+        w.write(
+          if (r.isNullAt(0)) null else r.getString(0),
+          r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4), r.getString(5),
+          r.getString(6), quals,
+          if (r.isNullAt(8)) null else Integer.valueOf(r.getInt(8)),
+          if (r.isNullAt(9)) null else r.getString(9),
+          extraTags = extra)
       }
-    }.count()
-    if (wrote == 0L) {
-      val out = fs0.create(new org.apache.hadoop.fs.Path(dir, "part-00000.cram"), true)
-      new CramFormat.CramWriter(out, refNames, refLens,
-        contig => CramFormat.upperContig(fp, contig)).close()
+      w.close()
     }
   }
 }
@@ -1614,8 +1498,8 @@ class SamSource extends RelationProvider with CreatableRelationProvider
             samples = Some(samples.fold(x)(_ intersect x))
           case _ => ()
         }
-        SourceUtil.prunedTextFrame(ctx.sparkSession, path, filters,
-            withFile = true, samples)
+        VcfFormat.prunedRawImpl(ctx.sparkSession, path, filters,
+            withFile = true, samples, commentPrefix = '@')
           .map(build).getOrElse {
             samples match {
               case Some(ss) =>

@@ -108,7 +108,7 @@ object VcfFormat {
     * many to enumerate). Dot-prefixed so text readers never see it. */
   val IndexSuffix = ".gvi"
 
-  private def gviPath(file: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
+  private[sources] def gviPath(file: org.apache.hadoop.fs.Path): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(file.getParent, "." + file.getName + IndexSuffix)
 
   /** Contig/position constraints foldable from pushed predicates (the
@@ -160,7 +160,10 @@ object VcfFormat {
     * members/chunk ranges and inflate ONLY those. Returns
     * None when pruning does not apply — the caller falls back to the
     * ordinary splittable text scan. Always a SUPERSET of the
-    * predicate's rows; the engine re-applies the filters. */
+    * predicate's rows; the engine re-applies the filters. Shared by the
+    * line formats: `withFile` adds the `_file` column (S7
+    * sample-from-filename sources), `samples` prunes whole files by that
+    * name, and `commentPrefix` marks header lines (`@` for SAM). */
   private[sources] def prunedRawImpl(spark: org.apache.spark.sql.SparkSession,
       path: String, filters: Array[org.apache.spark.sql.sources.Filter],
       withFile: Boolean = false,
@@ -712,16 +715,6 @@ object VcfFormat {
     }
   }
 
-  /** VCF sink (the write half of the S4 round trip): renders a variant
-    * frame as sharded fully-headed `.vcf` files — one per task, each with
-    * the `##fileformat` meta lines and the `#CHROM` column line, so every
-    * shard is independently a valid VCF (the same output shape as
-    * [[SourceUtil.writeBam]]). Expected columns: `contig, pos_start, ref`
-    * plus optional `id/alt/qual/filter/info`; `sampleCols` names columns
-    * holding raw genotype strings, written under those sample names with
-    * `formatCol` (default the literal `GT`). Nulls render as `.` per
-    * spec. The rendering is ONE codegen concat per row — the executors
-    * stream lines, nothing collects. */
   /** [[writeVcf]] with the genotype columns INFERRED from the frame:
     * every column outside the core VCF surface is a sample column, and
     * `format` (when present) is the FORMAT column — the inverse of the
@@ -741,20 +734,34 @@ object VcfFormat {
     writeVcf(df, path, sampleCols, formatCol, overwrite)
   }
 
-  /** `bgzf = true` writes `.vcf.gz` shards as BGZF members (the
-    * bgzip/tabix container); the reader splits them at member
-    * granularity through the same seam as BAM. */
+  /** Optional VCF field `n` of `df` as text: `.` when the frame lacks the
+    * column or the value is null (the spec's missing value). */
+  private[sources] def optField(df: DataFrame, n: String): Column =
+    coalesce(ShardedSink.optCol(df, n, lit(".")).cast("string"), lit("."))
+
+  /** VCF sink (the write half of the S4 round trip): renders a variant
+    * frame as a [[ShardedSink]] directory of fully-headed
+    * `part-NNNNN[-token].vcf` shards — one per task, each with the
+    * `##fileformat` meta lines and the `#CHROM` column line, so every
+    * shard is independently a valid VCF (the same output shape as
+    * [[SourceUtil.writeBam]]); an empty frame leaves one header-only
+    * `part-00000.vcf`. Expected columns: `contig, pos_start, ref` plus
+    * optional `id/alt/qual/filter/info`; `sampleCols` names columns
+    * holding raw genotype strings, written under those sample names with
+    * `formatCol` (default the literal `GT`). Nulls render as `.` per
+    * spec. The rendering is ONE codegen concat per row — the executors
+    * stream lines, nothing collects. `bgzf = true` writes `.vcf.gz`
+    * shards as BGZF members (the bgzip/tabix container); the reader
+    * splits them at member granularity through the same seam as BAM. */
   def writeVcf(df: DataFrame, path: String, sampleCols: Seq[String] = Nil,
       formatCol: Option[String] = None, overwrite: Boolean = true,
       bgzf: Boolean = false, metaLines: Seq[String] = Nil): Unit = {
-    val spark = df.sparkSession
-    def opt(n: String): Column =
-      if (df.columns.contains(n)) coalesce(col(n).cast("string"), lit(".")) else lit(".")
     val fixed = Seq(
       coalesce(col("contig").cast("string"), lit(".")),
       col("pos_start").cast("string"),
-      opt("id"), coalesce(col("ref").cast("string"), lit(".")), opt("alt"),
-      opt("qual"), opt("filter"), opt("info"))
+      optField(df, "id"), coalesce(col("ref").cast("string"), lit(".")),
+      optField(df, "alt"), optField(df, "qual"), optField(df, "filter"),
+      optField(df, "info"))
     val gts =
       if (sampleCols.isEmpty) Nil
       else formatCol.map(c => coalesce(col(c).cast("string"), lit("GT")))

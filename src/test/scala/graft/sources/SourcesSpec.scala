@@ -13,6 +13,25 @@ class SourcesSpec extends SparkSpec {
 
   private val base = Files.createTempDirectory("graft_sources_spec").toString
 
+  /** Mock-genome FASTA (contigs 0-3, 1100 bp each) matching the readsMd
+    * derivation, plus its `.fai`, under `path/ref`; returns the FASTA. */
+  private def mockFasta(path: String): String = {
+    val fastaDir = Files.createDirectories(Paths.get(s"$path/ref"))
+    val len = 1100
+    val fa = new StringBuilder; val fai = new StringBuilder
+    var off = 0L
+    "0123".foreach { c =>
+      fa.append(s">$c\n"); off += 3
+      (1 to len).foreach(p => fa.append("ACGT".charAt((c.toInt + p) % 4)))
+      fa.append('\n')
+      fai.append(s"$c\t$len\t$off\t$len\t${len + 1}\n")
+      off += len + 1
+    }
+    Files.writeString(fastaDir.resolve("mock.fa"), fa.toString)
+    Files.writeString(fastaDir.resolve("mock.fa.fai"), fai.toString)
+    s"$path/ref/mock.fa"
+  }
+
   test("sample_id from filename across per-sample parquet directories") {
     val reads = Tables.reads(spark, sf0001)
     Seq("s1", "s2").foreach { s =>
@@ -384,21 +403,7 @@ class SourcesSpec extends SparkSpec {
 
   test("writeCram round trip: filter parity, projection pruning, empty frame") {
     val path = s"$base/cram_rt"
-    val fastaDir = java.nio.file.Files.createDirectories(Paths.get(s"$path/ref"))
-    // Mock-genome FASTA matching the readsMd derivation.
-    val len = 1100
-    val fa = new StringBuilder; val fai = new StringBuilder
-    var off = 0L
-    "0123".foreach { c =>
-      fa.append(s">$c\n"); off += 3
-      (1 to len).foreach(p => fa.append("ACGT".charAt((c.toInt + p) % 4)))
-      fa.append('\n')
-      fai.append(s"$c\t$len\t$off\t$len\t${len + 1}\n")
-      off += len + 1
-    }
-    java.nio.file.Files.writeString(fastaDir.resolve("mock.fa"), fa.toString)
-    java.nio.file.Files.writeString(fastaDir.resolve("mock.fa.fai"), fai.toString)
-    val fasta = s"$path/ref/mock.fa"
+    val fasta = mockFasta(path)
     // The minimal writer emits multi-ref slices, which never container-
     // prune (pruning applies to single-ref containers — the htsjdk
     // layout, exercised by the real-file test above); this test pins the
@@ -476,20 +481,7 @@ class SourcesSpec extends SparkSpec {
 
   test("CRAM planning consumes the .gci sidecar and standard .crai indexes") {
     val path = s"$base/cram_idx"
-    val fastaDir = java.nio.file.Files.createDirectories(Paths.get(s"$path/ref"))
-    val len = 1100
-    val fa = new StringBuilder; val fai = new StringBuilder
-    var off = 0L
-    "0123".foreach { c =>
-      fa.append(s">$c\n"); off += 3
-      (1 to len).foreach(p => fa.append("ACGT".charAt((c.toInt + p) % 4)))
-      fa.append('\n')
-      fai.append(s"$c\t$len\t$off\t$len\t${len + 1}\n")
-      off += len + 1
-    }
-    java.nio.file.Files.writeString(fastaDir.resolve("mock.fa"), fa.toString)
-    java.nio.file.Files.writeString(fastaDir.resolve("mock.fa.fai"), fai.toString)
-    val fasta = s"$path/ref/mock.fa"
+    val fasta = mockFasta(path)
     val reads = Tables.readsMd(spark, sf0001).filter(col("sample_id") === "s1")
     SourceUtil.writeCram(reads.orderBy("contig", "pos_start").coalesce(1),
       s"$path/s1.cram", fasta, recordsPerSlice = 100)
@@ -584,19 +576,7 @@ class SourcesSpec extends SparkSpec {
       Map("NM" -> "i:2", "XS" -> "i:42", "BC" -> "Z:abc", "XF" -> "f:1.5"))
     assert(sam(1).getMap[String, String](1).toMap === Map.empty[String, String])
     // CRAM: the tag dictionary's NM/RG surface through the same map.
-    val fastaDir = java.nio.file.Files.createDirectories(Paths.get(s"$path/ref"))
-    val len = 1100
-    val fa = new StringBuilder; val fai = new StringBuilder
-    var off = 0L
-    "0123".foreach { c =>
-      fa.append(s">$c\n"); off += 3
-      (1 to len).foreach(p => fa.append("ACGT".charAt((c.toInt + p) % 4)))
-      fa.append('\n')
-      fai.append(s"$c\t$len\t$off\t$len\t${len + 1}\n")
-      off += len + 1
-    }
-    java.nio.file.Files.writeString(fastaDir.resolve("mock.fa"), fa.toString)
-    java.nio.file.Files.writeString(fastaDir.resolve("mock.fa.fai"), fai.toString)
+    mockFasta(path)
     SourceUtil.writeCram(
       reads.withColumn("tag_RG", lit("rgZ")),
       s"$path/s1.cram", s"$path/ref/mock.fa")
@@ -788,6 +768,63 @@ class SourcesSpec extends SparkSpec {
     assert(spark.table("vcf_empty").columns.contains("g1"))
   }
 
+  test("sharded sink contract: header-only empty shard, overwrite names, append tokens") {
+    val dir = s"$base/sink_contract"
+    val fasta = mockFasta(dir)
+    val reads = Tables.readsMd(spark, sf0001).filter(col("sample_id") === "s1")
+      .limit(60).repartition(3).cache()
+    val variants = spark.range(1, 61).selectExpr(
+      "concat('chr', CAST(id % 2 AS STRING)) AS contig",
+      "CAST(id * 10 AS INT) AS pos_start", "'A' AS ref", "'T' AS alt")
+      .repartition(3).cache()
+    // (writer, shard extension, frame, write(frame, path, overwrite),
+    //  reader format + options, takes overwrite = false)
+    val sinks = Seq[(String, String, org.apache.spark.sql.DataFrame,
+        (org.apache.spark.sql.DataFrame, String, Boolean) => Unit,
+        String, Map[String, String], Boolean)](
+      ("writeBam", ".bam", reads, (d, p, o) => SourceUtil.writeBam(d, p, o),
+        "bam", Map.empty, true),
+      ("writeCram", ".cram", reads, (d, p, _) => SourceUtil.writeCram(d, p, fasta),
+        "cram", Map("refPath" -> fasta), false),
+      ("writeSam", ".sam.gz", reads, (d, p, o) => SourceUtil.writeSam(d, p, o, bgzf = true),
+        "sam", Map.empty, true),
+      ("writeVcf", ".vcf", variants, (d, p, o) => VcfFormat.writeVcf(d, p, overwrite = o),
+        "vcf", Map.empty, true),
+      ("writeBcf", ".bcf", variants, (d, p, o) => BcfFormat.writeBcf(d, p, overwrite = o),
+        "bcf", Map.empty, true))
+    val region = col("contig") === "1" && col("pos_start").between(1, 1000)
+    sinks.foreach { case (name, ext, frame, write, format, opts, appends) =>
+      val out = s"$dir/$name"
+      def read() = spark.read.format(format).options(opts).option("path", out).load()
+      def rows() = read().drop("sample_id").collect().map(_.toString).sorted.toSeq
+      def shards() = new java.io.File(out).listFiles().map(_.getName)
+        .filter(_.endsWith(ext)).sorted.toSeq
+      // An empty frame leaves exactly one readable header-only shard;
+      // a region query over it (and its sidecars) finds nothing.
+      write(frame.filter(lit(false)), out, true)
+      assert(shards() === Seq(s"part-00000$ext"), name)
+      assert(read().count() === 0L, name)
+      assert(read().filter(region).count() === 0L, name)
+      // Overwrite replaces the earlier shards: one un-tokened shard per
+      // non-empty partition.
+      write(frame, out, true)
+      val first = shards()
+      assert(first === (0 until 3).map(i => f"part-$i%05d$ext"), name)
+      val once = rows()
+      assert(once.length === 60, name)
+      if (appends) {
+        // Append keeps them and adds shards suffixed with one job token.
+        write(frame, out, false)
+        val added = shards().filterNot(first.toSet)
+        assert(added.length === 3 && added.forall(_.matches(
+          s"part-\\d{5}-[0-9a-f]{8}${java.util.regex.Pattern.quote(ext)}")), s"$name: $added")
+        assert(added.map(_.substring(11, 19)).distinct.length === 1, name)
+        assert(rows() === (once ++ once).sorted, name)
+      }
+    }
+    reads.unpersist(); variants.unpersist()
+  }
+
   test("BGZF-compressed VCF and SAM text split at member granularity") {
     val dir = s"$base/bgzf_text"
     java.nio.file.Files.createDirectories(Paths.get(dir))
@@ -891,20 +928,7 @@ class SourcesSpec extends SparkSpec {
 
   test("writeCram drops B-array tags with a warning instead of crashing") {
     val path = s"$base/cram_btag"
-    val fastaDir = java.nio.file.Files.createDirectories(Paths.get(s"$path/ref"))
-    val len = 1100
-    val fa = new StringBuilder; val fai = new StringBuilder
-    var off = 0L
-    "0123".foreach { c =>
-      fa.append(s">$c\n"); off += 3
-      (1 to len).foreach(pp => fa.append("ACGT".charAt((c.toInt + pp) % 4)))
-      fa.append('\n')
-      fai.append(s"$c\t$len\t$off\t$len\t${len + 1}\n")
-      off += len + 1
-    }
-    java.nio.file.Files.writeString(fastaDir.resolve("mock.fa"), fa.toString)
-    java.nio.file.Files.writeString(fastaDir.resolve("mock.fa.fai"), fai.toString)
-    val fasta = s"$path/ref/mock.fa"
+    val fasta = mockFasta(path)
     // Real BAMs commonly carry B-array tags (aligner score arrays); the
     // CRAM tag-dictionary writer cannot express them — they must drop,
     // not sys.error at task level mid-job.
