@@ -162,8 +162,9 @@ object VcfFormat {
     * ordinary splittable text scan. Always a SUPERSET of the
     * predicate's rows; the engine re-applies the filters. Shared by the
     * line formats: `withFile` adds the `_file` column (S7
-    * sample-from-filename sources), `samples` prunes whole files by that
-    * name, and `commentPrefix` marks header lines (`@` for SAM). */
+    * sample-from-filename sources), `samples` keeps only the files whose
+    * file-name sample is listed, and `commentPrefix` marks header lines
+    * (`@` for SAM). */
   private[sources] def prunedRawImpl(spark: org.apache.spark.sql.SparkSession,
       path: String, filters: Array[org.apache.spark.sql.sources.Filter],
       withFile: Boolean = false,
