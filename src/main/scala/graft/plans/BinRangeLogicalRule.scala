@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
+import org.apache.spark.sql.catalyst.plans.{JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{HintInfo, Join, JoinHint, LogicalPlan, BROADCAST}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.internal.SQLConf
@@ -9,7 +9,7 @@ import org.apache.spark.sql.internal.SQLConf
 /** The build-side + broadcast-vs-bin-range decision for a range join —
   * ONE implementation shared by [[BinRangeLogicalRule]] (the logical
   * rewrite) and [[IntervalJoinStrategy]] (the physical planner, which
-  * also keeps a bin-range fallback). Duplicating it would let a future
+  * also keeps a bin-range branch). Duplicating it would let a future
   * conf tweak make the two placements silently choose different modes
   * for the same query.
   *
@@ -36,6 +36,12 @@ object RangeJoinChoice {
     keys.maxGap.getOrElse(conf("maxGap", "0").toInt)
   def method(conf: (String, String) => String, keys: IntervalJoinKeys): String =
     keys.method.getOrElse(conf("method", "auto"))
+  /** Genome-bin width of the bin-range rewrite. Narrow bins win: each
+    * (key, bin) group's candidate pairs are scanned, and pairs per bin
+    * shrink faster than replication grows until the width nears the
+    * interval length (sf0.1, 600k x 20k, 3.55M pairs: 1.15 s at 300,
+    * 2.8 s at 5000). */
+  def binWidth(conf: (String, String) => String): Int = conf("binWidth", "300").toInt
 
   /** Returns `(buildLeft, useBinRange)` under the resolved `method` and
     * the `spark.graft.rangejoin` confs read through `conf(key, default)`. */
@@ -78,16 +84,17 @@ object RangeJoinChoice {
   * path — skew-join splitting of a hot contig above all — silently never
   * applies (verified: no `LogicalQueryStage` stats, `isSkewJoin=false`
   * even under forced skew confs). Rewriting in the optimizer puts the
-  * Generate + equi-Join into the logical plan itself, so stages map back,
-  * replanning works, and `OptimizeSkewedJoin` fires exactly as it does
-  * for any stock equi-join (pinned by IntervalJoinSpec's AQE skew test).
+  * Generates, equi-joins and verdict aggregates into the logical plan
+  * itself, so stages map back, replanning works, and `OptimizeSkewedJoin`
+  * fires exactly as it does for any stock equi-join (pinned by
+  * IntervalJoinSpec's AQE skew test).
   *
-  * The decision mirrors [[IntervalJoinStrategy]]'s Inner-join mode
-  * selection (method/buildSide confs, the [[BroadcastBudget]], broadcast hints,
-  * Catalyst stats); the strategy keeps its own `sqlBinRange` branch as a
-  * fallback for sessions that register the strategy without this rule,
-  * and refuses joins this rule already rewrote via
-  * [[BinRangeRewrite.isRewriteJoin]].
+  * The decision is [[RangeJoinChoice]], shared with
+  * [[IntervalJoinStrategy]]. The strategy keeps its own rewrite branch
+  * for interval joins that only exist after the pre-CBO batch — the
+  * optimizer's later `RewriteSubquery` batch turns `EXISTS`/`IN`
+  * subqueries into semi/anti joins — and refuses joins this rule already
+  * rewrote via [[BinRangeRewrite.isRewriteJoin]].
   */
 case class BinRangeLogicalRule(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -97,21 +104,19 @@ case class BinRangeLogicalRule(session: SparkSession) extends Rule[LogicalPlan] 
   override def apply(plan: LogicalPlan): LogicalPlan = {
     if (!conf("enabled", "true").toBoolean) return plan
     plan.transformUp {
-      case j @ Join(_, _, Inner, Some(_), _) =>
+      case j @ Join(_, _, _, Some(_), _) =>
         ExtractIntervalJoin.unapply(j) match {
-          case Some((left, right, Inner, keys, hint))
+          case Some((left, right, joinType, keys, hint))
               if !left.isStreaming && !right.isStreaming &&
                 !BinRangeRewrite.isRewriteJoin(keys) =>
             val (buildLeft, binRange) = RangeJoinChoice.choose(
-              conf, Inner, left, right, hint, RangeJoinChoice.method(conf, keys))
+              conf, joinType, left, right, hint, RangeJoinChoice.method(conf, keys))
             if (binRange) {
               // Same plan-embedded pin as IntervalJoinStrategy (see
               // IntervalJoinKeys.minOverlap/maxGap).
-              val minOverlap = RangeJoinChoice.minOverlap(conf, keys)
-              val maxGap = RangeJoinChoice.maxGap(conf, keys)
-              val binWidth = conf("binWidth", "300").toInt
-              BinRangeRewrite.rewrite(
-                left, right, keys, buildLeft, minOverlap, maxGap, binWidth)
+              BinRangeRewrite.rewrite(left, right, joinType, keys, buildLeft,
+                RangeJoinChoice.minOverlap(conf, keys), RangeJoinChoice.maxGap(conf, keys),
+                RangeJoinChoice.binWidth(conf))
             } else j
           case _ => j
         }

@@ -312,9 +312,9 @@ case class IntervalCountPushdownRule(session: SparkSession)
             if (buildLeft) hint.leftHint else hint.rightHint)
           val enforceBudget = !binRange &&
             RangeJoinChoice.method(conf, keys) != "broadcast" && !buildHinted
-          // Probing is O(log n) per replica (no per-pair scan), so the
-          // wide cogroup-style default wins: fewer replicas, amortized
-          // index build.
+          // Probing is O(log n) per replica (no per-pair scan), so wide
+          // bins win: fewer replicas, amortized index build (the pair
+          // rewrite scans pairs and defaults narrow, RangeJoinChoice.binWidth).
           val binWidth = conf("binWidth", "5000").toInt
           def widen(e: Expression): Expression =
             if (e.dataType == LongType) e

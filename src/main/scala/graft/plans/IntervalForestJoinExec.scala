@@ -14,32 +14,16 @@ import org.apache.spark.sql.execution.metric.SQLMetrics
 
 import scala.collection.mutable
 
-sealed trait IntervalJoinMode
-case object BroadcastForestMode extends IntervalJoinMode
-case object BinRangeMode extends IntervalJoinMode
-
-/** Physical interval join with two scale regimes.
-  *
-  * '''BroadcastForestMode''' — the build side is projected to
+/** Physical broadcast interval join: the build side is projected to
   * `(eqKey, start, end, row)`, assembled into a per-key
   * [[graft.operators.IntervalForest]] and broadcast; the stream side probes
   * it per partition — **no shuffle** of either side. That is the property
   * that makes this beat a shuffle or nested-loop join by ~an order of
   * magnitude at scale (SURVEY §6): the 100 TB side streams through untouched
-  * while only the small annotation side moves.
-  *
-  * '''BinRangeMode''' — non-inner joins whose build side is too large to
-  * broadcast (inner ones plan as [[BinRangeRewrite]] instead): both
-  * sides are replicated to the fixed-width genome bins their interval
-  * overlaps and cogrouped on `(eqKey, bin)`; each bin builds a local forest
-  * from its build intervals and probes its stream intervals. A pair whose
-  * intersection spans several bins is emitted only from the first bin of the
-  * intersection, so output is exactly-once without any dedup shuffle. Unlike
-  * a rowId re-join (the reference's two-phase,
-  * `IntervalTreeJoinOptimChromosomeImpl.scala:128-168`, which still collects
-  * every build interval to the driver), this never materializes anything on
-  * the driver, needs no RDD persist, and is deterministic under task retry —
-  * the properties that matter at 1000 executors.
+  * while only the small annotation side moves. A join whose build side is
+  * over the broadcast budget never reaches this exec: every join type then
+  * plans as [[BinRangeRewrite]], stock Catalyst joins over genome-bin
+  * replicas.
   *
   * Re-expression of the reference's
   * `IntervalTreeJoinOptimChromosome{,Impl}.scala` (see SURVEY §2.3 J1-J7):
@@ -58,10 +42,8 @@ case object BinRangeMode extends IntervalJoinMode
 case class IntervalForestJoinExec(
     keys: IntervalJoinKeys,
     buildLeft: Boolean,
-    mode: IntervalJoinMode,
     minOverlap: Int,
     maxGap: Int,
-    binWidth: Int,
     holderClass: String,
     joinType: JoinType,
     residual: Option[Expression],
@@ -79,10 +61,9 @@ case class IntervalForestJoinExec(
   // buildLeft=false for Left*, buildLeft=true for RightOuter), so unmatched
   // stream rows can be emitted locally — no global matched-set tracking,
   // the same restriction Spark's own BroadcastHashJoinExec imposes.
-  // FullOuter additionally tracks matched build rows globally: a bitset
-  // side-job in broadcast mode, build-row-id verdicts in bin-range mode —
-  // single-pass over each child, unlike the LeftOuter ∪ RightAnti
-  // decomposition it replaced (which scanned both sides twice).
+  // FullOuter additionally tracks matched build rows globally in a bitset
+  // side-job — one exec over each child, unlike the LeftOuter ∪ RightAnti
+  // decomposition it replaced (which built the forest twice).
   override def output: Seq[Attribute] = joinType match {
     case Inner => left.output ++ right.output
     case LeftOuter => left.output ++ right.output.map(_.withNullability(true))
@@ -110,9 +91,9 @@ case class IntervalForestJoinExec(
     (bound(s, streamedPlan), bound(e, streamedPlan), eqs.map(bound(_, streamedPlan)))
   }
 
-  /** The broadcast-mode build side, collected once and held to the
-    * [[BroadcastBudget]] when the broadcast was the estimate's decision
-    * (see enforceBuildBudget). Full outer keeps the unmatchable rows. */
+  /** The build side, collected once and held to the [[BroadcastBudget]]
+    * when the broadcast was the estimate's decision (see
+    * enforceBuildBudget). Full outer keeps the unmatchable rows. */
   private def collectBuild(keepUnmatchable: Boolean): Array[(UnsafeRow, Int, Int, InternalRow)] = {
     val (collected, bytes) = BroadcastBudget.collectKeyed(
       buildPlan, bEqsB, Seq(bStartB, bEndB), keepUnmatchable)
@@ -130,24 +111,18 @@ case class IntervalForestJoinExec(
       : Broadcast[Map[UnsafeRow, IntervalHolder[InternalRow]]] = {
     val collected = collectBuild(keepUnmatchable = false)
     // Pluggable holder (reference intervalHolderClassName conf): the
-    // broadcast structure is whatever the configured factory builds;
-    // the bin-range fallback always uses the array forest (per-bin
-    // locals are an execution detail, not a user structure).
+    // broadcast structure is whatever the configured factory builds.
     val forests = IntervalHolderFactory.forName(holderClass)
       .build[UnsafeRow, InternalRow](collected, maxGap)
     sparkContext.broadcast(forests)
   }
 
-  // Broadcast mode probes per-partition over the unshuffled stream side, so
-  // the stream partitioning survives — except full outer, whose output is
-  // a union with the driver-parallelized unmatched-build rows. Bin mode's
-  // output comes out of a cogroup shuffle on (key, bin) — claiming anything
-  // stronger would let EnsureRequirements elide a needed exchange above.
-  override def outputPartitioning: Partitioning = mode match {
-    case BroadcastForestMode if joinType != FullOuter =>
-      if (buildLeft) right.outputPartitioning else left.outputPartitioning
-    case _ => UnknownPartitioning(0)
-  }
+  // The probe runs per partition over the unshuffled stream side, so the
+  // stream partitioning survives — except full outer, whose output is a
+  // union with the driver-parallelized unmatched-build rows.
+  override def outputPartitioning: Partitioning =
+    if (joinType == FullOuter) UnknownPartitioning(0)
+    else streamedPlan.outputPartitioning
 
   override lazy val metrics = Map(
     "numOutputRows" -> SQLMetrics.createMetric(sparkContext, "number of output rows"),
@@ -161,396 +136,136 @@ case class IntervalForestJoinExec(
     BindReferences.bindReference(e, plan.output)
 
   override protected def doExecute(): RDD[InternalRow] = {
-    val (buildPlan, streamPlan) = (this.buildPlan, this.streamedPlan)
-
+    val streamPlan = streamedPlan
     // Start/end are projected through UnsafeProjection (codegen'd) rather
     // than interpreted Expression.eval — the probe runs once per stream row.
-    val bIvB = Seq(bStartB, bEndB)
     val sIvB = Seq(sStartB, sEndB)
-    val bEqsBL = bEqsB
     val sEqsBL = sEqsB
-    val nEqs = bEqsB.length
     val buildIsLeft = buildLeft
     val minOv = minOverlap
     val gap = maxGap
     val outAttrs = output
     val numOutputRows = longMetric("numOutputRows")
-    val buildRowsMetric = longMetric("buildRows")
-
     val jt = joinType
     val residLocal = residual
     // Candidate pair rows are always assembled in (left, right) order.
-    val pairAttrs = left.output ++ right.output
+    val pairSchema = left.output ++ right.output
     val nBuildCols = buildPlan.output.length
 
-    mode match {
-      case BroadcastForestMode if jt == FullOuter =>
-        // Full outer, single-plan (replaces the r4 LeftOuter ∪ null-padded
-        // RightAnti decomposition that scanned both children twice and
-        // built the forest twice). Shape mirrors Spark's own
-        // BroadcastNestedLoopJoinExec full-outer:
-        //   (1) build side collected ONCE — rows with a null interval/key
-        //       are kept (they can never match but must be preserved) and
-        //       excluded from the forest; forest payloads carry the
-        //       build-row index,
-        //   (2) a probe-only side-job over the stream side computes the
-        //       global matched-build bitset (no output materialization —
-        //       far cheaper than the RightAnti join it replaces),
-        //   (3) the main pass emits matched pairs + null-padded unmatched
-        //       stream rows (LeftOuter shape),
-        //   (4) unmatched build rows null-pad from the driver — the build
-        //       side is broadcast-small by mode selection.
-        val collected = collectBuild(keepUnmatchable = true)
-        val forests: Map[UnsafeRow, graft.operators.IntervalForest[(InternalRow, Int)]] =
-          graft.operators.IntervalForest.forest(
-            collected.iterator.zipWithIndex.collect {
-              case ((k, s, e, r), i) if k != null => (k, s, e, (r, i))
-            }, gap)
-        val bcast = sparkContext.broadcast(forests)
-        val nBuild = collected.length
-        val nStreamCols = streamedPlan.output.length
-        val pairSchema = pairAttrs
+    if (jt == FullOuter) {
+      // Full outer, single-plan (replaces the LeftOuter ∪ null-padded
+      // RightAnti decomposition that scanned both children twice and
+      // built the forest twice). Shape mirrors Spark's own
+      // BroadcastNestedLoopJoinExec full-outer:
+      //   (1) build side collected ONCE — rows with a null interval/key
+      //       are kept (they can never match but must be preserved) and
+      //       excluded from the forest; forest payloads carry the
+      //       build-row index,
+      //   (2) a probe-only side-job over the stream side computes the
+      //       global matched-build bitset (no output materialization —
+      //       far cheaper than the RightAnti join it replaces),
+      //   (3) the main pass emits matched pairs + null-padded unmatched
+      //       stream rows (LeftOuter shape),
+      //   (4) unmatched build rows null-pad from the driver — the build
+      //       side is broadcast-small by mode selection.
+      val collected = collectBuild(keepUnmatchable = true)
+      val forests: Map[UnsafeRow, IntervalForest[(InternalRow, Int)]] =
+        IntervalForest.forest(
+          collected.iterator.zipWithIndex.collect {
+            case ((k, s, e, r), i) if k != null => (k, s, e, (r, i))
+          }, gap)
+      val bcast = sparkContext.broadcast(forests)
+      val nBuild = collected.length
+      val nStreamCols = streamPlan.output.length
 
-        val matchedBits = streamPlan.execute().mapPartitionsWithIndex { (pidx, it) =>
-          val keyProj = UnsafeProjection.create(sEqsBL)
-          val ivProj = UnsafeProjection.create(sIvB)
-          val joinedRow = new JoinedRow
-          val pred = residLocal.map(Predicate.create(_, pairSchema))
-          pred.foreach(_.initialize(pidx))
-          def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-            if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-          val bits = new java.util.BitSet(nBuild)
-          val forestMap = bcast.value
-          it.foreach { srow =>
-            val iv = ivProj(srow)
-            if (!iv.isNullAt(0) && !iv.isNullAt(1)) {
-              val key = keyProj(srow)
-              if (!(nEqs > 0 && key.anyNull)) forestMap.get(key).foreach { forest =>
-                val qs = iv.getInt(0)
-                val qe = iv.getInt(1)
-                forest.foreachOverlap(qs, qe) { (bs, be, v) =>
-                  if ((minOv <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOv) &&
-                      pred.forall(_.eval(pair(v._1, srow))))
-                    bits.set(v._2)
-                }
-              }
-            }
-          }
-          Iterator.single(bits)
-        }.fold(new java.util.BitSet(nBuild)) { (a, b) => a.or(b); a }
+      val matchedBits = streamPlan.execute().mapPartitionsWithIndex { (pidx, it) =>
+        val probe = IntervalForestJoinExec.prober[(InternalRow, Int)](bcast.value, _._1,
+          sEqsBL, sIvB, minOv, residLocal, pairSchema, buildIsLeft, pidx)
+        val bits = new java.util.BitSet(nBuild)
+        it.foreach(srow => probe(srow, v => bits.set(v._2)))
+        Iterator.single(bits)
+      }.fold(new java.util.BitSet(nBuild)) { (a, b) => a.or(b); a }
 
-        val mainOut: RDD[InternalRow] = streamPlan.execute().mapPartitionsWithIndex[InternalRow] { (pidx, it) =>
-          val keyProj = UnsafeProjection.create(sEqsBL)
-          val ivProj = UnsafeProjection.create(sIvB)
-          val joinedRow = new JoinedRow
-          val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-          val pred = residLocal.map(Predicate.create(_, pairSchema))
-          pred.foreach(_.initialize(pidx))
-          val forestMap = bcast.value
-          val nullBuild = new GenericInternalRow(nBuildCols)
-          def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-            if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-          it.flatMap { srow =>
-            val iv = ivProj(srow)
-            val matches = mutable.ArrayBuffer.empty[InternalRow]
-            if (!iv.isNullAt(0) && !iv.isNullAt(1)) {
-              val key = keyProj(srow)
-              if (!(nEqs > 0 && key.anyNull)) forestMap.get(key).foreach { forest =>
-                val qs = iv.getInt(0)
-                val qe = iv.getInt(1)
-                forest.foreachOverlap(qs, qe) { (bs, be, v) =>
-                  if ((minOv <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOv) &&
-                      pred.forall(_.eval(pair(v._1, srow))))
-                    matches += v._1
-                }
-              }
-            }
-            if (matches.isEmpty) {
-              numOutputRows += 1
-              Iterator.single(resultProj(pair(nullBuild, srow)))
-            } else matches.iterator.map { brow =>
-              numOutputRows += 1
-              resultProj(pair(brow, srow))
-            }
+      val mainOut: RDD[InternalRow] = streamPlan.execute().mapPartitionsWithIndex[InternalRow] { (pidx, it) =>
+        val probe = IntervalForestJoinExec.prober[(InternalRow, Int)](bcast.value, _._1,
+          sEqsBL, sIvB, minOv, residLocal, pairSchema, buildIsLeft, pidx)
+        val joinedRow = new JoinedRow
+        val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
+        val nullBuild = new GenericInternalRow(nBuildCols)
+        def pair(brow: InternalRow, srow: InternalRow): InternalRow =
+          if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
+        it.flatMap { srow =>
+          val matches = mutable.ArrayBuffer.empty[InternalRow]
+          probe(srow, v => matches += v._1)
+          if (matches.isEmpty) {
+            numOutputRows += 1
+            Iterator.single(resultProj(pair(nullBuild, srow)))
+          } else matches.iterator.map { brow =>
+            numOutputRows += 1
+            resultProj(pair(brow, srow))
           }
         }
+      }
 
-        val unmatchedBuild: IndexedSeq[InternalRow] =
-          collected.indices.collect { case i if !matchedBits.get(i) => collected(i)._4 }
-        val padded = sparkContext
-          .parallelize(unmatchedBuild, math.max(1, math.min(
-            conf.numShufflePartitions, 1 + unmatchedBuild.length / 65536)))
-          .mapPartitions[InternalRow] { it =>
-            val joinedRow = new JoinedRow
-            val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-            val nullStream = new GenericInternalRow(nStreamCols)
-            def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-              if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-            it.map { brow =>
-              numOutputRows += 1
-              resultProj(pair(brow, nullStream))
-            }
-          }
-        mainOut.union(padded)
-
-      case BroadcastForestMode =>
-        // Stream side probes the broadcast forests per partition; no
-        // shuffle. Inner emits the matched pairs; a stream row with no
-        // (residual-surviving) match is preserved (outer: build side
-        // null-padded; anti: emitted bare) or used as the existence test
-        // (semi). Non-inner residuals must be decided per candidate pair
-        // HERE — a post-join filter would wrongly drop preserved rows.
-        val bcast = broadcastForests
-        val pairSchema = pairAttrs
-        streamPlan.execute().mapPartitionsWithIndex { (pidx, it) =>
-          val keyProj = UnsafeProjection.create(sEqsBL)
-          val ivProj = UnsafeProjection.create(sIvB)
+      val unmatchedBuild: IndexedSeq[InternalRow] =
+        collected.indices.collect { case i if !matchedBits.get(i) => collected(i)._4 }
+      val padded = sparkContext
+        .parallelize(unmatchedBuild, math.max(1, math.min(
+          conf.numShufflePartitions, 1 + unmatchedBuild.length / 65536)))
+        .mapPartitions[InternalRow] { it =>
           val joinedRow = new JoinedRow
           val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-          val pred = residLocal.map(Predicate.create(_, pairSchema))
-          pred.foreach(_.initialize(pidx))
-          val forestMap = bcast.value
-          val nullBuild = new GenericInternalRow(nBuildCols)
+          val nullStream = new GenericInternalRow(nStreamCols)
           def pair(brow: InternalRow, srow: InternalRow): InternalRow =
             if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-          it.flatMap { srow =>
-            val iv = ivProj(srow)
-            val nullSide = iv.isNullAt(0) || iv.isNullAt(1)
-            val matches = mutable.ArrayBuffer.empty[InternalRow]
-            if (!nullSide) {
-              val key = keyProj(srow)
-              if (!(nEqs > 0 && key.anyNull)) forestMap.get(key).foreach { forest =>
-                val qs = iv.getInt(0)
-                val qe = iv.getInt(1)
-                forest.foreachOverlap(qs, qe) { (bs, be, brow) =>
-                  if ((minOv <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOv) &&
-                      pred.forall(_.eval(pair(brow, srow))))
-                    matches += brow
-                }
-              }
-            }
-            jt match {
-              case Inner =>
-                matches.iterator.map { brow =>
-                  numOutputRows += 1
-                  resultProj(pair(brow, srow))
-                }
-              case LeftSemi =>
-                if (matches.nonEmpty) { numOutputRows += 1; Iterator.single(resultProj(srow)) }
-                else Iterator.empty
-              case LeftAnti =>
-                if (matches.isEmpty) { numOutputRows += 1; Iterator.single(resultProj(srow)) }
-                else Iterator.empty
-              case _ => // LeftOuter / RightOuter (stream = preserved side)
-                if (matches.isEmpty) {
-                  numOutputRows += 1
-                  Iterator.single(resultProj(pair(nullBuild, srow)))
-                } else matches.iterator.map { brow =>
-                  numOutputRows += 1
-                  resultProj(pair(brow, srow))
-                }
-            }
+          it.map { brow =>
+            numOutputRows += 1
+            resultProj(pair(brow, nullStream))
           }
         }
-
-      case BinRangeMode =>
-        require(jt != Inner, "inner bin-range joins plan as BinRangeRewrite")
-        // Outer/semi/anti/full at shuffle scale. Matched-ness of a row is
-        // a GLOBAL property (its replicas see different bins), so both
-        // sides get unique ids (zipWithUniqueId — no extra job, unlike
-        // zipWithIndex) and per-bin verdicts aggregate by id. Matched
-        // PAIRS never ride the verdict shuffle: they are emitted directly
-        // from the cogroup (exactly-once by first-intersection-bin, as in
-        // BinRangeRewrite), so no reduce record ever concatenates a stream
-        // row's full match list — a whole-chromosome stream interval
-        // overlapping millions of build rows streams its pairs instead of
-        // materializing them in one Seq (r4 ADVICE). The verdict shuffle
-        // carries only (id, row, matched) — bounded per record.
-        //   semi — only matched replicas enter the id shuffle (volume =
-        //          matched rows, deduped by reduceByKey),
-        //   anti — every replica reports (id, matched); OR-reduce, keep
-        //          the never-matched,
-        //   outer — unmatched stream ids null-pad; pairs come from the
-        //          direct pass (the cogroup's shuffle files are reused —
-        //          only the reduce side runs twice),
-        //   full — build replicas also report (bid, matched); unmatched
-        //          build ids null-pad on the stream side.
-        // Rows with a null interval/key never enter a real bin but are
-        // still preserved for outer/anti/full: they ship to a sentinel bin
-        // (no forest is built there) and aggregate as unmatched.
-        val binW = binWidth
-        val numParts = conf.numShufflePartitions
-        val pairSchema = pairAttrs
-        val sentinelBin = Int.MinValue
-        val fullOuter = jt == FullOuter
-        val nStreamCols = streamedPlan.output.length
-
-        // Build side with unique ids (consumed only by full-outer verdicts
-        // but carried uniformly — one Long per replica, no extra job).
-        // Null-interval/key build rows are preserved only for full outer.
-        val buildBinned: RDD[((UnsafeRow, Int), (Long, Int, Int, InternalRow))] =
-          buildPlan.execute().zipWithUniqueId().mapPartitions { it =>
-            val keyProj = UnsafeProjection.create(bEqsBL)
-            val ivProj = UnsafeProjection.create(bIvB)
-            it.flatMap { case (row, id) =>
-              val iv = ivProj(row)
-              if (iv.isNullAt(0) || iv.isNullAt(1)) {
-                if (fullOuter) {
-                  val copy = row.copy()
-                  Iterator.single(((keyProj(copy).copy(), sentinelBin), (id, 0, 0, copy)))
-                } else Iterator.empty
-              } else {
-                val s = iv.getInt(0) - gap
-                val e = iv.getInt(1) + gap
-                val key = keyProj(row)
-                if (nEqs > 0 && key.anyNull) {
-                  if (fullOuter) {
-                    val copy = row.copy()
-                    Iterator.single(((key.copy(), sentinelBin), (id, 0, 0, copy)))
-                  } else Iterator.empty
-                } else {
-                  val copy = row.copy()
-                  val k = key.copy()
-                  val lo = Math.floorDiv(math.min(s, e), binW)
-                  val hi = Math.floorDiv(math.max(s, e), binW)
-                  (lo to hi).iterator.map(b => ((k, b), (id, s, e, copy)))
-                }
+      mainOut.union(padded)
+    } else {
+      // Stream side probes the broadcast forests per partition; no
+      // shuffle. Inner emits the matched pairs; a stream row with no
+      // (residual-surviving) match is preserved (outer: build side
+      // null-padded; anti: emitted bare) or used as the existence test
+      // (semi). Non-inner residuals must be decided per candidate pair
+      // HERE — a post-join filter would wrongly drop preserved rows.
+      val bcast = broadcastForests
+      streamPlan.execute().mapPartitionsWithIndex { (pidx, it) =>
+        val probe = IntervalForestJoinExec.prober[InternalRow](bcast.value, identity,
+          sEqsBL, sIvB, minOv, residLocal, pairSchema, buildIsLeft, pidx)
+        val joinedRow = new JoinedRow
+        val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
+        val nullBuild = new GenericInternalRow(nBuildCols)
+        def pair(brow: InternalRow, srow: InternalRow): InternalRow =
+          if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
+        it.flatMap { srow =>
+          val matches = mutable.ArrayBuffer.empty[InternalRow]
+          probe(srow, matches += _)
+          jt match {
+            case Inner =>
+              matches.iterator.map { brow =>
+                numOutputRows += 1
+                resultProj(pair(brow, srow))
               }
-            }
-          }
-
-        val streamBinned: RDD[((UnsafeRow, Int), (Long, Int, Int, InternalRow))] =
-          streamPlan.execute().zipWithUniqueId().mapPartitions { it =>
-            val keyProj = UnsafeProjection.create(sEqsBL)
-            val ivProj = UnsafeProjection.create(sIvB)
-            it.flatMap { case (row, id) =>
-              val iv = ivProj(row)
-              val copy = row.copy()
-              if (iv.isNullAt(0) || iv.isNullAt(1))
-                Iterator.single(((keyProj(copy).copy(), sentinelBin), (id, 0, 0, copy)))
-              else {
-                val s = iv.getInt(0)
-                val e = iv.getInt(1)
-                val key = keyProj(copy)
-                if (nEqs > 0 && key.anyNull)
-                  Iterator.single(((key.copy(), sentinelBin), (id, 0, 0, copy)))
-                else {
-                  val k = key.copy()
-                  val lo = Math.floorDiv(math.min(s, e), binW)
-                  val hi = Math.floorDiv(math.max(s, e), binW)
-                  (lo to hi).iterator.map(b => ((k, b), (id, s, e, copy)))
-                }
+            case LeftSemi =>
+              if (matches.nonEmpty) { numOutputRows += 1; Iterator.single(resultProj(srow)) }
+              else Iterator.empty
+            case LeftAnti =>
+              if (matches.isEmpty) { numOutputRows += 1; Iterator.single(resultProj(srow)) }
+              else Iterator.empty
+            case _ => // LeftOuter / RightOuter (stream = preserved side)
+              if (matches.isEmpty) {
+                numOutputRows += 1
+                Iterator.single(resultProj(pair(nullBuild, srow)))
+              } else matches.iterator.map { brow =>
+                numOutputRows += 1
+                resultProj(pair(brow, srow))
               }
-            }
-          }
-
-        // ONE shuffle: both per-bin passes below are children of the same
-        // cogrouped RDD, so the map stages run once and only the (cheap)
-        // reduce side re-runs for the second pass.
-        val cg = buildBinned.cogroup(streamBinned, numParts)
-
-        // Pass 1 (outer/full only): matched pairs, streamed out directly.
-        lazy val pairRows: RDD[InternalRow] = cg.mapPartitionsWithIndex { (pidx, groups) =>
-          val joinedRow = new JoinedRow
-          val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-          val pred = residLocal.map(Predicate.create(_, pairSchema))
-          pred.foreach(_.initialize(pidx))
-          def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-            if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-          groups.flatMap { case ((_, bin), (buildRows, streamRows)) =>
-            if (bin == sentinelBin || buildRows.isEmpty || streamRows.isEmpty) Iterator.empty
-            else {
-              val items = buildRows.map { case (_, s, e, r) => (s, e, r) }.toIndexedSeq
-              val forest = IntervalForest(items)
-              streamRows.iterator.flatMap { case (_, qs, qe, srow) =>
-                val buf = mutable.ArrayBuffer.empty[InternalRow]
-                forest.foreachOverlap(qs, qe) { (bs, be, brow) =>
-                  if ((minOv <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOv) &&
-                      Math.floorDiv(math.max(math.min(bs, be), math.min(qs, qe)), binW) == bin &&
-                      pred.forall(_.eval(pair(brow, srow))))
-                    buf += brow
-                }
-                buf.iterator.map { brow =>
-                  numOutputRows += 1
-                  resultProj(pair(brow, srow))
-                }
-              }
-            }
           }
         }
-
-        // Pass 2: per-replica verdicts — (id·2 | side, (row, matchedHere)).
-        // Stream ids are even, build ids odd; the reduce OR-merges flags.
-        val verdicts: RDD[(Long, (InternalRow, Boolean))] =
-          cg.mapPartitionsWithIndex { (pidx, groups) =>
-            val joinedRow = new JoinedRow
-            val pred = residLocal.map(Predicate.create(_, pairSchema))
-            pred.foreach(_.initialize(pidx))
-            def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-              if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-            groups.flatMap { case ((_, bin), (buildRows, streamRows)) =>
-              val out = mutable.ArrayBuffer.empty[(Long, (InternalRow, Boolean))]
-              buildRowsMetric += buildRows.size
-              val forest =
-                if (bin == sentinelBin || buildRows.isEmpty) null
-                else IntervalForest(buildRows.map { case (bid, s, e, r) => (s, e, (bid, r)) }.toIndexedSeq)
-              val matchedBids = if (fullOuter) mutable.HashSet.empty[Long] else null
-              streamRows.foreach { case (id, qs, qe, srow) =>
-                var matchedHere = false
-                if (forest != null) {
-                  forest.foreachOverlap(qs, qe) { (bs, be, v) =>
-                    if ((minOv <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOv) &&
-                        pred.forall(_.eval(pair(v._2, srow)))) {
-                      matchedHere = true
-                      if (fullOuter) matchedBids += v._1
-                    }
-                  }
-                }
-                if (!(jt == LeftSemi && !matchedHere))
-                  out += ((id << 1, (srow, matchedHere)))
-              }
-              if (fullOuter) buildRows.iterator.foreach { case (bid, _, _, brow) =>
-                out += (((bid << 1) | 1L, (brow, matchedBids.contains(bid))))
-              }
-              out.iterator
-            }
-          }
-
-        val preserved: RDD[InternalRow] = verdicts
-          .reduceByKey((a, b) => (a._1, a._2 || b._2), numParts)
-          .mapPartitions[InternalRow] { it =>
-            val joinedRow = new JoinedRow
-            val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-            val nullBuild = new GenericInternalRow(nBuildCols)
-            val nullStream = new GenericInternalRow(nStreamCols)
-            def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-              if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-            it.flatMap { case (key, (row, matched)) =>
-              jt match {
-                case LeftSemi =>
-                  numOutputRows += 1; Iterator.single(resultProj(row))
-                case LeftAnti =>
-                  if (matched) Iterator.empty
-                  else { numOutputRows += 1; Iterator.single(resultProj(row)) }
-                case FullOuter =>
-                  if (matched) Iterator.empty
-                  else {
-                    numOutputRows += 1
-                    val padded =
-                      if ((key & 1L) == 1L) pair(row, nullStream) else pair(nullBuild, row)
-                    Iterator.single(resultProj(padded))
-                  }
-                case _ => // LeftOuter / RightOuter
-                  if (matched) Iterator.empty
-                  else { numOutputRows += 1; Iterator.single(resultProj(pair(nullBuild, row))) }
-              }
-            }
-          }
-
-        jt match {
-          case LeftSemi | LeftAnti => preserved
-          case _ => pairRows.union(preserved)
-        }
+      }
     }
   }
 
@@ -565,9 +280,8 @@ case class IntervalForestJoinExec(
   // interpreted path this removes the iterator boundary between the scan
   // and the join, the per-row UnsafeProjections, and the per-probe match
   // buffer, and lets a downstream aggregate fuse into the same stage.
-  // Bin-range mode and custom interval holders keep the interpreted path
-  // (a holder only promises a callback API; the cursor needs the array
-  // forest).
+  // Custom interval holders keep the interpreted path (a holder only
+  // promises a callback API; the cursor needs the array forest).
   //
   // LeftSemi/LeftAnti/LeftOuter/RightOuter codegen too (r10 VERDICT #2):
   // the stream-side probe is the 100 TB hot loop for existence filters and
@@ -586,7 +300,6 @@ case class IntervalForestJoinExec(
     (joinType == Inner ||
       ((joinType == LeftSemi || joinType == LeftAnti ||
         joinType == LeftOuter || joinType == RightOuter) && residual.isEmpty)) &&
-      mode == BroadcastForestMode &&
       holderClass == classOf[IntervalForestFactory].getName
 
   override def inputRDDs(): Seq[RDD[InternalRow]] =
@@ -727,6 +440,40 @@ case class IntervalForestJoinExec(
 }
 
 object IntervalForestJoinExec {
+  /** The per-stream-row forest probe that every interpreted pass runs:
+    * project the stream row's key and interval, skip the row when a bound
+    * or (with equality keys) the key is null, walk the key's holder, and
+    * call `f` with each build payload whose interval also passes
+    * minOverlap and the residual. `buildRow` reads a payload's build row
+    * for the residual. Built once per partition. */
+  private[plans] def prober[V](forests: Map[UnsafeRow, IntervalHolder[V]], buildRow: V => InternalRow,
+      sEqs: Seq[Expression], sIv: Seq[Expression], minOverlap: Int,
+      residual: Option[Expression], pairSchema: Seq[Attribute], buildLeft: Boolean,
+      partition: Int): (InternalRow, V => Unit) => Unit = {
+    val keyProj = UnsafeProjection.create(sEqs)
+    val ivProj = UnsafeProjection.create(sIv)
+    val joinedRow = new JoinedRow
+    val pred = residual.map(Predicate.create(_, pairSchema))
+    pred.foreach(_.initialize(partition))
+    def pair(brow: InternalRow, srow: InternalRow): InternalRow =
+      if (buildLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
+    (srow, f) => {
+      val iv = ivProj(srow)
+      if (!iv.isNullAt(0) && !iv.isNullAt(1)) {
+        val key = keyProj(srow)
+        if (!(sEqs.nonEmpty && key.anyNull)) forests.get(key).foreach { forest =>
+          val qs = iv.getInt(0)
+          val qe = iv.getInt(1)
+          forest.foreachOverlap(qs, qe) { (bs, be, v) =>
+            if ((minOverlap <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOverlap) &&
+                pred.forall(_.eval(pair(buildRow(v), srow))))
+              f(v)
+          }
+        }
+      }
+    }
+  }
+
   /** Codegen helper: holder lookup returning the array forest or null
     * (called through the companion's static forwarder from generated Java;
     * Scala `Map.getOrElse` isn't callable from Java directly). */

@@ -1,11 +1,12 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.{Inner, LeftAnti, LeftOuter, LeftSemi, RightOuter}
+import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{FilterExec, SparkPlan, SparkStrategy}
 
-/** Plans [[IntervalForestJoinExec]] for joins matched by
+/** Plans [[IntervalForestJoinExec]] (broadcast) or the
+  * [[BinRangeRewrite]] (shuffle) for joins matched by
   * [[ExtractIntervalJoin]] (reference strategy:
   * `rangejoins/methods/IntervalTree/IntervalTreeJoinStrategyOptim.scala:16-51`).
   *
@@ -25,8 +26,10 @@ import org.apache.spark.sql.execution.{FilterExec, SparkPlan, SparkStrategy}
   *  - `spark.graft.rangejoin.maxBroadcastBytes`, `buildBytesSlack` — the
   *    auto threshold between broadcast and the bin-range shuffle join and
   *    its runtime guard; see [[BroadcastBudget]].
-  *  - `spark.graft.rangejoin.binWidth` (5000) — genome-bin width of the
-  *    shuffle fallback; both sides replicate per overlapped bin.
+  *  - `spark.graft.rangejoin.binWidth` (300) — genome-bin width of the
+  *    [[BinRangeRewrite]] shuffle path; both sides replicate per
+  *    overlapped bin. The count pushdown's bin join defaults to 5000
+  *    (see [[IntervalCountPushdownRule]]).
   *  - `spark.graft.rangejoin.intervalHolderClass`
   *    (graft.operators.IntervalForestFactory) — the broadcast-side
   *    structure factory, the reference's `intervalHolderClassName`
@@ -39,9 +42,10 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     // Streaming children fall through to Spark's stream-aware join
-    // planning: both batch modes here collect or cogroup a child, neither
-    // of which is defined over an unbounded side. (Streaming interval
-    // joins: graft.streaming.StreamingOps.{annotateStream, joinStreams}.)
+    // planning: the broadcast exec collects a child and the rewrite
+    // aggregates verdicts, neither of which is defined over an unbounded
+    // side. (Streaming interval joins:
+    // graft.streaming.StreamingOps.{annotateStream, joinStreams}.)
     case ExtractIntervalJoin(left, right, joinType, keys, hint)
         if conf("enabled", "true").toBoolean && !left.isStreaming && !right.isStreaming &&
           !BinRangeRewrite.isRewriteJoin(keys) =>
@@ -59,25 +63,13 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
       // tracked globally by the exec), so either side may build.
       val (buildLeft, binRange) = RangeJoinChoice.choose(
         conf, joinType, left, right, hint, method)
-      val mode = if (binRange) BinRangeMode else BroadcastForestMode
-      // Inner at shuffle scale plans as a pure Catalyst equi-join rewrite
-      // (Tungsten shuffle + codegen + AQE skew splitting);
-      // BinRangeLogicalRule normally applies it first, this branch covers
-      // joins that reach the planner unrewritten. The exec's bin-range
-      // mode carries only the non-inner verdict machinery.
-      //
-      // Default bin width differs by engine: the rewrite SCANS each
-      // (key,bin) group's pairs, so narrow bins win (pairs/bin shrinks
-      // faster than replication grows until width ~ interval length);
-      // the forest PROBES, so wide bins amortize its build. Measured at
-      // sf0.1 (600k x 20k, 3.55M pairs): rewrite 1.15s @300 vs the
-      // forest-per-bin exec 1.75s @5000 (rewrite @5000: 2.8s — pair-scan
-      // blowup).
-      val sqlBinRange = mode == BinRangeMode && joinType == Inner
-      val binWidth = conf("binWidth", if (sqlBinRange) "300" else "5000").toInt
-      if (sqlBinRange) {
-        return planLater(BinRangeRewrite.rewrite(
-          left, right, keys, buildLeft, minOverlap, maxGap, binWidth)) :: Nil
+      // At shuffle scale every join type plans as the Catalyst bin
+      // rewrite. BinRangeLogicalRule normally applies it first; this
+      // branch covers joins created after its batch (subqueries turned
+      // into semi/anti joins).
+      if (binRange) {
+        return planLater(BinRangeRewrite.rewrite(left, right, joinType, keys, buildLeft,
+          minOverlap, maxGap, RangeJoinChoice.binWidth(conf))) :: Nil
       }
       val holderClass = conf("intervalHolderClass",
         classOf[graft.operators.IntervalForestFactory].getName)
@@ -92,7 +84,7 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
         else RangeJoinChoice.hinted(hint.rightHint)
       val enforceBudget = method != "broadcast" && !buildHinted
       val exec = IntervalForestJoinExec(
-        keys, buildLeft, mode, minOverlap, maxGap, binWidth, holderClass,
+        keys, buildLeft, minOverlap, maxGap, holderClass,
         joinType, residualInExec, planLater(left), planLater(right), enforceBudget)
       if (joinType == Inner) keys.residual.map(FilterExec(_, exec)).getOrElse(exec) :: Nil
       else exec :: Nil

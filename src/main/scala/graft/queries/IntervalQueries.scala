@@ -118,15 +118,31 @@ object IntervalQueries {
       a.join(b, overlaps(a, b), "left_outer")
         .select(col("a_key"), col("b_key"))
     },
-    // Full outer, single-pass through the forest exec (stock Spark: BNLJ):
-    // build side collected once, a probe-only bitset job finds matched
-    // build rows, unmatched pad from the driver. ivA filtered to a sliver
-    // so unmatched rows exist on BOTH sides.
+    // Full outer through the forest exec (stock Spark: BNLJ): build side
+    // collected once, a probe-only bitset job finds matched build rows,
+    // unmatched pad from the driver. ivA filtered to a sliver so unmatched
+    // rows exist on BOTH sides.
     "interval_join_full" -> { (s, dir) =>
       val a = Tables.ivA(s, dir).filter(col("pos_start") < 50000)
       val b = Tables.ivB(s, dir)
       a.join(b, overlaps(a, b), "full_outer")
         .select(col("a_key"), col("b_key"))
+    },
+    // interval_join_full and interval_join_anti under the shuffle regime:
+    // the bin-range rewrite's matched pairs plus per-row verdicts (an
+    // existence join over the bin replicas, one aggregate on the row id).
+    // Same oracle SQL as the broadcast twins.
+    "interval_join_full_binrange" -> { (s, dir) =>
+      val a = Tables.ivA(s, dir).filter(col("pos_start") < 50000)
+      val b = Tables.ivB(s, dir)
+      a.join(b, overlaps(a, b, method = "binrange"), "full_outer")
+        .select(col("a_key"), col("b_key"))
+    },
+    "interval_join_anti_binrange" -> { (s, dir) =>
+      val a = Tables.ivA(s, dir)
+      val b = Tables.ivB(s, dir)
+      a.join(b, overlaps(a, b, method = "binrange"), "left_anti")
+        .select(col("a_key"), col("contig"), col("pos_start"))
     },
     "interval_join_semi" -> { (s, dir) =>
       val a = Tables.ivA(s, dir)
@@ -656,6 +672,20 @@ object IntervalQueries {
         |  ON a.contig = b.contig
         | AND a.pos_end >= b.pos_start
         | AND a.pos_start <= b.pos_end""".stripMargin),
+    "interval_join_full_binrange" -> withCtes(OracleCtes.ivA, OracleCtes.ivB)(
+      """SELECT a_key, b_key
+        |FROM (SELECT * FROM iva WHERE pos_start < 50000) a
+        |FULL OUTER JOIN ivb b
+        |  ON a.contig = b.contig
+        | AND a.pos_end >= b.pos_start
+        | AND a.pos_start <= b.pos_end""".stripMargin),
+    "interval_join_anti_binrange" -> withCtes(OracleCtes.ivA, OracleCtes.ivB)(
+      """SELECT a_key, contig, pos_start
+        |FROM iva a WHERE NOT EXISTS (
+        |  SELECT 1 FROM ivb b
+        |  WHERE a.contig = b.contig
+        |    AND a.pos_end >= b.pos_start
+        |    AND a.pos_start <= b.pos_end)""".stripMargin),
     "interval_join_semi" -> withCtes(OracleCtes.ivA, OracleCtes.ivB)(
       """SELECT a_key, contig, pos_start
         |FROM iva a WHERE EXISTS (

@@ -350,22 +350,14 @@ object SourceQueries {
       s.sql("""SELECT contig, pos_start, pos_end, mapq, flag
               |FROM reads_ctas_ddl WHERE mapq >= 20""".stripMargin)
     },
-    // The SAM text twin: the same sample rendered as SAM lines (header
-    // line skipped, '*' placeholders, MD fished from the optional-field
-    // tail behind an NM tag), parsed back by codegen'd expressions with
-    // CIGAR-derived pos_end.
+    // The SAM text twin: the same sample written through the SAM sink
+    // (`writeSam`: header, '*' placeholders, MD in the optional-field
+    // tail), parsed back by codegen'd expressions with CIGAR-derived
+    // pos_end.
     "ddl_sam_scan" -> { (s, dir) =>
       val path = fixture("reads_sam", dir) { p =>
-        val lines = Tables.readsMd(s, dir).filter(col("sample_id") === "s1").select(
-          concat_ws("\t", lit("*"), col("flag").cast("string"), col("contig"),
-            col("pos_start").cast("string"), col("mapq").cast("string"), col("cigar"),
-            lit("*"), lit("0"), lit("0"), col("seq"), col("qual_str"),
-            lit("NM:i:1"), concat(lit("MD:Z:"), col("md_tag"))).as("value"))
-        val header = s.createDataFrame(
-          java.util.List.of(org.apache.spark.sql.Row("@HD\tVN:1.6\tSO:unsorted")),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("value", org.apache.spark.sql.types.StringType))))
-        header.unionAll(lines).coalesce(1).write.mode("overwrite").text(p + "/s1.sam")
+        graft.sources.SourceUtil.writeSam(
+          Tables.readsMd(s, dir).filter(col("sample_id") === "s1"), p + "/s1.sam")
       }
       ensureTable(s, "reads_sam_ddl", dir)(
         s"""CREATE TABLE reads_sam_ddl USING graft.sources.SamSource

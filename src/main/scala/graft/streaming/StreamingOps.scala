@@ -439,7 +439,7 @@ object StreamingOps {
     * [[graft.operators.IntervalForest]] the batch join broadcasts, and
     * each micro-batch probes it in a stateless flatMap: no stream state,
     * no watermark requirement, the unbounded side never shuffles — the
-    * identical scale property as the batch BroadcastForestMode.
+    * identical scale property as the batch broadcast forest join.
     * Inner-join semantics (reads with no overlapping target are dropped);
     * targets need (contig, pos_start, pos_end, name) columns.
     *

@@ -261,7 +261,8 @@ class IntervalJoinSpec extends SparkSpec {
         a("pos_start") <= b("pos_end"))
       (collectSorted(df), df.queryExecution.executedPlan.toString)
     }
-    assert(plan.contains("BroadcastForestMode"), plan.linesIterator.take(8).mkString("\n"))
+    // The forest exec is broadcast-only: planning it IS the broadcast.
+    assert(plan.contains("IntervalForestJoin"), plan.linesIterator.take(8).mkString("\n"))
     assert(!plan.contains("__graft_bin"))
     assert(rows === base)
     // The hinted side becomes the build side even when stats favor the
@@ -294,35 +295,115 @@ class IntervalJoinSpec extends SparkSpec {
   }
 
   test("bin-range SQL rewrite matches brute force (incl. gap/overlap confs)") {
-    val a = randomIntervals(300, 77, "a_key")
-    val b = randomIntervals(60, 78, "b_key")
-    def rows(df: DataFrame) = df.collect().toSeq
-      .map(r => (r.getLong(0), r.getString(1), r.getInt(2), r.getInt(3)))
+    // Both sides carry rows that can never match (null contig, null
+    // bounds, an out-of-range interval): outer/anti/full must keep them,
+    // semi must drop them.
+    val a = withUnmatchable(randomIntervals(300, 77, "a_key"), "a_key")
+    val b = withUnmatchable(randomIntervals(60, 78, "b_key"), "b_key")
+    def rows(df: DataFrame) = df.collect().toSeq.map(r => (r.getLong(0),
+      Option(r.getString(1)), Option(r.get(2)).map(_.asInstanceOf[Int]),
+      Option(r.get(3)).map(_.asInstanceOf[Int])))
     val (as, bs) = (rows(a), rows(b))
+    def keyPairs(df: DataFrame): Seq[(Option[Long], Option[Long])] =
+      df.collect().toSeq.map { r =>
+        (Option(r.get(0)).map(_.asInstanceOf[Long]),
+          if (r.length > 1) Option(r.get(1)).map(_.asInstanceOf[Long]) else None)
+      }.sorted
     for ((ov, gap) <- Seq((1, 0), (10, 0), (1, 25))) {
-      // maxGap widens the build side (b) before both the overlap and the
-      // minOverlap test.
-      val want = (for {
+      // maxGap widens the build side before both the overlap and the
+      // minOverlap test; minOverlap > 1 only runs at gap 0, so the pair
+      // set does not depend on which side builds (right_outer pins left).
+      val pairs = for {
         (ak, ac, aStart, aEnd) <- as
         (bk, bc, bStart0, bEnd0) <- bs
-        (bStart, bEnd) = (bStart0 - gap, bEnd0 + gap)
-        if ac == bc && bEnd >= aStart && bStart <= aEnd &&
-          math.min(aEnd, bEnd) - math.max(aStart, bStart) + 1 >= ov
-      } yield (ak, bk)).sorted
-      val got = withConf("spark.graft.rangejoin.method", "binrange") {
-        withConf("spark.graft.rangejoin.buildSide", "right") {
-          withConf("spark.graft.rangejoin.minOverlap", ov.toString) {
-            withConf("spark.graft.rangejoin.maxGap", gap.toString) {
-              val df = joined(a, b)
-              assert(df.queryExecution.optimizedPlan.toString.contains(BinRangeRewrite.BinAttr),
-                s"join was not rewritten to bins:\n${df.queryExecution.optimizedPlan}")
-              collectSorted(df).map(r => (r.getLong(0), r.getLong(1)))
+        if ac.isDefined && ac == bc &&
+          Seq(aStart, aEnd, bStart0, bEnd0).forall(_.isDefined)
+        (bStart, bEnd) = (bStart0.get - gap, bEnd0.get + gap)
+        if bEnd >= aStart.get && bStart <= aEnd.get &&
+          math.min(aEnd.get, bEnd) - math.max(aStart.get, bStart) + 1 >= ov
+      } yield (ak, bk)
+      val matchedA = pairs.map(_._1).toSet
+      val matchedB = pairs.map(_._2).toSet
+      val unmatchedA = as.map(_._1).filterNot(matchedA)
+      val unmatchedB = bs.map(_._1).filterNot(matchedB)
+      val inner = pairs.map { case (x, y) => (Option(x), Option(y)) }
+      val want = Map(
+        "inner" -> inner,
+        "left_outer" -> (inner ++ unmatchedA.map(k => (Option(k), None))),
+        "right_outer" -> (inner ++ unmatchedB.map(k => (None, Option(k)))),
+        "full_outer" -> (inner ++ unmatchedA.map(k => (Option(k), None)) ++
+          unmatchedB.map(k => (None, Option(k)))),
+        "left_semi" -> as.map(_._1).filter(matchedA).map(k => (Option(k), None)),
+        "left_anti" -> unmatchedA.map(k => (Option(k), None)))
+      assert(pairs.nonEmpty && unmatchedA.nonEmpty && unmatchedB.nonEmpty)
+      for ((jt, expected) <- want; aqe <- Seq("true", "false")) {
+        val got = withConf("spark.sql.adaptive.enabled", aqe) {
+          withConf("spark.graft.rangejoin.method", "binrange") {
+            withConf("spark.graft.rangejoin.buildSide", "right") {
+              withConf("spark.graft.rangejoin.minOverlap", ov.toString) {
+                withConf("spark.graft.rangejoin.maxGap", gap.toString) {
+                  val joinedDf = typedJoin(a, b, jt)
+                  val df = if (jt.startsWith("left_s") || jt == "left_anti")
+                    joinedDf.select(col("a_key")) else joinedDf.select(col("a_key"), col("b_key"))
+                  assert(df.queryExecution.optimizedPlan.toString.contains(BinRangeRewrite.BinAttr),
+                    s"$jt was not rewritten to bins:\n${df.queryExecution.optimizedPlan}")
+                  keyPairs(df)
+                }
+              }
             }
           }
         }
+        assert(got === expected.sorted, s"$jt minOverlap=$ov maxGap=$gap aqe=$aqe")
       }
-      assert(want.nonEmpty)
-      assert(got === want, s"minOverlap=$ov maxGap=$gap")
+    }
+  }
+
+  test("non-inner joins pinned to binrange plan stock Catalyst operators over Spark exchanges") {
+    import graft.functions.IntervalOverlaps
+    val a = withUnmatchable(randomIntervals(200, 81, "a_key"), "a_key")
+    val b = withUnmatchable(randomIntervals(40, 82, "b_key"), "b_key")
+    for (jt <- Seq("left_outer", "left_anti", "full_outer")) {
+      val plan = withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+        withConf("spark.sql.adaptive.enabled", "false") {
+          physical(a.join(b, a("contig") === b("contig") && IntervalOverlaps.of(a("pos_start"),
+            a("pos_end"), b("pos_start"), b("pos_end"), method = "binrange"), jt))
+        }
+      }
+      val text = plan.toString
+      val all = plan.collect { case p => p }
+      assert(!all.exists(_.isInstanceOf[IntervalForestJoinExec]), s"$jt:\n$text")
+      assert(!all.exists(_.nodeName.contains("RDD")), s"$jt plans an RDD scan:\n$text")
+      // Every operator is stock Spark: the only shuffles are its exchanges.
+      val foreign = all.filterNot(_.getClass.getName.startsWith("org.apache.spark.sql.execution"))
+      assert(foreign.isEmpty, s"$jt plans non-Spark nodes ${foreign.map(_.nodeName)}:\n$text")
+      assert(all.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.ShuffleExchangeExec]),
+        s"$jt:\n$text")
+      assert(all.exists(_.isInstanceOf[org.apache.spark.sql.execution.GenerateExec]), s"$jt:\n$text")
+      assert(text.contains("ExistenceJoin"), s"$jt verdicts must be an existence join:\n$text")
+    }
+  }
+
+  test("EXISTS subqueries pinned to binrange take the rewrite from the strategy") {
+    // RewritePredicateSubquery makes these semi/anti joins after the
+    // pre-CBO batch, so BinRangeLogicalRule never sees them: the
+    // strategy's own rewrite branch plans them.
+    withUnmatchable(randomIntervals(300, 83, "a_key"), "a_key").createOrReplaceTempView("exists_a")
+    randomIntervals(30, 84, "b_key").createOrReplaceTempView("exists_b")
+    for (neg <- Seq("", "NOT ")) {
+      val q = s"""SELECT a_key FROM exists_a WHERE ${neg}EXISTS (SELECT 1 FROM exists_b b
+                 |  WHERE exists_a.contig = b.contig AND exists_a.pos_end >= b.pos_start
+                 |    AND exists_a.pos_start <= b.pos_end)""".stripMargin
+      val stock = withConf("spark.graft.rangejoin.enabled", "false") {
+        collectAllSorted(spark.sql(q))
+      }
+      val (got, optimized, plan) = withConf("spark.graft.rangejoin.method", "binrange") {
+        val df = spark.sql(q)
+        (collectAllSorted(df), df.queryExecution.optimizedPlan.toString, physical(df).toString)
+      }
+      assert(!optimized.contains(BinRangeRewrite.BinAttr), s"${neg}EXISTS:\n$optimized")
+      assert(plan.contains("ExistenceJoin") && !plan.contains("IntervalForestJoin"),
+        s"${neg}EXISTS:\n$plan")
+      assert(stock.nonEmpty && got === stock, s"${neg}EXISTS")
     }
   }
 
