@@ -4,10 +4,10 @@ import graft.plans.BroadcastBudget
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeArrayData, UnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
-import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 import scala.collection.mutable
@@ -39,14 +39,18 @@ import scala.collection.mutable
   * two fixed phases. Phase 1 is ONE endpoint sweep that emits d_k — the
   * k-th smallest distinct valid distance — per distinct left
   * `(contig, pos_start, pos_end)` triple, without materializing any pair
-  * (see [[kthDistances]]). Phase 2 widens every left row by its own d_k
-  * and overlap-joins the right side through the engine's interval join
-  * (which picks broadcast-forest or the AQE-skew-splittable bin-range
-  * rewrite from stats); the residual `distance <= d_k` keeps exactly the k
-  * nearest distinct distances with all ties. At 100 TB nothing collects:
-  * phase 1 shuffles O(|L| + |R|) endpoint rows, phase 2's probe windows
-  * are tight by construction. The job count does not depend on the data
-  * — a sparse catalogue costs no extra passes.
+  * (see [[kthDistances]]). Its frame is sized from the sweep's own count
+  * of left endpoints. Phase 2 widens each triple by its d_k into a window
+  * and overlap-joins the windows to the right side through the engine's
+  * interval join, whose budget gate broadcasts the windows into the
+  * forest when that count fits (the right side streams past in place,
+  * unshuffled) and takes the AQE-skew-splittable bin-range rewrite when
+  * it does not; the residual `distance <= d_k` keeps exactly the k nearest
+  * distinct distances with all ties, and an equi-join on the triple hands
+  * each left row its pairs. At 100 TB nothing collects: phase 1 shuffles
+  * O(|L| + |R|) endpoint rows, phase 2's windows are tight by
+  * construction. The job count does not depend on the data — a sparse
+  * catalogue costs no extra passes.
   *
   * Dispatch: `method` parameter (preferred — no session state), or the
   * `spark.graft.nearestjoin.method` conf for the no-arg form: `auto`
@@ -214,7 +218,7 @@ object NearestJoinOps {
     StructField("contig", StringType, nullable = false),
     StructField("pos_start", IntegerType, nullable = false),
     StructField("pos_end", IntegerType, nullable = false),
-    StructField("_nd", IntegerType, nullable = false)))
+    StructField("_nds", ArrayType(IntegerType, containsNull = false), nullable = false)))
 
   // Endpoint tags, in sort order at equal positions: a left start sorts
   // before a right end (the left flank takes only ends strictly < ls), a
@@ -227,8 +231,10 @@ object NearestJoinOps {
 
   /** One partition's per-contig contribution to the carries: max right
     * end, the k largest distinct right ends (ascending), the k smallest
-    * distinct right starts (ascending). */
-  private case class Summary(contig: String, maxEnd: Long, ends: Seq[Int], starts: Seq[Int])
+    * distinct right starts (ascending); and its left endpoint count, which
+    * bounds the rows the sweep emits. */
+  private case class Summary(contig: String, maxEnd: Long, ends: Seq[Int], starts: Seq[Int],
+      lefts: Long)
 
   /** The last `k` distinct values of a monotone stream — the k nearest
     * flank coordinates a sweep has passed. Equal values arrive adjacent,
@@ -272,15 +278,19 @@ object NearestJoinOps {
     *     last k distinct start points passed (backward).
     * Only the endpoint kinds the flags need are emitted, and a disabled
     * class never emits a distance, so candidates are selected exactly as
-    * the phase-2 validity filter selects them.
+    * the phase-2 validity filter selects them. The pass emits one row per
+    * left endpoint that has a candidate, carrying that endpoint's (at most
+    * k + 1) distances as an array, so the summaries' left endpoint counts
+    * bound its rows: the sweep's frame carries that bound as its size
+    * statistic, and the d_k frame derived from it inherits it.
     *
     * State bounds: O(k) per sweep direction; what crosses partitions is a
     * per-contig [[Summary]] folded on the driver into O(partitions ×
     * contigs × k) carries. The folds merge k-SETS over ALL earlier (or
     * later) partitions: the nearest partition holding a contig may hold
     * fewer than k values, so its set alone would miss the remaining k
-    * nearest flanks further away. Each left emits at most 2k + 1 distances, so the
-    * final per-triple `collect_set` is bounded too. Per-partition memory
+    * nearest flanks further away. Each left emits at most 2k + 1 distances
+    * over two rows, so the final per-triple aggregate is bounded too. Per-partition memory
     * is O(partition rows): the backward pass needs random access, so the
     * sorted partition is buffered as primitive int arrays plus one
     * interned contig ref per row (~20 bytes/row). A hot contig plus low
@@ -318,13 +328,14 @@ object NearestJoinOps {
         val starts = mutable.ArrayBuffer.empty[Int]
         var cur: UTF8String = null
         var maxEnd = Long.MinValue
-        def flush(): Unit =
-          if (cur != null) out += Summary(cur.toString, maxEnd, ends.oldestFirst, starts.toList)
+        var lefts = 0L
+        def flush(): Unit = if (cur != null)
+          out += Summary(cur.toString, maxEnd, ends.oldestFirst, starts.toList, lefts)
         rows.foreach { row =>
           val c = row.getUTF8String(0)
           if (cur == null || !c.equals(cur)) {
             flush()
-            cur = c.copy(); maxEnd = Long.MinValue; ends.reset(Nil); starts.clear()
+            cur = c.copy(); maxEnd = Long.MinValue; ends.reset(Nil); starts.clear(); lefts = 0L
           }
           val p = row.getInt(1)
           row.getInt(2) match {
@@ -332,7 +343,7 @@ object NearestJoinOps {
               maxEnd = math.max(maxEnd, row.getInt(3).toLong)
               if (starts.length < k && (starts.isEmpty || starts.last != p)) starts += p
             case REnd => ends.add(p)
-            case _ =>
+            case _ => lefts += 1
           }
         }
         flush()
@@ -362,7 +373,8 @@ object NearestJoinOps {
           }
         }
         carryFwd.zip(carryBwd)
-      })(
+      },
+      rowBound = summaries => Some(summaries.iterator.flatten.map(_.lefts).sum))(
       pass = { case ((cFwd, cBwd), rows) =>
         val ctg = mutable.ArrayBuffer.empty[UTF8String]
         val posB = new mutable.ArrayBuilder.ofInt
@@ -376,20 +388,20 @@ object NearestJoinOps {
         }
         val pos = posB.result(); val tag = tagB.result(); val pay = payB.result()
         val n = ctg.length
-        // (row index, distance) per emitted candidate. Distance math in
-        // Long (coordinates near Int extremes must not wrap, r8 ADVICE); a
-        // true distance beyond Int.MaxValue cannot be represented in the
-        // output schema and fails loudly.
-        val outIdx = new mutable.ArrayBuilder.ofInt
-        val outD = new mutable.ArrayBuilder.ofInt
-        def emit(i: Int, d: Long): Unit = {
+        // Distance math in Long (coordinates near Int extremes must not
+        // wrap, r8 ADVICE); a true distance beyond Int.MaxValue cannot be
+        // represented in the output schema and fails loudly.
+        def dist(i: Int, d: Long): Int = {
           if (d > Int.MaxValue) sys.error(
             s"nearest distance $d exceeds Int.MaxValue at (${ctg(i)}, ${pos(i)})")
-          outIdx += i; outD += d.toInt
+          d.toInt
         }
         val flank = new LastK(k)
-        // Backward: right flank of each left end. Carry lookups happen once
-        // per contig run (`eq` compare — rows in a run share the ref).
+        // Backward: right flank of each left end, as (row index, distance)
+        // in descending row order. Carry lookups happen once per contig run
+        // (`eq` compare — rows in a run share the ref).
+        val flankIdx = new mutable.ArrayBuilder.ofInt
+        val flankD = new mutable.ArrayBuilder.ofInt
         var run: UTF8String = null
         for (i <- n - 1 to 0 by -1) {
           if (!(ctg(i) eq run)) {
@@ -398,11 +410,21 @@ object NearestJoinOps {
           }
           tag(i) match {
             case RStart => flank.add(pos(i))
-            case LEnd if incDown => flank.foreach(rs => emit(i, rs.toLong - pos(i)))
+            case LEnd if incDown =>
+              flank.foreach { rs => flankIdx += i; flankD += dist(i, rs.toLong - pos(i)) }
             case _ =>
           }
         }
+        val fi = flankIdx.result().reverse; val fd = flankD.result().reverse
         // Forward: overlap of each left end, left flank of each left start.
+        // Each left endpoint with a candidate becomes one output row: its
+        // index and the end of its slice of `outD` (at most k + 1 values,
+        // distinct within the endpoint).
+        val outIdx = new mutable.ArrayBuilder.ofInt
+        val outEnd = new mutable.ArrayBuilder.ofInt
+        val outD = new mutable.ArrayBuilder.ofInt
+        var nd = 0
+        var f = 0
         run = null
         var maxEnd = Long.MinValue
         for (i <- 0 until n) {
@@ -412,42 +434,51 @@ object NearestJoinOps {
             maxEnd = m
             flank.reset(ends)
           }
+          val before = nd
           tag(i) match {
             case RStart => maxEnd = math.max(maxEnd, pay(i).toLong)
             case REnd => flank.add(pos(i))
-            case LStart => flank.foreach(re => emit(i, pos(i).toLong - re))
-            case LEnd => if (incOverlaps && maxEnd >= pay(i)) emit(i, 0L)
+            case LStart => flank.foreach { re => outD += dist(i, pos(i).toLong - re); nd += 1 }
+            case LEnd =>
+              if (incOverlaps && maxEnd >= pay(i)) { outD += 0; nd += 1 }
+              while (f < fi.length && fi(f) == i) { outD += fd(f); nd += 1; f += 1 }
           }
+          if (nd > before) { outIdx += i; outEnd += nd }
         }
-        val oi = outIdx.result(); val od = outD.result()
+        val oi = outIdx.result(); val oe = outEnd.result(); val od = outD.result()
         val outRow = new GenericInternalRow(4)
         val project = UnsafeProjection.create(distSchema)
         Iterator.range(0, oi.length).map { j =>
           val i = oi(j)
           val (ls, le) = if (tag(i) == LStart) (pos(i), pay(i)) else (pay(i), pos(i))
           outRow.update(0, ctg(i))
-          outRow.setInt(1, ls); outRow.setInt(2, le); outRow.setInt(3, od(j))
+          outRow.setInt(1, ls); outRow.setInt(2, le)
+          outRow.update(3, UnsafeArrayData.fromPrimitiveArray(
+            java.util.Arrays.copyOfRange(od, if (j == 0) 0 else oe(j - 1), oe(j))))
           project(outRow): InternalRow
         }
       })
-    // At most 2k + 1 distances per triple, so the distinct set is bounded
-    // and its sorted [min(k, n)] element is d_k.
+    // At most two rows and 2k + 1 distances per triple, so the distinct
+    // set is bounded and its sorted [min(k, n)] element is d_k.
     dists.groupBy(col("contig"), col("pos_start"), col("pos_end"))
-      .agg(sort_array(collect_set(col("_nd"))).as("_ds"))
+      .agg(sort_array(array_distinct(flatten(collect_list(col("_nds"))))).as("_ds"))
       .select(col("contig"), col("pos_start"), col("pos_end"),
         element_at(col("_ds"), least(lit(k), size(col("_ds")))).as("_dk"))
   }
 
   /** K-nearest through the MERGE regime (both sides large, r10 VERDICT
-    * #5): no broadcast, no driver collect, the full `-io/-id/-iu/-D ref`
+    * #5): no driver collect of either side, the full `-io/-id/-iu/-D ref`
     * surface. Phase 1 ([[kthDistances]]) finds d_k per distinct left
-    * triple in one endpoint sweep; phase 2 re-joins every left row
-    * (duplicates included — multiset semantics) widened by its own d_k
-    * through the engine's interval join, keeps the valid candidates with
-    * `distance <= d_k` — exactly the k smallest distinct distances with
-    * all ties — and signs the output distance when asked. A fixed job
-    * count (no data-dependent rounds), O(k) sweep state per row, and no
-    * persisted block outlives the call. */
+    * triple in one endpoint sweep; phase 2 joins each triple's window,
+    * widened by its d_k, to the right side through the engine's interval
+    * join (the windows are the broadcast side when their sweep-counted
+    * size fits the budget, else the bin-range rewrite), keeps the valid
+    * candidates with `distance <= d_k` — exactly the k smallest distinct
+    * distances with all ties — signs the output distance when asked, and
+    * re-attaches the pairs to every left row of the triple (duplicates
+    * included — multiset semantics) by an equi-join. A fixed job count (no
+    * data-dependent rounds), O(k) sweep state per row, and no persisted
+    * block outlives the call. */
   private[graft] def mergeNearestKJoin(left: DataFrame, right: DataFrame, k: Int,
       ignoreOverlaps: Boolean = false, direction: String = "both",
       signed: Boolean = false): DataFrame = {
@@ -471,30 +502,40 @@ object NearestJoinOps {
       dirOk && ovOk
     }
 
-    // The widening runs in Long and clamps back to the Int domain
-    // (`r.pos_start <= Int.MaxValue` always, so a clamped bound keeps the
-    // predicate equivalent while staying IntegerType for the
-    // interval-join extractor).
-    val l = left.join(dk, Seq("contig", "pos_start", "pos_end"))
+    // The windows, not the left rows, meet the right side: one narrow row
+    // per distinct triple. The widening runs in Long and clamps back to
+    // the Int domain (`r.pos_start <= Int.MaxValue` always, so a clamped
+    // bound keeps the predicate equivalent while staying IntegerType for
+    // the interval-join extractor).
+    val w = dk
       .withColumn("_xs", greatest(col("pos_start").cast("long") - col("_dk"),
         lit(Int.MinValue.toLong)).cast("int"))
       .withColumn("_xe", least(col("pos_end").cast("long") + col("_dk"),
         lit(Int.MaxValue.toLong)).cast("int"))
-      .alias("l")
+      .alias("w")
     val r = right.alias("r")
-    val sgn = side(col("l.pos_start"), col("l.pos_end"),
+    val sgn = side(col("w.pos_start"), col("w.pos_end"),
       col("r.pos_start"), col("r.pos_end"))
-    l.join(r, col("l.contig") === col("r.contig") &&
+    val pairs = w.join(r, col("w.contig") === col("r.contig") &&
         graft.functions.IntervalOverlaps.of(
-          col("l._xs"), col("l._xe"), col("r.pos_start"), col("r.pos_end")))
-      .filter(validCand(col("l.pos_start"), col("l.pos_end"),
+          col("w._xs"), col("w._xe"), col("r.pos_start"), col("r.pos_end")))
+      .filter(validCand(col("w.pos_start"), col("w.pos_end"),
         col("r.pos_start"), col("r.pos_end")))
-      .withColumn("_dist", greatest(col("r.pos_start").cast("long") - col("l.pos_end"),
-        col("l.pos_start").cast("long") - col("r.pos_end"), lit(0L)))
-      .filter(col("_dist") <= col("l._dk").cast("long"))
-      .select(left.columns.map(c => col("l." + c)) ++
-        right.columns.map(c => col("r." + c)) :+
+      .withColumn("_dist", greatest(col("r.pos_start").cast("long") - col("w.pos_end"),
+        col("w.pos_start").cast("long") - col("r.pos_end"), lit(0L)))
+      .filter(col("_dist") <= col("w._dk").cast("long"))
+      .select(Seq(col("w.contig").as("_lc"), col("w.pos_start").as("_ls"),
+          col("w.pos_end").as("_le")) ++
+        right.columns.zipWithIndex.map { case (c, i) => col("r." + c).as(s"_r$i") } :+
         (if (signed) when(sgn < 0, -col("_dist")).otherwise(col("_dist"))
          else col("_dist")).cast("int").as("distance"): _*)
+      .alias("p")
+    // Every left row (duplicates included — multiset semantics) takes the
+    // pairs of its triple.
+    left.alias("l").join(pairs, col("l.contig") === col("p._lc") &&
+        col("l.pos_start") === col("p._ls") && col("l.pos_end") === col("p._le"))
+      .select(left.columns.map(c => col("l." + c)) ++
+        right.columns.indices.map(i => col(s"p._r$i").as(right.columns(i))) :+
+        col("p.distance"): _*)
   }
 }

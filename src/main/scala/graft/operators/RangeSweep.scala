@@ -41,13 +41,20 @@ import scala.reflect.ClassTag
   * carries are as many as the summaries. The input must be a frame the
   * caller derived for the sweep: an already-cached plan would be released
   * with it.
+  *
+  * The returned frame carries statistics derived from the summaries when
+  * `rowBound` gives a bound on the rows `pass` emits in all: its size is
+  * that many rows of `schema`'s default row size, so a join above it is
+  * planned from what the sweep counted rather than from
+  * `spark.sql.defaultSizeInBytes`, the size of a frame without them.
   */
 private[graft] object RangeSweep {
 
   private val GuardFloorBytes = 1L << 20
 
   def apply[S: ClassTag, C: ClassTag](input: DataFrame, key: Seq[Column], nParts: Int,
-      schema: StructType)(summarize: Iterator[InternalRow] => S)(fold: Array[S] => Array[C])(
+      schema: StructType)(summarize: Iterator[InternalRow] => S)(fold: Array[S] => Array[C],
+      rowBound: Array[S] => Option[Long] = (_: Array[S]) => None)(
       pass: (C, Iterator[InternalRow]) => Iterator[InternalRow]): DataFrame = {
     val spark = input.sparkSession
     val persisted = input.persist(StorageLevel.MEMORY_AND_DISK)
@@ -70,7 +77,10 @@ private[graft] object RangeSweep {
       else sorted.zipPartitions(spark.sparkContext.parallelize(carries.toSeq, carries.length)) {
         (rows, carry) => pass(carry.next(), rows)
       }
-    ColumnBridge.internalFrame(spark, out, schema)
+    rowBound(summaries) match {
+      case Some(n) => ColumnBridge.internalFrame(spark, out, schema, n)
+      case None => ColumnBridge.internalFrame(spark, out, schema)
+    }
   }
 
   /** The fold coverage and merge share. Each summary lists one `(contig,

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{First, Max}
 import org.apache.spark.sql.catalyst.plans.{ExistenceJoin, FullOuter, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, Join, JoinHint, LogicalPlan, Project, Union}
-import org.apache.spark.sql.types.{ArrayType, BooleanType, LongType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, LongType, StringType}
 
 /** Bin-range interval join as a pure Catalyst rewrite — the shape every
   * join type plans as at shuffle scale (build side over the broadcast
@@ -225,16 +225,25 @@ object BinRangeRewrite {
     * `cond`, one aggregate on the row id — `max(exists)` plus each column
     * once — and a filter on the verdict. Each carried column keeps its
     * attribute's exprId, so the rewrite's output is the original join's.
+    * String and binary columns are grouping keys beside the row id, which
+    * fixes their values, and neither type is float-normalized as a key:
+    * through `first` their variable-width buffer would make Spark plan a
+    * sort aggregate. Every other column rides through `first`.
     * The aggregate is built directly: a `Deduplicate` would need
     * `ReplaceDeduplicateWithAggregate`, which runs before this rewrite. */
   private def verdictRows(side: Replicas, cols: Seq[Attribute], other: Replicas,
       cond: Expression, matched: Boolean): LogicalPlan = {
     val exists = AttributeReference(s"${BinAttr}_exists", BooleanType, nullable = false)()
     val probed = Join(side.plan, other.plan, ExistenceJoin(exists), Some(cond), JoinHint.NONE)
-    val carried = cols.map(a => Alias(First(a, ignoreNulls = false).toAggregateExpression(),
-      a.name)(exprId = a.exprId, qualifier = a.qualifier))
+    def keyed(a: Attribute): Boolean = a.dataType match {
+      case _: StringType | BinaryType => true
+      case _ => false
+    }
+    val carried = cols.map(a => if (keyed(a)) a: NamedExpression
+      else Alias(First(a, ignoreNulls = false).toAggregateExpression(),
+        a.name)(exprId = a.exprId, qualifier = a.qualifier))
     val flag = Alias(Max(exists).toAggregateExpression(), s"${BinAttr}_matched")()
     Filter(if (matched) flag.toAttribute else Not(flag.toAttribute),
-      Aggregate(side.rowId.toSeq, carried :+ flag, probed))
+      Aggregate(side.rowId.toSeq ++ cols.filter(keyed), carried :+ flag, probed))
   }
 }

@@ -32,6 +32,24 @@ object ColumnBridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .internalCreateDataFrame(rdd, schema)
 
+  /** As [[internalFrame]], for an RDD known to hold at most `rowBound`
+    * rows: the relation's statistics say `rowBound` rows of the schema's
+    * default row size instead of `spark.sql.defaultSizeInBytes`, so the
+    * planner can size the joins above it. */
+  def internalFrame(
+      spark: org.apache.spark.sql.SparkSession,
+      rdd: org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
+      schema: org.apache.spark.sql.types.StructType,
+      rowBound: Long): org.apache.spark.sql.DataFrame = {
+    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val attrs = org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema)
+    val stats = org.apache.spark.sql.catalyst.plans.logical.Statistics(sizeInBytes =
+      org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
+        .getSizePerRow(attrs) * rowBound)
+    org.apache.spark.sql.classic.Dataset.ofRows(session,
+      org.apache.spark.sql.execution.LogicalRDD(attrs, rdd)(session, Some(stats)))
+  }
+
   /** The rows of `df`, planned without adaptive execution. An explicit
     * exchange then runs its map stage inside the first job that reads its
     * output, not as a job of its own at planning time, and a cached

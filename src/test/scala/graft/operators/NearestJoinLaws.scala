@@ -110,20 +110,36 @@ object NearestJoinLaws extends Properties("NearestJoin") {
         model(ls, rs, k, io, dir, signed)
     }
 
+  private def withBudget[T](bytes: Option[String])(body: => T): T = {
+    val key = "spark.graft.rangejoin.maxBroadcastBytes"
+    val old = spark.conf.getOption(key)
+    bytes.foreach(spark.conf.set(key, _))
+    try body finally old match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   // The merge regime called directly, not through the size gate (which
   // sends these small catalogues to the broadcast probe): every flag
   // combination at one range partition (no carries) and at 24 (a few
-  // endpoints per partition — the carry folds do the work). No
-  // shrinking: one sample is 24 merge calls, and shrinking would take k
+  // endpoints per partition — the carry folds do the work), under the
+  // default budget (phase 2 broadcasts the d_k windows into the forest)
+  // and a one-byte budget (phase 2 takes the bin-range rewrite). No
+  // shrinking: one sample is 48 merge calls, and shrinking would take k
   // outside 1..4.
   property("merge regime == brute-force model (k 1..4, all flags, 1 and 24 partitions)") =
     forAllNoShrink(genIvs(0L), genIvs(1000L), Gen.chooseNum(1, 4)) { (ls, rs, k) =>
       val (l, r) = frames(ls, rs)
-      Seq(1, 24).forall { parts =>
-        withPartitions(parts) {
-          flagCombos.forall { case (io, dir, signed) =>
-            pairs(NearestJoinOps.mergeNearestKJoin(l, r, k, io, dir, signed)) ==
-              model(ls, rs, k, io, dir, signed)
+      Seq(None, Some("1")).forall { budget =>
+        withBudget(budget) {
+          Seq(1, 24).forall { parts =>
+            withPartitions(parts) {
+              flagCombos.forall { case (io, dir, signed) =>
+                pairs(NearestJoinOps.mergeNearestKJoin(l, r, k, io, dir, signed)) ==
+                  model(ls, rs, k, io, dir, signed)
+              }
+            }
           }
         }
       }

@@ -360,6 +360,7 @@ class IntervalJoinSpec extends SparkSpec {
 
   test("non-inner joins pinned to binrange plan stock Catalyst operators over Spark exchanges") {
     import graft.functions.IntervalOverlaps
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
     val a = withUnmatchable(randomIntervals(200, 81, "a_key"), "a_key")
     val b = withUnmatchable(randomIntervals(40, 82, "b_key"), "b_key")
     for (jt <- Seq("left_outer", "left_anti", "full_outer")) {
@@ -380,6 +381,10 @@ class IntervalJoinSpec extends SparkSpec {
         s"$jt:\n$text")
       assert(all.exists(_.isInstanceOf[org.apache.spark.sql.execution.GenerateExec]), s"$jt:\n$text")
       assert(text.contains("ExistenceJoin"), s"$jt verdicts must be an existence join:\n$text")
+      // The output carries `contig`: a string column carried through
+      // first() would make the verdict aggregate a SortAggregate.
+      assert(all.exists(_.isInstanceOf[HashAggregateExec]) &&
+        !all.exists(_.isInstanceOf[SortAggregateExec]), s"$jt:\n$text")
     }
   }
 
@@ -793,6 +798,47 @@ class IntervalJoinSpec extends SparkSpec {
     assert(denseRows > 0 && sparseRows > 0)
     assert(sparseJobs === denseJobs,
       s"sparse catalogue ran $sparseJobs jobs vs $denseJobs on the dense one")
+  }
+
+  test("merge k-nearest phase 2 builds the forest on the d_k windows; the right side streams") {
+    // Both sides are RDD-built, so neither has a usable size estimate; the
+    // windows carry the sweep's own count. Phase 2 must broadcast them and
+    // stream the right side into the forest without an exchange, and at a
+    // budget of one byte take the bin-range rewrite with the same rows.
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def rddFrame(df: DataFrame): DataFrame =
+      spark.createDataFrame(df.rdd, df.schema)
+    val a = rddFrame(randomIntervals(300, 87, "a_key"))
+    val b = rddFrame(randomIntervals(400, 88, "b_key"))
+    def rows(df: DataFrame) = df.select(col("a_key"), col("b_key"), col("distance"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+    val expected = rows(graft.operators.NearestJoinOps.nearestKJoin(a, b, 3, "broadcast"))
+    assert(expected.nonEmpty)
+    def forests(p: SparkPlan): Seq[IntervalForestJoinExec] =
+      p.collect { case f: IntervalForestJoinExec => f }
+    def has(p: SparkPlan, name: String): Boolean = p.output.exists(_.name == name)
+    withConf("spark.sql.adaptive.enabled", "false") {
+      val near = graft.operators.NearestJoinOps.nearestKJoin(a, b, 3, "merge")
+      val plan = physical(near)
+      val found = forests(plan)
+      assert(found.length === 1, s"phase 2 must plan one forest join:\n$plan")
+      val forest = found.head
+      val (build, stream) =
+        if (forest.buildLeft) (forest.left, forest.right) else (forest.right, forest.left)
+      assert(has(build, "_dk"), s"the forest must build on the d_k windows:\n$plan")
+      assert(stream.collect { case s if s.children.isEmpty && has(s, "b_key") => s }.nonEmpty &&
+        stream.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"the right side must reach the forest without an exchange:\n$plan")
+      assert(rows(near) === expected)
+      withConf("spark.graft.rangejoin.maxBroadcastBytes", "1") {
+        val over = graft.operators.NearestJoinOps.nearestKJoin(a, b, 3, "merge")
+        val overPlan = physical(over)
+        assert(forests(overPlan).isEmpty &&
+          overPlan.collect { case g: org.apache.spark.sql.execution.GenerateExec => g }.nonEmpty,
+          s"over budget the windows must take the bin-range rewrite:\n$overPlan")
+        assert(rows(over) === expected)
+      }
+    }
   }
 
   test("merge regime carries the -io/-id/-iu/-D variants (equals broadcast probe)") {
