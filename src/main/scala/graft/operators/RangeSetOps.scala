@@ -32,7 +32,9 @@ import scala.collection.mutable
   *     splittable, no per-contig hot key;
   *  2. a first pass ([[RangeSweep]]) collects, per `(partition, contig)`,
   *     the max `pos_end`, the row count and the last run of an unseeded
-  *     walk — O(partitions × contigs-per-partition) driver rows;
+  *     walk — O(partitions × contigs-per-partition) driver rows — and per
+  *     partition the unseeded walk's run count, whose sum bounds the runs
+  *     and so sizes the returned frame for the planner;
   *  3. the driver folds those into the run, and its running max end, that
   *     each partition's first contig enters with (one giant interval can
   *     span *entire* later partitions and must bridge their interior
@@ -46,21 +48,19 @@ import scala.collection.mutable
 object RangeSetOps {
 
   /** Should this (run-set-shaped) build side broadcast? Input stats when
-    * they prove it fits; otherwise one cheap count × a schema-derived
-    * row-width estimate. Stats are large OR unknown exactly when the
-    * frame is a merge output (built over the sweep's RDD, so Catalyst
-    * defaults to "enormous") — treating that as non-broadcast would demote
-    * the COMMON case (a compressed run set) to the shuffle path. Merge has
-    * already run its shuffle and summary job by then, so the count re-runs
-    * only the sweep's second pass, from shuffle files (or reads parquet
-    * metadata for a raw assumeDisjoint side), never the input lineage.
-    * When the answer is no (an adversarial side with tens of millions of
-    * disjoint runs), the hint is dropped and the interval-join strategy
-    * takes its bin-range shuffle path for the same join shape — nothing
-    * is force-collected to the driver (r5 ADVICE). */
-  private def shouldBroadcast(runs: DataFrame, sizeProxy: DataFrame): Boolean = {
-    if (BroadcastBudget.fits(sizeProxy)) true
-    else {
+    * they prove it fits, then the run set's own: a merge output carries
+    * the sweep's bound on its runs ([[merge]]), so deciding costs no job.
+    * A frame with no bound that fits — liftover's persisted chain, a raw
+    * assumeDisjoint side — pays one cheap count × a schema-derived
+    * row-width estimate, reading the persisted blocks or parquet
+    * metadata, never the input lineage. Treating an unknown size as
+    * non-broadcast would demote the COMMON case (a compressed run set) to
+    * the shuffle path. When the answer is no (an adversarial side with
+    * tens of millions of disjoint runs), the hint is dropped and the
+    * interval-join strategy takes its bin-range shuffle path for the same
+    * join shape — nothing is force-collected to the driver (r5 ADVICE). */
+  private def shouldBroadcast(runs: DataFrame, sizeProxy: DataFrame): Boolean =
+    BroadcastBudget.fits(sizeProxy) || BroadcastBudget.fits(runs) || {
       // Width from the ACTUAL schema (liftover's chain side carries
       // dest_contig/offset/strand on top of the 3 run columns — a
       // fixed 48 B under-estimated it ~2x): strings at a conservative
@@ -71,7 +71,6 @@ object RangeSetOps {
       }).sum
       BroadcastBudget.fits(runs.count() * rowBytes, runs.sparkSession.sessionState.conf)
     }
-  }
 
   private def gatedBroadcast(runs: DataFrame, sizeProxy: DataFrame): DataFrame =
     if (shouldBroadcast(runs, sizeProxy)) broadcast(runs) else runs
@@ -104,24 +103,26 @@ object RangeSetOps {
       intervals.select(col("contig"), col("pos_start").cast("int"), col("pos_end").cast("int")),
       Seq(col("contig"), col("pos_start"), col("pos_end")), nParts, runSchema)(
       // Per (partition, contig): the last run of the unseeded walk, and
-      // the row count.
+      // the row count; per partition, the runs of the unseeded walk.
       summarize = rows => {
         val out = mutable.ArrayBuffer.empty[(String, (Run, Long))]
         var n = 0L
+        var runs = 0L
         def tail(contig: UTF8String, run: Run): Unit = {
           out += contig.toString -> (run, n + run.n); n = 0L
         }
         walkRuns(rows, None, maxGap) { (contig, run, contigEnd) =>
+          runs += 1
           if (contigEnd) tail(contig, run) else n += run.n
-        }.foreach { case (contig, run) => tail(contig, run) }
-        out.toSeq
+        }.foreach { case (contig, run) => runs += 1; tail(contig, run) }
+        (out.toSeq, runs)
       })(
       // Where a seeded walk first breaks, the row starts past the seed,
       // so from there on it walks exactly like the unseeded one. Hence
       // the run a contig leaves a partition with is the unseeded last
       // run when that run starts past the incoming max end, else the
       // incoming run extended by every row of the partition.
-      fold = parts => RangeSweep.contigCarries(parts) { (in: Option[Run], t: (Run, Long)) =>
+      fold = parts => RangeSweep.contigCarries(parts.map(_._1)) { (in: Option[Run], t) =>
         val (last, n) = t
         in match {
           case Some(r) if last.start.toLong <= r.maxEnd.toLong + 1 + maxGap =>
@@ -129,7 +130,15 @@ object RangeSetOps {
           case Some(r) => last.copy(maxEnd = math.max(r.maxEnd, last.maxEnd))
           case None => last
         }
-      })(
+      },
+      // A bound on the runs the seeded passes emit. The runs the unseeded
+      // walk CLOSES in a partition are none: a run carried in from an
+      // earlier partition can close inside this one too. But the seeded
+      // walk's running max end is never below the unseeded one's, so it
+      // breaks only where the unseeded walk breaks: a partition emits at
+      // most the runs its unseeded walk forms, the carried run merging
+      // into the first of them.
+      rowBound = parts => Some(parts.map(_._2).sum))(
       // Each run is emitted once, by the partition where it closes.
       pass = { case ((seed, continues), rows) =>
         val out = mutable.ArrayBuffer.empty[InternalRow]

@@ -4,18 +4,16 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference, AttributeSet, BindReferences, Cast, Coalesce, Divide, EvalMode, Expression, GenericInternalRow, If, IsNull, JoinedRow, Literal, Multiply, NamedExpression, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Complete, Count, Sum}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, AggregateFunction, Average, Complete, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, LogicalPlan}
 import org.apache.spark.sql.catalyst.plans.physical.{ClusteredDistribution, Distribution}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan}
 import org.apache.spark.sql.execution.metric.SQLMetrics
-import org.apache.spark.sql.types.LongType
+import org.apache.spark.sql.types.{ByteType, DoubleType, IntegerType, LongType, ShortType}
 
 import scala.collection.mutable
-
-import CountRankIndex.{rankLe, rankLt}
 
 /** Count-only aggregate pushdown into the interval join.
   *
@@ -66,14 +64,18 @@ import CountRankIndex.{rankLe, rankLt}
   * indexes ([[IntervalBinCountJoinExec]]) with first-intersection-bin
   * partial counts the surviving aggregate merges.
   *
-  * The exec never enumerates pairs: `[qs, qe]` overlaps build interval
-  * `i` iff `bs_i <= qe && be_i >= qs`, and `be < qs` implies `bs <= qe`,
-  * so `#overlaps = #(starts <= qe) − #(ends < qs)` — two binary searches
-  * per stream row. Grouping by the stream side emits the difference
-  * directly (sums: the same difference over prefix sums of build
-  * values); grouping by the build side folds per-row ranks into
-  * per-ordinal counts via histograms + suffix sums per partition (sums:
+  * Neither exec enumerates pairs. Both answer through the one count
+  * core, [[CountRankIndex]]: `[qs, qe]` overlaps indexed interval `i` iff
+  * `bs_i <= qe && be_i >= qs`, and `be < qs` implies `bs <= qe`, so
+  * `#overlaps = #(starts <= qe) − #(ends < qs)` — two binary searches per
+  * probing row, and cross-side sums are the same differences over prefix
+  * sums of the indexed values. The bin-range exec probes each (key, bin)
+  * index with its first-intersection-bin rule; the broadcast exec's
+  * stream-grouped direction is that probe's one-bin case, and its
+  * build-grouped direction folds per-row ranks into per-build-row counts
+  * via histograms + suffix sums over the index's ordinals (sums:
   * value-weighted histograms), O(|build| * (1 + nSums)) longs per task.
+  * [[graft.streaming.StreamingOps.countStream]] probes the same index.
   *
   * At 100 TB: the unbounded side still never shuffles; what this removes
   * is the per-pair row assembly and the pair stream through the partial
@@ -90,10 +92,10 @@ case class IntervalCountJoinNode(left: LogicalPlan, right: LogicalPlan,
       * the JoinHint is still attached. */
     enforceBudget: Boolean,
     cntAttr: AttributeReference,
-    /** Cross-side SUM partials: long-typed, non-nullable expressions on
-      * the NON-counted side, each emitted as a per-row partial sum over
-      * that row's pairs (weighted rank arithmetic — see the exec). The
-      * rewrite turns `SUM(e)` into `SUM(partial)`. */
+    /** Cross-side partials: long-typed expressions on the NON-counted
+      * side, each emitted as a per-row partial sum over that row's pairs
+      * (weighted rank arithmetic — see [[CountRankIndex]]). The rewrite
+      * turns `SUM(e)` into `SUM(partial)`. */
     crossSums: Seq[(Expression, AttributeReference)] = Nil,
     /** Shuffle regime: when the build side exceeds the broadcast budget
       * (or the method pins binrange), both children are
@@ -139,102 +141,55 @@ case class IntervalCountJoinNode(left: LogicalPlan, right: LogicalPlan,
 
 case class IntervalCountPushdownRule(session: SparkSession)
     extends Rule[LogicalPlan] {
+  import IntervalCountPushdownRule._
 
   private def conf(key: String, default: String): String =
     session.conf.get(s"spark.graft.rangejoin.$key", default)
 
-  /** An unfiltered, non-distinct COUNT over a non-null constant — the
-    * shapes that count PAIRS (`COUNT(*)` parses to `COUNT(1)`). */
-  private def isPairCount(ae: AggregateExpression): Boolean = ae match {
-    case AggregateExpression(Count(Seq(Literal(v, _))), Complete, false, None, _) =>
-      v != null
+  private def integral(e: Expression): Boolean = e.dataType match {
+    case LongType | IntegerType | ShortType | ByteType => true
     case _ => false
   }
 
-  private def integral(e: Expression): Boolean =
-    e.dataType == org.apache.spark.sql.types.LongType ||
-      e.dataType == org.apache.spark.sql.types.IntegerType ||
-      e.dataType == org.apache.spark.sql.types.ShortType ||
-      e.dataType == org.apache.spark.sql.types.ByteType
-
-  /** An unfiltered, non-distinct integral SUM whose argument lives
-    * entirely on `side` (the side whose rows the count node emits): each
-    * emitted `(row, pair_count)` contributes `e * pair_count`, exactly the
-    * repeated addition the pair stream would have produced — including
-    * Long wrap-around (multiplication and repeated addition agree mod
-    * 2^64) and null handling (null e is ignored by SUM either way).
-    * Floating/decimal sums are NOT taken: fp multiplication rounds
-    * differently from repeated addition. */
-  private def sumOnSide(ae: AggregateExpression, side: LogicalPlan): Option[Expression] =
-    ae match {
-      case AggregateExpression(Sum(e, _), Complete, false, None, _)
-          if integral(e) && e.deterministic && e.references.subsetOf(side.outputSet) =>
-        Some(e)
-      case _ => None
-    }
-
-  /** An integral SUM whose argument lives on the OTHER (non-counted)
-    * side: answered by weighted rank arithmetic in the exec, emitted as a
-    * per-row partial (NULL when no non-null value contributed — the exec
-    * tracks per-sum non-null counts so SUM's all-null → NULL semantics
-    * survive the rewrite). */
-  private def sumOnOtherSide(ae: AggregateExpression, other: LogicalPlan): Option[Expression] =
-    ae match {
-      case AggregateExpression(Sum(e, _), Complete, false, None, _)
-          if integral(e) && e.deterministic &&
-            e.references.nonEmpty && e.references.subsetOf(other.outputSet) =>
-        Some(e)
-      case _ => None
-    }
-
-  /** An unfiltered, non-distinct COUNT over a single column expression on
-    * `side` — COUNT(e) counts pairs with non-null e (a non-nullable e
-    * canonicalizes to COUNT(1) upstream of this rule, so reaching here
-    * means null awareness is genuinely required). Any data type: only a
-    * null test is done. Counted side: `SUM(cnt where e non-null)`; other
-    * side: the 0/1 weight rides the cross-sum rank machinery. */
-  private def countColOn(ae: AggregateExpression, side: LogicalPlan): Option[Expression] =
-    ae match {
-      case AggregateExpression(Count(Seq(e)), Complete, false, None, _)
-          if !e.isInstanceOf[Literal] && e.deterministic &&
-            e.references.nonEmpty && e.references.subsetOf(side.outputSet) =>
-        Some(e)
-      case _ => None
-    }
-
-  /** An unfiltered, non-distinct AVG over an integral expression on one
-    * side: rewritten to pushed-SUM / pushed-non-null-COUNT divided in
-    * double (LEGACY division — NULL on zero count, Average's own
-    * semantics). The exact long sums make this agree bit-for-bit with the
-    * general path wherever the general path is itself deterministic
-    * (Average accumulates integral inputs in double, exact until the
-    * running sum passes 2^53 — beyond that the general path is already
-    * partition-order-dependent). */
-  private def avgOn(ae: AggregateExpression, side: LogicalPlan): Option[Expression] =
-    ae match {
-      case AggregateExpression(Average(e, _), Complete, false, None, _)
-          if integral(e) && e.deterministic &&
-            e.references.nonEmpty && e.references.subsetOf(side.outputSet) =>
-        Some(e)
-      case _ => None
-    }
-
-  /** An unfiltered, non-distinct MIN/MAX over the counted side: the
-    * node's emitted rows are the matched rows, and min/max are
-    * multiplicity-blind, so the aggregate passes through UNCHANGED —
-    * no rewrite, no new column. (Any data type: no arithmetic done.) */
-  private def isMinMaxOnSide(ae: AggregateExpression, side: LogicalPlan): Boolean =
-    ae match {
-      case AggregateExpression(
-          org.apache.spark.sql.catalyst.expressions.aggregate.Min(e),
-          Complete, false, None, _) =>
-        e.deterministic && e.references.nonEmpty && e.references.subsetOf(side.outputSet)
-      case AggregateExpression(
-          org.apache.spark.sql.catalyst.expressions.aggregate.Max(e),
-          Complete, false, None, _) =>
-        e.deterministic && e.references.nonEmpty && e.references.subsetOf(side.outputSet)
-      case _ => false
-    }
+  /** The one classification of an aggregate over the join, or None when
+    * the pushdown cannot answer it. Only unfiltered, non-distinct
+    * aggregates of deterministic arguments qualify:
+    *  - `COUNT` of a non-null constant (`COUNT(*)` parses to `COUNT(1)`)
+    *    counts pairs;
+    *  - `MIN(e)`/`MAX(e)` over the counted side pass through unchanged:
+    *    the node's emitted rows are the matched rows, and min/max are
+    *    multiplicity-blind (any data type: no arithmetic is done);
+    *  - integral `SUM(e)` and `AVG(e)` and null-aware `COUNT(e)` (any
+    *    type: only a null test is done) over either side. A non-nullable
+    *    `e` canonicalizes `COUNT(e)` to `COUNT(1)` upstream of this rule,
+    *    so reaching here means null awareness is genuinely required.
+    *    Floating and decimal sums are NOT taken: fp multiplication rounds
+    *    differently from repeated addition.
+    * A side's argument must reference columns of that side alone, except
+    * that a SUM whose argument references no column at all stays on the
+    * counted side (`e * pair_count` per emitted row). */
+  private def classify(ae: AggregateExpression, counted: AttributeSet,
+      other: AttributeSet): Option[Pushed] = ae match {
+    case AggregateExpression(f, Complete, false, None, _) =>
+      def on(e: Expression, side: AttributeSet) =
+        e.deterministic && e.references.nonEmpty && e.references.subsetOf(side)
+      def measure(e: Expression) =
+        if (on(e, counted)) Some(Measure(f, e, cross = false))
+        else if (on(e, other)) Some(Measure(f, e, cross = true))
+        else None
+      f match {
+        case Count(Seq(Literal(v, _))) => Option.when(v != null)(PairCount)
+        case Count(Seq(e)) => measure(e)
+        case Sum(e, _) if integral(e) && e.deterministic && e.references.subsetOf(counted) =>
+          Some(Measure(f, e, cross = false))
+        case Sum(e, _) if integral(e) => measure(e)
+        case Average(e, _) if integral(e) => measure(e)
+        case Min(e) if on(e, counted) => Some(MinMax)
+        case Max(e) if on(e, counted) => Some(MinMax)
+        case _ => None
+      }
+    case _ => None
+  }
 
   /** The Join, or — the usual optimized shape — an attribute-only Project
     * over it (ColumnPruning narrows the join output to the grouping
@@ -254,7 +209,7 @@ case class IntervalCountPushdownRule(session: SparkSession)
         !conf("countPushdown", "true").toBoolean) return plan
     plan.transform {
       case agg @ Aggregate(groupExprs, aggExprs,
-          JoinMaybeProjected(join @ Join(jl, jr, Inner, Some(cond), hint)), aggHint)
+          JoinMaybeProjected(Join(jl, jr, Inner, Some(cond), hint)), aggHint)
           if !jl.isStreaming && !jr.isStreaming =>
         val rewritten = for {
           keys <- ExtractIntervalJoin.extract(jl, jr, cond)
@@ -271,35 +226,28 @@ case class IntervalCountPushdownRule(session: SparkSession)
             if (groupAttrs.forall(jl.outputSet.contains)) Some(true)
             else if (groupAttrs.forall(jr.outputSet.contains)) Some(false)
             else None
-          // Every output is a grouping attribute, a pair count, or an
-          // integral SUM over either side's columns.
-          countSide = if (countLeft) jl else jr
-          otherSide = if (countLeft) jr else jl
-          if aggExprs.forall {
-            case a: AttributeReference => groupAttrs.exists(_.exprId == a.exprId)
-            // A renamed grouping column (CollapseProject folds a
-            // `SELECT key AS k` on top of the aggregate into aggExprs):
-            // pure output aliasing, unchanged by the rewrite.
-            case Alias(a: AttributeReference, _) =>
-              groupAttrs.exists(_.exprId == a.exprId)
-            case Alias(ae: AggregateExpression, _) =>
-              isPairCount(ae) || sumOnSide(ae, countSide).isDefined ||
-                sumOnOtherSide(ae, otherSide).isDefined ||
-                isMinMaxOnSide(ae, countSide) ||
-                countColOn(ae, countSide).isDefined ||
-                countColOn(ae, otherSide).isDefined ||
-                avgOn(ae, countSide).isDefined ||
-                avgOn(ae, otherSide).isDefined
-            case _ => false
+          (counted, other) =
+            if (countLeft) (jl.outputSet, jr.outputSet) else (jr.outputSet, jl.outputSet)
+          // Every output is a grouping attribute (None) or a classified
+          // aggregate. A renamed grouping column (CollapseProject folds a
+          // `SELECT key AS k` on top of the aggregate into aggExprs) is
+          // pure output aliasing, unchanged by the rewrite.
+          pushed <- {
+            def isGroup(a: AttributeReference) = groupAttrs.exists(_.exprId == a.exprId)
+            val each = aggExprs.map {
+              case a: AttributeReference if isGroup(a) => Some(None)
+              case Alias(a: AttributeReference, _) if isGroup(a) => Some(None)
+              case Alias(ae: AggregateExpression, _) => classify(ae, counted, other).map(Some(_))
+              case _ => None
+            }
+            Option.when(each.forall(_.isDefined))(each.flatten)
           }
-          // Either an aggregate column (COUNT/SUM shape) or pure
-          // grouping — the DISTINCT shape: `SELECT DISTINCT key FROM a
-          // JOIN b ON overlap` asks "which keys have at least one pair",
-          // which is exactly the node's emitted row set (only cnt > 0
-          // rows emit); the surviving aggregate dedups, the unused cnt
-          // column is ignored.
-          if groupExprs.nonEmpty ||
-            aggExprs.exists { case Alias(_: AggregateExpression, _) => true; case _ => false }
+          // Either an aggregate column or pure grouping — the DISTINCT
+          // shape: `SELECT DISTINCT key FROM a JOIN b ON overlap` asks
+          // "which keys have at least one pair", which is exactly the
+          // node's emitted row set (only cnt > 0 rows emit); the surviving
+          // aggregate dedups, the unused cnt column is ignored.
+          if groupExprs.nonEmpty || pushed.exists(_.isDefined)
           // Regime from the ONE shared mode decision: broadcast rank index
           // under the budget, per-(key,bin) shuffled rank indexes above it
           // (featureCounts-shaped aggregates stay pair-free exactly when
@@ -324,18 +272,12 @@ case class IntervalCountPushdownRule(session: SparkSession)
           def nnWeight(e: Expression): Expression =
             If(IsNull(e), Literal(0L), Literal(1L))
           // One partial attr per DISTINCT cross-side long expression
-          // (canonicalized, so sum(x) twice shares one partial): plain
-          // sums ride widen(e); null-aware counts and AVG divisors ride
-          // the 0/1 weight; AVG needs both.
-          val crossExprs: Seq[Expression] = aggExprs.flatMap {
-            case Alias(ae: AggregateExpression, _)
-                if !isPairCount(ae) && sumOnSide(ae, countSide).isEmpty &&
-                  !isMinMaxOnSide(ae, countSide) &&
-                  countColOn(ae, countSide).isEmpty && avgOn(ae, countSide).isEmpty =>
-              sumOnOtherSide(ae, otherSide).map(e => Seq(widen(e)))
-                .orElse(countColOn(ae, otherSide).map(e => Seq(nnWeight(e))))
-                .orElse(avgOn(ae, otherSide).map(e => Seq(widen(e), nnWeight(e))))
-                .getOrElse(Nil)
+          // (canonicalized, so sum(x) twice shares one partial): a SUM
+          // rides widen(e), a null-aware COUNT the 0/1 weight, an AVG both.
+          val crossExprs: Seq[Expression] = pushed.flatten.flatMap {
+            case Measure(_: Sum, e, true) => Seq(widen(e))
+            case Measure(_: Count, e, true) => Seq(nnWeight(e))
+            case Measure(_, e, true) => Seq(widen(e), nnWeight(e))
             case _ => Nil
           }
           val crossSums: Seq[(Expression, AttributeReference)] =
@@ -358,11 +300,20 @@ case class IntervalCountPushdownRule(session: SparkSession)
             enforceBudget, cnt, crossSums, bins, binWidth)
           def partialOf(e: Expression): AttributeReference =
             crossSums.find(_._1.canonicalized == e.canonicalized).get._2
+          // A measure's per-emitted-row SUM and non-null COUNT terms: from
+          // the counted row itself, weighted by its pair count — exactly
+          // the repeated addition over its pairs, Long wrap-around
+          // included (multiplication and repeated addition agree mod
+          // 2^64), a null e adding nothing either way — or the exec's
+          // partials for the other side.
+          def sumTerm(e: Expression, cross: Boolean): Expression =
+            if (cross) partialOf(widen(e)) else Multiply(widen(e), cnt)
+          def countTerm(e: Expression, cross: Boolean): Expression =
+            if (cross) partialOf(nnWeight(e)) else If(IsNull(e), Literal(0L), cnt)
           // Fresh AggregateExpression (fresh resultId): AVG splits one
           // original aggregate into TWO — copying the original would
           // duplicate its resultId across different functions.
-          def freshAgg(f: org.apache.spark.sql.catalyst.expressions.aggregate.AggregateFunction)
-              : AggregateExpression =
+          def freshAgg(f: AggregateFunction): AggregateExpression =
             AggregateExpression(f, Complete, isDistinct = false, None, NamedExpression.newExprId)
           // COUNT over an empty global aggregate is 0 while SUM is NULL;
           // grouped counts never see an empty group (only cnt > 0 rows
@@ -370,58 +321,27 @@ case class IntervalCountPushdownRule(session: SparkSession)
           // empty and the join has zero pairs.
           def countShape(s: AggregateExpression): Expression =
             if (groupExprs.isEmpty) Coalesce(Seq(s, Literal(0L))) else s
-          // AVG = exact pushed SUM / pushed non-null COUNT, divided in
-          // double with LEGACY semantics (NULL on zero divisor — Average's
-          // own x/0 behavior; an all-null group also yields NULL via the
-          // NULL numerator).
-          def avgShape(sumAgg: AggregateExpression, cntAgg: AggregateExpression): Expression =
-            Divide(Cast(sumAgg, org.apache.spark.sql.types.DoubleType),
-              Cast(cntAgg, org.apache.spark.sql.types.DoubleType), EvalMode.LEGACY)
           def rebuild(al: Alias, e: Expression): NamedExpression =
             Alias(e, al.name)(exprId = al.exprId,
               qualifier = al.qualifier, explicitMetadata = Some(al.metadata))
-          val newAggExprs: Seq[NamedExpression] = aggExprs.map {
-            case al @ Alias(ae: AggregateExpression, _) if isPairCount(ae) =>
-              rebuild(al, countShape(ae.copy(aggregateFunction = Sum(cnt))))
-            case al @ Alias(ae: AggregateExpression, _)
-                if sumOnSide(ae, countSide).isDefined =>
-              // SUM(e) over pairs == SUM(e * pair_count) over emitted rows;
-              // cast e to long first so the multiply is long domain (the
-              // general path's Sum also widens integral inputs to long).
-              val e = sumOnSide(ae, countSide).get
-              rebuild(al, ae.copy(aggregateFunction = Sum(Multiply(widen(e), cnt))))
-            case al @ Alias(ae: AggregateExpression, _)
-                if isMinMaxOnSide(ae, countSide) =>
-              al
-            case al @ Alias(ae: AggregateExpression, _)
-                if countColOn(ae, countSide).isDefined =>
-              // COUNT(e) over pairs == SUM(cnt over emitted rows with
-              // non-null e).
-              val e = countColOn(ae, countSide).get
-              rebuild(al, countShape(
-                ae.copy(aggregateFunction = Sum(If(IsNull(e), Literal(0L), cnt)))))
-            case al @ Alias(ae: AggregateExpression, _)
-                if avgOn(ae, countSide).isDefined =>
-              val e = avgOn(ae, countSide).get
-              rebuild(al, avgShape(
-                freshAgg(Sum(Multiply(widen(e), cnt))),
-                freshAgg(Sum(If(IsNull(e), Literal(0L), cnt)))))
-            case al @ Alias(ae: AggregateExpression, _)
-                if sumOnOtherSide(ae, otherSide).isDefined =>
-              val e = widen(sumOnOtherSide(ae, otherSide).get)
-              rebuild(al, ae.copy(aggregateFunction = Sum(partialOf(e))))
-            case al @ Alias(ae: AggregateExpression, _)
-                if countColOn(ae, otherSide).isDefined =>
-              val e = countColOn(ae, otherSide).get
-              rebuild(al, countShape(
-                ae.copy(aggregateFunction = Sum(partialOf(nnWeight(e))))))
-            case al @ Alias(ae: AggregateExpression, _)
-                if avgOn(ae, otherSide).isDefined =>
-              val e = avgOn(ae, otherSide).get
-              rebuild(al, avgShape(
-                freshAgg(Sum(partialOf(widen(e)))),
-                freshAgg(Sum(partialOf(nnWeight(e))))))
-            case other => other
+          val newAggExprs: Seq[NamedExpression] = aggExprs.zip(pushed).map {
+            case (al @ Alias(ae: AggregateExpression, _), Some(p)) => p match {
+              case PairCount =>
+                rebuild(al, countShape(ae.copy(aggregateFunction = Sum(cnt))))
+              case MinMax => al
+              case Measure(_: Sum, e, cross) =>
+                rebuild(al, ae.copy(aggregateFunction = Sum(sumTerm(e, cross))))
+              case Measure(_: Count, e, cross) =>
+                rebuild(al, countShape(ae.copy(aggregateFunction = Sum(countTerm(e, cross)))))
+              // AVG = exact pushed SUM / pushed non-null COUNT, divided in
+              // double with LEGACY semantics (NULL on zero divisor —
+              // Average's own x/0 behavior; an all-null group also yields
+              // NULL via the NULL numerator).
+              case Measure(_, e, cross) =>
+                rebuild(al, Divide(Cast(freshAgg(Sum(sumTerm(e, cross))), DoubleType),
+                  Cast(freshAgg(Sum(countTerm(e, cross))), DoubleType), EvalMode.LEGACY))
+            }
+            case (other, _) => other
           }
           Aggregate(groupExprs, newAggExprs, node, aggHint)
         }
@@ -430,12 +350,32 @@ case class IntervalCountPushdownRule(session: SparkSession)
   }
 }
 
-/** Physical count-probe: broadcast rank index of the build side, stream
-  * side probed in place (never shuffled). See [[IntervalCountJoinNode]]. */
+object IntervalCountPushdownRule {
+  /** An aggregate's pushed form, from [[IntervalCountPushdownRule]]'s one
+    * classification: a pair count, a counted-side MIN/MAX that passes
+    * through, or a SUM, COUNT(e) or AVG (`f`) of `e` over the counted side
+    * or, when `cross`, the other. */
+  private sealed trait Pushed
+  private case object PairCount extends Pushed
+  private case object MinMax extends Pushed
+  private final case class Measure(f: AggregateFunction, e: Expression, cross: Boolean)
+      extends Pushed
+}
+
+/** Physical count probe in the broadcast regime. The build side is
+  * collected on the driver into one [[CountRankIndex]] per equality key,
+  * broadcast with the collected rows; the stream side is probed in place
+  * (never shuffled). Grouping by the stream side, each stream row is the
+  * index's one-bin probe. Grouping by the build side, each stream row adds
+  * its two ranks to its key's histograms, one pair per weight (1, and
+  * each stream-side sum's value and 0/1 non-null flag), which one
+  * suffix-sum pass per rank order folds into per-build-row totals over
+  * the index's ordinals: O(|build| · (1 + nSums)) longs per task, no
+  * per-pair work. See [[IntervalCountJoinNode]]. */
 case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
     buildLeft: Boolean,
-    /** Long-typed non-nullable expressions on the NON-counted side; each
-      * appends a per-row partial-sum column after `pair_count`. */
+    /** Long-typed expressions on the NON-counted side; each appends a
+      * per-row partial-sum column after `pair_count`. */
     crossSumExprs: Seq[Expression],
     override val output: Seq[Attribute],
     left: SparkPlan, right: SparkPlan, enforceBuildBudget: Boolean)
@@ -468,8 +408,6 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
     val (sStart, sEnd, sEqs) =
       if (buildLeft) (keys.rightStart, keys.rightEnd, keys.rightEqs)
       else (keys.leftStart, keys.leftEnd, keys.leftEqs)
-    val bIvB = Seq(bound(bStart, buildPlan), bound(bEnd, buildPlan))
-    val bEqsB = bEqs.map(bound(_, buildPlan))
     val sIvB = Seq(bound(sStart, streamPlan), bound(sEnd, streamPlan))
     val sEqsB = sEqs.map(bound(_, streamPlan))
     val nEqs = bEqs.length
@@ -478,97 +416,37 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
     val pairCountMetric = longMetric("pairCount")
     val invertedDropped = longMetric("invertedDropped")
 
-    // Build-side collect, the forest join's; a row's position in it is
-    // the ordinal the count arrays index. Inverted (start > end) rows are
-    // dropped: the rank identity assumes well-formed intervals, and a
+    // Build-side collect, the forest join's. Inverted (start > end) rows
+    // are dropped: the rank identity assumes well-formed intervals, and a
     // malformed build row would silently skew counts instead of matching
     // the general path's per-pair predicate evaluation. Counted in
     // invertedDropped so the contract breach is visible.
-    val (collected, bytes) = BroadcastBudget.collectKeyed(
-      buildPlan, bEqsB, bIvB, dropInverted = Some(invertedDropped))
+    val (collected, bytes) = BroadcastBudget.collectKeyed(buildPlan,
+      bEqs.map(bound(_, buildPlan)), Seq(bound(bStart, buildPlan), bound(bEnd, buildPlan)),
+      dropInverted = Some(invertedDropped))
     longMetric("buildRows") += collected.length
     if (enforceBuildBudget) BroadcastBudget.checkCollected(bytes,
       "interval-count-join build side", "raise the budget, broadcast()-hint the side to " +
         "take responsibility, or set spark.graft.rangejoin.countPushdown=false to take " +
         "the general path.", conf)
-    val rowsArr: Array[InternalRow] = collected.map(_._4)
-    // Cross-side SUM plumbing: the exprs live on whichever side the
-    // counted side is NOT.
-    val countBuildV = countLeft == buildLeft // grouping side is the broadcast side
-    val crossOnBuild = !countBuildV && crossSumExprs.nonEmpty
+    // Cross-side sums live on whichever side the counted side is NOT.
+    val countBuild = countLeft == buildLeft
     val nSums = crossSumExprs.length
-    val crossBoundStream: Seq[Expression] =
-      if (countBuildV) crossSumExprs.map(bound(_, streamPlan)) else Nil
-    // Build-side cross exprs evaluate once per collected row (driver,
-    // interpreted — |build| evals, amortized by the collect itself).
-    // Null values contribute 0 to sums and 0 to the non-null counts the
-    // NULL-iff-all-null semantics need.
-    val (buildVals, buildNonNull): (Array[Array[Long]], Array[Array[Boolean]]) =
-      if (crossOnBuild) {
-        val boundB = crossSumExprs.map(bound(_, buildPlan))
-        val vals = Array.tabulate(nSums) { s =>
-          collected.map { c =>
-            boundB(s).eval(c._4) match { case null => 0L; case v => v.asInstanceOf[Long] }
-          }
-        }
-        val nn = Array.tabulate(nSums) { s =>
-          collected.map(c => boundB(s).eval(c._4) != null)
-        }
-        (vals, nn)
-      } else (null, null)
-    // Per-key rank index: overlap COUNTS need no tree walk at all.
-    // A stream query [qs, qe] overlaps build interval i iff
-    // bs_i <= qe AND be_i >= qs; since be_i < qs implies bs_i <= qe
-    // (bs <= be < qs <= qe + 1), the count is a pure rank difference:
-    //   #overlaps = #(starts <= qe) - #(ends < qs)
-    // — two binary searches per stream row, O(log n) regardless of how
-    // many pairs the general join would have enumerated. This is what
-    // makes the pushdown asymptotically different from "join then
-    // count": at 65M pairs (sf0.1, widened features) the pair walk and
-    // the rank version part ways by the full pair count. Cross-side
-    // sums use the same identity weighted by the summed value: prefix
-    // sums of build values by rank (stream-grouped direction), or
-    // value-weighted stream histograms (build-grouped direction) —
-    // wrap-around stays exact because rank differences are differences
-    // mod 2^64.
-    val index: Map[UnsafeRow, CountRankIndex] = collected.iterator.zipWithIndex
-      .map { case ((k, s, e, _), i) => (k, s, e, i) }.toSeq
-      .groupBy(_._1)
-      .map { case (k, items) =>
-        // Arrays, not the groupBy's List: the prefix loops below index
-        // positionally, and ord(i) on a List is O(i) — an O(n^2) driver
-        // build for a broadcast-budget-sized contig.
-        val byStart = items.sortBy(_._2).toArray
-        val byEnd = items.sortBy(_._3).toArray
-        // Prefix sums of each cross expr's build values (and non-null
-        // counts) in both rank orders (length n+1, entry 0 = 0): per
-        // stream row the partial is psStart(j) - psEnd(p), NULL when the
-        // non-null-count difference is 0.
-        def prefix(ord: Array[(UnsafeRow, Int, Int, Int)], s: Int): Array[Long] = {
-          val out = new Array[Long](ord.length + 1)
-          var i = 0
-          while (i < ord.length) { out(i + 1) = out(i) + buildVals(s)(ord(i)._4); i += 1 }
-          out
-        }
-        def prefixN(ord: Array[(UnsafeRow, Int, Int, Int)], s: Int): Array[Long] = {
-          val out = new Array[Long](ord.length + 1)
-          var i = 0
-          while (i < ord.length) {
-            out(i + 1) = out(i) + (if (buildNonNull(s)(ord(i)._4)) 1L else 0L); i += 1
-          }
-          out
-        }
-        val (psStart, psEnd, pnStart, pnEnd) =
-          if (crossOnBuild)
-            (Array.tabulate(nSums)(prefix(byStart, _)), Array.tabulate(nSums)(prefix(byEnd, _)),
-             Array.tabulate(nSums)(prefixN(byStart, _)), Array.tabulate(nSums)(prefixN(byEnd, _)))
-          else (null, null, null, null)
-        k -> CountRankIndex(
-          byStart.map(_._2).toArray, byStart.map(_._4).toArray,
-          byEnd.map(_._3).toArray, byEnd.map(_._4).toArray,
-          psStart, psEnd, pnStart, pnEnd)
+    val crossBound = crossSumExprs.map(bound(_, if (countBuild) streamPlan else buildPlan))
+    // Per key: its index, with the build-side sums when the stream side is
+    // counted (one projection per collected row evaluates them all), its
+    // ordinals the rows' positions in the collect.
+    val index: Map[UnsafeRow, CountRankIndex] = {
+      val buildSums = if (countBuild) Nil else crossBound
+      val sumProj = UnsafeProjection.create(buildSums)
+      collected.indices.groupBy(collected(_)._1).map { case (k, ids) =>
+        val b = new CountRankIndex.Accumulator(buildSums.length)
+        ids.foreach { i => b.add(collected(i)._2, collected(i)._3, sumProj(collected(i)._4)) }
+        val idx = b.result()
+        k -> idx.copy(ordByStart = idx.ordByStart.map(ids(_)), ordByEnd = idx.ordByEnd.map(ids(_)))
       }
-    val bc = sparkContext.broadcast((index, rowsArr))
+    }
+    val bc = sparkContext.broadcast((index, collected.map(_._4)))
 
     streamPlan.execute().mapPartitions { it =>
       val (idxMap, rows) = bc.value
@@ -577,121 +455,92 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
       val joined = new JoinedRow
       val extraRow = new GenericInternalRow(1 + nSums)
       val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-      if (countBuildV) {
-        // Reads-per-feature direction: per-key histograms over the two
-        // rank axes — hA(j) streams whose qe admits j start-ranks,
-        // hB(p) streams whose qs excludes p end-ranks — folded into
-        // per-ordinal counts by one suffix-sum pass per axis at the end.
-        // Cross-side sums ride the same passes with value-weighted
-        // histograms. O(|build| * (1 + nSums)) longs per task; zero
-        // per-pair work.
-        // One codegen'd projection evaluates every sum expr per row.
-        val sumProj = if (nSums > 0) UnsafeProjection.create(crossBoundStream) else null
-        val cnts = new Array[Long](rows.length)
-        val sums = Array.fill(nSums)(new Array[Long](rows.length))
-        val nncnts = Array.fill(nSums)(new Array[Long](rows.length))
+      // The stream row's key when it can match: non-null bounds, not
+      // inverted (the build side's contract; counted), non-null key.
+      def probeKey(row: InternalRow, iv: UnsafeRow): UnsafeRow =
+        if (iv.isNullAt(0) || iv.isNullAt(1)) null
+        else if (iv.getInt(0) > iv.getInt(1)) { invertedDropped += 1; null }
+        else {
+          val key = keyProj(row)
+          if (nEqs > 0 && key.anyNull) null else key
+        }
+      def emit(row: InternalRow, c: Long): Iterator[InternalRow] = {
+        numOutputRows += 1
+        pairCountMetric += c
+        Iterator.single(resultProj(joined(row, extraRow)))
+      }
+      if (countBuild) {
+        // Reads-per-feature direction. Weight w of a stream row is 1
+        // (w = 0), its sum s's value (1 + s) or its 0/1 non-null flag
+        // (1 + nSums + s); per key, byStart(w)(j) totals the weights of
+        // stream rows whose qe admits j start ranks, byEnd(w)(p) of those
+        // whose qs excludes p end ranks.
+        val nW = 1 + 2 * nSums
+        val sumProj = UnsafeProjection.create(crossBound)
+        val weights = new Array[Long](nW)
+        weights(0) = 1L
         final class Hists(n: Int) {
-          val hA = new Array[Long](n + 1); val hB = new Array[Long](n + 1)
-          val wA = Array.fill(nSums)(new Array[Long](n + 1))
-          val wB = Array.fill(nSums)(new Array[Long](n + 1))
-          // Non-null contribution counts per sum (SUM(all-null) is NULL).
-          val cA = Array.fill(nSums)(new Array[Long](n + 1))
-          val cB = Array.fill(nSums)(new Array[Long](n + 1))
+          val byStart, byEnd = Array.fill(nW)(new Array[Long](n + 1))
         }
         val hists = mutable.AnyRefMap.empty[UnsafeRow, Hists]
         it.foreach { srow =>
           val iv = ivProj(srow)
-          // Inverted stream intervals skipped, same rationale as the
-          // build-side collect.
-          if (!iv.isNullAt(0) && !iv.isNullAt(1) && iv.getInt(0) <= iv.getInt(1)) {
-            val key = keyProj(srow)
-            if (nEqs == 0 || !key.anyNull) idxMap.get(key).foreach { idx =>
-              val h = hists.getOrElseUpdate(key.copy(), new Hists(idx.starts.length))
-              val j = rankLe(idx.starts, iv.getInt(1))
-              val p = rankLt(idx.endsSorted, iv.getInt(0))
-              h.hA(j) += 1L
-              h.hB(p) += 1L
-              if (nSums > 0) {
-                val vs = sumProj(srow)
-                var s = 0
-                while (s < nSums) {
-                  if (!vs.isNullAt(s)) {
-                    val v = vs.getLong(s)
-                    h.wA(s)(j) += v; h.wB(s)(p) += v
-                    h.cA(s)(j) += 1L; h.cB(s)(p) += 1L
-                  }
-                  s += 1
-                }
+          val key = probeKey(srow, iv)
+          if (key != null) idxMap.get(key).foreach { idx =>
+            val h = hists.getOrElseUpdate(key.copy(), new Hists(idx.size))
+            val j = idx.startsLe(iv.getInt(1))
+            val p = idx.endsLt(iv.getInt(0))
+            if (nSums > 0) {
+              val vs = sumProj(srow)
+              var s = 0
+              while (s < nSums) {
+                val nonNull = !vs.isNullAt(s)
+                weights(1 + s) = if (nonNull) vs.getLong(s) else 0L
+                weights(1 + nSums + s) = if (nonNull) 1L else 0L
+                s += 1
               }
             }
+            var w = 0
+            while (w < nW) { h.byStart(w)(j) += weights(w); h.byEnd(w)(p) += weights(w); w += 1 }
           }
         }
+        // Build row i's total of weight w: the stream rows admitting it by
+        // start rank minus those excluding it by end rank.
+        val tot = Array.fill(nW)(new Array[Long](rows.length))
         hists.foreach { case (key, h) =>
           val idx = idxMap(key)
-          val n = idx.starts.length
           def fold(hist: Array[Long], ord: Array[Int], into: Array[Long], sign: Long): Unit = {
             var run = 0L
-            var r = n - 1
+            var r = idx.size - 1
             while (r >= 0) { run += hist(r + 1); into(ord(r)) += sign * run; r -= 1 }
           }
-          fold(h.hA, idx.ordByStart, cnts, 1L)
-          fold(h.hB, idx.ordByEnd, cnts, -1L)
-          var s = 0
-          while (s < nSums) {
-            fold(h.wA(s), idx.ordByStart, sums(s), 1L)
-            fold(h.wB(s), idx.ordByEnd, sums(s), -1L)
-            fold(h.cA(s), idx.ordByStart, nncnts(s), 1L)
-            fold(h.cB(s), idx.ordByEnd, nncnts(s), -1L)
-            s += 1
+          var w = 0
+          while (w < nW) {
+            fold(h.byStart(w), idx.ordByStart, tot(w), 1L)
+            fold(h.byEnd(w), idx.ordByEnd, tot(w), -1L)
+            w += 1
           }
         }
-        Iterator.range(0, cnts.length).filter(cnts(_) > 0L).map { i =>
-          numOutputRows += 1
-          pairCountMetric += cnts(i)
-          extraRow.setLong(0, cnts(i))
+        Iterator.range(0, rows.length).filter(tot(0)(_) > 0L).flatMap { i =>
+          extraRow.setLong(0, tot(0)(i))
           var s = 0
           while (s < nSums) {
-            if (nncnts(s)(i) == 0L) extraRow.setNullAt(1 + s)
-            else extraRow.setLong(1 + s, sums(s)(i))
+            if (tot(1 + nSums + s)(i) == 0L) extraRow.setNullAt(1 + s)
+            else extraRow.setLong(1 + s, tot(1 + s)(i))
             s += 1
           }
-          resultProj(joined(rows(i), extraRow)): InternalRow
+          emit(rows(i), tot(0)(i))
         }
       } else {
-        // Features-per-read direction: the rank difference IS the count;
-        // cross-side sums are the same difference over the build values'
-        // prefix sums.
+        // Features-per-read direction: the one-bin probe. <= 0 (not == 0):
+        // a degenerate input slipping past the well-formedness checks must
+        // never emit a negative count.
         it.flatMap { srow =>
           val iv = ivProj(srow)
-          if (iv.isNullAt(0) || iv.isNullAt(1) || iv.getInt(0) > iv.getInt(1)) {
-            if (!iv.isNullAt(0) && !iv.isNullAt(1)) invertedDropped += 1
-            Iterator.empty
-          } else {
-            val key = keyProj(srow)
-            if (nEqs > 0 && key.anyNull) Iterator.empty
-            else idxMap.get(key) match {
-              case None => Iterator.empty
-              case Some(idx) =>
-                val j = rankLe(idx.starts, iv.getInt(1))
-                val p = rankLt(idx.endsSorted, iv.getInt(0))
-                val c = (j - p).toLong
-                // <= 0 (not == 0): a degenerate input slipping past the
-                // well-formedness skips must never emit a negative count.
-                if (c <= 0L) Iterator.empty
-                else {
-                  numOutputRows += 1
-                  pairCountMetric += c
-                  extraRow.setLong(0, c)
-                  var s = 0
-                  while (s < nSums) {
-                    if (idx.pnStart(s)(j) - idx.pnEnd(s)(p) == 0L) extraRow.setNullAt(1 + s)
-                    else extraRow.setLong(1 + s, idx.psStart(s)(j) - idx.psEnd(s)(p))
-                    s += 1
-                  }
-                  Iterator.single(resultProj(joined(srow, extraRow)): InternalRow)
-                }
-            }
-          }
+          val key = probeKey(srow, iv)
+          val c = if (key == null) 0L else idxMap.get(key)
+            .fold(0L)(_.probe(iv.getInt(0), iv.getInt(1), extraRow))
+          if (c <= 0L) Iterator.empty else emit(srow, c)
         }
       }
     }
@@ -706,34 +555,21 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
   * requires both clustered on `(eq keys..., bin)`, so `EnsureRequirements`
   * plans a hash `ShuffleExchangeExec` under each: rows cross the shuffle
   * as `UnsafeRow`s, and AQE and `explain()` see both exchanges. Within a
-  * partition the NON-counted side's replicas fold into per-(key,bin) rank
-  * indexes (sorted starts/ends + per-sum prefix arrays — primitive
-  * ints/longs, never buffered rows), then the counted side STREAMS
-  * through, emitting one partial `(counted row, pair_count, partial
-  * sums...)` per replica bin with a non-zero count. The surviving
-  * aggregate merges partials across bins — the same `SUM(pair_count)`
-  * rewrite the broadcast path uses, so both regimes share one logical
-  * contract.
+  * partition the NON-counted side's replicas fold into one
+  * [[CountRankIndex]] per (key, bin) — primitive ints/longs, never
+  * buffered rows — then the counted side STREAMS through, emitting one
+  * partial `(counted row, pair_count, partial sums...)` per replica bin
+  * with a non-zero count, from the index's probe in that bin. The
+  * surviving aggregate merges partials across bins — the same
+  * `SUM(pair_count)` rewrite the broadcast path uses, so both regimes
+  * share one logical contract. The probe's first-intersection-bin rule
+  * counts each pair in exactly one bin, and a partial is NULL iff no
+  * non-null value contributed, so SUM's all-null → NULL semantics survive
+  * bin splitting.
   *
   * Every cluster key is required (`requireAllClusterKeys`): a child
   * already hash-partitioned on the contig alone must not satisfy the
   * distribution, or one task would index a whole hot contig.
-  *
-  * Exactly-once across bins by first-intersection-bin rank arithmetic
-  * (no per-pair scan, unlike the general bin-range join): for a counted
-  * replica `[qs, qe]` in bin B = `[lo, hi]`,
-  *  - `qs >= lo` (B is the row's FIRST replica bin): pairs whose first
-  *    intersection falls in B are exactly `{bs <= min(qe, hi), be >= qs}`
-  *    = `#(starts <= min(qe,hi)) − #(ends < qs)` — valid because
-  *    `be < qs <= min(qe, hi)` implies `bs <= be < min(qe,hi)`;
-  *  - `qs < lo` (a later replica bin): the first intersection is at
-  *    `max(qs, bs) = bs`, so exactly `{lo <= bs <= min(qe, hi)}`
-  *    = `#(starts <= min(qe,hi)) − #(starts <= lo−1)` (and `be >= bs >=
-  *    lo > qs` makes the end test vacuous).
-  * Cross-side sums ride the identical differences over value/non-null
-  * prefix arrays in the matching rank order; per-bin partials are NULL
-  * iff zero non-null values contributed, so SUM's all-null → NULL
-  * semantics survive bin splitting.
   *
   * At 100 TB: no broadcast, no driver collect, no pair materialization.
   * Shuffle volume is one `UnsafeRow` per replica, its side's columns plus
@@ -795,75 +631,29 @@ case class IntervalBinCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
     val indexReplicas = longMetric("indexReplicas")
     val pairCountMetric = longMetric("pairCount")
     val invertedDropped = longMetric("invertedDropped")
-    val emptyVals = Array.emptyLongArray
 
     // The exchanges co-partition both children on (key, bin): the index
-    // side folds into primitive-array rank indexes; the counted side
-    // STREAMS — never buffered, unlike a cogroup, whose grouped iterables
-    // would materialize both sides per (key, bin).
+    // side folds into rank indexes; the counted side STREAMS — never
+    // buffered, unlike a cogroup, whose grouped iterables would
+    // materialize both sides per (key, bin).
     indexPlan.execute().zipPartitions(countedPlan.execute()) { (idxIt, cntIt) =>
-      // Index side: (key, bin) -> (start, end, [sum values..., non-null
-      // 0/1 flags...]). Inverted rows are dropped on BOTH sides — the
-      // rank identity needs well-formed intervals (same contract as the
-      // broadcast count path).
+      // Inverted rows are dropped on BOTH sides — the rank identity needs
+      // well-formed intervals (same contract as the broadcast count path).
       val iKeyProj = UnsafeProjection.create(iKeyB)
       val iIvProj = UnsafeProjection.create(iIvB)
-      val sumProj = if (nSums > 0) UnsafeProjection.create(crossBound) else null
-      val groups = mutable.AnyRefMap
-        .empty[UnsafeRow, mutable.ArrayBuffer[(Int, Int, Array[Long])]]
+      val sumProj = UnsafeProjection.create(crossBound)
+      val groups = mutable.AnyRefMap.empty[UnsafeRow, CountRankIndex.Accumulator]
       idxIt.foreach { row =>
         val key = iKeyProj(row)
         if (key.isNullAt(binOrd)) invertedDropped += 1
         else {
           indexReplicas += 1
           val iv = iIvProj(row)
-          val vals = if (nSums == 0) emptyVals else {
-            val vs = sumProj(row)
-            val a = new Array[Long](2 * nSums)
-            var i = 0
-            while (i < nSums) {
-              if (!vs.isNullAt(i)) { a(i) = vs.getLong(i); a(nSums + i) = 1L }
-              i += 1
-            }
-            a
-          }
-          groups.getOrElseUpdate(key.copy(), new mutable.ArrayBuffer[(Int, Int, Array[Long])]) +=
-            ((iv.getInt(0), iv.getInt(1), vals))
+          groups.getOrElseUpdate(key.copy(), new CountRankIndex.Accumulator(nSums))
+            .add(iv.getInt(0), iv.getInt(1), sumProj(row))
         }
       }
-      // Finalize: sorted rank arrays + prefix sums per order; the tuple
-      // buffers are released group by group.
-      final case class Idx(starts: Array[Int], ends: Array[Int],
-          psStart: Array[Array[Long]], pnStart: Array[Array[Long]],
-          psEnd: Array[Array[Long]], pnEnd: Array[Array[Long]])
-      def prefixes(ord: Array[(Int, Int, Array[Long])])
-          : (Array[Array[Long]], Array[Array[Long]]) =
-        if (nSums == 0) (null, null) else {
-          val n = ord.length
-          val ps = Array.fill(nSums)(new Array[Long](n + 1))
-          val pn = Array.fill(nSums)(new Array[Long](n + 1))
-          var i = 0
-          while (i < n) {
-            val v = ord(i)._3
-            var s = 0
-            while (s < nSums) {
-              ps(s)(i + 1) = ps(s)(i) + v(s)
-              pn(s)(i + 1) = pn(s)(i) + v(nSums + s)
-              s += 1
-            }
-            i += 1
-          }
-          (ps, pn)
-        }
-      val index = mutable.AnyRefMap.empty[UnsafeRow, Idx]
-      groups.foreach { case (k, buf) =>
-        val arr = buf.toArray
-        val byStart = arr.sortBy(_._1)
-        val byEnd = arr.sortBy(_._2)
-        val (psS, pnS) = prefixes(byStart)
-        val (psE, pnE) = prefixes(byEnd)
-        index.update(k, Idx(byStart.map(_._1), byEnd.map(_._2), psS, pnS, psE, pnE))
-      }
+      val index = groups.mapValuesNow(_.result())
       groups.clear()
 
       val cKeyProj = UnsafeProjection.create(cKeyB)
@@ -878,26 +668,12 @@ case class IntervalBinCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
           case None => Iterator.empty
           case Some(idx) =>
             val iv = cIvProj(crow)
-            val qs = iv.getInt(0); val qe = iv.getInt(1)
             val lo = key.getLong(binOrd) * binW
-            val hi = lo + binW - 1
-            val boundHi = math.min(qe.toLong, hi)
-            val j = rankLe(idx.starts, boundHi)
-            val firstBin = qs >= lo
-            val p = if (firstBin) rankLt(idx.ends, qs) else rankLe(idx.starts, lo - 1)
-            val c = (j - p).toLong
+            val c = idx.probe(iv.getInt(0), iv.getInt(1), lo, lo + binW - 1, extraRow)
             if (c <= 0L) Iterator.empty
             else {
               numOutputRows += 1
               pairCountMetric += c
-              extraRow.setLong(0, c)
-              var s = 0
-              while (s < nSums) {
-                val (ps, pn) = if (firstBin) (idx.psEnd, idx.pnEnd) else (idx.psStart, idx.pnStart)
-                if (idx.pnStart(s)(j) - pn(s)(p) == 0L) extraRow.setNullAt(1 + s)
-                else extraRow.setLong(1 + s, idx.psStart(s)(j) - ps(s)(p))
-                s += 1
-              }
               Iterator.single(resultProj(joined(crow, extraRow)): InternalRow)
             }
         }
@@ -906,27 +682,128 @@ case class IntervalBinCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
   }
 }
 
-/** Per-equality-key rank index of the build side: interval starts and
-  * ends, each ascending, with the global build ordinal at every rank —
-  * plus, when cross-side sums push down in the stream-grouped direction,
-  * per-sum prefix sums of the build values in each rank order (length
-  * n + 1, entry 0 = 0; null otherwise). */
-case class CountRankIndex(starts: Array[Int], ordByStart: Array[Int],
-    endsSorted: Array[Int], ordByEnd: Array[Int],
-    psStart: Array[Array[Long]] = null, psEnd: Array[Array[Long]] = null,
-    pnStart: Array[Array[Long]] = null, pnEnd: Array[Array[Long]] = null)
+/** The one count core: the rank index of one group of well-formed
+  * intervals — an equality key of [[IntervalCountJoinExec]]'s build side,
+  * a (key, bin) of [[IntervalBinCountJoinExec]]'s index side, a contig of
+  * [[graft.streaming.StreamingOps.countStream]]'s static side. It holds
+  * the interval starts and ends, each ascending with its row's ordinal at
+  * every rank (the row's position in [[CountRankIndex.build]]'s input;
+  * the broadcast exec renumbers them to positions in its collect), and,
+  * per cross sum, prefix sums of the values and of the non-null flags in
+  * each rank order (length n + 1, entry 0 = 0). */
+final case class CountRankIndex(starts: Array[Int], ordByStart: Array[Int],
+    ends: Array[Int], ordByEnd: Array[Int],
+    sumByStart: Array[Array[Long]], nonNullByStart: Array[Array[Long]],
+    sumByEnd: Array[Array[Long]], nonNullByEnd: Array[Array[Long]]) {
+
+  def size: Int = starts.length
+
+  /** #starts <= q. */
+  def startsLe(q: Long): Int = CountRankIndex.rankLe(starts, q)
+
+  /** #ends < q. */
+  def endsLt(q: Long): Int = CountRankIndex.rankLt(ends, q)
+
+  /** Counts the indexed intervals that overlap `[qs, qe]` and whose FIRST
+    * intersection with it falls in bin `[lo, hi]`, the query and the
+    * indexed intervals all being replicas of that bin:
+    *  - `qs >= lo` (the bin is the query's first): those intersections
+    *    are exactly `{bs <= min(qe, hi), be >= qs}` =
+    *    `#(starts <= min(qe, hi)) − #(ends < qs)`, valid because
+    *    `be < qs <= min(qe, hi)` implies `bs <= be < min(qe, hi)`;
+    *  - `qs < lo` (a later bin): the first intersection is at
+    *    `max(qs, bs) = bs`, so exactly `{lo <= bs <= min(qe, hi)}` =
+    *    `#(starts <= min(qe, hi)) − #(starts <= lo − 1)` (and `be >= bs >=
+    *    lo > qs` makes the end test vacuous).
+    * With a positive count and an `out` row, fills `out` with the count
+    * and then each cross sum's partial: the same difference over its
+    * prefix sums — exact under wrap-around, rank differences being
+    * differences mod 2^64 — NULL iff no non-null value contributed. */
+  def probe(qs: Int, qe: Int, lo: Long, hi: Long, out: InternalRow): Long = {
+    val j = startsLe(math.min(qe.toLong, hi))
+    val firstBin = qs >= lo
+    val p = if (firstBin) endsLt(qs) else startsLe(lo - 1)
+    val c = (j - p).toLong
+    if (c > 0L && out != null) {
+      out.setLong(0, c)
+      val sums = if (firstBin) sumByEnd else sumByStart
+      val nonNull = if (firstBin) nonNullByEnd else nonNullByStart
+      var s = 0
+      while (s < sumByStart.length) {
+        if (nonNullByStart(s)(j) == nonNull(s)(p)) out.setNullAt(1 + s)
+        else out.setLong(1 + s, sumByStart(s)(j) - sums(s)(p))
+        s += 1
+      }
+    }
+    c
+  }
+
+  /** The one-bin case of [[probe]]: every overlap of `[qs, qe]`. */
+  def probe(qs: Int, qe: Int, out: InternalRow): Long =
+    probe(qs, qe, Long.MinValue, Long.MaxValue, out)
+}
 
 object CountRankIndex {
 
+  /** The index of intervals `[starts(i), ends(i)]`, ordinal `i`, with
+    * cross sums `sums(s)(i)`, each counted only where `nonNull(s)(i)`. */
+  def build(starts: Array[Int], ends: Array[Int], sums: Array[Array[Long]],
+      nonNull: Array[Array[Boolean]]): CountRankIndex = {
+    val byStart = order(starts)
+    val byEnd = order(ends)
+    def prefix(ord: Array[Int])(w: Int => Long): Array[Long] = {
+      val out = new Array[Long](ord.length + 1)
+      var i = 0
+      while (i < ord.length) { out(i + 1) = out(i) + w(ord(i)); i += 1 }
+      out
+    }
+    def values(ord: Array[Int]) = Array.tabulate(sums.length)(s =>
+      prefix(ord)(i => if (nonNull(s)(i)) sums(s)(i) else 0L))
+    def counts(ord: Array[Int]) = nonNull.map(nn => prefix(ord)(i => if (nn(i)) 1L else 0L))
+    CountRankIndex(byStart.map(starts(_)), byStart, byEnd.map(ends(_)), byEnd,
+      values(byStart), counts(byStart), values(byEnd), counts(byEnd))
+  }
+
+  /** Accumulates one index's intervals for [[build]], in ordinal order. */
+  final class Accumulator(nSums: Int) {
+    private val starts, ends = new mutable.ArrayBuilder.ofInt
+    private val sums = Array.fill(nSums)(new mutable.ArrayBuilder.ofLong)
+    private val nonNull = Array.fill(nSums)(new mutable.ArrayBuilder.ofBoolean)
+
+    /** Adds `[start, end]` with its cross sums, fields `0 until nSums` of
+      * `vals`. */
+    def add(start: Int, end: Int, vals: InternalRow): Unit = {
+      starts += start
+      ends += end
+      var s = 0
+      while (s < nSums) {
+        nonNull(s) += !vals.isNullAt(s)
+        sums(s) += (if (vals.isNullAt(s)) 0L else vals.getLong(s))
+        s += 1
+      }
+    }
+
+    def result(): CountRankIndex =
+      build(starts.result(), ends.result(), sums.map(_.result()), nonNull.map(_.result()))
+  }
+
+  /** The ordinals of `keys` in ascending key order, sorted as packed
+    * `(key, ordinal)` longs. */
+  private def order(keys: Array[Int]): Array[Int] = {
+    val packed = Array.tabulate(keys.length)(i => (keys(i).toLong << 32) | i)
+    java.util.Arrays.sort(packed)
+    packed.map(_.toInt)
+  }
+
   /** #elements <= q in an ascending array (a Long query takes bin bounds). */
-  def rankLe(a: Array[Int], q: Long): Int = {
+  private def rankLe(a: Array[Int], q: Long): Int = {
     var lo = 0; var hi = a.length
     while (lo < hi) { val m = (lo + hi) >>> 1; if (a(m) <= q) lo = m + 1 else hi = m }
     lo
   }
 
   /** #elements < q in an ascending array. */
-  def rankLt(a: Array[Int], q: Long): Int = {
+  private def rankLt(a: Array[Int], q: Long): Int = {
     var lo = 0; var hi = a.length
     while (lo < hi) { val m = (lo + hi) >>> 1; if (a(m) < q) lo = m + 1 else hi = m }
     lo

@@ -1,8 +1,7 @@
 package graft.streaming
 
 import graft.operators.{DedupOps, EmbeddingOps, IntervalForest, TextOps}
-import graft.plans.BroadcastBudget
-import graft.plans.CountRankIndex.{rankLe, rankLt}
+import graft.plans.{BroadcastBudget, CountRankIndex}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -463,13 +462,13 @@ object StreamingOps {
 
   /** Stream-static COUNT annotate: each stream read gets the NUMBER of
     * overlapping static features — the streaming face of the batch
-    * aggregate pushdown ([[graft.plans.IntervalCountJoinExec]]). Counts
-    * come from the same rank identity
-    * `#overlaps = #(starts <= qe) − #(ends < qs)`: two binary searches
-    * per row against broadcast per-contig sorted start/end arrays —
-    * O(log n) no matter how many features overlap, no pair rows ever, no
-    * forest walk, no state, no watermark; the unbounded side never
-    * shuffles. Reads with zero overlaps (or on absent contigs) drop —
+    * aggregate pushdown ([[graft.plans.IntervalCountJoinExec]]). The
+    * static side is broadcast as one [[graft.plans.CountRankIndex]] per
+    * contig, the batch count joins' core, and each read is its one-bin
+    * probe: `#overlaps = #(starts <= qe) − #(ends < qs)`, two binary
+    * searches — O(log n) no matter how many features overlap, no pair
+    * rows ever, no forest walk, no state, no watermark; the unbounded side
+    * never shuffles. Reads with zero overlaps (or on absent contigs) drop —
     * inner `GROUP BY read` semantics, matching the batch pushdown's
     * stream-grouped direction. Inverted (start > end) rows are dropped
     * on both sides, the rank identity's well-formedness contract. */
@@ -484,20 +483,17 @@ object StreamingOps {
         col("pos_end").cast("int"))
       .as[(String, Int, Int)].collect()
     checkCollected(collected, "countStream static side", advice, spark.sessionState.conf)
-    val index: Map[String, (Array[Int], Array[Int])] =
+    val index: Map[String, CountRankIndex] =
       collected.filter(r => r._2 <= r._3).groupBy(_._1).map { case (c, rows) =>
-        c -> (rows.map(_._2).sorted, rows.map(_._3).sorted)
+        c -> CountRankIndex.build(rows.map(_._2), rows.map(_._3), Array.empty, Array.empty)
       }
     val bc = spark.sparkContext.broadcast(index)
     reads.flatMap { r =>
-      if (r.pos_start > r.pos_end) Iterator.empty
-      else bc.value.get(r.contig) match {
-        case None => Iterator.empty
-        case Some((starts, ends)) =>
-          val c = (rankLe(starts, r.pos_end) - rankLt(ends, r.pos_start)).toLong
-          if (c <= 0L) Iterator.empty
-          else Iterator.single((r.contig, r.pos_start, r.pos_end, r.ts, c))
-      }
+      val c =
+        if (r.pos_start > r.pos_end) 0L
+        else bc.value.get(r.contig).fold(0L)(_.probe(r.pos_start, r.pos_end, null))
+      if (c <= 0L) Iterator.empty
+      else Iterator.single((r.contig, r.pos_start, r.pos_end, r.ts, c))
     }.toDF("contig", "pos_start", "pos_end", "ts", "n_overlaps")
   }
 

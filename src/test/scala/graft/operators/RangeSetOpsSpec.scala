@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.{SharedSpark, SparkSpec}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.graft.TestListeners
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
@@ -303,6 +304,28 @@ class RangeSetOpsSpec extends SparkSpec {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+  }
+
+  test("cluster and subtract size a merge output by the sweep's run bound: no count job") {
+    // RDD-built inputs have no size estimate, so only the bound the merge
+    // sweep gives its output can show that the runs fit the budget;
+    // defining either operator then runs merge's jobs and no more.
+    val schema = StructType(Seq(StructField("k", IntegerType), StructField("contig", StringType),
+      StructField("pos_start", IntegerType), StructField("pos_end", IntegerType)))
+    def keyed(rows: Seq[(Int, String, Int, Int)]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map(Row.fromTuple), 2), schema)
+    val b = keyed(Seq((1, "1", 10, 20), (2, "1", 18, 30), (3, "1", 50, 60), (4, "2", 10, 20)))
+    val a = keyed(Seq((1, "1", 5, 40), (2, "2", 15, 25), (3, "3", 1, 9)))
+    val (_, mergeJobs) = TestListeners.jobsIn(spark, "rangeset-merge")(RangeSetOps.merge(b))
+    val (cl, clusterJobs) =
+      TestListeners.jobsIn(spark, "rangeset-cluster")(RangeSetOps.cluster(b, Seq("k")))
+    val (sub, subtractJobs) =
+      TestListeners.jobsIn(spark, "rangeset-subtract")(RangeSetOps.subtract(a, b, "k"))
+    assert(mergeJobs > 0 && clusterJobs === mergeJobs && subtractJobs === mergeJobs)
+    assert(cl.collect().map(r => r.getInt(0) -> ((r.getInt(4), r.getInt(5)))).toMap ===
+      Map(1 -> ((10, 30)), 2 -> ((10, 30)), 3 -> ((50, 60)), 4 -> ((10, 20))))
+    assert(sub.collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2), r.getInt(3)))
+      .toSet === Set((1, "1", 5, 9), (1, "1", 31, 40), (2, "2", 21, 25), (3, "3", 1, 9)))
   }
 
   test("subtract assumeDisjoint: pre-merged runs answer identically without a merge") {

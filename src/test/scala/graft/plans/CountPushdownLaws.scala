@@ -2,6 +2,8 @@ package graft.plans
 
 import org.scalacheck.{Gen, Properties, Test}
 import org.scalacheck.Prop.forAll
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 
 /** Generative law for the count/sum/min-max pushdown
@@ -16,7 +18,7 @@ import org.apache.spark.sql.functions._
   * pivots) by construction. */
 object CountPushdownLaws extends Properties("CountPushdown") {
 
-  // Each sample runs four aggregations (2 directions x on/off).
+  // Each Spark sample runs four aggregations (2 directions x on/off).
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(10)
 
@@ -55,6 +57,78 @@ object CountPushdownLaws extends Properties("CountPushdown") {
       case None => spark.conf.unset("spark.graft.rangejoin.binWidth")
     }
   }
+
+  /** One index of intervals with two nullable sums, queries over it, and
+    * a bin width. Coordinates run negative too (bins are floor-divided). */
+  private case class CoreCase(ivs: List[(Int, Int, Option[Long], Option[Long])],
+      queries: List[(Int, Int)], binWidth: Int)
+
+  private val genCore: Gen[CoreCase] = for {
+    n <- Gen.chooseNum(0, 40)
+    ivs <- Gen.listOfN(n, for {
+      s <- Gen.chooseNum(-20, 60)
+      len <- Gen.chooseNum(0, 25)
+      m1 <- Gen.option(Gen.chooseNum(-50L, 50L))
+      m2 <- Gen.frequency(1 -> Gen.some(Gen.const(Long.MaxValue)), 3 -> Gen.const(None))
+    } yield (s, s + len, m1, m2))
+    nq <- Gen.chooseNum(1, 20)
+    queries <- Gen.listOfN(nq, for {
+      s <- Gen.chooseNum(-25, 70)
+      len <- Gen.chooseNum(0, 30)
+    } yield (s, s + len))
+    w <- Gen.chooseNum(1, 15)
+  } yield CoreCase(ivs, queries, w)
+
+  /** The shared count core ([[CountRankIndex]]) without Spark. Each bin's
+    * index holds the intervals replicated into it; a query's probe in one
+    * of its bins must count the overlapping intervals whose FIRST
+    * intersection with it falls in that bin, and give each sum's partial
+    * over them (NULL iff none is non-null). Over the query's bins, the
+    * counts and partials must add up to the one-bin probe of the whole
+    * index: its overlap count and sums. The second sum is all-null or
+    * Long.MaxValue, so its partials wrap. */
+  property("rank index probe == brute-force first-intersection-bin model") =
+    forAll(Gen.listOfN(10, genCore)) { cases =>
+      cases.forall { case CoreCase(ivs, queries, w) =>
+        def index(rows: List[(Int, Int, Option[Long], Option[Long])]) = CountRankIndex.build(
+          rows.map(_._1).toArray, rows.map(_._2).toArray,
+          // A null's slot holds a value the index must ignore.
+          Array(rows.map(_._3.getOrElse(7L)).toArray, rows.map(_._4.getOrElse(7L)).toArray),
+          Array(rows.map(_._3.isDefined).toArray, rows.map(_._4.isDefined).toArray))
+        def bin(x: Int): Long = Math.floorDiv(x.toLong, w.toLong)
+        /** (count, partials) of a probe filling `out`, None for NULL. */
+        def probe(run: InternalRow => Long) = {
+          val out = new GenericInternalRow(3)
+          val c = run(out)
+          (c, if (c <= 0L) Seq(None, None)
+            else Seq(1, 2).map(i => if (out.isNullAt(i)) None else Some(out.getLong(i))))
+        }
+        def model(rows: List[(Int, Int, Option[Long], Option[Long])]) = {
+          val ms = Seq(rows.flatMap(_._3), rows.flatMap(_._4))
+          (rows.size.toLong, if (rows.isEmpty) Seq(None, None)
+            else ms.map(m => if (m.isEmpty) None else Some(m.sum)))
+        }
+        def add(a: Option[Long], b: Option[Long]) =
+          if (a.isEmpty) b else if (b.isEmpty) a else Some(a.get + b.get)
+        val whole = index(ivs)
+        queries.forall { case q @ (qs, qe) =>
+          val overlapping = ivs.filter(iv => iv._1 <= qe && iv._2 >= qs)
+          val perBin = (bin(qs) to bin(qe)).map { b =>
+            val lo = b * w
+            val inBin = ivs.filter(iv => bin(iv._1) <= b && b <= bin(iv._2))
+            val got = probe(index(inBin).probe(qs, qe, lo, lo + w - 1, _))
+            val want = model(overlapping.filter(iv => bin(math.max(qs, iv._1)) == b))
+            assert(got == want, s"bin $b of $q (width $w) over $ivs")
+            got
+          }
+          val total = perBin.foldLeft((0L, Seq[Option[Long]](None, None))) {
+            case ((c, ps), (bc, bps)) => (c + bc, ps.zip(bps).map { case (x, y) => add(x, y) })
+          }
+          val unbinned = probe(whole.probe(qs, qe, _))
+          unbinned == model(overlapping) && total == unbinned
+        }
+      }
+    }
 
   private def law(binRange: Boolean) =
     forAll(genIvs(0L), genIvs(1000L)) { (ls, rs) =>

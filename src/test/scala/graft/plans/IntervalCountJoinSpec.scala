@@ -9,6 +9,8 @@ import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.reflect.ClassTag
+
 /** Count-only aggregate pushdown into the interval join
   * ([[IntervalCountPushdownRule]] / [[IntervalCountJoinExec]]): the
   * canonical `GROUP BY key, COUNT(*)` annotation-count never materializes
@@ -38,13 +40,17 @@ class IntervalCountJoinSpec extends AnyFunSuite {
     walk(df.queryExecution.executedPlan)
   }
 
-  /** The bin-range exec of a plan, looking inside adaptive query stages. */
-  private def binExec(p: SparkPlan): Option[IntervalBinCountJoinExec] = p match {
-    case e: IntervalBinCountJoinExec => Some(e)
-    case ad: AdaptiveSparkPlanExec => binExec(ad.executedPlan)
-    case q: QueryStageExec => binExec(q.plan)
-    case other => other.children.flatMap(binExec).headOption
+  /** The first `T` exec of a plan, looking inside adaptive query stages. */
+  private def execOf[T <: SparkPlan: ClassTag](p: SparkPlan): Option[T] = p match {
+    case e: T => Some(e)
+    case ad: AdaptiveSparkPlanExec => execOf[T](ad.executedPlan)
+    case q: QueryStageExec => execOf[T](q.plan)
+    case other => other.children.flatMap(execOf[T]).headOption
   }
+
+  /** The bin-range exec of a plan, looking inside adaptive query stages. */
+  private def binExec(p: SparkPlan): Option[IntervalBinCountJoinExec] =
+    execOf[IntervalBinCountJoinExec](p)
 
   private def hasBinCountExec(df: DataFrame): Boolean =
     binExec(df.queryExecution.executedPlan).isDefined
@@ -444,9 +450,12 @@ class IntervalCountJoinSpec extends AnyFunSuite {
   test("rank-difference counting survives duplicate coordinates and high partition counts") {
     graft.Graft.ensure(spark)
     import graft.SharedSpark.spark.implicits._
-    // Duplicate starts/ends, abutting intervals, a contig with no rights.
+    // Duplicate starts/ends, abutting intervals, a contig with no rights,
+    // and two inverted (start > end) stream rows that overlap nothing
+    // under the per-pair predicate either.
     val a = Seq((1L, "1", 10, 20), (2L, "1", 10, 20), (3L, "1", 21, 30),
-      (4L, "1", 500, 600), (5L, "2", 5, 9), (6L, "3", 1, 2))
+      (4L, "1", 500, 600), (5L, "2", 5, 9), (6L, "3", 1, 2),
+      (7L, "1", 700, 650), (8L, "2", 50, 40))
       .toDF("a_key", "contig", "pos_start", "pos_end")
     val b = Seq((1L, "1", 20, 25), (2L, "1", 20, 25), (3L, "1", 26, 28),
       (4L, "2", 9, 9))
@@ -458,6 +467,10 @@ class IntervalCountJoinSpec extends AnyFunSuite {
       // By hand: b1/b2 (20,25) overlap a1,a2 (10,20) and a3 (21,30) -> 3 each;
       // b3 (26,28) overlaps a3 -> 1; b4 (2,"9..9") overlaps a5 (5,9) -> 1.
       assert(got === Seq((1L, 3L), (2L, 3L), (3L, 1L), (4L, 1L)))
+      // Grouped by the build side, the inverted stream rows are dropped
+      // and counted, as in the stream-grouped direction.
+      val exec = execOf[IntervalCountJoinExec](q.queryExecution.executedPlan).get
+      assert(!exec.buildLeft && exec.metrics("invertedDropped").value === 2L)
     }
   }
 }
