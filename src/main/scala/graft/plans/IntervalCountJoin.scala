@@ -487,7 +487,9 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
           val iv = ivProj(srow)
           val key = probeKey(srow, iv)
           if (key != null) idxMap.get(key).foreach { idx =>
-            val h = hists.getOrElseUpdate(key.copy(), new Hists(idx.size))
+            // Copy the (reused) projected key only on a miss.
+            var h = hists.getOrNull(key)
+            if (h == null) { h = new Hists(idx.size); hists.update(key.copy(), h) }
             val j = idx.startsLe(iv.getInt(1))
             val p = idx.endsLt(iv.getInt(0))
             if (nSums > 0) {
@@ -649,8 +651,12 @@ case class IntervalBinCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
         else {
           indexReplicas += 1
           val iv = iIvProj(row)
-          groups.getOrElseUpdate(key.copy(), new CountRankIndex.Accumulator(nSums))
-            .add(iv.getInt(0), iv.getInt(1), sumProj(row))
+          var acc = groups.getOrNull(key)
+          if (acc == null) {
+            acc = new CountRankIndex.Accumulator(nSums)
+            groups.update(key.copy(), acc)
+          }
+          acc.add(iv.getInt(0), iv.getInt(1), sumProj(row))
         }
       }
       val index = groups.mapValuesNow(_.result())

@@ -952,7 +952,7 @@ object BcfSource {
     val fs = new HPath(path).getFileSystem(conf)
     val files = SourceUtil.listDataFiles(fs, path)
     require(files.nonEmpty, s"BcfSource: no files match '$path'")
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val taskConf = SourceUtil.taskConf(spark.sparkContext)
 
     val rdd = pruned match {
       case Some(tasks) if tasks.isEmpty =>
@@ -961,7 +961,7 @@ object BcfSource {
         spark.sparkContext.parallelize(tasks, tasks.length)
           .flatMap { case (file, len, ranges) =>
             val hp = new HPath(file)
-            val tfs = hp.getFileSystem(serConf.value)
+            val tfs = hp.getFileSystem(taskConf.value.value)
             // Dictionaries from the file's own header (bounded read).
             val (_, strings, contigs) = {
               val hin = tfs.open(hp)
@@ -999,7 +999,7 @@ object BcfSource {
             files.map(_.getPath.toString), files.length)
           .flatMap { file =>
             val hp = new HPath(file)
-            val in = hp.getFileSystem(serConf.value).open(hp)
+            val in = hp.getFileSystem(taskConf.value.value).open(hp)
             val rd = new BcfFormat.BcfReader(in, flagKeys)
             Option(org.apache.spark.TaskContext.get()).foreach(
               _.addTaskCompletionListener[Unit](_ => in.close()))
@@ -1040,11 +1040,11 @@ object BcfIndex {
       .filter(st => overwrite ||
         !fs.exists(new HPath(st.getPath.toString + ".csi")))
     if (files.isEmpty) return 0L
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val taskConf = SourceUtil.taskConf(spark.sparkContext)
     val work = files.map(st => (st.getPath.toString, st.getLen))
     spark.sparkContext.parallelize(work, work.length).map { case (file, len) =>
       val hp = new HPath(file)
-      val tfs = hp.getFileSystem(serConf.value)
+      val tfs = hp.getFileSystem(taskConf.value.value)
       val in = tfs.open(hp)
       val out = tfs.create(new HPath(file + ".csi"), true)
       try indexOne(in, len, out) finally in.close()

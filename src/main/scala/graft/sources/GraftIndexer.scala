@@ -43,12 +43,12 @@ object GraftIndexer {
     val files = SourceUtil.listDataFiles(fs, path, ".gz")
       .filter(st => overwrite || !fs.exists(VcfFormat.gviPath(st.getPath)))
     if (files.isEmpty) return 0L
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val taskConf = SourceUtil.taskConf(spark.sparkContext)
     val fmt = format
     val work = files.map(st => (st.getPath.toString, st.getLen))
     spark.sparkContext.parallelize(work, work.length).map { case (file, len) =>
       val hp = new HPath(file)
-      val tfs = hp.getFileSystem(serConf.value)
+      val tfs = hp.getFileSystem(taskConf.value.value)
       val in = tfs.open(hp)
       val out = new java.io.BufferedWriter(new java.io.OutputStreamWriter(
         tfs.create(VcfFormat.gviPath(hp), true), StandardCharsets.UTF_8))
@@ -94,13 +94,13 @@ object GraftIndexer {
       .filter(st => overwrite ||
         !fs.exists(new HPath(st.getPath.toString + suffix)))
     if (files.isEmpty) return 0L
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val taskConf = SourceUtil.taskConf(spark.sparkContext)
     val fmt = format
     val asCsi = csi
     val work = files.map(st => (st.getPath.toString, st.getLen))
     spark.sparkContext.parallelize(work, work.length).map { case (file, len) =>
       val hp = new HPath(file)
-      val tfs = hp.getFileSystem(serConf.value)
+      val tfs = hp.getFileSystem(taskConf.value.value)
       val in = tfs.open(hp)
       val out = tfs.create(new HPath(file + suffix), true)
       try tabixOne(in, len, fmt, out, asCsi) finally in.close()

@@ -279,6 +279,47 @@ object SourceUtil {
           s"re-build it (${e.getClass.getSimpleName}: ${e.getMessage})", e)
     }
 
+  /** The Hadoop conf as source and sink tasks read it (`b.value.value`):
+    * ONE broadcast per context of a copy of `sc.hadoopConfiguration`, so
+    * a task closure carries a broadcast handle instead of the whole conf.
+    * A conf captured in the closure (~1 000 entries) would be deserialized
+    * by every task of the scan AND of every later stage whose lineage
+    * holds the scan RDD.
+    *
+    *  - The broadcast holds a COPY: in local mode tasks get the driver's
+    *    object, and a live conf would race with driver-side `set` calls.
+    *  - Every call compares the live entries with the copy's snapshot and
+    *    broadcasts again when they differ, so a scan sees the conf as it
+    *    was when the scan was planned.
+    *  - A superseded broadcast is never destroyed — a running job may
+    *    still read it; the ContextCleaner reclaims it once no RDD holds
+    *    it. The memo keeps its context only weakly, so a stopped context
+    *    is never pinned and its successor broadcasts afresh. */
+  private[graft] def taskConf(sc: org.apache.spark.SparkContext)
+      : org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration] =
+    synchronized {
+      val live = confEntries(sc.hadoopConfiguration)
+      taskConfMemo match {
+        case Some(m) if (m.sc.get eq sc) && m.entries == live => m.conf
+        case _ =>
+          val copy = new org.apache.hadoop.conf.Configuration(sc.hadoopConfiguration)
+          val b = sc.broadcast(new org.apache.spark.util.SerializableConfiguration(copy))
+          taskConfMemo = Some(TaskConfMemo(
+            new java.lang.ref.WeakReference(sc), confEntries(copy), b))
+          b
+      }
+    }
+
+  private case class TaskConfMemo(sc: java.lang.ref.WeakReference[org.apache.spark.SparkContext],
+      entries: Map[String, String],
+      conf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration])
+  private var taskConfMemo: Option[TaskConfMemo] = None
+
+  private def confEntries(conf: org.apache.hadoop.conf.Configuration): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+  }
+
   /** Drop the memoized enumeration for `path` — called on relation
     * creation so `REFRESH TABLE` (which re-resolves the relation)
     * reaches these caches like it reaches Spark's own listing cache. */
@@ -1156,10 +1197,10 @@ object BamSource {
     }
     if (splits.isEmpty) return spark.sparkContext.emptyRDD[Row]
 
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val taskConf = SourceUtil.taskConf(spark.sparkContext)
     spark.sparkContext.parallelize(splits, splits.length).flatMap { sp =>
       val hp = new HPath(sp.file)
-      def open() = hp.getFileSystem(serConf.value).open(hp)
+      def open() = hp.getFileSystem(taskConf.value.value).open(hp)
       val refIdOk: Array[Boolean] =
         if (contigs.isEmpty && !contigNotNull) null
         else {
@@ -1391,11 +1432,11 @@ object CramSource {
     }
     if (splits.isEmpty) return spark.sparkContext.emptyRDD[Row]
 
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val taskConf = SourceUtil.taskConf(spark.sparkContext)
     val refPathB = refPath
     spark.sparkContext.parallelize(splits, splits.length).flatMap { sp =>
       val hp = new HPath(sp.file)
-      val tfs = hp.getFileSystem(serConf.value)
+      val tfs = hp.getFileSystem(taskConf.value.value)
       // ONE stream per task, positioned reads per container (the
       // planning path reads the index instead; an open per container
       // here would be two RPC round-trips per megabyte at scale).

@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.util.SerializableConfiguration
 
 /** The one directory lifecycle behind the genomic file sinks (`writeBam`,
   * `writeCram`, `writeSam`, `writeVcf`, `writeBcf`) — the hadoop-bam
@@ -29,9 +28,9 @@ private[sources] object ShardedSink {
 
   def write[T](rows: RDD[T], path: String, ext: String, overwrite: Boolean)(
       shard: ShardWriter[T]): Unit = {
-    val conf = new SerializableConfiguration(rows.sparkContext.hadoopConfiguration)
+    val taskConf = SourceUtil.taskConf(rows.sparkContext)
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf.value)
+    val fs = dir.getFileSystem(rows.sparkContext.hadoopConfiguration)
     if (overwrite && fs.exists(dir)) fs.delete(dir, true)
     fs.mkdirs(dir)
     val token = if (overwrite) "" else "-" + java.util.UUID.randomUUID.toString.take(8)
@@ -39,7 +38,7 @@ private[sources] object ShardedSink {
       if (it.isEmpty) Iterator.empty
       else {
         val p = new Path(path, f"part-$idx%05d$token$ext")
-        shard(p.getFileSystem(conf.value), p, it)
+        shard(p.getFileSystem(taskConf.value.value), p, it)
         Iterator.single(1)
       }
     }.count()

@@ -272,11 +272,11 @@ object VcfFormat {
           org.apache.spark.sql.Encoders.STRING,
           org.apache.spark.sql.Encoders.STRING))
         .toDF("value", "_file").select(cols.map(col): _*))
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
+    val taskConf = SourceUtil.taskConf(spark.sparkContext)
     val rdd = spark.sparkContext.parallelize(tasks, tasks.length)
       .flatMap { case (file, len, offs, ranges) =>
         val hp = new HPath(file)
-        val in = hp.getFileSystem(serConf.value).open(hp)
+        val in = hp.getFileSystem(taskConf.value.value).open(hp)
         Option(org.apache.spark.TaskContext.get()).foreach(
           _.addTaskCompletionListener[Unit](_ => in.close()))
         // The header prefix is PER FORMAT: '#' for VCF, '@' for SAM. A

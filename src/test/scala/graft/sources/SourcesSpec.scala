@@ -242,6 +242,61 @@ class SourcesSpec extends SparkSpec {
     assert(tags.nonEmpty)
   }
 
+  /** A BAM scan's RDD as its tasks receive it: the closure-serialized
+    * size, and the broadcasts it carries (collected while reading it back). */
+  private def scanBinary(table: String)
+      : (Int, Seq[org.apache.spark.broadcast.Broadcast[_]]) = {
+    val rdd = spark.table(table).queryExecution.sparkPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.RowDataSourceScanExec => s.rdd
+    }.get
+    val buf = org.apache.spark.SparkEnv.get.closureSerializer.newInstance().serialize(rdd)
+    val bytes = new Array[Byte](buf.remaining()); buf.get(bytes)
+    val seen = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.broadcast.Broadcast[_]]
+    val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(bytes)) {
+      enableResolveObject(true)
+      override def resolveObject(o: AnyRef): AnyRef = {
+        o match { case b: org.apache.spark.broadcast.Broadcast[_] => seen += b; case _ => }
+        o
+      }
+    }
+    in.readObject()
+    (bytes.length, seen.toSeq)
+  }
+
+  test("source tasks get the Hadoop conf as one memoized broadcast, not in the closure") {
+    val path = s"$base/bam_taskconf"
+    SourceUtil.writeBam(Tables.readsMd(spark, sf0001).limit(200), s"$path/s1.bam")
+    spark.sql("DROP TABLE IF EXISTS bam_taskconf")
+    spark.sql(s"""CREATE TABLE bam_taskconf USING graft.sources.BamSource
+                 |OPTIONS (path '$path/s1.bam')""".stripMargin)
+    // With the conf captured in the closure the scan RDD is ~110 KB; with
+    // the broadcast handle ~3.4 KB, the decode closure's own captures.
+    val (size, first) = scanBinary("bam_taskconf")
+    assert(size < 16 * 1024, s"scan RDD serializes to $size bytes")
+    assert(first.size === 1, first)
+    // An unchanged conf: the next scan shares the broadcast.
+    val (_, second) = scanBinary("bam_taskconf")
+    assert(second.map(_.id) === first.map(_.id))
+    val sc = spark.sparkContext
+    def read(b: org.apache.spark.broadcast.Broadcast[_], key: String): Seq[String] =
+      sc.parallelize(0 until 2, 2).map(_ => b.value
+        .asInstanceOf[org.apache.spark.util.SerializableConfiguration].value.get(key))
+        .collect().toSeq
+    val key = "graft.probe"
+    try {
+      sc.hadoopConfiguration.set(key, "v1")
+      val (_, v1) = scanBinary("bam_taskconf")
+      assert(v1.map(_.id) != first.map(_.id), "a changed conf must rebroadcast")
+      sc.hadoopConfiguration.set(key, "v2")
+      val (_, v2) = scanBinary("bam_taskconf")
+      assert(v2.map(_.id) != v1.map(_.id))
+      // Each scan reads the conf as it was when it was planned.
+      assert(read(v1.head, key) === Seq("v1", "v1"))
+      assert(read(v2.head, key) === Seq("v2", "v2"))
+      assert(spark.table("bam_taskconf").count() === 200L)
+    } finally sc.hadoopConfiguration.unset(key)
+  }
+
   test("sidecar range index skips BGZF members on selective queries (P4)") {
     val path = s"$base/bam_indexed"
     // Coordinate-sorted write: the layout the index exploits (the same

@@ -1,0 +1,169 @@
+#!/usr/bin/env python3
+"""Summarize an uncompressed Spark event log per job and stage.
+
+Per stage, summed over its task attempts: tasks, executor deserialize
+wall and CPU time, executor run time, executor CPU time and shuffle
+bytes written. Each job lists the stages that ran tasks for it, then
+its total; the last line is the log's total. A job that carries the
+benchmark probe's `graftbench.span` local property shows that span id,
+and with --spans the span file written beside a benchmark result
+(`<run>.spans.jsonl`) turns it into the span's name and pass.
+
+    python3 tools/stage_profile.py EVENTLOG [--spans RUN.spans.jsonl]
+    python3 tools/stage_profile.py EVENTLOG --by span [--spans ...]
+    python3 tools/stage_profile.py EVENTLOG --json
+
+--by span folds the stages into one line per span name (every pass
+together), --by pass into one line per benchmark pass (both need
+--spans); --json prints the per-job breakdown as one JSON object.
+
+To capture a log, start any JVM that builds a SparkContext with
+
+    JAVA_TOOL_OPTIONS="-Dspark.eventLog.enabled=true \\
+      -Dspark.eventLog.dir=file://<existing dir> -Dspark.eventLog.compress=false"
+
+Spark reads `spark.*` JVM system properties into its conf, so this
+works for `graftbench/run.py`, `sbt runMain` and the test JVM alike.
+EVENTLOG is the log file, or the `eventlog_v2_<app id>` directory a
+rolling log (the Spark 4 default) writes its `events_<n>_*` files to.
+"""
+import argparse
+import json
+import os
+import re
+import sys
+
+FIELDS = ("tasks", "deser_s", "deser_cpu_s", "run_s", "cpu_s", "shuffle_write")
+SPAN_KEY = "graftbench.span"
+
+
+def empty():
+    return dict.fromkeys(FIELDS, 0)
+
+
+def add(into, frm):
+    for f in FIELDS:
+        into[f] += frm[f]
+
+
+def log_lines(path):
+    if os.path.isdir(path):
+        parts = [n for n in os.listdir(path) if re.match(r"events_\d+_", n)]
+        files = [os.path.join(path, n)
+                 for n in sorted(parts, key=lambda n: int(n.split("_")[1]))]
+    else:
+        files = [path]
+    for name in files:
+        with open(name, encoding="utf-8") as f:
+            yield from f
+
+
+def read_log(path):
+    """Jobs (id -> span id, stage ids) and per-stage sums from one log."""
+    jobs, stages = {}, {}
+    for line in log_lines(path):
+        ev = json.loads(line)
+        kind = ev.get("Event")
+        if kind == "SparkListenerJobStart":
+            props = ev.get("Properties") or {}
+            jobs[ev["Job ID"]] = {"span": props.get(SPAN_KEY), "stages": ev["Stage IDs"]}
+            for info in ev.get("Stage Infos", []):
+                stages.setdefault(info["Stage ID"], {"name": info.get("Stage Name", ""),
+                                                     **empty()})
+        elif kind == "SparkListenerTaskEnd":
+            m = ev.get("Task Metrics")
+            if not m:
+                continue
+            s = stages.setdefault(ev["Stage ID"], {"name": "", **empty()})
+            s["tasks"] += 1
+            s["deser_s"] += m.get("Executor Deserialize Time", 0) / 1e3
+            s["deser_cpu_s"] += m.get("Executor Deserialize CPU Time", 0) / 1e9
+            s["run_s"] += m.get("Executor Run Time", 0) / 1e3
+            s["cpu_s"] += m.get("Executor CPU Time", 0) / 1e9
+            s["shuffle_write"] += (m.get("Shuffle Write Metrics") or {}).get(
+                "Shuffle Bytes Written", 0)
+    return jobs, stages
+
+
+def read_spans(path):
+    spans = {}
+    with open(path, encoding="utf-8") as f:
+        for line in f:
+            if line.strip():
+                s = json.loads(line)
+                spans[str(s["id"])] = s
+    return spans
+
+
+def by_job(jobs, stages):
+    """Each stage that ran tasks goes to the first job listing it: a later
+    job that lists a stage reuses its shuffle output and runs nothing."""
+    owner = {}
+    for jid in sorted(jobs):
+        for sid in jobs[jid]["stages"]:
+            owner.setdefault(sid, jid)
+    out = {jid: {"span": j["span"], "stages": {}, "total": empty()} for jid, j in jobs.items()}
+    for sid, s in sorted(stages.items()):
+        if s["tasks"] == 0 or sid not in owner:
+            continue
+        job = out[owner[sid]]
+        job["stages"][sid] = s
+        add(job["total"], s)
+    return {jid: j for jid, j in sorted(out.items()) if j["stages"]}
+
+
+def span_label(span_id, spans):
+    if span_id is None:
+        return "-"
+    s = spans.get(str(span_id))
+    return f"{s['name']}#p{s['pass']}" if s else f"span {span_id}"
+
+
+def row(label, t):
+    return (f"{label:<44.44} {t['tasks']:>6} {t['deser_s']:>8.2f} {t['deser_cpu_s']:>8.2f} "
+            f"{t['run_s']:>8.2f} {t['cpu_s']:>8.2f} {t['shuffle_write']:>12}")
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("eventlog")
+    ap.add_argument("--spans", help="the run's <run>.spans.jsonl, to name span ids")
+    ap.add_argument("--by", choices=("stage", "span", "pass"), default="stage")
+    ap.add_argument("--json", action="store_true")
+    a = ap.parse_args()
+    jobs, stages = read_log(a.eventlog)
+    spans = read_spans(a.spans) if a.spans else {}
+    per_job = by_job(jobs, stages)
+    total = empty()
+    for j in per_job.values():
+        add(total, j["total"])
+    if a.json:
+        print(json.dumps({"jobs": per_job, "total": total}, indent=1))
+        return
+    print(f"{'':<44} {'tasks':>6} {'deser_s':>8} {'deser_cpu':>8} {'run_s':>8} "
+          f"{'cpu_s':>8} {'shuffle_w':>12}")
+    if a.by in ("span", "pass"):
+        groups = {}
+        for j in per_job.values():
+            s = spans.get(str(j["span"])) if j["span"] is not None else None
+            if not s:
+                key = span_label(j["span"], spans)
+            else:
+                key = s["name"] if a.by == "span" else s["pass"]
+            add(groups.setdefault(key, empty()), j["total"])
+        if a.by == "span":
+            for key, t in sorted(groups.items(), key=lambda kv: -kv[1]["run_s"]):
+                print(row(key, t))
+        else:
+            for key, t in sorted(groups.items(), key=lambda kv: (isinstance(kv[0], str), kv[0])):
+                print(row(key if isinstance(key, str) else f"pass {key}", t))
+    else:
+        for jid, j in per_job.items():
+            print(row(f"job {jid} {span_label(j['span'], spans)}", j["total"]))
+            for sid, s in j["stages"].items():
+                print(row(f"  stage {sid} {s['name']}", s))
+    print(row("total", total))
+
+
+if __name__ == "__main__":
+    sys.exit(main())
