@@ -6,8 +6,8 @@ import org.apache.spark.storage.StorageLevel
 /** Scoped tracking of operator-internal persists.
   *
   * The multi-consumer operators (dedup/ANN/coverage families) persist
-  * intermediate frames — LSH band indexes, shingle sets, tagged bucket
-  * stats — that CANNOT be unpersisted inside the operator: the returned
+  * intermediate frames — shingle sets, hashed shingles, LSH candidate
+  * pairs — that CANNOT be unpersisted inside the operator: the returned
   * result is lazy, so the caches are first consumed whenever the caller
   * runs its action. Before r4 the only cleanup was the global
   * `GraftSession.clearOperatorCaches()` (drop every persistent RDD in the

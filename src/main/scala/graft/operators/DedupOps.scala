@@ -9,9 +9,10 @@ import org.apache.spark.sql.functions._
   * band-bucket join → within-bucket exact-Jaccard verify), and SimHash.
   *
   * Scale design (the 100 TB story): there is **no all-pairs stage
-  * anywhere**. Candidate generation is a self-equi-join on (band, band
-  * hash) — a plain shuffle join whose key cardinality grows with the
-  * corpus, so it spreads over any number of executors; the exact-Jaccard
+  * anywhere**. Candidate generation is one hash exchange on the band
+  * bucket key, whose cardinality grows with the corpus, so it spreads
+  * over any number of executors; each task streams its sorted buckets
+  * into pairs ([[cappedSelfJoinPairs]]); the exact-Jaccard
   * verify runs only on LSH candidates. Signatures are one pass over
   * exploded shingles with 128 codegen'd `min` aggregates (map-side partial
   * aggregation shrinks the shuffle to one row per (doc, 128 longs)).
@@ -154,7 +155,7 @@ object DedupOps {
     * size cap — the skew guard of every LSH family here.
     *
     * Input: `(id, bkey)` rows (an id may appear under many keys). Buckets
-    * with at most `cap` members contribute their full within-bucket pairs.
+    * with at most `cap` rows contribute their full within-bucket pairs.
     * A bucket beyond `cap` — at corpus scale that is a flood of
     * near-identical documents, where all-pairs output is Θ(bucket²) and
     * would OOM a task before it finished — instead contributes **star
@@ -162,34 +163,12 @@ object DedupOps {
     * connected-components / keep-one-representative dedup downstream
     * reaches exactly the same clusters, at O(bucket) cost; only the
     * explicit pair list between non-representative members is forfeited.
-    * Deterministic (min id as hub), no sampling, no salting randomness. */
-  def cappedSelfJoinPairs(keyed: DataFrame, cap: Int = DefaultBucketCap): DataFrame = {
-    val stats = keyed.groupBy(col("bkey"))
-      .agg(count(lit(1)).as("bsz"), min(col("id")).as("rep"))
-    // One stats join, materialized once; both the small self-join sides and
-    // the star edges read the persisted result.
-    val tagged = keyed.join(stats, "bkey")
-      .transform(CacheScope.persistTracked)
-    val small = tagged.filter(col("bsz") <= cap).select(col("bkey"), col("id"))
-    val pairsSmall = small.as("x").join(small.as("y"),
-        col("x.bkey") === col("y.bkey") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-    val pairsBig = tagged.filter(col("bsz") > cap && col("id") =!= col("rep"))
-      .select(col("rep").as("id_a"), col("id").as("id_b"))
-    pairsSmall.unionByName(pairsBig).distinct()
-  }
+    * Deterministic (min id as hub), no sampling, no salting randomness.
+    * A bucket's size counts rows, so a repeated `(id, bkey)` row counts
+    * twice. One exchange on `bkey` (see [[sortedBucketPairs]]). */
+  def cappedSelfJoinPairs(keyed: DataFrame, cap: Int = DefaultBucketCap): DataFrame =
+    sortedBucketPairs(keyed, None, cap)
 
-  /** Candidate pairs (id_a < id_b) sharing at least one MinHash LSH band
-    * bucket (64 bands × 2 rows; `bkey = xxhash64(band, rows)` so band
-    * identity is folded into the 64-bit key — cross-band collisions are
-    * harmless because candidates are exact-verified downstream).
-    *
-    * The banded frame is persisted before the self-join: without the
-    * materialization barrier, Catalyst's project-collapsing inlines the
-    * signature expression into all 64 band keys on both join sides and
-    * recomputes the full MinHash per comparison (measured 11.8s vs 0.2s
-    * on the 672-doc corpus). The persisted state is (doc_id, bkey)
-    * — 64 small rows per doc, the standard LSH index. */
   /** The 64 band-bucket keys of a `sig` column as one array expression
     * (band identity folded into each 64-bit key). */
   private[graft] def bandKeysArray: Column = array((0 until NumBands).map { j =>
@@ -200,11 +179,14 @@ object DedupOps {
   private[graft] def bandIndex(sigs: DataFrame): DataFrame =
     sigs.select(col("doc_id").as("id"), explode(bandKeysArray).as("bkey"))
 
-  def lshCandidatePairs(sigs: DataFrame, cap: Int = DefaultBucketCap): DataFrame = {
-    val banded = bandIndex(sigs)
-      .transform(CacheScope.persistTracked)
-    cappedSelfJoinPairs(banded, cap)
-  }
+  /** Candidate pairs (id_a < id_b) sharing at least one MinHash LSH band
+    * bucket (64 bands × 2 rows; `bkey = xxhash64(band, rows)` so band
+    * identity is folded into the 64-bit key — cross-band collisions are
+    * harmless because candidates are exact-verified downstream). The
+    * band index has one consumer, the bucket exchange, so it is computed
+    * on that exchange's map side and never persisted. */
+  def lshCandidatePairs(sigs: DataFrame, cap: Int = DefaultBucketCap): DataFrame =
+    cappedSelfJoinPairs(bandIndex(sigs), cap)
 
   /** Exact-Jaccard verification of candidate pairs against the shingle
     * sets; both engines compute jaccard as an exact int/int division, so
@@ -272,12 +254,12 @@ object DedupOps {
     * `left`, `id_b` from `right`.
     *
     * Candidates come from shared MinHash band buckets across the two
-    * indexes — a plain band-key equi-join, shuffle keyed on the 64-bit
-    * bucket key, so at scale the exchange moves 64 small rows per
-    * document per side and no all-pairs stage exists. Skew guard,
-    * cross-join flavor: a band bucket whose RIGHT membership exceeds
-    * `cap` (a flood of near-identical base documents) joins left members
-    * against only the bucket's min right id — detection is preserved
+    * indexes — both band indexes go through one exchange keyed on the
+    * 64-bit bucket key ([[crossCappedPairs]]), so at scale it moves 64
+    * small rows per document per side and no all-pairs stage exists.
+    * Skew guard, cross-join flavor: a band bucket whose RIGHT membership
+    * exceeds `cap` (a flood of near-identical base documents) pairs left
+    * members with only the bucket's min right id — detection is preserved
     * only when the left doc also verifies against that representative
     * (true for genuinely near-identical floods; a left doc near some
     * non-representative member but below threshold vs the
@@ -289,33 +271,94 @@ object DedupOps {
       shingleN: Int = 3, cap: Int = DefaultBucketCap): DataFrame = {
     val shL = shingleSets(left, shingleN).transform(CacheScope.persistTracked)
     val shR = shingleSets(right, shingleN).transform(CacheScope.persistTracked)
-    val bL = bandIndex(minhashSignatures(shL))
-      .transform(CacheScope.persistTracked)
-    val bR = bandIndex(minhashSignatures(shR))
-      .transform(CacheScope.persistTracked)
-    verifyJaccardAB(crossCappedPairs(bL, bR, cap), shL, shR, threshold)
+    verifyJaccardAB(crossCappedPairs(bandIndex(minhashSignatures(shL)),
+      bandIndex(minhashSignatures(shR)), cap), shL, shR, threshold)
   }
 
   /** Cross-index candidate pairs `(id_a from bL, id_b from bR)` sharing a
     * bucket key — the cross-join flavor of [[cappedSelfJoinPairs]]'s
     * flood guard, shared by the text and embedding cross-dedup families:
-    * a bucket whose RIGHT membership exceeds `cap` pairs left members
-    * against only its min right id (Θ(L·R) per-bucket blowup avoided;
-    * detection survives only through the representative — see
-    * [[crossDupPairs]] for the caveat). Inputs are `(id, bkey)` band
-    * indexes. */
-  private[graft] def crossCappedPairs(bL: DataFrame, bR: DataFrame, cap: Int): DataFrame = {
-    val statsR = bR.groupBy(col("bkey"))
-      .agg(count(lit(1)).as("bsz"), min(col("id")).as("rep"))
-    val taggedR = bR.join(statsR, "bkey")
-      .transform(CacheScope.persistTracked)
-    val smallPairs = bL.as("l")
-      .join(taggedR.filter(col("bsz") <= cap).as("r"), col("l.bkey") === col("r.bkey"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-    val floodPairs = bL.as("l")
-      .join(statsR.filter(col("bsz") > cap).as("r"), col("l.bkey") === col("r.bkey"))
-      .select(col("l.id").as("id_a"), col("rep").as("id_b"))
-    smallPairs.unionByName(floodPairs).distinct()
+    * a bucket with more than `cap` RIGHT rows pairs left members against
+    * only its min right id (Θ(L·R) per-bucket blowup avoided; detection
+    * survives only through the representative — see [[crossDupPairs]]
+    * for the caveat). Inputs are `(id, bkey)` band indexes. */
+  private[graft] def crossCappedPairs(bL: DataFrame, bR: DataFrame, cap: Int): DataFrame =
+    sortedBucketPairs(bR, Some(bL), cap)
+
+  /** The one candidate-pair kernel behind [[cappedSelfJoinPairs]] (no
+    * `probe`) and [[crossCappedPairs]] (`probe` = the left index): one
+    * hash exchange on `bkey`, a sort within each partition by
+    * `(bkey, probe, id)`, then one streaming pass per task
+    * ([[bucketPairs]]). A bucket never spans two partitions — adaptive
+    * execution may coalesce a `repartition` exchange but never splits
+    * one — so no stats aggregate, join or broadcast is needed to know a
+    * bucket's size. A pair sharing several buckets is emitted once per
+    * bucket, hence the `distinct()`. The distinct pairs are persisted
+    * because they are read more than once: by the verify, and again when
+    * `clusters` runs over a near-dup result that was not materialized. */
+  private def sortedBucketPairs(index: DataFrame, probe: Option[DataFrame],
+      cap: Int): DataFrame = {
+    val spark = index.sparkSession
+    import spark.implicits._
+    val pairs = probe match {
+      case None =>
+        index.select(col("bkey"), col("id"))
+          .repartition(col("bkey")).sortWithinPartitions(col("bkey"), col("id"))
+          .as[(Long, Long)]
+          .mapPartitions(it => bucketPairs(it.map { case (k, id) => (k, false, id) }, cap, cross = false))
+      case Some(p) =>
+        index.select(col("bkey"), lit(false).as("probe"), col("id"))
+          .unionByName(p.select(col("bkey"), lit(true).as("probe"), col("id")))
+          .repartition(col("bkey")).sortWithinPartitions(col("bkey"), col("probe"), col("id"))
+          .as[(Long, Boolean, Long)]
+          .mapPartitions(bucketPairs(_, cap, cross = true))
+    }
+    CacheScope.persistTracked(pairs.toDF("id_a", "id_b").distinct())
+  }
+
+  /** One task's pass over `(bkey, probe, id)` rows clustered by `bkey`
+    * and sorted by `(bkey, probe, id)`: each bucket's index rows
+    * (`probe = false`) come first, in id order, then its probe rows.
+    *  - Self mode (index rows only): a bucket of at most `cap` rows gives
+    *    every pair `(a, b)` with `a < b`; a larger one gives the star
+    *    edges `(min id, id)` for every `id ≠ min id`.
+    *  - Cross mode: each probe row `l` pairs with every index id of a
+    *    bucket of at most `cap` index rows, and with the min index id of
+    *    a larger one.
+    * At most `cap + 1` index ids are buffered, and pairs are produced
+    * lazily, so a flooded bucket costs O(cap) memory, never O(bucket²). */
+  private[operators] def bucketPairs(rows: Iterator[(Long, Boolean, Long)], cap0: Int,
+      cross: Boolean): Iterator[(Long, Long)] = {
+    val cap = math.max(cap0, 0)
+    val in = rows.buffered
+    var buf = new Array[Long](16)
+    def at(k: Long, probe: Boolean): Boolean =
+      in.hasNext && in.head._1 == k && in.head._2 == probe
+    def rest(k: Long, probe: Boolean): Iterator[Long] =
+      Iterator.continually(()).takeWhile(_ => at(k, probe)).map(_ => in.next()._3)
+    Iterator.continually(()).takeWhile(_ => in.hasNext).flatMap { _ =>
+      val k = in.head._1
+      var n = 0
+      while (n <= cap && at(k, probe = false)) {
+        if (n == buf.length) buf = java.util.Arrays.copyOf(buf, math.min(2L * n, cap + 1L).toInt)
+        buf(n) = in.next()._3
+        n += 1
+      }
+      // This bucket's pairs are drained before the next bucket refills buf.
+      val (ids, m) = (buf, n)
+      if (cross) {
+        rest(k, probe = false).foreach(_ => ())
+        rest(k, probe = true).flatMap { l =>
+          if (m > cap) Iterator.single((l, ids(0))) else ids.iterator.take(m).map((l, _))
+        }
+      } else if (m > cap) {
+        (ids.iterator.take(m) ++ rest(k, probe = false)).filter(_ != ids(0)).map((ids(0), _))
+      } else {
+        Iterator.range(0, m).flatMap { i =>
+          Iterator.range(i + 1, m).filter(j => ids(i) < ids(j)).map(j => (ids(i), ids(j)))
+        }
+      }
+    }
   }
 
   /** Exact n-gram Jaccard near-duplicate pairs — the no-approximation
@@ -744,7 +787,6 @@ object DedupOps {
       lit((i.toLong * 8 + j) << 16).bitwiseOR(shiftleft(block(i), 8)).bitwiseOR(block(j))
     val banded = sigs
       .select(col("doc_id").as("id"), explode(array(bandKeys: _*)).as("bkey"))
-      .transform(CacheScope.persistTracked)
     cappedSelfJoinPairs(banded, cap)
       .join(sigs.select(col("doc_id").as("id_a"), col("simhash").as("fp_a")), "id_a")
       .join(sigs.select(col("doc_id").as("id_b"), col("simhash").as("fp_b")), "id_b")

@@ -989,9 +989,7 @@ object EmbeddingOps {
           .filter(shiftright(col("x.bkey"), 48) === firstMatch)
           .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
       } else {
-        DedupOps.cappedSelfJoinPairs(
-          banded.select(col("id"), col("bkey"))
-            .transform(CacheScope.persistTracked), cap)
+        DedupOps.cappedSelfJoinPairs(banded, cap)
       }
     verifyCosine(candidates, corpus, corpus, threshold)
   }
@@ -1044,10 +1042,7 @@ object EmbeddingOps {
           .filter(shiftright(col("l.bkey"), 48) === firstMatch)
           .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
       } else {
-        DedupOps.crossCappedPairs(
-          bL.select(col("id"), col("bkey")).transform(CacheScope.persistTracked),
-          bR.select(col("id"), col("bkey")).transform(CacheScope.persistTracked),
-          cap)
+        DedupOps.crossCappedPairs(bL, bR, cap)
       }
     verifyCosine(candidates, left, right, threshold)
   }

@@ -728,4 +728,133 @@ class DedupAnnSpec extends SparkSpec {
       .coalesce(1)
     assert(!(DedupOps.spreadByKey(narrow, col("doc_id")) eq narrow))
   }
+
+  test("capped bucket pairs equal a brute-force model in self and cross mode") {
+    import graft.SharedSpark.spark.implicits._
+    val cap = 4
+    // Buckets of cap - 1, cap and cap + 1 rows, single-row buckets, random
+    // sizes around the cap, and repeated (id, bkey) rows (ids drawn from a
+    // small range, plus explicit copies). Bucket keys span the long range.
+    def buckets(rnd: scala.util.Random, nKeys: Int): Seq[(Long, Long)] =
+      (0 until nKeys).flatMap { b =>
+        val key = if (b % 3 == 0) rnd.nextLong() else b.toLong - 5
+        val size = Seq(cap - 1, cap, cap + 1, 1, 1 + rnd.nextInt(3 * cap))(b % 5)
+        val ids = Seq.fill(size)(rnd.nextInt(40).toLong)
+        (ids ++ ids.take(b % 2)).map(id => (id, key))
+      }
+    def selfModel(rows: Seq[(Long, Long)]): Set[(Long, Long)] =
+      rows.groupBy(_._2).values.flatMap { b =>
+        val ids = b.map(_._1)
+        if (ids.size <= cap) for (a <- ids; c <- ids if a < c) yield (a, c)
+        else ids.filter(_ != ids.min).map(ids.min -> _)
+      }.toSet
+    def crossModel(l: Seq[(Long, Long)], r: Seq[(Long, Long)]): Set[(Long, Long)] = {
+      val byKey = r.groupBy(_._2).map { case (k, b) => k -> b.map(_._1) }
+      l.flatMap { case (id, k) =>
+        byKey.get(k).toSeq.flatMap(ids => if (ids.size <= cap) ids.map(id -> _) else Seq(id -> ids.min))
+      }.toSet
+    }
+    def frame(rows: Seq[(Long, Long)]) =
+      spark.sparkContext.parallelize(rows, 3).toDF("id", "bkey")
+    def pairs(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+      try df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      finally df.unpersist()
+    val rnd = new scala.util.Random(7)
+    val left = buckets(rnd, 60)
+    val right = buckets(rnd, 60) ++ left.take(40).map { case (id, k) => (id + 100, k) }
+    val cases = Seq((left, right), (Seq.empty[(Long, Long)], right), (left, Seq.empty[(Long, Long)]))
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      for (parts <- Seq(1, 7); adaptive <- Seq("true", "false")) {
+        spark.conf.set("spark.sql.adaptive.enabled", adaptive)
+        graft.SharedSpark.withShufflePartitions(parts) {
+          cases.foreach { case (l, r) =>
+            val at = s"shuffle partitions $parts, adaptive $adaptive, ${l.size} x ${r.size} rows"
+            val self = pairs(DedupOps.cappedSelfJoinPairs(frame(r), cap))
+            assert(self.toSet === selfModel(r), at)
+            assert(self.size === self.toSet.size, s"self pairs repeat: $at")
+            val cross = pairs(DedupOps.crossCappedPairs(frame(l), frame(r), cap))
+            assert(cross.toSet === crossModel(l, r), at)
+            assert(cross.size === cross.toSet.size, s"cross pairs repeat: $at")
+          }
+        }
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert(selfModel(right).nonEmpty && crossModel(left, right).nonEmpty)
+  }
+
+  test("a flooded bucket streams its star edges from a bounded buffer") {
+    // One bucket of a million rows at cap 10: the first pair is out after
+    // reading cap + 1 rows, and the whole bucket yields rows - 1 edges.
+    val rows = 1000000
+    var read = 0
+    val in = Iterator.range(0, rows).map { i => read += 1; (42L, false, i.toLong) }
+    val out = DedupOps.bucketPairs(in, 10, cross = false)
+    assert(out.next() === ((0L, 1L)))
+    assert(read === 11)
+    assert(out.size === rows - 2)
+    assert(read === rows)
+  }
+
+  test("embedding near-dup over the cap takes the kernel's capped pairs") {
+    val emb = Tables.embeddings(spark, sf0001)
+    val left = emb.filter(col("vec_id") % 10 === 0)
+    val right = emb.filter(col("vec_id") % 10 =!= 0)
+    val bits = EmbeddingOps.bandBitsFor(0.4)
+    def banded(df: org.apache.spark.sql.DataFrame) =
+      EmbeddingOps.bandKeys(EmbeddingOps.signBuckets(df, "vec_id"), "vec_id", bits)
+    // One below the largest bucket (of the right side, for cross): both
+    // entry points leave the first-match path for the kernel.
+    def capOf(df: org.apache.spark.sql.DataFrame): Int =
+      banded(df).groupBy("bkey").count().agg(max("count")).head.getLong(0).toInt - 1
+    def pairSet(df: org.apache.spark.sql.DataFrame, verified: Boolean) = {
+      val rows = df.collect()
+      if (verified) assert(rows.forall(_.getDouble(2) >= 0.4))
+      rows.map(r => (r.getLong(0), r.getLong(1))).toSet
+    }
+    val capS = capOf(emb)
+    val self = pairSet(EmbeddingOps.cosineNearDupPairs(emb, 0.4, capS), verified = true)
+    assert(self.nonEmpty)
+    assert(self.subsetOf(pairSet(DedupOps.cappedSelfJoinPairs(banded(emb), capS), verified = false)))
+    val capR = capOf(right)
+    val cross = pairSet(EmbeddingOps.crossCosineDupPairs(left, right, 0.4, capR), verified = true)
+    assert(cross.nonEmpty)
+    assert(cross.subsetOf(
+      pairSet(DedupOps.crossCappedPairs(banded(left), banded(right), capR), verified = false)))
+  }
+
+  test("nearDupPairs takes its candidates from one bucket exchange") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    // Every node of an executed plan, into adaptive stages and cached plans.
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case r: ReusedExchangeExec => r +: nodes(r.child)
+      case m: InMemoryTableScanExec => m +: nodes(m.relation.cachedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    def onBkey(e: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      e.exists(_.references.exists(_.name == "bkey"))
+    val pairs = DedupOps.nearDupPairs(corpus, threshold = 0.6)
+    assert(pairs.collect().nonEmpty)
+    val all = nodes(pairs.queryExecution.executedPlan)
+    // The verify joins may broadcast candidate pairs; band rows carry bkey.
+    val bandBroadcasts = all.collect {
+      case b: BroadcastExchangeExec if b.child.output.exists(_.name == "bkey") => b
+    }
+    assert(bandBroadcasts.isEmpty, s"the band index is broadcast:\n${bandBroadcasts.mkString("\n")}")
+    val bkeyExchanges = all.collect {
+      case e: ShuffleExchangeExec => e.outputPartitioning
+    }.collect { case h: HashPartitioning if onBkey(h.expressions) => h }
+    assert(bkeyExchanges.size === 1, s"exchanges on bkey: $bkeyExchanges")
+    val bkeyAggregates = all.collect {
+      case a: BaseAggregateExec if onBkey(a.groupingExpressions) => a
+    }
+    assert(bkeyAggregates.isEmpty, s"bucket stats aggregate:\n${bkeyAggregates.mkString("\n")}")
+  }
 }
