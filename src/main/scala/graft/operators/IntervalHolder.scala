@@ -12,8 +12,11 @@ import scala.reflect.ClassTag
   * [[IntervalForestFactory]] (the array-backed augmented forest); swap in
   * a custom structure with
   * `spark.graft.rangejoin.intervalHolderClass=<factory class name>` —
-  * the class needs a no-arg constructor and must be Serializable (it is
-  * broadcast inside the per-key map it builds).
+  * the class needs a no-arg constructor. The build side reaches the
+  * executors as Spark broadcast rows; each executor JVM instantiates the
+  * factory by name and builds its holders from them once per broadcast
+  * (`graft.plans.ForestBuild`), so holders are never serialized by the
+  * join.
   */
 trait IntervalHolder[T] extends Serializable {
   /** Invoke `f(storedStart, storedEnd, value)` for every stored interval

@@ -159,11 +159,10 @@ object NearestJoinOps {
         "or pin the method: merge to take the distributed sweep, broadcast to take " +
         "responsibility.", spark.sessionState.conf)
     val bc = spark.sparkContext.broadcast(
-      IntervalForest.forest[String, Int](rRows.iterator.zipWithIndex.collect {
-        case (r, i) if !r.isNullAt(rContig) && !r.isNullAt(rStart) && !r.isNullAt(rEnd) =>
-          (r.getUTF8String(rContig).toString, r.getInt(rStart), r.getInt(rEnd), i)
+      IntervalForest.forest[String, InternalRow](rRows.iterator.collect {
+        case r if !r.isNullAt(rContig) && !r.isNullAt(rStart) && !r.isNullAt(rEnd) =>
+          (r.getUTF8String(rContig).toString, r.getInt(rStart), r.getInt(rEnd), r)
       }))
-    val bcRows = spark.sparkContext.broadcast(rRows)
 
     val lSchema = left.schema
     val lContig = lSchema.fieldIndex("contig")
@@ -173,18 +172,17 @@ object NearestJoinOps {
       StructField("distance", IntegerType, nullable = false))
     val outRdd = left.queryExecution.toRdd.mapPartitions { it =>
       val forests = bc.value
-      val rows = bcRows.value
       val pair = new JoinedRow
       val withDist = new JoinedRow
       val distRow = new GenericInternalRow(1)
       val project = UnsafeProjection.create(outSchema)
-      // (right index, signed distance) buffered per left row — the probe
-      // callback must not interleave with the reused JoinedRow. Primitive
-      // arrays reused across rows (no boxed tuples, no per-row
-      // allocation): flatMap exhausts each inner iterator before the next
-      // probe refills them.
+      // (right row, signed distance) buffered per left row — the probe
+      // callback must not interleave with the reused JoinedRow. Arrays
+      // reused across rows (no boxed tuples, no per-row allocation):
+      // flatMap exhausts each inner iterator before the next probe refills
+      // them.
       var cap = 64
-      var hitIdx = new Array[Int](cap)
+      var hitRow = new Array[InternalRow](cap)
       var hitDist = new Array[Int](cap)
       it.flatMap { lrow =>
         if (lrow.isNullAt(lContig) || lrow.isNullAt(lStart) || lrow.isNullAt(lEnd))
@@ -194,19 +192,19 @@ object NearestJoinOps {
           case Some(f) =>
             var n = 0
             f.foreachNearestKDir(lrow.getInt(lStart), lrow.getInt(lEnd), k,
-                incOverlaps, incUp, incDown) { (_, _, ri, d, side) =>
+                incOverlaps, incUp, incDown) { (_, _, r, d, side) =>
               if (n == cap) {
                 cap *= 2
-                hitIdx = java.util.Arrays.copyOf(hitIdx, cap)
+                hitRow = java.util.Arrays.copyOf(hitRow, cap)
                 hitDist = java.util.Arrays.copyOf(hitDist, cap)
               }
-              hitIdx(n) = ri
+              hitRow(n) = r
               hitDist(n) = if (signed && side < 0) -d else d
               n += 1
             }
             Iterator.range(0, n).map { i =>
               distRow.setInt(0, hitDist(i))
-              project(withDist(pair(lrow, rows(hitIdx(i))), distRow)): InternalRow
+              project(withDist(pair(lrow, hitRow(i)), distRow)): InternalRow
             }
         }
       }

@@ -2,23 +2,24 @@ package graft.plans
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.metric.SQLMetric
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.internal.SQLConf
 
-/** The broadcast budget: the one policy for every side graft collects to
-  * the driver and ships to every task. It is the only reader of its two
-  * confs:
+/** The broadcast budget: the one policy for every side graft ships whole
+  * to every task — the interval execs' build sides, which Spark's
+  * broadcast exchange collects ([[BroadcastBuild]]), and the sides
+  * operators collect to the driver themselves. It is the only reader of
+  * its two confs:
   *  - `spark.graft.rangejoin.maxBroadcastBytes` (default 256 MiB): a side
   *    is broadcast only when its Catalyst size estimate fits. Planners
   *    choose a regime with [[fits]]; operators with no other regime refuse
   *    with [[requireFits]].
   *  - `spark.graft.rangejoin.buildBytesSlack` (default 4.0): estimates can
   *    under-shoot by orders of magnitude after selective filters, so a
-  *    collect the estimate decided re-checks the bytes it actually holds
-  *    ([[checkCollected]]) and fails past slack × budget. The slack keeps
-  *    estimate noise from flipping a working query; Spark's
+  *    side the estimate decided to broadcast re-checks the bytes it
+  *    actually holds on the driver ([[checkCollected]]) and fails past
+  *    slack × budget, before any task reads it. The slack keeps estimate
+  *    noise from flipping a working query; Spark's
   *    `spark.driver.maxResultSize` still backstops the collect.
   *
   * Unlike the reference, which sizes the build side with runtime `count()`
@@ -53,7 +54,7 @@ object BroadcastBudget {
       s"$what is estimated at $size bytes, over $BudgetKey=$budget — $advice")
   }
 
-  /** Fails when a collect holds more than slack × the budget at runtime. */
+  /** Fails when a side holds more than slack × the budget at runtime. */
   def checkCollected(collected: Long, what: String, advice: String, conf: SQLConf): Unit = {
     val budget = bytes(conf)
     val slack = conf.getConfString("spark.graft.rangejoin.buildBytesSlack", "4.0").toDouble
@@ -64,47 +65,8 @@ object BroadcastBudget {
 
   /** Driver bytes of collected rows: each row's `UnsafeRow` size (64 for
     * any other row) plus 16 per entry. */
-  def rowBytes(rows: Array[InternalRow]): Long =
-    rows.foldLeft(0L)((acc, r) => acc + 16L + sizeOf(r))
-
-  private def sizeOf(r: InternalRow): Long = r match {
-    case null => 0L
-    case u: UnsafeRow => u.getSizeInBytes.toLong
-    case _ => 64L
-  }
-
-  /** The interval execs' build-side collect. Every row of `plan` is copied
-    * and returned as `(key, start, end, row)`, keyed by the equality
-    * expressions `eqs`, with `iv` its `[start, end]`. A row with a null
-    * bound or a null key can never match: it is dropped, or kept with a
-    * null key when `keepUnmatchable` (full outer preserves it). With
-    * `dropInverted`, rows whose start is past their end are dropped and
-    * counted in that metric (the count joins' rank identity needs
-    * well-formed intervals). Also returns the collected bytes, keys
-    * included, for [[checkCollected]]. */
-  def collectKeyed(plan: SparkPlan, eqs: Seq[Expression], iv: Seq[Expression],
-      keepUnmatchable: Boolean = false, dropInverted: Option[SQLMetric] = None)
-      : (Array[(UnsafeRow, Int, Int, InternalRow)], Long) = {
-    val nEqs = eqs.length
-    val rows = plan.execute().mapPartitions { it =>
-      val keyProj = UnsafeProjection.create(eqs)
-      val ivProj = UnsafeProjection.create(iv)
-      def unmatchable(copy: => InternalRow): Iterator[(UnsafeRow, Int, Int, InternalRow)] =
-        if (keepUnmatchable) Iterator.single((null, 0, 0, copy)) else Iterator.empty
-      it.flatMap { row =>
-        val bounds = ivProj(row)
-        if (bounds.isNullAt(0) || bounds.isNullAt(1)) unmatchable(row.copy())
-        else if (dropInverted.isDefined && bounds.getInt(0) > bounds.getInt(1)) {
-          dropInverted.get += 1
-          Iterator.empty
-        } else {
-          val copy = row.copy()
-          val key = keyProj(copy)
-          if (nEqs > 0 && key.anyNull) unmatchable(copy)
-          else Iterator.single((key.copy(), bounds.getInt(0), bounds.getInt(1), copy))
-        }
-      }
-    }.collect()
-    (rows, rows.foldLeft(0L) { case (acc, (k, _, _, r)) => acc + sizeOf(k) + 16L + sizeOf(r) })
+  def rowBytes(rows: Array[InternalRow]): Long = rows.foldLeft(0L) {
+    case (acc, u: UnsafeRow) => acc + 16L + u.getSizeInBytes
+    case (acc, _) => acc + 16L + 64L
   }
 }

@@ -362,9 +362,10 @@ object IntervalCountPushdownRule {
       extends Pushed
 }
 
-/** Physical count probe in the broadcast regime. The build side is
-  * collected on the driver into one [[CountRankIndex]] per equality key,
-  * broadcast with the collected rows; the stream side is probed in place
+/** Physical count probe in the broadcast regime. The build side reaches
+  * every task through Spark's broadcast exchange ([[BroadcastBuild]]),
+  * where each JVM folds its rows once into one [[CountRankIndex]] per
+  * equality key ([[CountBuild]]); the stream side is probed in place
   * (never shuffled). Grouping by the stream side, each stream row is the
   * index's one-bin probe. Grouping by the build side, each stream row adds
   * its two ranks to its key's histograms, one pair per weight (1, and
@@ -393,6 +394,9 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
     "invertedDropped" -> SQLMetrics.createMetric(sparkContext,
       "malformed (start > end) rows dropped"))
 
+  override def requiredChildDistribution: Seq[Distribution] =
+    BroadcastBuild.distribution(buildLeft)
+
   override protected def withNewChildrenInternal(
       newLeft: SparkPlan, newRight: SparkPlan): SparkPlan =
     copy(left = newLeft, right = newRight)
@@ -416,40 +420,22 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
     val pairCountMetric = longMetric("pairCount")
     val invertedDropped = longMetric("invertedDropped")
 
-    // Build-side collect, the forest join's. Inverted (start > end) rows
-    // are dropped: the rank identity assumes well-formed intervals, and a
-    // malformed build row would silently skew counts instead of matching
-    // the general path's per-pair predicate evaluation. Counted in
-    // invertedDropped so the contract breach is visible.
-    val (collected, bytes) = BroadcastBudget.collectKeyed(buildPlan,
-      bEqs.map(bound(_, buildPlan)), Seq(bound(bStart, buildPlan), bound(bEnd, buildPlan)),
-      dropInverted = Some(invertedDropped))
-    longMetric("buildRows") += collected.length
-    if (enforceBuildBudget) BroadcastBudget.checkCollected(bytes,
-      "interval-count-join build side", "raise the budget, broadcast()-hint the side to " +
-        "take responsibility, or set spark.graft.rangejoin.countPushdown=false to take " +
-        "the general path.", conf)
+    val bc = BroadcastBuild.rows(buildPlan, longMetric("buildRows"),
+      Option.when(enforceBuildBudget)("interval-count-join build side" ->
+        ("raise the budget, broadcast()-hint the side to take responsibility, or set " +
+          "spark.graft.rangejoin.countPushdown=false to take the general path.")))
     // Cross-side sums live on whichever side the counted side is NOT.
     val countBuild = countLeft == buildLeft
     val nSums = crossSumExprs.length
     val crossBound = crossSumExprs.map(bound(_, if (countBuild) streamPlan else buildPlan))
-    // Per key: its index, with the build-side sums when the stream side is
-    // counted (one projection per collected row evaluates them all), its
-    // ordinals the rows' positions in the collect.
-    val index: Map[UnsafeRow, CountRankIndex] = {
-      val buildSums = if (countBuild) Nil else crossBound
-      val sumProj = UnsafeProjection.create(buildSums)
-      collected.indices.groupBy(collected(_)._1).map { case (k, ids) =>
-        val b = new CountRankIndex.Accumulator(buildSums.length)
-        ids.foreach { i => b.add(collected(i)._2, collected(i)._3, sumProj(collected(i)._4)) }
-        val idx = b.result()
-        k -> idx.copy(ordByStart = idx.ordByStart.map(ids(_)), ordByEnd = idx.ordByEnd.map(ids(_)))
-      }
-    }
-    val bc = sparkContext.broadcast((index, collected.map(_._4)))
+    val build = CountBuild(bEqs.map(bound(_, buildPlan)),
+      Seq(bound(bStart, buildPlan), bound(bEnd, buildPlan)), if (countBuild) Nil else crossBound)
+    // The build's inverted rows, counted once here on the driver.
+    invertedDropped += BroadcastBuild.keyed(bc.value, build.eqs, build.iv).count(r => r._2 > r._3)
 
     streamPlan.execute().mapPartitions { it =>
-      val (idxMap, rows) = bc.value
+      val rows = bc.value
+      val idxMap = build.index(rows)
       val keyProj = UnsafeProjection.create(sEqsB)
       val ivProj = UnsafeProjection.create(sIvB)
       val joined = new JoinedRow
@@ -547,6 +533,32 @@ case class IntervalCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
       }
     }
   }
+}
+
+/** The count exec's structure over its broadcast build rows: per equality
+  * key, the [[CountRankIndex]] of the rows that can match, with the
+  * build-side cross sums `sums` when the stream side is counted, its
+  * ordinals the rows' indexes in the broadcast. Inverted (start > end)
+  * rows are dropped: the rank identity assumes well-formed intervals, and
+  * a malformed build row would silently skew counts instead of matching
+  * the general path's per-pair predicate evaluation (the exec counts them
+  * in `invertedDropped`). A case class: it keys the [[BroadcastBuild]]
+  * cache beside the rows. */
+private[plans] case class CountBuild(eqs: Seq[Expression], iv: Seq[Expression],
+    sums: Seq[Expression]) {
+  def index(rows: Array[InternalRow]): Map[UnsafeRow, CountRankIndex] =
+    BroadcastBuild.cached(rows, this) {
+      val sumProj = UnsafeProjection.create(sums)
+      BroadcastBuild.keyed(rows, eqs, iv).filter(r => r._2 <= r._3).toSeq.groupBy(_._1)
+        .map { case (k, ivs) =>
+          val b = new CountRankIndex.Accumulator(sums.length)
+          ivs.foreach { case (_, s, e, i) => b.add(s, e, sumProj(rows(i))) }
+          val idx = b.result()
+          val ids = ivs.map(_._4).toArray
+          k -> idx.copy(ordByStart = idx.ordByStart.map(ids(_)),
+            ordByEnd = idx.ordByEnd.map(ids(_)))
+        }
+    }
 }
 
 /** Shuffle-regime count/sum probe — the bin-range analogue of
@@ -694,7 +706,7 @@ case class IntervalBinCountJoinExec(keys: IntervalJoinKeys, countLeft: Boolean,
   * [[graft.streaming.StreamingOps.countStream]]'s static side. It holds
   * the interval starts and ends, each ascending with its row's ordinal at
   * every rank (the row's position in [[CountRankIndex.build]]'s input;
-  * the broadcast exec renumbers them to positions in its collect), and,
+  * the broadcast exec renumbers them to indexes in its broadcast rows), and,
   * per cross sum, prefix sums of the values and of the non-null flags in
   * each rank order (length n + 1, entry 0 = 0). */
 final case class CountRankIndex(starts: Array[Int], ordByStart: Array[Int],

@@ -2,23 +2,23 @@ package graft.plans
 
 import graft.operators.{IntervalForest, IntervalForestFactory, IntervalHolder, IntervalHolderFactory}
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, GenerateUnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi, RightOuter}
-import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, UnknownPartitioning}
+import org.apache.spark.sql.catalyst.plans.physical.{Distribution, Partitioning, UnknownPartitioning}
 import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 
 import scala.collection.mutable
 
-/** Physical broadcast interval join: the build side is projected to
-  * `(eqKey, start, end, row)`, assembled into a per-key
-  * [[graft.operators.IntervalForest]] and broadcast; the stream side probes
-  * it per partition — **no shuffle** of either side. That is the property
-  * that makes this beat a shuffle or nested-loop join by ~an order of
+/** Physical broadcast interval join: the build side reaches every task
+  * through Spark's broadcast exchange ([[BroadcastBuild]]), and each JVM
+  * assembles its rows once into a per-key
+  * [[graft.operators.IntervalForest]] ([[ForestBuild]]); the stream side
+  * probes it per partition — **no shuffle** of either side. That is the
+  * property that makes this beat a shuffle or nested-loop join by ~an order of
   * magnitude at scale (SURVEY §6): the 100 TB side streams through untouched
   * while only the small annotation side moves. A join whose build side is
   * over the broadcast budget never reaches this exec: every join type then
@@ -91,31 +91,20 @@ case class IntervalForestJoinExec(
     (bound(s, streamedPlan), bound(e, streamedPlan), eqs.map(bound(_, streamedPlan)))
   }
 
-  /** The build side, collected once and held to the [[BroadcastBudget]]
-    * when the broadcast was the estimate's decision (see
-    * enforceBuildBudget). Full outer keeps the unmatchable rows. */
-  private def collectBuild(keepUnmatchable: Boolean): Array[(UnsafeRow, Int, Int, InternalRow)] = {
-    val (collected, bytes) = BroadcastBudget.collectKeyed(
-      buildPlan, bEqsB, Seq(bStartB, bEndB), keepUnmatchable)
-    longMetric("buildRows") += collected.length
-    if (enforceBuildBudget) BroadcastBudget.checkCollected(bytes, "interval-join build side",
-      "either raise the budget if the cluster can hold the broadcast, force the side " +
-        "with a broadcast() hint to take responsibility, or set " +
-        "spark.graft.rangejoin.method=binrange to take the shuffle path.", conf)
-    collected
-  }
+  override def requiredChildDistribution: Seq[Distribution] =
+    BroadcastBuild.distribution(buildLeft)
 
-  /** Build-side collect → per-key holder → broadcast, shared by the
-    * interpreted and codegen probe paths (built at most once per execute). */
-  @transient private lazy val broadcastForests
-      : Broadcast[Map[UnsafeRow, IntervalHolder[InternalRow]]] = {
-    val collected = collectBuild(keepUnmatchable = false)
-    // Pluggable holder (reference intervalHolderClassName conf): the
-    // broadcast structure is whatever the configured factory builds.
-    val forests = IntervalHolderFactory.forName(holderClass)
-      .build[UnsafeRow, InternalRow](collected, maxGap)
-    sparkContext.broadcast(forests)
-  }
+  /** The broadcast build rows, shared by the interpreted and codegen probe
+    * paths: counted, and held to the [[BroadcastBudget]] when the
+    * broadcast was the estimate's decision (see enforceBuildBudget). */
+  @transient private lazy val buildBroadcast = BroadcastBuild.rows(buildPlan,
+    longMetric("buildRows"), Option.when(enforceBuildBudget)("interval-join build side" ->
+      ("either raise the budget if the cluster can hold the broadcast, force the side " +
+        "with a broadcast() hint to take responsibility, or set " +
+        "spark.graft.rangejoin.method=binrange to take the shuffle path.")))
+
+  private def forestBuild(byIndex: Boolean) =
+    ForestBuild(bEqsB, Seq(bStartB, bEndB), maxGap, holderClass, byIndex)
 
   // The probe runs per partition over the unshuffled stream side, so the
   // stream partitioning survives — except full outer, whose output is a
@@ -143,7 +132,6 @@ case class IntervalForestJoinExec(
     val sEqsBL = sEqsB
     val buildIsLeft = buildLeft
     val minOv = minOverlap
-    val gap = maxGap
     val outAttrs = output
     val numOutputRows = longMetric("numOutputRows")
     val jt = joinType
@@ -151,122 +139,92 @@ case class IntervalForestJoinExec(
     // Candidate pair rows are always assembled in (left, right) order.
     val pairSchema = left.output ++ right.output
     val nBuildCols = buildPlan.output.length
-
-    if (jt == FullOuter) {
-      // Full outer, single-plan (replaces the LeftOuter ∪ null-padded
-      // RightAnti decomposition that scanned both children twice and
-      // built the forest twice). Shape mirrors Spark's own
-      // BroadcastNestedLoopJoinExec full-outer:
-      //   (1) build side collected ONCE — rows with a null interval/key
-      //       are kept (they can never match but must be preserved) and
-      //       excluded from the forest; forest payloads carry the
-      //       build-row index,
-      //   (2) a probe-only side-job over the stream side computes the
-      //       global matched-build bitset (no output materialization —
-      //       far cheaper than the RightAnti join it replaces),
-      //   (3) the main pass emits matched pairs + null-padded unmatched
-      //       stream rows (LeftOuter shape),
-      //   (4) unmatched build rows null-pad from the driver — the build
-      //       side is broadcast-small by mode selection.
-      val collected = collectBuild(keepUnmatchable = true)
-      val forests: Map[UnsafeRow, IntervalForest[(InternalRow, Int)]] =
-        IntervalForest.forest(
-          collected.iterator.zipWithIndex.collect {
-            case ((k, s, e, r), i) if k != null => (k, s, e, (r, i))
-          }, gap)
-      val bcast = sparkContext.broadcast(forests)
-      val nBuild = collected.length
-      val nStreamCols = streamPlan.output.length
-
-      val matchedBits = streamPlan.execute().mapPartitionsWithIndex { (pidx, it) =>
-        val probe = IntervalForestJoinExec.prober[(InternalRow, Int)](bcast.value, _._1,
-          sEqsBL, sIvB, minOv, residLocal, pairSchema, buildIsLeft, pidx)
-        val bits = new java.util.BitSet(nBuild)
-        it.foreach(srow => probe(srow, v => bits.set(v._2)))
-        Iterator.single(bits)
-      }.fold(new java.util.BitSet(nBuild)) { (a, b) => a.or(b); a }
-
-      val mainOut: RDD[InternalRow] = streamPlan.execute().mapPartitionsWithIndex[InternalRow] { (pidx, it) =>
-        val probe = IntervalForestJoinExec.prober[(InternalRow, Int)](bcast.value, _._1,
-          sEqsBL, sIvB, minOv, residLocal, pairSchema, buildIsLeft, pidx)
-        val joinedRow = new JoinedRow
-        val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-        val nullBuild = new GenericInternalRow(nBuildCols)
-        def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-          if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-        it.flatMap { srow =>
-          val matches = mutable.ArrayBuffer.empty[InternalRow]
-          probe(srow, v => matches += v._1)
-          if (matches.isEmpty) {
-            numOutputRows += 1
-            Iterator.single(resultProj(pair(nullBuild, srow)))
-          } else matches.iterator.map { brow =>
-            numOutputRows += 1
-            resultProj(pair(brow, srow))
-          }
-        }
+    val bc = buildBroadcast
+    val build = forestBuild(byIndex = true)
+    // Function values, not methods, so the task closures do not capture
+    // the exec. One partition's probe over the broadcast rows, calling
+    // back with each match's index in them:
+    val probeOf = (pidx: Int) => {
+      val rows = bc.value
+      (rows, IntervalForestJoinExec.prober(rows, build.holders[Int](rows),
+        sEqsBL, sIvB, minOv, residLocal, pairSchema, buildIsLeft, pidx))
+    }
+    // and one partition's output row of a build row and a stream row.
+    val pairer = () => {
+      val joinedRow = new JoinedRow
+      val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
+      (brow: InternalRow, srow: InternalRow) => {
+        numOutputRows += 1
+        val joined = if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
+        resultProj(joined): InternalRow
       }
+    }
 
-      val unmatchedBuild: IndexedSeq[InternalRow] =
-        collected.indices.collect { case i if !matchedBits.get(i) => collected(i)._4 }
-      val padded = sparkContext
-        .parallelize(unmatchedBuild, math.max(1, math.min(
-          conf.numShufflePartitions, 1 + unmatchedBuild.length / 65536)))
-        .mapPartitions[InternalRow] { it =>
-          val joinedRow = new JoinedRow
-          val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-          val nullStream = new GenericInternalRow(nStreamCols)
-          def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-            if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-          it.map { brow =>
-            numOutputRows += 1
-            resultProj(pair(brow, nullStream))
-          }
-        }
-      mainOut.union(padded)
-    } else {
-      // Stream side probes the broadcast forests per partition; no
-      // shuffle. Inner emits the matched pairs; a stream row with no
-      // (residual-surviving) match is preserved (outer: build side
-      // null-padded; anti: emitted bare) or used as the existence test
-      // (semi). Non-inner residuals must be decided per candidate pair
-      // HERE — a post-join filter would wrongly drop preserved rows.
-      val bcast = broadcastForests
-      streamPlan.execute().mapPartitionsWithIndex { (pidx, it) =>
-        val probe = IntervalForestJoinExec.prober[InternalRow](bcast.value, identity,
-          sEqsBL, sIvB, minOv, residLocal, pairSchema, buildIsLeft, pidx)
-        val joinedRow = new JoinedRow
-        val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
-        val nullBuild = new GenericInternalRow(nBuildCols)
-        def pair(brow: InternalRow, srow: InternalRow): InternalRow =
-          if (buildIsLeft) joinedRow(brow, srow) else joinedRow(srow, brow)
-        it.flatMap { srow =>
-          val matches = mutable.ArrayBuffer.empty[InternalRow]
-          probe(srow, matches += _)
-          jt match {
-            case Inner =>
-              matches.iterator.map { brow =>
-                numOutputRows += 1
-                resultProj(pair(brow, srow))
-              }
-            case LeftSemi =>
-              if (matches.nonEmpty) { numOutputRows += 1; Iterator.single(resultProj(srow)) }
-              else Iterator.empty
-            case LeftAnti =>
-              if (matches.isEmpty) { numOutputRows += 1; Iterator.single(resultProj(srow)) }
-              else Iterator.empty
-            case _ => // LeftOuter / RightOuter (stream = preserved side)
-              if (matches.isEmpty) {
-                numOutputRows += 1
-                Iterator.single(resultProj(pair(nullBuild, srow)))
-              } else matches.iterator.map { brow =>
-                numOutputRows += 1
-                resultProj(pair(brow, srow))
-              }
-          }
+    // Stream side probes the broadcast forests per partition; no
+    // shuffle. Inner emits the matched pairs; a stream row with no
+    // (residual-surviving) match is preserved (outer: build side
+    // null-padded; anti: emitted bare) or used as the existence test
+    // (semi). Non-inner residuals must be decided per candidate pair
+    // HERE — a post-join filter would wrongly drop preserved rows.
+    val probed = streamPlan.execute().mapPartitionsWithIndex[InternalRow] { (pidx, it) =>
+      val (rows, probe) = probeOf(pidx)
+      val pair = pairer()
+      val resultProj = UnsafeProjection.create(outAttrs, outAttrs)
+      val nullBuild = new GenericInternalRow(nBuildCols)
+      it.flatMap { srow =>
+        val matches = mutable.ArrayBuffer.empty[InternalRow]
+        probe(srow, matches += rows(_))
+        jt match {
+          case Inner => matches.iterator.map(pair(_, srow))
+          case LeftSemi =>
+            if (matches.nonEmpty) { numOutputRows += 1; Iterator.single(resultProj(srow)) }
+            else Iterator.empty
+          case LeftAnti =>
+            if (matches.isEmpty) { numOutputRows += 1; Iterator.single(resultProj(srow)) }
+            else Iterator.empty
+          case _ => // Left/RightOuter (stream = preserved side), FullOuter's stream rows
+            if (matches.isEmpty) Iterator.single(pair(nullBuild, srow))
+            else matches.iterator.map(pair(_, srow))
         }
       }
     }
+    if (jt != FullOuter) return probed
+
+    // Full outer, single-plan (replaces the LeftOuter ∪ null-padded
+    // RightAnti decomposition that scanned both children twice and built
+    // the forest twice). Shape mirrors Spark's own
+    // BroadcastNestedLoopJoinExec full-outer:
+    //   (1) the broadcast keeps every build row, those with a null
+    //       interval/key too (they can never match but must be
+    //       preserved),
+    //   (2) a probe-only side-job over the stream side computes the
+    //       global matched-build bitset (no output materialization — far
+    //       cheaper than the RightAnti join it replaces),
+    //   (3) the pass above emits matched pairs + null-padded unmatched
+    //       stream rows (LeftOuter shape),
+    //   (4) unmatched build rows null-pad from the driver's copy of the
+    //       broadcast — the build side is broadcast-small by mode
+    //       selection.
+    val driverRows = bc.value
+    val nBuild = driverRows.length
+    val matchedBits = streamPlan.execute().mapPartitionsWithIndex { (pidx, it) =>
+      val (_, probe) = probeOf(pidx)
+      val bits = new java.util.BitSet(nBuild)
+      it.foreach(srow => probe(srow, bits.set(_)))
+      Iterator.single(bits)
+    }.fold(new java.util.BitSet(nBuild)) { (a, b) => a.or(b); a }
+    val unmatchedBuild: IndexedSeq[InternalRow] =
+      driverRows.indices.collect { case i if !matchedBits.get(i) => driverRows(i) }
+    val nStreamCols = streamPlan.output.length
+    val padded = sparkContext
+      .parallelize(unmatchedBuild, math.max(1, math.min(
+        conf.numShufflePartitions, 1 + unmatchedBuild.length / 65536)))
+      .mapPartitions[InternalRow] { it =>
+        val pair = pairer()
+        val nullStream = new GenericInternalRow(nStreamCols)
+        it.map(pair(_, nullStream))
+      }
+    probed.union(padded)
   }
 
   // ---------------------------------------------------------------- codegen
@@ -323,9 +281,10 @@ case class IntervalForestJoinExec(
     val keyEv = GenerateUnsafeProjection.createCode(ctx, sEqsB)
     val keyNull = if (sEqsB.nonEmpty) s"${keyEv.value}.anyNull()" else "false"
 
-    val bcastTerm = ctx.addReferenceObj("forestBcast", broadcastForests)
+    val bcastTerm = ctx.addReferenceObj("buildBcast", buildBroadcast)
+    val buildTerm = ctx.addReferenceObj("forestBuild", forestBuild(byIndex = false))
     val mapTerm = ctx.addMutableState("scala.collection.immutable.Map", "forestMap",
-      v => s"$v = (scala.collection.immutable.Map) $bcastTerm.value();")
+      v => s"$v = $buildTerm.holders((InternalRow[]) $bcastTerm.value());")
     val cursorTerm = ctx.addMutableState(
       "graft.operators.IntervalForestCursor", "forestCursor",
       v => s"$v = new graft.operators.IntervalForestCursor();")
@@ -439,17 +398,35 @@ case class IntervalForestJoinExec(
   }
 }
 
+/** The forest exec's structure over its broadcast build rows: one holder
+  * per key from the configured [[IntervalHolderFactory]] (the reference's
+  * `intervalHolderClassName`), each interval widened by `maxGap`, whose
+  * payload is the build row (read by the codegen cursor) or, `byIndex`,
+  * its index in the rows (the interpreted probe, whose full outer marks
+  * matched rows by index). A case class: it keys the [[BroadcastBuild]] cache
+  * beside the rows. */
+private[plans] case class ForestBuild(eqs: Seq[Expression], iv: Seq[Expression], maxGap: Int,
+    holderClass: String, byIndex: Boolean) {
+  def holders[T](rows: Array[InternalRow]): Map[UnsafeRow, IntervalHolder[T]] =
+    BroadcastBuild.cached[AnyRef](rows, this) {
+      val factory = IntervalHolderFactory.forName(holderClass)
+      val items = BroadcastBuild.keyed(rows, eqs, iv)
+      if (byIndex) factory.build[UnsafeRow, Int](items, maxGap)
+      else factory.build[UnsafeRow, InternalRow](
+        items.map { case (k, s, e, i) => (k, s, e, rows(i)) }, maxGap)
+    }.asInstanceOf[Map[UnsafeRow, IntervalHolder[T]]]
+}
+
 object IntervalForestJoinExec {
   /** The per-stream-row forest probe that every interpreted pass runs:
     * project the stream row's key and interval, skip the row when a bound
     * or (with equality keys) the key is null, walk the key's holder, and
-    * call `f` with each build payload whose interval also passes
-    * minOverlap and the residual. `buildRow` reads a payload's build row
-    * for the residual. Built once per partition. */
-  private[plans] def prober[V](forests: Map[UnsafeRow, IntervalHolder[V]], buildRow: V => InternalRow,
+    * call `f` with the index in `rows` of each build row whose interval
+    * also passes minOverlap and the residual. Built once per partition. */
+  private[plans] def prober(rows: Array[InternalRow], forests: Map[UnsafeRow, IntervalHolder[Int]],
       sEqs: Seq[Expression], sIv: Seq[Expression], minOverlap: Int,
       residual: Option[Expression], pairSchema: Seq[Attribute], buildLeft: Boolean,
-      partition: Int): (InternalRow, V => Unit) => Unit = {
+      partition: Int): (InternalRow, Int => Unit) => Unit = {
     val keyProj = UnsafeProjection.create(sEqs)
     val ivProj = UnsafeProjection.create(sIv)
     val joinedRow = new JoinedRow
@@ -466,7 +443,7 @@ object IntervalForestJoinExec {
           val qe = iv.getInt(1)
           forest.foreachOverlap(qs, qe) { (bs, be, v) =>
             if ((minOverlap <= 1 || math.min(be, qe) - math.max(bs, qs) + 1 >= minOverlap) &&
-                pred.forall(_.eval(pair(buildRow(v), srow))))
+                pred.forall(_.eval(pair(rows(v), srow))))
               f(v)
           }
         }

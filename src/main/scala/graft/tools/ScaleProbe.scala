@@ -145,7 +145,7 @@ object ScaleProbe {
 
   /** The one count-join exec in an executed plan, with its SQL metrics
     * (`pairCount` = overlap pairs counted arithmetically, `buildRows` =
-    * driver-resident forest size). Fails loudly when the expected regime
+    * broadcast build rows). Fails loudly when the expected regime
     * did not plan — a probe that silently measured the general
     * pair-materializing join would be a lie. */
   def countJoinMetrics(df: DataFrame, expectBinRange: Boolean): Map[String, Long] = {

@@ -431,6 +431,34 @@ class IntervalCountJoinSpec extends AnyFunSuite {
     }
   }
 
+  test("two count joins against one gene frame share one broadcast exchange") {
+    graft.Graft.ensure(spark)
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+    val genes = ivs(60, 41, "b_key")
+    val r1 = ivs(300, 42, "a_key")
+    val r2 = ivs(300, 43, "a_key")
+    def counts(reads: DataFrame) = joined(reads, genes).groupBy(col("b_key"))
+      .agg(count(lit(1)).as("n"))
+    def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val want = (rows(counts(r1)) ++ rows(counts(r2))).sorted
+    for (aqe <- Seq("true", "false")) withConf("spark.sql.adaptive.enabled", aqe) {
+      val q = counts(r1).union(counts(r2))
+      assert(rows(q) === want, s"AQE $aqe")
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+        case ad: AdaptiveSparkPlanExec => nodes(ad.executedPlan)
+        case s: QueryStageExec => nodes(s.plan)
+        case other => other.children.flatMap(nodes)
+      })
+      val all = nodes(q.queryExecution.executedPlan)
+      assert(all.count(_.isInstanceOf[IntervalCountJoinExec]) === 2)
+      assert(all.count(_.isInstanceOf[BroadcastExchangeExec]) === 1 &&
+        all.count {
+          case ReusedExchangeExec(_, _: BroadcastExchangeExec) => true
+          case _ => false
+        } === 1, s"AQE $aqe:\n${q.queryExecution.executedPlan}")
+    }
+  }
+
   test("build-grouped DISTINCT emits one row per key, not one per stream partition") {
     graft.Graft.ensure(spark)
     import graft.SharedSpark.spark.implicits._

@@ -274,6 +274,7 @@ class IntervalJoinSpec extends SparkSpec {
     val exec2 = {
       def find(p: SparkPlan): Option[IntervalForestJoinExec] = p match {
         case e: IntervalForestJoinExec => Some(e)
+        case ap: AdaptiveSparkPlanExec => find(ap.executedPlan)
         case other => other.children.view.flatMap(find).headOption
       }
       find(physical(df2))
@@ -463,6 +464,90 @@ class IntervalJoinSpec extends SparkSpec {
     assert(got === base)
     assert(graft.plans.NaiveListHolderFactory.built.get() > 0,
       "the configured factory must actually be used")
+  }
+
+  /** Every broadcast-regime graft exec of an executed plan, looking inside
+    * adaptive query stages, with its build child (past codegen's input
+    * adapter). */
+  private def builds(df: DataFrame): Seq[(SparkPlan, SparkPlan)] = {
+    import org.apache.spark.sql.execution.InputAdapter
+    import org.apache.spark.sql.execution.adaptive.QueryStageExec
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case ap: AdaptiveSparkPlanExec => nodes(ap.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    nodes(physical(df)).collect {
+      case f: IntervalForestJoinExec => f -> (if (f.buildLeft) f.left else f.right)
+      case c: IntervalCountJoinExec => c -> (if (c.buildLeft) c.left else c.right)
+    }.map { case (e, InputAdapter(b)) => (e, b); case eb => eb }
+  }
+
+  test("broadcast-regime execs take their build child from one Spark broadcast exchange") {
+    import org.apache.spark.sql.execution.adaptive.{BroadcastQueryStageExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val a = randomIntervals(400, 95, "a_key")
+    val b = randomIntervals(60, 96, "b_key")
+    def ivs(df: DataFrame) = df.collect().toSeq.map(r => (r.getLong(0), r.getString(1),
+      r.getInt(2), r.getInt(3)))
+    val (as, bs) = (ivs(a), ivs(b))
+    // The brute-force model: every overlapping pair on a shared contig.
+    val pairs = for (x <- as; y <- bs if x._2 == y._2 && x._4 >= y._3 && x._3 <= y._4)
+      yield (x._1, y._1)
+    def show(xs: Seq[Any]): Seq[String] = xs.map(_.toString).sorted
+    def opt(r: Row, i: Int): Option[Long] = if (r.isNullAt(i)) None else Some(r.getLong(i))
+    val fullOuter = pairs.map { case (x, y) => (Some(x), Some(y)) } ++
+      as.map(_._1).filterNot(pairs.map(_._1).toSet).map(x => (Some(x), None)) ++
+      bs.map(_._1).filterNot(pairs.map(_._2).toSet).map(y => (None, Some(y)))
+    val cases = Seq[(String, () => DataFrame, Row => Any, Seq[Any])](
+      ("inner", () => joined(a, b).select("a_key", "b_key"),
+        r => (r.getLong(0), r.getLong(1)), pairs),
+      ("full outer", () => typedJoin(a, b, "full_outer").select("a_key", "b_key"),
+        r => (opt(r, 0), opt(r, 1)), fullOuter),
+      ("count", () => joined(a, b).groupBy("b_key").agg(count(lit(1))),
+        r => (r.getLong(0), r.getLong(1)), pairs.groupBy(_._2).map { case (y, ps) =>
+          (y, ps.length.toLong) }.toSeq))
+    for (aqe <- Seq("true", "false"); (name, q, row, want) <- cases) {
+      val at = s"$name, AQE $aqe"
+      withConf("spark.sql.adaptive.enabled", aqe) {
+        val df = q()
+        assert(show(df.collect().toSeq.map(row)) === show(want), at)
+        val found = builds(df)
+        assert(found.length === 1, s"$at:\n${physical(df)}")
+        val exchange = found.head._2 match {
+          case x: BroadcastExchangeExec => x
+          case BroadcastQueryStageExec(_, x: BroadcastExchangeExec, _) => x
+          case other => fail(s"$at: build child is not a broadcast exchange:\n$other")
+        }
+        assert(exchange.metrics("dataSize").value > 0L, at)
+        def exchanges(p: SparkPlan): Int = p.collect {
+          case _: BroadcastExchangeExec => 1
+          case ap: AdaptiveSparkPlanExec => exchanges(ap.executedPlan)
+          case q: QueryStageExec => exchanges(q.plan)
+        }.sum
+        assert(exchanges(physical(df)) === 1, s"$at:\n${physical(df)}")
+      }
+    }
+  }
+
+  test("the forest build is counted once, not once per stream partition") {
+    // Eight stream partitions on four cores: every task reads the one
+    // broadcast, the driver counts its rows once, and each JVM builds the
+    // holders once.
+    val a = randomIntervals(400, 97, "a_key").repartition(8)
+    val b = randomIntervals(60, 98, "b_key")
+    val base = collectSorted(joined(a, b))
+    val before = graft.plans.NaiveListHolderFactory.built.get()
+    val df = joined(a, b).select("a_key", "b_key")
+    val got = withConf("spark.graft.rangejoin.intervalHolderClass",
+        classOf[graft.plans.NaiveListHolderFactory].getName) {
+      df.collect().toSeq.sortBy(r => (r.getLong(0), r.getLong(1)))
+    }
+    assert(got === base)
+    assert(graft.plans.NaiveListHolderFactory.built.get() - before === 1)
+    val found = builds(df)
+    assert(found.length === 1)
+    assert(found.head._1.metrics("buildRows").value === 60L)
   }
 
   // ---- non-inner join types (beyond the reference: stock Spark plans all
