@@ -1,6 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Benchmark main: times every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * emits ONE JSON line as the very last stdout line (after spark.stop(), so
   * no Spark/sbt noise can trail it). Failures are recorded per-query in
@@ -110,13 +112,16 @@ object Bench {
     // also listed in errors, so the number is visibly tainted. All pass
     // times (success and failure alike) are emitted per query as
     // "passes_detail" so noise adjudication never needs a re-run
-    // (r9 VERDICT #5: the events-family phantom survived the min).
+    // (r9 VERDICT #5: the events-family phantom survived the min), each
+    // with the classes Spark compiled in it: a generated-class cache too
+    // small for the run shows as compiles in passes 2 and 3.
     var best = Map.empty[String, Double]
     var failBest = Map.empty[String, Double]
-    var detail = Map.empty[String, Vector[Double]]
+    var detail = Map.empty[String, Vector[(Double, Long)]]
     var errors = Vector.empty[(String, String)]
     for (name <- names; pass <- 1 to passes) {
       val fn = SparkEntry.queries(name)
+      val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       val t0 = System.nanoTime()
       var failed = false
       try { fn(spark, sfDir).count() }
@@ -130,7 +135,8 @@ object Bench {
               (s"pass $pass: " + Option(e.getMessage).getOrElse(e.getClass.getName)).take(200))
       }
       val t = (System.nanoTime() - t0) / 1e9
-      detail += (name -> (detail.getOrElse(name, Vector.empty) :+ t))
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+      detail += (name -> (detail.getOrElse(name, Vector.empty) :+ (t -> compiles)))
       if (!failed) best += (name -> math.min(t, best.getOrElse(name, Double.MaxValue)))
       else failBest += (name -> math.min(t, failBest.getOrElse(name, Double.MaxValue)))
       // Operators persist intermediate frames (LSH bands, coverage blocks)
@@ -147,7 +153,10 @@ object Bench {
       } + "\""
     val qs = times.map { case (k, v) => s"${jstr(k)}:$v" }.mkString("{", ",", "}")
     val det = names.map { n =>
-      s"${jstr(n)}:${detail.getOrElse(n, Vector.empty).mkString("[", ",", "]")}"
+      val ps = detail.getOrElse(n, Vector.empty).map { case (t, c) =>
+        s"""{"wall_s":$t,"compiles":$c}"""
+      }
+      s"${jstr(n)}:${ps.mkString("[", ",", "]")}"
     }.mkString("{", ",", "}")
     val errs = errors.map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
     val total = times.map(_._2).sum

@@ -202,16 +202,20 @@ object ScaleProbe {
     val br = runProbe(spark, totals, "count_join_binrange") { () =>
       countJoin(reads, annots, method = "binrange")
     }(countJoinMetrics(_, expectBinRange = true))
-    // The catalogue enters with no size estimate, as one over the
-    // broadcast budget reaches the merge regime: phase 2 can then size its
-    // join only from what the sweep counted.
-    val nk = runProbe(spark, totals, "nearest_k_merge") { () =>
+    Seq(cov, bc, br, nearestKMerge(spark, totals, reads, annots))
+  }
+
+  /** The merge-regime nearest-k probe: every 20th read against `annots`.
+    * The catalogue enters with no size estimate, as one over the
+    * broadcast budget reaches the merge regime: phase 2 can then size its
+    * join only from what the sweep counted. */
+  def nearestKMerge(spark: SparkSession, totals: StageTotals, reads: DataFrame,
+      annots: DataFrame): ProbeResult =
+    runProbe(spark, totals, "nearest_k_merge") { () =>
       graft.operators.NearestJoinOps.nearestKJoin(
         reads.filter(col("pos_start") % 20 === 0),
         spark.createDataFrame(annots.rdd, annots.schema), 3, "merge")
     }(_ => Map.empty)
-    Seq(cov, bc, br, nk)
-  }
 
   // ---- LLM-pipeline flagship probes (dedup + ANN), sharing the
   // harness above: the genomics probes measure the interval-join /

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graft
 
+import org.apache.spark.{SparkConf, SparkContext}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.classic.SparkSession
 
@@ -19,4 +20,11 @@ object ExtensionsBridge {
     ext.registerFunctions(spark.sessionState.functionRegistry)
     ext.registerTableFunctions(spark.sessionState.tableFunctionRegistry)
   }
+
+  /** The live conf of the JVM's active SparkContext (`SparkContext.conf`
+    * and `getActive` are `private[spark]`; `getConf` returns a copy).
+    * Extensions applied by `SparkSession.Builder.build` run after the
+    * context exists and before the session's `SQLConf` is made from this
+    * conf, so a static SQL conf set here reaches the new session. */
+  def activeContextConf: Option[SparkConf] = SparkContext.getActive.map(_.conf)
 }

@@ -2,9 +2,11 @@
 """Summarize an uncompressed Spark event log per job and stage.
 
 Per stage, summed over its task attempts: tasks, executor deserialize
-wall and CPU time, executor run time, executor CPU time and shuffle
-bytes written. Each job lists the stages that ran tasks for it, then
-its total; the last line is the log's total. A job that carries the
+wall and CPU time, executor run time, executor CPU time, the off-CPU
+share of run time ((run - CPU) / run: tasks waiting on locks, I/O or
+each other) and shuffle bytes written. Each job lists the stages that
+ran tasks for it, then its total and its wall time (submission to
+completion); the last line is the log's total. A job that carries the
 benchmark probe's `graftbench.span` local property shows that span id,
 and with --spans the span file written beside a benchmark result
 (`<run>.spans.jsonl`) turns it into the span's name and pass.
@@ -15,7 +17,10 @@ and with --spans the span file written beside a benchmark result
 
 --by span folds the stages into one line per span name (every pass
 together), --by pass into one line per benchmark pass (both need
---spans); --json prints the per-job breakdown as one JSON object.
+--spans); --json prints the per-job breakdown as one JSON object. In
+both folds, wall_s is the spans' wall time and idle_s the part of it
+with no job of the span (or of a span inside it) running: driver-side
+planning, code generation, collects and waits.
 
 To capture a log, start any JVM that builds a SparkContext with
 
@@ -34,6 +39,7 @@ import re
 import sys
 
 FIELDS = ("tasks", "deser_s", "deser_cpu_s", "run_s", "cpu_s", "shuffle_write")
+TIMES = ("wall_s", "idle_s")
 SPAN_KEY = "graftbench.span"
 
 
@@ -59,17 +65,21 @@ def log_lines(path):
 
 
 def read_log(path):
-    """Jobs (id -> span id, stage ids) and per-stage sums from one log."""
+    """Jobs (id -> span id, stage ids, submission and completion in epoch
+    ms) and per-stage sums from one log."""
     jobs, stages = {}, {}
     for line in log_lines(path):
         ev = json.loads(line)
         kind = ev.get("Event")
         if kind == "SparkListenerJobStart":
             props = ev.get("Properties") or {}
-            jobs[ev["Job ID"]] = {"span": props.get(SPAN_KEY), "stages": ev["Stage IDs"]}
+            jobs[ev["Job ID"]] = {"span": props.get(SPAN_KEY), "stages": ev["Stage IDs"],
+                                  "start_ms": ev.get("Submission Time"), "end_ms": None}
             for info in ev.get("Stage Infos", []):
                 stages.setdefault(info["Stage ID"], {"name": info.get("Stage Name", ""),
                                                      **empty()})
+        elif kind == "SparkListenerJobEnd" and ev["Job ID"] in jobs:
+            jobs[ev["Job ID"]]["end_ms"] = ev.get("Completion Time")
         elif kind == "SparkListenerTaskEnd":
             m = ev.get("Task Metrics")
             if not m:
@@ -102,7 +112,8 @@ def by_job(jobs, stages):
     for jid in sorted(jobs):
         for sid in jobs[jid]["stages"]:
             owner.setdefault(sid, jid)
-    out = {jid: {"span": j["span"], "stages": {}, "total": empty()} for jid, j in jobs.items()}
+    out = {jid: {"span": j["span"], "stages": {}, "total": empty(),
+                 "wall_s": job_wall(j)} for jid, j in jobs.items()}
     for sid, s in sorted(stages.items()):
         if s["tasks"] == 0 or sid not in owner:
             continue
@@ -112,6 +123,48 @@ def by_job(jobs, stages):
     return {jid: j for jid, j in sorted(out.items()) if j["stages"]}
 
 
+def job_wall(job):
+    if job["start_ms"] is None or job["end_ms"] is None:
+        return None
+    return (job["end_ms"] - job["start_ms"]) / 1e3
+
+
+def union_s(intervals):
+    """Seconds covered by the union of (start_ms, end_ms) intervals."""
+    total, reach = 0, None
+    for a, b in sorted(intervals):
+        if reach is None or a > reach:
+            total += b - a
+            reach = b
+        elif b > reach:
+            total += b - reach
+            reach = b
+    return total / 1e3
+
+
+def span_times(jobs, spans):
+    """Per span id: wall seconds, and seconds with none of the jobs of the
+    span or of the spans inside it running."""
+    kids = {}
+    for sid, s in spans.items():
+        kids.setdefault(str(s["parent"]), []).append(sid)
+    own = {}
+    for j in jobs.values():
+        if j["span"] is not None and j["start_ms"] is not None and j["end_ms"] is not None:
+            own.setdefault(str(j["span"]), []).append((j["start_ms"], j["end_ms"]))
+
+    def intervals(sid):
+        out = list(own.get(sid, []))
+        for k in kids.get(sid, []):
+            out += intervals(k)
+        return out
+    times = {}
+    for sid, s in spans.items():
+        wall = (s["end_ns"] - s["start_ns"]) / 1e9
+        times[sid] = {"wall_s": wall, "idle_s": max(0.0, wall - union_s(intervals(sid)))}
+    return times
+
+
 def span_label(span_id, spans):
     if span_id is None:
         return "-"
@@ -119,9 +172,11 @@ def span_label(span_id, spans):
     return f"{s['name']}#p{s['pass']}" if s else f"span {span_id}"
 
 
-def row(label, t):
+def row(label, t, times=None):
+    off = f"{(t['run_s'] - t['cpu_s']) / t['run_s']:>7.0%}" if t["run_s"] > 0 else f"{'-':>7}"
+    tail = "".join(f" {x:>8.2f}" if x is not None else f" {'-':>8}" for x in (times or ()))
     return (f"{label:<44.44} {t['tasks']:>6} {t['deser_s']:>8.2f} {t['deser_cpu_s']:>8.2f} "
-            f"{t['run_s']:>8.2f} {t['cpu_s']:>8.2f} {t['shuffle_write']:>12}")
+            f"{t['run_s']:>8.2f} {t['cpu_s']:>8.2f} {off} {t['shuffle_write']:>12}{tail}")
 
 
 def main():
@@ -140,26 +195,43 @@ def main():
     if a.json:
         print(json.dumps({"jobs": per_job, "total": total}, indent=1))
         return
-    print(f"{'':<44} {'tasks':>6} {'deser_s':>8} {'deser_cpu':>8} {'run_s':>8} "
-          f"{'cpu_s':>8} {'shuffle_w':>12}")
+    header = (f"{'':<44} {'tasks':>6} {'deser_s':>8} {'deser_cpu':>8} {'run_s':>8} "
+              f"{'cpu_s':>8} {'off_cpu':>7} {'shuffle_w':>12}")
     if a.by in ("span", "pass"):
-        groups = {}
+        print(header + f" {'wall_s':>8} {'idle_s':>8}")
+        times = span_times(jobs, spans)
+
+        def key_of(s):
+            return s["name"] if a.by == "span" else s["pass"]
+        groups, walls = {}, {}
         for j in per_job.values():
             s = spans.get(str(j["span"])) if j["span"] is not None else None
-            if not s:
-                key = span_label(j["span"], spans)
-            else:
-                key = s["name"] if a.by == "span" else s["pass"]
+            key = key_of(s) if s else span_label(j["span"], spans)
             add(groups.setdefault(key, empty()), j["total"])
+        # A pass's wall time is its outermost spans'; a span name's is
+        # every instance's.
+        for sid, s in spans.items():
+            parent = spans.get(str(s["parent"]))
+            if a.by == "span" or not parent or parent["pass"] != s["pass"]:
+                w = walls.setdefault(key_of(s), dict.fromkeys(TIMES, 0.0))
+                for f in TIMES:
+                    w[f] += times[sid][f]
+            groups.setdefault(key_of(s), empty())
+
+        def line(key, t):
+            label = key if isinstance(key, str) or a.by == "span" else f"pass {key}"
+            w = walls.get(key)
+            return row(label, t, (w["wall_s"], w["idle_s"]) if w else (None, None))
         if a.by == "span":
             for key, t in sorted(groups.items(), key=lambda kv: -kv[1]["run_s"]):
-                print(row(key, t))
+                print(line(key, t))
         else:
             for key, t in sorted(groups.items(), key=lambda kv: (isinstance(kv[0], str), kv[0])):
-                print(row(key if isinstance(key, str) else f"pass {key}", t))
+                print(line(key, t))
     else:
+        print(header + f" {'wall_s':>8}")
         for jid, j in per_job.items():
-            print(row(f"job {jid} {span_label(j['span'], spans)}", j["total"]))
+            print(row(f"job {jid} {span_label(j['span'], spans)}", j["total"], (j["wall_s"],)))
             for sid, s in j["stages"].items():
                 print(row(f"  stage {sid} {s['name']}", s))
     print(row("total", total))
