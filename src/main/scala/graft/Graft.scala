@@ -15,7 +15,7 @@ import org.slf4j.LoggerFactory
   * Idempotent and thread-safe.
   *
   * Resolution rules cannot be added to a live analyzer; self
-  * nearest-joins are deduplicated by `GraftTableFunctions.nearestSides`.
+  * nearest-joins are deduplicated by `NearestJoinNode.sides`.
   * Nor can Spark's generated-class cache be resized once `CodeGenerator`
   * has read its size, so a session below
   * [[GraftExtensions.CodegenCacheEntries]] is only reported, once per JVM

@@ -59,7 +59,6 @@ object GraftExtensions {
     // that invariant structural).
     ext.injectPreCBORule(plans.IntervalCountPushdownRule(_))
     ext.injectPreCBORule(plans.BinRangeLogicalRule(_))
-    ext.injectResolutionRule(plans.NearestJoinDedupRule(_))
     ext.injectOptimizerRule(plans.NearestJoinPruneRule(_))
     ext.injectOptimizerRule(plans.TagKeyPruneRule(_))
     ext.injectPlannerStrategy(IntervalJoinStrategy(_))

@@ -153,13 +153,9 @@ class GraftSession(val spark: SparkSession) {
 
   /** bedtools-closest: each left interval paired with its nearest right
     * feature(s) on the same contig (all ties emit) plus `distance`
-    * (0 when overlapping). */
-  def nearestJoin(left: DataFrame, right: DataFrame): DataFrame =
-    NearestJoinOps.nearestJoin(left, right)
-
-  /** As [[nearestJoin]] with the regime (`auto`/`broadcast`/`merge`)
-    * passed explicitly instead of via `spark.graft.nearestjoin.method`. */
-  def nearestJoin(left: DataFrame, right: DataFrame, method: String): DataFrame =
+    * (0 when overlapping), in the regime `method`
+    * (`auto`/`broadcast`/`merge`). */
+  def nearestJoin(left: DataFrame, right: DataFrame, method: String = "auto"): DataFrame =
     NearestJoinOps.nearestJoin(left, right, method)
 
   /** vt/bcftools-norm variant normalization: right-trim, left-extend

@@ -25,7 +25,7 @@ final class IntervalForest[T] private (
     private val values: Array[T],
     private val prefixMaxEnds: Array[Int],
     /** Interval indices in ascending `ends` order — the left-flank axis
-      * for [[foreachNearestK]] (k smallest left gaps = k largest ends
+      * for [[foreachNearestKDir]] (k smallest left gaps = k largest ends
       * below the query start). One extra Int per interval. */
     private val endOrder: Array[Int]) extends IntervalHolder[T] {
 
@@ -49,15 +49,8 @@ final class IntervalForest[T] private (
     }
   }
 
-  /** Overlapping values as a Seq (test/driver convenience). */
-  def overlappers(qs: Int, qe: Int): Seq[T] = {
-    val buf = mutable.ArrayBuffer.empty[T]
-    foreachOverlap(qs, qe)((_, _, v) => buf += v)
-    buf.toSeq
-  }
-
-  /** Invoke `f(storedStart, storedEnd, value, distance)` for every stored
-    * interval whose distance to `[qs, qe]` is among the `k` smallest
+  /** Invoke `f(storedStart, storedEnd, value, distance, class)` for every
+    * enabled stored interval whose distance to `[qs, qe]` is among the `k` smallest
     * DISTINCT distances present (`bedtools closest -k` over distinct
     * distances: at each reported distance ALL ties emit — deterministic,
     * no tie-break rule). Returns the number of distinct distances
@@ -69,15 +62,12 @@ final class IntervalForest[T] private (
     * order via [[endOrder]]), strictly-right (`start > qe`, distance
     * `start - qe`, walked in ascending start order) — and the two flank
     * streams merge like sorted lists, each step emitting one distinct
-    * distance's full tie group. */
-  def foreachNearestK(qs: Int, qe: Int, k: Int)(f: (Int, Int, T, Int) => Unit): Int =
-    foreachNearestKDir(qs, qe, k, includeOverlaps = true,
-      includeUpstream = true, includeDownstream = true)((s, e, v, d, _) => f(s, e, v, d))
-
-  /** [[foreachNearestK]] with candidate-class control — the bedtools
-    * `closest -io/-iu/-id/-D` surface. The callback's fifth argument is
-    * the class: `-1` upstream (stored interval strictly left of the
-    * query, lower coordinates), `0` overlap, `+1` downstream. Distances
+    * distance's full tie group.
+    *
+    * Candidate-class control is the bedtools `closest -io/-iu/-id/-D`
+    * surface. The callback's fifth argument is the class: `-1` upstream
+    * (stored interval strictly left of the query, lower coordinates), `0`
+    * overlap, `+1` downstream. Distances
     * stay unsigned (ranking is by proximity); the caller signs output
     * from the class. Disabled classes neither emit nor consume a rank:
     * with `includeOverlaps = false` the nearest flank pair is rank 1

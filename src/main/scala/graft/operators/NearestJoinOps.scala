@@ -1,14 +1,15 @@
 package graft.operators
 
-import graft.plans.BroadcastBudget
+import graft.plans.{BroadcastBudget, BroadcastProbe, IntervalProbe, NearestJoinNode, NearestProbe}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow, UnsafeArrayData, UnsafeProjection}
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.statsEstimation.EstimationUtils
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{ArrayType, IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,16 +27,15 @@ import scala.collection.mutable
   *
   * Two scale regimes, mirroring the interval join's own:
   *
-  * '''Broadcast''' (right side within the broadcast budget): the right
-  * side is collected into the same per-contig [[IntervalForest]] the
-  * overlap join broadcasts, whose k-nearest probe walks the three
-  * candidate classes (overlaps, then the two flanks merged like sorted
-  * lists) in O(log n + output). The left side is probed in place — it
-  * never shuffles, never sorts. The probe runs entirely on `InternalRow`:
-  * build rows are collected as `UnsafeRow`s off `queryExecution.toRdd`,
-  * each output pair is stitched with a reused [[JoinedRow]] chain and
-  * flattened by one [[UnsafeProjection]] — no external-`Row`/`Encoders.row`
-  * round-trip in the hot loop.
+  * '''Broadcast''' (right side within the broadcast budget): a
+  * [[graft.plans.BroadcastProbe]] node. The right side reaches every task
+  * through Spark's broadcast exchange (shown in `explain()` and the UI,
+  * reused by two joins over one right frame), and each JVM builds from it,
+  * once, the same per-contig [[IntervalForest]] the overlap join builds,
+  * whose k-nearest probe walks the three candidate classes (overlaps, then
+  * the two flanks merged like sorted lists) in O(log n + output). The left
+  * side is probed in place — it never shuffles, never sorts — so it may be
+  * a stream.
   *
   * '''Merge''' (both sides large): bedtools' own sweep, distributed, in
   * two fixed phases. Phase 1 is ONE endpoint sweep that emits d_k — the
@@ -52,64 +52,35 @@ import scala.collection.mutable
   * each left row its pairs. At 100 TB nothing collects: phase 1 shuffles
   * O(|L| + |R|) endpoint rows, phase 2's windows are tight by
   * construction. The job count does not depend on the data — a sparse
-  * catalogue costs no extra passes.
+  * catalogue costs no extra passes. A streaming left side has no merge
+  * regime.
   *
-  * Dispatch: `method` parameter (preferred — no session state), or the
-  * `spark.graft.nearestjoin.method` conf for the no-arg form: `auto`
-  * (default — broadcast while the right side's Catalyst estimate fits
-  * `spark.graft.rangejoin.maxBroadcastBytes`, else merge), `broadcast`
-  * (forced — the user takes responsibility, standard hint semantics),
-  * or `merge`.
+  * Dispatch: the `method` argument — `auto` by default ([[regime]]),
+  * `broadcast` (forced — the user takes responsibility, standard hint
+  * semantics: the runtime budget guard stands down) or `merge`.
   */
 object NearestJoinOps {
 
   /** Inner nearest join: left rows on contigs absent from `right` drop
     * (no feature to be near). Output = left columns ++ right columns ++
     * `distance: Int`; both inputs need `(contig, pos_start, pos_end)`.
-    * Regime from `spark.graft.nearestjoin.method` (default `auto`). */
-  def nearestJoin(left: DataFrame, right: DataFrame): DataFrame =
-    nearestJoin(left, right,
-      left.sparkSession.conf.get("spark.graft.nearestjoin.method", "auto"))
-
-  /** As [[nearestJoin]] with the regime passed explicitly — callers that
-    * pin a regime (tests, the query suite) use this instead of mutating
-    * session conf (r8 ADVICE: conf writes leaked across query lambdas).
-    * Nearest is nearest-k at k = 1: both regimes are the k-nearest ones. */
-  def nearestJoin(left: DataFrame, right: DataFrame, method: String): DataFrame =
+    * `method` is the regime ([[regime]]). Nearest is nearest-k at k = 1:
+    * both regimes are the k-nearest ones. */
+  def nearestJoin(left: DataFrame, right: DataFrame, method: String = "auto"): DataFrame =
     nearestKJoin(left, right, 1, method)
+
+  /** As the flagged [[nearestKJoin]] with no flags and the regime passed
+    * explicitly. */
+  def nearestKJoin(left: DataFrame, right: DataFrame, k: Int, method: String): DataFrame =
+    nearestKJoin(left, right, k, ignoreOverlaps = false, method = method)
 
   /** K-nearest join (`bedtools closest -k` semantics over DISTINCT
     * distances): every left row pairs with all right rows on its contig
     * whose distance falls in the k smallest distinct distances — at each
     * reported distance ALL ties emit, so the output is deterministic with
     * no tie-break rule to mirror in an oracle. `k = 1` is exactly
-    * [[nearestJoin]].
-    *
-    * Two regimes, like [[nearestJoin]]: the broadcast ranking probe while
-    * the right side's Catalyst estimate fits the budget, else the
-    * distributed [[mergeNearestKJoin]] sweep (r10 VERDICT #5 — k-nearest
-    * is no longer broadcast-only). The bedtools `-io/-id/-iu/-D` variants
-    * ride both regimes too (r14 VERDICT #6). */
-  def nearestKJoin(left: DataFrame, right: DataFrame, k: Int): DataFrame =
-    nearestKJoin(left, right, k,
-      ignoreOverlaps = false, direction = "both", signed = false)
-
-  /** As the 3-arg [[nearestKJoin]] with the regime pinned explicitly —
-    * callers that force a regime (tests, the query suite) use this
-    * instead of mutating session conf. */
-  def nearestKJoin(left: DataFrame, right: DataFrame, k: Int, method: String): DataFrame = {
-    require(k >= 1, s"nearestKJoin needs k >= 1, got $k")
-    method match {
-      case "broadcast" => nearestKJoinUngated(left, right, k, enforceBuildBudget = false)
-      case "merge" => mergeNearestKJoin(left, right, k)
-      case "auto" => nearestKJoin(left, right, k)
-      case other => throw new IllegalArgumentException(
-        s"nearest k-join method must be auto|broadcast|merge, got '$other'")
-    }
-  }
-
-  /** As [[nearestKJoin]] with the bedtools `closest -io/-iu/-id/-D ref`
-    * surface:
+    * [[nearestJoin]]. The bedtools `closest -io/-iu/-id/-D ref` surface
+    * rides both regimes:
     *   - `ignoreOverlaps`: overlapping rights are not candidates (`-io`);
     *     the nearest flank pair is rank 1 even when an overlap exists.
     *   - `direction`: `"both"` | `"upstream"` (only rights strictly left
@@ -119,99 +90,47 @@ object NearestJoinOps {
     *     `ignoreOverlaps`.
     *   - `signed`: emit reference-genome-signed distance (`-D ref`) —
     *     negative for upstream rights, positive downstream, 0 overlap.
-    *     Ranking stays by unsigned proximity; sign is output-only. */
+    *     Ranking stays by unsigned proximity; sign is output-only.
+    *   - `method`: the regime, `auto` | `broadcast` | `merge`. */
   def nearestKJoin(left: DataFrame, right: DataFrame, k: Int,
-      ignoreOverlaps: Boolean, direction: String, signed: Boolean): DataFrame = {
+      ignoreOverlaps: Boolean = false, direction: String = "both", signed: Boolean = false,
+      method: String = "auto"): DataFrame = {
     require(k >= 1, s"nearestKJoin needs k >= 1, got $k")
     require(Set("both", "upstream", "downstream")(direction),
       s"nearestKJoin direction must be both|upstream|downstream, got '$direction'")
-    if (BroadcastBudget.fits(right))
-      return nearestKJoinUngated(left, right, k, ignoreOverlaps, direction, signed)
-    // Over budget: the distributed merge regime carries the
-    // direction/overlap/sign flags too (r14 VERDICT #6) — big
-    // catalogs get `bedtools closest -io/-id/-iu/-D ref` semantics with
-    // no driver collect, same results as the broadcast ranking probe.
-    mergeNearestKJoin(left, right, k, ignoreOverlaps, direction, signed)
+    regime(method, left.isStreaming, right.queryExecution.optimizedPlan.stats.sizeInBytes,
+        left.sparkSession.sessionState.conf) match {
+      case "merge" => mergeNearestKJoin(left, right, k, ignoreOverlaps, direction, signed)
+      case _ =>
+        val (l, r) = NearestJoinNode.sides(left.queryExecution.analyzed,
+          right.queryExecution.analyzed)
+        // The node plans through graft's strategy, so graft is attached.
+        ColumnBridge.frame(graft.Graft.ensure(left.sparkSession), BroadcastProbe(l, r,
+          NearestProbe(k, ignoreOverlaps, direction, signed, IntervalProbe.columns(l.output),
+            IntervalProbe.columns(r.output)), enforceBudget = method == "auto"))
+    }
   }
 
-  /** [[nearestKJoin]] without the broadcast-size stats gate — for
-    * [[graft.plans.NearestJoinExec]], whose bridged children carry
-    * `defaultSizeInBytes` stats (the gate already ran in
-    * [[graft.plans.GenomicStrategy]] against the LOGICAL children's
-    * stats; re-checking the bridge's Long.MaxValue default here would
-    * reject every TVF call). The collected right side is held to the
-    * [[BroadcastBudget]]'s runtime guard unless the caller pinned the
-    * broadcast (`enforceBuildBudget = false`). */
-  private[graft] def nearestKJoinUngated(
-      left: DataFrame, right: DataFrame, k: Int,
-      ignoreOverlaps: Boolean = false, direction: String = "both",
-      signed: Boolean = false, enforceBuildBudget: Boolean = true): DataFrame = {
-    val incOverlaps = !ignoreOverlaps
-    val incUp = direction != "downstream"
-    val incDown = direction != "upstream"
-    val spark = left.sparkSession
-    val rSchema = right.schema
-    val rContig = rSchema.fieldIndex("contig")
-    val rStart = rSchema.fieldIndex("pos_start")
-    val rEnd = rSchema.fieldIndex("pos_end")
-    val rRows: Array[InternalRow] =
-      right.queryExecution.toRdd.mapPartitions(_.map(_.copy())).collect()
-    if (enforceBuildBudget) BroadcastBudget.checkCollected(BroadcastBudget.rowBytes(rRows),
-      "nearest-join right side", "raise the budget if the cluster can hold the broadcast, " +
-        "or pin the method: merge to take the distributed sweep, broadcast to take " +
-        "responsibility.", spark.sessionState.conf)
-    val bc = spark.sparkContext.broadcast(
-      IntervalForest.forest[String, InternalRow](rRows.iterator.collect {
-        case r if !r.isNullAt(rContig) && !r.isNullAt(rStart) && !r.isNullAt(rEnd) =>
-          (r.getUTF8String(rContig).toString, r.getInt(rStart), r.getInt(rEnd), r)
-      }))
-
-    val lSchema = left.schema
-    val lContig = lSchema.fieldIndex("contig")
-    val lStart = lSchema.fieldIndex("pos_start")
-    val lEnd = lSchema.fieldIndex("pos_end")
-    val outSchema = StructType(lSchema.fields ++ rSchema.fields :+
-      StructField("distance", IntegerType, nullable = false))
-    val outRdd = left.queryExecution.toRdd.mapPartitions { it =>
-      val forests = bc.value
-      val pair = new JoinedRow
-      val withDist = new JoinedRow
-      val distRow = new GenericInternalRow(1)
-      val project = UnsafeProjection.create(outSchema)
-      // (right row, signed distance) buffered per left row — the probe
-      // callback must not interleave with the reused JoinedRow. Arrays
-      // reused across rows (no boxed tuples, no per-row allocation):
-      // flatMap exhausts each inner iterator before the next probe refills
-      // them.
-      var cap = 64
-      var hitRow = new Array[InternalRow](cap)
-      var hitDist = new Array[Int](cap)
-      it.flatMap { lrow =>
-        if (lrow.isNullAt(lContig) || lrow.isNullAt(lStart) || lrow.isNullAt(lEnd))
-          Iterator.empty
-        else forests.get(lrow.getUTF8String(lContig).toString) match {
-          case None => Iterator.empty
-          case Some(f) =>
-            var n = 0
-            f.foreachNearestKDir(lrow.getInt(lStart), lrow.getInt(lEnd), k,
-                incOverlaps, incUp, incDown) { (_, _, r, d, side) =>
-              if (n == cap) {
-                cap *= 2
-                hitRow = java.util.Arrays.copyOf(hitRow, cap)
-                hitDist = java.util.Arrays.copyOf(hitDist, cap)
-              }
-              hitRow(n) = r
-              hitDist(n) = if (signed && side < 0) -d else d
-              n += 1
-            }
-            Iterator.range(0, n).map { i =>
-              distRow.setInt(0, hitDist(i))
-              project(withDist(pair(lrow, hitRow(i)), distRow)): InternalRow
-            }
-        }
-      }
-    }
-    ColumnBridge.internalFrame(spark, outRdd, outSchema)
+  /** The regime of a nearest join, the one decision of the Scala API and
+    * [[graft.plans.GenomicStrategy]]: `auto` broadcasts while the right
+    * side's estimate `rightBytes` fits the [[BroadcastBudget]] and takes
+    * the merge regime otherwise. A streaming left side has only the
+    * broadcast regime, so over the budget, or pinned to `merge`, it fails
+    * here. */
+  private[graft] def regime(method: String, streamingLeft: Boolean, rightBytes: => BigInt,
+      conf: SQLConf): String = {
+    require(Set("auto", "broadcast", "merge")(method),
+      s"nearest k-join method must be auto|broadcast|merge, got '$method'")
+    val advice = "a streaming left side has only the broadcast regime, within " +
+      "spark.graft.rangejoin.maxBroadcastBytes. Filter the right side down, or raise the budget."
+    if (streamingLeft) {
+      require(method != "merge", s"nearest-join method merge needs a static left side: $advice")
+      if (method == "auto")
+        BroadcastBudget.requireFits(rightBytes, "nearest-join right side", advice, conf)
+      "broadcast"
+    } else if (method != "auto") method
+    else if (BroadcastBudget.fits(rightBytes, conf)) "broadcast"
+    else "merge"
   }
 
   private val distSchema = StructType(Seq(

@@ -20,6 +20,7 @@ import org.apache.spark.sql.internal.SQLConf
   * for a provably tiny build side). One-sided non-inner joins pin the
   * build side: the preserved side must stream so unmatched rows can be
   * emitted locally (same restriction as Spark's BroadcastHashJoinExec).
+  * A streaming child is never the build side.
   */
 object RangeJoinChoice {
 
@@ -52,6 +53,8 @@ object RangeJoinChoice {
     val buildLeft = joinType match {
       case RightOuter => true
       case LeftOuter | LeftSemi | LeftAnti => false
+      // A streaming child streams, whatever its micro-batch stats say.
+      case _ if left.isStreaming || right.isStreaming => right.isStreaming
       case _ if hintLeft && !hintRight => true
       case _ if hintRight && !hintLeft => false
       case _ => conf("buildSide", "auto") match {

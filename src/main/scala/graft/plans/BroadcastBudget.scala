@@ -6,9 +6,10 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.internal.SQLConf
 
 /** The broadcast budget: the one policy for every side graft ships whole
-  * to every task — the interval execs' build sides, which Spark's
-  * broadcast exchange collects ([[BroadcastBuild]]), and the sides
-  * operators collect to the driver themselves. It is the only reader of
+  * to every task — the build sides of the interval execs and the
+  * [[BroadcastProbeExec]], which Spark's broadcast exchange collects
+  * ([[BroadcastBuild]]), and the sides operators collect to the driver
+  * themselves. It is the only reader of
   * its two confs:
   *  - `spark.graft.rangejoin.maxBroadcastBytes` (default 256 MiB): a side
   *    is broadcast only when its Catalyst size estimate fits. Planners

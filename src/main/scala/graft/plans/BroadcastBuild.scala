@@ -7,8 +7,8 @@ import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Dist
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.metric.SQLMetric
 
-/** The build side of the broadcast interval execs
-  * ([[IntervalForestJoinExec]], [[IntervalCountJoinExec]]). Each exec
+/** The build side of the broadcast execs ([[IntervalForestJoinExec]],
+  * [[IntervalCountJoinExec]], [[BroadcastProbeExec]]). Each exec
   * requires [[distribution]] of its children, so `EnsureRequirements`
   * plans a stock `BroadcastExchangeExec` over the build child (a
   * `BroadcastQueryStageExec` under AQE, a `ReusedExchangeExec` when two

@@ -5,8 +5,8 @@ import graft.operators.{Converters, CoverageOps, PileupOps}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, UnaryNode}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, AttributeReference}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode}
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy, UnaryExecNode}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graft.ColumnBridge
@@ -145,7 +145,8 @@ case class PileupExec(override val output: Seq[Attribute],
   * explicit-method dispatch. A BinaryNode, not a rewrite to `Join`: the
   * nearest semantics (min-distance window with all ties) has no stock
   * join equivalent, so the node survives to [[GenomicStrategy]], which
-  * runs the operator pipeline over both children's execution-time rows. */
+  * plans the broadcast regime as a [[BroadcastProbeExec]] and the merge
+  * regime as a [[NearestJoinExec]]. */
 case class NearestJoinNode(left: LogicalPlan, right: LogicalPlan, method: String,
     k: Int = 1,
     distAttr: AttributeReference =
@@ -163,8 +164,21 @@ case class NearestJoinNode(left: LogicalPlan, right: LogicalPlan, method: String
     copy(left = newLeft, right = newRight)
 }
 
-case class NearestJoinExec(override val output: Seq[Attribute], method: String,
-    k: Int, left: SparkPlan, right: SparkPlan, enforceBuildBudget: Boolean)
+object NearestJoinNode {
+  /** The two sides of a nearest join, the right one re-aliased (fresh
+    * ExprIds) when its output collides with the left's: the node's output
+    * is both sides', and the stock analyzer dedups only `Join`'s right
+    * side. */
+  def sides(left: LogicalPlan, right: LogicalPlan): (LogicalPlan, LogicalPlan) =
+    if (left.outputSet.intersect(right.outputSet).isEmpty) (left, right)
+    else (left, Project(right.output.map(a => Alias(a, a.name)()), right))
+}
+
+/** The merge regime of a [[NearestJoinNode]] (the broadcast regime plans
+  * as a [[BroadcastProbeExec]]): the distributed sweep over both
+  * children's execution-time rows. */
+case class NearestJoinExec(override val output: Seq[Attribute], k: Int,
+    left: SparkPlan, right: SparkPlan)
     extends org.apache.spark.sql.execution.BinaryExecNode {
   override def producedAttributes: org.apache.spark.sql.catalyst.expressions.AttributeSet =
     org.apache.spark.sql.catalyst.expressions.AttributeSet(output)
@@ -173,38 +187,11 @@ case class NearestJoinExec(override val output: Seq[Attribute], method: String,
     val l = ColumnBridge.internalFrame(spark, left.execute(), left.schema)
     val r = ColumnBridge.internalFrame(spark, right.execute(), right.schema)
     // Positional contract: the operator emits left ++ right ++ distance,
-    // exactly this node's declared output order. The regime was resolved
-    // in GenomicStrategy from the LOGICAL children's stats (the bridged
-    // frames here carry defaultSizeInBytes stats — re-gating would always
-    // pick merge).
-    val out =
-      if (method == "merge") graft.operators.NearestJoinOps.mergeNearestKJoin(l, r, k)
-      else graft.operators.NearestJoinOps.nearestKJoinUngated(l, r, k,
-        enforceBuildBudget = enforceBuildBudget)
-    out.queryExecution.toRdd
+    // exactly this node's declared output order.
+    graft.operators.NearestJoinOps.mergeNearestKJoin(l, r, k).queryExecution.toRdd
   }
-  override protected def withNewChildrenInternal(
-      newLeft: SparkPlan, newRight: SparkPlan): SparkPlan =
-    copy(left = newLeft, right = newRight)
-}
-
-/** Analyzer rule: `nearest_join('v', 'v')` — the same view on both
-  * sides — resolves both children to the same relation, so `left.output`
-  * and `right.output` share exprIds. The stock analyzer dedups only
-  * `Join`'s right side (`ResolveReferences.dedupRight`); custom
-  * BinaryNodes must do it themselves, else the node's output carries
-  * duplicate attribute IDs and downstream resolution is ambiguous
-  * (r9 ADVICE). Wrap the right child in a Project of fresh Aliases —
-  * self-join semantics, same as stock Spark's dedup. */
-case class NearestJoinDedupRule(session: SparkSession)
-    extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.expressions.Alias
-  import org.apache.spark.sql.catalyst.plans.logical.Project
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {
-    case n @ NearestJoinNode(l, r, _, _, _)
-        if n.childrenResolved && l.outputSet.intersect(r.outputSet).nonEmpty =>
-      n.copy(right = Project(r.output.map(a => Alias(a, a.name)()), r))
-  }
+  override protected def withNewChildrenInternal(l: SparkPlan, r: SparkPlan): SparkPlan =
+    copy(left = l, right = r)
 }
 
 /** Optimizer rule: projection pruning through [[NearestJoinNode]]
@@ -220,7 +207,6 @@ case class NearestJoinDedupRule(session: SparkSession)
   * safe; ColumnPruning then pushes the inserted Projects into the scans. */
 case class NearestJoinPruneRule(session: SparkSession)
     extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
-  import org.apache.spark.sql.catalyst.plans.logical.Project
   private val operatorInputs = Set("contig", "pos_start", "pos_end")
   override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
     case p @ Project(_, n: NearestJoinNode) if n.resolved =>
@@ -242,34 +228,29 @@ case class GenomicStrategy(session: SparkSession) extends SparkStrategy {
       CoverageExec(out, sample, target, planLater(child)) :: Nil
     case PileupNode(child, sample, bin, out) =>
       PileupExec(out, sample, bin, planLater(child)) :: Nil
-    case n @ NearestJoinNode(l, r, method, k, _) =>
-      // Internal invariant, not a user path: self nearest-joins dedup at
-      // TVF-build time (`GraftTableFunctions.nearestSides` re-aliases the
-      // right side with fresh ExprIds on BOTH attachment paths — r15
-      // VERDICT #6 deleted the ensure-path loud-fail), and the
-      // extensions-path [[NearestJoinDedupRule]] backstops direct node
-      // construction. A collision here means a new construction site
-      // bypassed both; positional binding would silently emit the LEFT
-      // side's values for the right columns, so assert rather than plan.
+    case n @ NearestJoinNode(l, r, method, k, distance) =>
+      // Internal invariant, not a user path: self nearest-joins dedup
+      // when the node is built ([[NearestJoinNode.sides]], on both
+      // attachment paths — r15 VERDICT #6 deleted the ensure-path
+      // loud-fail). A collision here means a construction site bypassed
+      // it; positional binding would silently emit the LEFT side's values
+      // for the right columns, so assert rather than plan.
       require(l.outputSet.intersect(r.outputSet).isEmpty,
         "nearest-join children share ExprIds at planning — a construction " +
           "site bypassed the build-time self-join dedup")
-      // Resolve `auto` HERE, from the logical children's Catalyst stats:
-      // the exec re-wraps its children through ColumnBridge.internalFrame,
-      // whose LogicalRDD stats default to spark.sql.defaultSizeInBytes, so
-      // an `auto` left for the operator to resolve would never see the
-      // right side fit the broadcast budget and silently always pick the
-      // merge regime (r9 VERDICT #1 — the SQL surface lost the fast path).
-      // Over budget resolves to the merge regime for every k (r10 VERDICT
-      // #5) — the TVF surface is the base k-nearest, which the merge
-      // regime covers fully. A broadcast the estimate chose keeps the
-      // runtime guard; a pinned method stands it down.
-      val resolved = if (method == "auto") {
-        if (BroadcastBudget.fits(r.stats.sizeInBytes, session.sessionState.conf)) "broadcast"
-        else "merge"
-      } else method
-      NearestJoinExec(n.output, resolved, k, planLater(l), planLater(r),
-        enforceBuildBudget = method == "auto") :: Nil
+      // The regime comes from the logical children's stats, by the Scala
+      // API's own decision; a broadcast the estimate chose keeps the
+      // runtime guard, a pinned method stands it down.
+      graft.operators.NearestJoinOps.regime(method, l.isStreaming, r.stats.sizeInBytes,
+          session.sessionState.conf) match {
+        case "merge" => NearestJoinExec(n.output, k, planLater(l), planLater(r)) :: Nil
+        case _ =>
+          BroadcastProbeExec(NearestProbe(k, ignoreOverlaps = false, direction = "both",
+              signed = false, IntervalProbe.columns(l.output), IntervalProbe.columns(r.output),
+              distance), enforceBudget = method == "auto", planLater(l), planLater(r)) :: Nil
+      }
+    case BroadcastProbe(stream, build, spec, enforceBudget) =>
+      BroadcastProbeExec(spec, enforceBudget, planLater(stream), planLater(build)) :: Nil
     case n: IntervalCountJoinNode => n.bins match {
       case Some((leftBin, rightBin)) =>
         // Shuffle regime (build side over the broadcast budget, or the

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.plans.Inner
+import org.apache.spark.sql.catalyst.plans.{FullOuter, Inner}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{FilterExec, SparkPlan, SparkStrategy}
 
@@ -41,14 +41,8 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
     session.conf.get(s"spark.graft.rangejoin.$key", default)
 
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
-    // Streaming children fall through to Spark's stream-aware join
-    // planning: the broadcast exec collects a child and the rewrite
-    // aggregates verdicts, neither of which is defined over an unbounded
-    // side. (Streaming interval joins:
-    // graft.streaming.StreamingOps.{annotateStream, joinStreams}.)
     case ExtractIntervalJoin(left, right, joinType, keys, hint)
-        if conf("enabled", "true").toBoolean && !left.isStreaming && !right.isStreaming &&
-          !BinRangeRewrite.isRewriteJoin(keys) =>
+        if conf("enabled", "true").toBoolean && !BinRangeRewrite.isRewriteJoin(keys) =>
       // Operator-authored IntervalOverlaps predicates pin the overlap
       // semantics (and optionally the method) in the plan; the session
       // confs are the defaults-only surface for user-authored
@@ -63,6 +57,15 @@ case class IntervalJoinStrategy(session: SparkSession) extends SparkStrategy {
       // tracked globally by the exec), so either side may build.
       val (buildLeft, binRange) = RangeJoinChoice.choose(
         conf, joinType, left, right, hint, method)
+      // A join with a streaming child plans here only as the broadcast
+      // forest with a static build child, which each micro-batch
+      // broadcasts again: a full outer join would emit the unmatched build
+      // rows once per batch, and the bin-range rewrite aggregates both
+      // sides. Everything else falls through to Spark's stream-aware
+      // planning (stream-stream joins: StreamingOps.joinStreams).
+      if ((left.isStreaming || right.isStreaming) &&
+          (binRange || joinType == FullOuter || (if (buildLeft) left else right).isStreaming))
+        return Nil
       // At shuffle scale every join type plans as the Catalyst bin
       // rewrite. BinRangeLogicalRule normally applies it first; this
       // branch covers joins created after its batch (subqueries turned

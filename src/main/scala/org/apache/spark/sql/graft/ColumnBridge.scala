@@ -1,8 +1,9 @@
 package org.apache.spark.sql.graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 
 /** Column ↔ catalyst Expression bridge. `classic.ExpressionUtils` is
   * `private[sql]`, so third-party engines that build native expressions
@@ -21,6 +22,10 @@ object ColumnBridge {
     * ColumnNode wrapper (it reaches codegen Unevaluable). */
   def catalystExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** The DataFrame over a logical plan (`Dataset.ofRows` is `private[sql]`). */
+  def frame(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    Dataset.ofRows(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
 
   /** Wrap an execution-time `RDD[InternalRow]` back into a DataFrame so a
     * physical operator can run a DataFrame-expressed pipeline over its

@@ -8,6 +8,19 @@ import scala.util.Random
   * scan (SURVEY §5 pattern 4). */
 class IntervalForestSpec extends AnyFunSuite {
 
+  /** The forest's two walks in the shapes checked here: the overlapping
+    * values, and the k-nearest walk over every candidate class. */
+  private implicit class Queries[T](f: IntervalForest[T]) {
+    def overlappers(qs: Int, qe: Int): Seq[T] = {
+      val buf = scala.collection.mutable.ArrayBuffer.empty[T]
+      f.foreachOverlap(qs, qe)((_, _, v) => buf += v)
+      buf.toSeq
+    }
+    def foreachNearestK(qs: Int, qe: Int, k: Int)(g: (Int, Int, T, Int) => Unit): Int =
+      f.foreachNearestKDir(qs, qe, k, includeOverlaps = true, includeUpstream = true,
+        includeDownstream = true)((s, e, v, d, _) => g(s, e, v, d))
+  }
+
   private def brute(items: Seq[(Int, Int, Int)], qs: Int, qe: Int): Set[Int] =
     items.collect { case (s, e, v) if e >= qs && s <= qe => v }.toSet
 

@@ -110,6 +110,18 @@ object NearestJoinLaws extends Properties("NearestJoin") {
         model(ls, rs, k, io, dir, signed)
     }
 
+  // One frame on both sides: the probe's output carries the right side
+  // re-aliased, so no exprId repeats.
+  property("self k-nearest through the Scala API == brute-force model") =
+    forAll(genIvs(0L), Gen.chooseNum(1, 3)) { (ls, k) =>
+      val (l, _) = frames(ls, Nil)
+      val out = NearestJoinOps.nearestKJoin(l, l, k, "broadcast")
+      val ids = out.queryExecution.analyzed.output.map(_.exprId)
+      ids.distinct.length == ids.length &&
+        out.collect().map(x => (x.getLong(0), x.getLong(4), x.getInt(8))).sorted.toSeq ==
+          model(ls, ls, k)
+    }
+
   private def withBudget[T](bytes: Option[String])(body: => T): T = {
     val key = "spark.graft.rangejoin.maxBroadcastBytes"
     val old = spark.conf.getOption(key)

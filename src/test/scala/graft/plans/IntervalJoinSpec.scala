@@ -480,6 +480,7 @@ class IntervalJoinSpec extends SparkSpec {
     nodes(physical(df)).collect {
       case f: IntervalForestJoinExec => f -> (if (f.buildLeft) f.left else f.right)
       case c: IntervalCountJoinExec => c -> (if (c.buildLeft) c.left else c.right)
+      case p: BroadcastProbeExec => p -> p.right
     }.map { case (e, InputAdapter(b)) => (e, b); case eb => eb }
   }
 
@@ -527,6 +528,49 @@ class IntervalJoinSpec extends SparkSpec {
         }.sum
         assert(exchanges(physical(df)) === 1, s"$at:\n${physical(df)}")
       }
+    }
+  }
+
+  test("the Scala API's nearest probe reads one broadcast exchange, reused by two joins") {
+    import org.apache.spark.sql.execution.adaptive.{BroadcastQueryStageExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+    import graft.operators.NearestJoinOps
+    val a1 = randomIntervals(300, 61, "a_key")
+    val a2 = randomIntervals(300, 62, "a_key")
+    val b = randomIntervals(60, 63, "b_key")
+    def rows(df: DataFrame) = df.collect().map(r => (r.getLong(0), r.getLong(4), r.getInt(8)))
+      .toSeq.sorted
+    val want1 = rows(NearestJoinOps.nearestKJoin(a1, b, 3, "merge"))
+    val want2 = rows(NearestJoinOps.nearestKJoin(a2, b, 2, "merge"))
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case ad: AdaptiveSparkPlanExec => nodes(ad.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    for (aqe <- Seq("true", "false")) withConf("spark.sql.adaptive.enabled", aqe) {
+      val near = NearestJoinOps.nearestKJoin(a1, b, 3)
+      assert(rows(near) === want1, s"AQE $aqe")
+      val found = builds(near)
+      assert(found.length === 1, s"AQE $aqe:\n${physical(near)}")
+      found.head._2 match {
+        case _: BroadcastExchangeExec | BroadcastQueryStageExec(_, _: BroadcastExchangeExec, _) =>
+        case other =>
+          fail(s"AQE $aqe: the probe's build child is not a broadcast exchange:\n$other")
+      }
+      assert(nodes(physical(near)).count(_.isInstanceOf[BroadcastExchangeExec]) === 1)
+      assert(found.head._1.metrics("buildRows").value === 60L, s"AQE $aqe")
+      assert(near.queryExecution.explainString(org.apache.spark.sql.execution.SimpleMode)
+        .contains("BroadcastProbe nearest-k k=3 both"), s"AQE $aqe")
+      // Two nearest joins against one right frame share its exchange.
+      val two = NearestJoinOps.nearestKJoin(a1, b, 3).union(NearestJoinOps.nearestKJoin(a2, b, 2))
+      assert(rows(two) === (want1 ++ want2).sorted, s"AQE $aqe")
+      val all = nodes(physical(two))
+      assert(all.count(_.isInstanceOf[BroadcastProbeExec]) === 2)
+      assert(all.count(_.isInstanceOf[BroadcastExchangeExec]) === 1 &&
+        all.count {
+          case ReusedExchangeExec(_, _: BroadcastExchangeExec) => true
+          case _ => false
+        } === 1, s"AQE $aqe:\n${physical(two)}")
     }
   }
 
@@ -692,11 +736,9 @@ class IntervalJoinSpec extends SparkSpec {
     // The both-sides-large merge regime (phase-1 distributed distance
     // sweep + phase-2 residual interval join) must emit the identical
     // pair set — same rows, same ties, same distances.
-    val merged = withConf("spark.graft.nearestjoin.method", "merge") {
-      graft.operators.NearestJoinOps.nearestJoin(a, b)
-        .select(col("a_key"), col("b_key"), col("distance"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
-    }
+    val merged = graft.operators.NearestJoinOps.nearestJoin(a, b, "merge")
+      .select(col("a_key"), col("b_key"), col("distance"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     assert(merged === brute)
   }
 
@@ -732,8 +774,8 @@ class IntervalJoinSpec extends SparkSpec {
     ).toDF("contig", "pos_start", "pos_end")
     // Both paths emit left cols ++ right cols ++ distance with duplicate
     // names; compare on the raw positional columns.
-    def runPos(method: String) = withConf("spark.graft.nearestjoin.method", method) {
-      val out = graft.operators.NearestJoinOps.nearestJoin(l, r)
+    def runPos(method: String) = {
+      val out = graft.operators.NearestJoinOps.nearestJoin(l, r, method)
       val n = out.columns.length
       out.collect().map(x => (x.getString(0), x.getInt(1), x.getInt(2),
         x.getString(3), x.getInt(4), x.getInt(5), x.getInt(n - 1))).sorted.toSeq
@@ -775,10 +817,12 @@ class IntervalJoinSpec extends SparkSpec {
     }
   }
 
-  private def findNearestExec(p: SparkPlan): Option[NearestJoinExec] = p match {
-    case n: NearestJoinExec => Some(n)
-    case a: AdaptiveSparkPlanExec => findNearestExec(a.executedPlan)
-    case other => other.children.flatMap(findNearestExec(_)).headOption
+  /** The regime a nearest-join plan took: its probe or merge exec. */
+  private def nearestRegime(p: SparkPlan): Option[String] = p match {
+    case _: BroadcastProbeExec => Some("broadcast")
+    case _: NearestJoinExec => Some("merge")
+    case a: AdaptiveSparkPlanExec => nearestRegime(a.executedPlan)
+    case other => other.children.flatMap(nearestRegime(_)).headOption
   }
 
   test("nearest_join TVF in auto mode resolves the regime from logical stats") {
@@ -791,13 +835,13 @@ class IntervalJoinSpec extends SparkSpec {
     randomIntervals(200, 91, "a_key").createOrReplaceTempView("nj_auto_l")
     randomIntervals(50, 92, "b_key").createOrReplaceTempView("nj_auto_r")
     val auto = spark.sql("SELECT * FROM nearest_join('nj_auto_l', 'nj_auto_r')")
-    val exec = findNearestExec(auto.queryExecution.executedPlan)
-    assert(exec.isDefined, "no NearestJoinExec in the TVF plan")
-    assert(exec.get.method === "broadcast",
+    val regime = nearestRegime(auto.queryExecution.executedPlan)
+    assert(regime.isDefined, "no nearest exec in the TVF plan")
+    assert(regime.get === "broadcast",
       "auto with a broadcast-sized right side must resolve to broadcast at the strategy")
     // An explicit method still passes through untouched.
     val forced = spark.sql("SELECT * FROM nearest_join('nj_auto_l', 'nj_auto_r', 'merge')")
-    assert(findNearestExec(forced.queryExecution.executedPlan).get.method === "merge")
+    assert(nearestRegime(forced.queryExecution.executedPlan).get === "merge")
     // And the two regimes agree on the result.
     def sorted(df: DataFrame) =
       df.select(col("a_key"), col("b_key"), col("distance"))
@@ -812,7 +856,7 @@ class IntervalJoinSpec extends SparkSpec {
     def rows(df: DataFrame) = df.select(col("a_key"), col("b_key"), col("distance"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
     def tvf(k: Int) = spark.sql(s"SELECT * FROM nearest_k_join('njk_l', 'njk_r', $k)")
-    def method(df: DataFrame) = findNearestExec(df.queryExecution.executedPlan).map(_.method)
+    def method(df: DataFrame) = nearestRegime(df.queryExecution.executedPlan)
     val (l, r) = (spark.table("njk_l"), spark.table("njk_r"))
     val viaSql = rows(tvf(3))
     assert(method(tvf(3)) === Some("broadcast"))
@@ -947,7 +991,7 @@ class IntervalJoinSpec extends SparkSpec {
       (3, false, "downstream", true))
     for ((k, io, dirn, sg) <- combos) {
       val bc = rows(graft.operators.NearestJoinOps
-        .nearestKJoinUngated(a, b, k, io, dirn, sg))
+        .nearestKJoin(a, b, k, io, dirn, sg, method = "broadcast"))
       val mg = rows(graft.operators.NearestJoinOps
         .mergeNearestKJoin(a, b, k, io, dirn, sg))
       assert(mg === bc, s"merge variant diverged at k=$k io=$io dir=$dirn signed=$sg")
@@ -964,7 +1008,7 @@ class IntervalJoinSpec extends SparkSpec {
   test("nearest_join TVF with the same view on both sides dedups exprIds") {
     // r9 ADVICE: custom BinaryNodes don't get the analyzer's Join
     // dedupRight, so nearest_join('v','v') carried duplicate attribute
-    // IDs. NearestJoinDedupRule wraps the right child in fresh Aliases.
+    // IDs. NearestJoinNode.sides wraps the right child in fresh Aliases.
     randomIntervals(60, 93, "k").createOrReplaceTempView("nj_self_v")
     val df = spark.sql("SELECT * FROM nearest_join('nj_self_v', 'nj_self_v')")
     val out = df.queryExecution.analyzed.output
@@ -1029,11 +1073,10 @@ class IntervalJoinSpec extends SparkSpec {
     // query produces identical results no matter how the result-affecting
     // confs are scrambled beforehand.
     val keys = Seq("spark.graft.rangejoin.method", "spark.graft.rangejoin.maxGap",
-      "spark.graft.rangejoin.minOverlap", "spark.graft.nearestjoin.method")
+      "spark.graft.rangejoin.minOverlap")
     val scramble = Map("spark.graft.rangejoin.method" -> "binrange",
       "spark.graft.rangejoin.maxGap" -> "77",
-      "spark.graft.rangejoin.minOverlap" -> "25",
-      "spark.graft.nearestjoin.method" -> "merge")
+      "spark.graft.rangejoin.minOverlap" -> "25")
     val saved = keys.map(k => k -> spark.conf.getOption(k))
     try {
       // The whole interval_* family: every query (joins, set algebra,

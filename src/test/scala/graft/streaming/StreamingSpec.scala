@@ -1,6 +1,9 @@
 package graft.streaming
 
 import graft.SparkSpec
+import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -392,6 +395,99 @@ class StreamingSpec extends SparkSpec {
     }
   }
 
+  /** The physical nodes of a streaming query's last micro-batch (Spark
+    * plans a stateless micro-batch adaptively). */
+  private def lastPlan(q: StreamingQuery): Seq[SparkPlan] = {
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    nodes(q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan)
+  }
+
+  test("stream-static overlap joins plan the forest join with the static side built") {
+    import graft.SharedSpark.spark.implicits._
+    val targets = Seq(("1", 100, 200, "tA"), ("1", 150, 300, "tB"), ("2", 50, 60, "tC"))
+      .toDF("contig", "pos_start", "pos_end", "name")
+    def overlap(reads: DataFrame, t: DataFrame) = reads("contig") === t("contig") &&
+      reads("pos_end") >= t("pos_start") && reads("pos_start") <= t("pos_end")
+    // A static left side must still build; a left outer join keeps the
+    // stream's unmatched reads.
+    val base = Set((190, "tA"), (190, "tB"), (55, "tC"))
+    val cases = Seq[(String, Dataset[StreamingOps.StreamRead] => DataFrame, Boolean,
+        Set[(Int, String)])](
+      ("annotateStream", in => StreamingOps.annotateStream(in, targets)
+        .select(col("pos_start"), col("target_name")), true, base),
+      ("static-left inner", in => {
+        val r = in.toDF()
+        targets.join(r, overlap(r, targets)).select(r("pos_start"), targets("name"))
+      }, false, base),
+      ("left outer", in => {
+        val r = in.toDF()
+        r.join(targets, overlap(r, targets), "left_outer").select(r("pos_start"), targets("name"))
+      }, true, base + ((400, null))))
+    for (((name, op, streamLeft, want), i) <- cases.zipWithIndex) {
+      val in = MemoryStream[StreamingOps.StreamRead]
+      val q = op(in.toDS()).writeStream.format("memory").queryName(s"forest_stream_$i")
+        .outputMode("append").start()
+      def rows = spark.table(s"forest_stream_$i").collect()
+        .map(r => (r.getInt(0), r.getString(1))).toSet
+      run(q) {
+        in.addData(StreamingOps.StreamRead("1", 190, 210, ts(1)),
+          StreamingOps.StreamRead("1", 400, 500, ts(2)),
+          StreamingOps.StreamRead("2", 55, 58, ts(3)))
+        q.processAllAvailable()
+        val found = lastPlan(q).collect { case f: graft.plans.IntervalForestJoinExec => f }
+        assert(found.length === 1, s"$name: no forest join in the micro-batch plan")
+        assert(found.head.buildLeft !== streamLeft, s"$name: the stream must not build")
+        assert(rows === want, name)
+        // The second micro-batch broadcasts the static side again.
+        in.addData(StreamingOps.StreamRead("1", 100, 100, ts(4)))
+        q.processAllAvailable()
+        assert(rows === want + ((100, "tA")), s"$name, second micro-batch")
+      }
+    }
+  }
+
+  test("nearestKJoin over a stream runs the broadcast probe and matches brute force") {
+    import graft.SharedSpark.spark.implicits._
+    val rnd = new scala.util.Random(23)
+    val targets = Seq.tabulate(40)(i => ((1 + i % 2).toString, rnd.nextInt(2000) + 1))
+      .map { case (c, s) => (c, s, s + rnd.nextInt(60)) }
+    val reads = Seq.tabulate(30) { i =>
+      val s = rnd.nextInt(2000) + 1
+      StreamingOps.StreamRead((1 + i % 3).toString, s, s + 40, ts(i))
+    }
+    val in = MemoryStream[StreamingOps.StreamRead]
+    val right = targets.toDF("contig", "pos_start", "pos_end")
+    val near = graft.operators.NearestJoinOps.nearestKJoin(in.toDS().toDF(), right, 2)
+      .toDF("contig", "pos_start", "pos_end", "ts", "t_contig", "t_start", "t_end", "distance")
+    val q = near.writeStream.format("memory").queryName("nearest_k_join_stream")
+      .outputMode("append").start()
+    run(q) {
+      in.addData(reads.take(15): _*)
+      q.processAllAvailable()
+      in.addData(reads.drop(15): _*)
+      q.processAllAvailable()
+      assert(lastPlan(q).collect { case p: graft.plans.BroadcastProbeExec => p }.length === 1)
+      val got = spark.table("nearest_k_join_stream").collect()
+        .map(r => (r.getInt(1), r.getString(0), r.getInt(5), r.getInt(7))).toSeq.sorted
+      // Brute force: per read, the targets on its contig at its 2
+      // smallest distinct distances.
+      val want = reads.flatMap { r =>
+        val ds = targets.filter(_._1 == r.contig).map { case (_, s, e) =>
+          (s, math.max(math.max(s - r.pos_end, r.pos_start - e), 0))
+        }
+        val keep = ds.map(_._2).distinct.sorted.take(2).toSet
+        ds.collect { case (s, d) if keep(d) => (r.pos_start, r.contig, s, d) }
+      }.sorted
+      assert(got === want)
+      assert(got.nonEmpty)
+    }
+  }
+
   test("stream-stream interval join pairs overlapping reads within the time band") {
     import graft.SharedSpark.spark.implicits._
     val inL = MemoryStream[StreamingOps.StreamRead]
@@ -495,12 +591,26 @@ class StreamingSpec extends SparkSpec {
         val e = intercept[IllegalArgumentException](op())
         assert(e.getMessage.contains("maxBroadcastBytes"), s"$name: ${e.getMessage}")
       } finally spark.conf.unset(conf)
-      // A side the estimate let through is held again once collected: at
-      // a near-zero slack the runtime guard refuses it.
+      // A side the estimate let through is held again at runtime: at a
+      // near-zero slack the guard refuses it. similarStream collects its
+      // corpus when the frame is defined; the three interval operators
+      // take theirs from the broadcast exchange, guarded on the driver
+      // when the first micro-batch runs.
       spark.conf.set("spark.graft.rangejoin.buildBytesSlack", "1e-9")
       try {
-        val e = intercept[IllegalStateException](op())
-        assert(e.getMessage.contains("at runtime"), s"$name: ${e.getMessage}")
+        val e = intercept[Exception] {
+          if (name == "similarStream") op()
+          else {
+            val q = op().writeStream.format("noop").start()
+            try {
+              in.addData(StreamingOps.StreamRead("1", 150, 160, ts(1)))
+              q.processAllAvailable()
+            } finally q.stop()
+          }
+        }
+        def messages(t: Throwable): Seq[String] =
+          if (t == null) Nil else String.valueOf(t.getMessage) +: messages(t.getCause)
+        assert(messages(e).exists(_.contains("at runtime")), s"$name: ${messages(e)}")
       } finally spark.conf.unset("spark.graft.rangejoin.buildBytesSlack")
       // With the default gate the same call plans fine.
       op()
