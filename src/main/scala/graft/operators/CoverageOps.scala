@@ -40,6 +40,10 @@ import scala.collection.mutable
   *
   * Coverage is emitted as Int (the reference uses Short with a documented
   * ≤32767 assumption — SURVEY §7 hard parts; Int removes the overflow).
+  *
+  * Windowed coverage ([[windowed]]) needs no blocks: a tile's mean depth
+  * is a linear aggregate, summed straight from the reads' covered
+  * segments with map-side partial sums — no sweep, one hash exchange.
   */
 object CoverageOps {
 
@@ -309,24 +313,60 @@ object CoverageOps {
           col("pos_start"), col("pos_end"), col("coverage")): _*)
   }
 
+  /** One-scan covered-segment rows `(keys..., contig, seg_start, seg_end)`
+    * via the codegen'd [[graft.functions.CigarCoveredSegments]] walk (no
+    * `cigar` column degrades to the solid `[pos_start, pos_end]`). A read
+    * with a null bound has no segment, and the solid interval of an
+    * inverted read is empty (`seg_end < seg_start`). */
+  private[graft] def segmentRows(reads: DataFrame, keys: Seq[String]): DataFrame = {
+    val k = keys.map(col)
+    val segArr =
+      if (reads.columns.contains("cigar")) {
+        import org.apache.spark.sql.graft.ColumnBridge
+        ColumnBridge.column(graft.functions.CigarCoveredSegments(
+          ColumnBridge.expression(col("pos_start").cast("int")),
+          ColumnBridge.expression(col("pos_end").cast("int")),
+          ColumnBridge.expression(coalesce(col("cigar"), lit("")))))
+      } else {
+        array(struct(col("pos_start").cast("int").as("seg_start"),
+          col("pos_end").cast("int").as("seg_end")))
+      }
+    reads.select(k ++ Seq(col("contig"), explode(segArr).as("seg")): _*)
+      .select(k ++ Seq(col("contig"), col("seg.seg_start").as("seg_start"),
+        col("seg.seg_end").as("seg_end")): _*)
+  }
+
+  /** Each covered segment of `reads` fanned out to the `windowSize`-bp
+    * tiles it overlaps: `(keys..., contig, tile, contrib)`, with tile =
+    * `(pos-1) / windowSize` and the overlap length as `contrib`. Rows with
+    * a null contig and empty segments contribute nothing. The one tile
+    * fan-out of the batch and streaming windowed coverage. */
+  private[graft] def tileOverlaps(reads: DataFrame, windowSize: Int,
+      keys: Seq[String] = Nil): DataFrame = {
+    val k = keys.map(col)
+    def tile(pos: String) = (col(pos) - 1).divide(windowSize).cast("long")
+    segmentRows(reads, keys)
+      .filter(col("contig").isNotNull && col("seg_start") <= col("seg_end"))
+      .select(k ++ Seq(col("contig"),
+        explode(sequence(tile("seg_start"), tile("seg_end"))).as("tile"),
+        col("seg_start"), col("seg_end")): _*)
+      .select(k ++ Seq(col("contig"), col("tile"),
+        (least(col("seg_end"), (col("tile") + 1) * windowSize)
+          - greatest(col("seg_start"), col("tile") * windowSize + 1) + 1)
+          .cast("long").as("contrib")): _*)
+  }
+
   /** Mean coverage per fixed-size tiling window (SURVEY §2.5 W1):
     * tile = `(pos-1) / windowSize`, mean over all `windowSize` positions
     * (uncovered positions count as zero); all-zero tiles are not emitted.
-    * Computed from the RLE blocks — each block contributes
-    * `overlap × coverage` to the tiles it spans — so the shuffle is over
-    * blocks, not positions. */
-  def windowed(reads: DataFrame, windowSize: Int): DataFrame = {
-    val b = blocks(reads)
-    b.select(col("contig"),
-        explode(sequence(
-          (col("pos_start") - 1).divide(windowSize).cast("long"),
-          (col("pos_end") - 1).divide(windowSize).cast("long"))).as("tile"),
-        col("pos_start"), col("pos_end"), col("coverage"))
-      .select(col("contig"), col("tile"),
-        (least(col("pos_end"), (col("tile") + 1) * windowSize)
-          - greatest(col("pos_start"), col("tile") * windowSize + 1) + 1)
-          .cast("long").multiply(col("coverage")).as("contrib"))
+    * Depth is linear in the reads, so a tile's summed depth is the summed
+    * overlap of the reads' covered segments with it ([[tileOverlaps]]):
+    * one aggregate with map-side partial sums and one hash exchange on
+    * `(contig, tile)`, no range sweep and no job before the action. The
+    * sum is the same integer the RLE blocks would give, so the mean is
+    * exact. */
+  def windowed(reads: DataFrame, windowSize: Int): DataFrame =
+    tileOverlaps(reads, windowSize)
       .groupBy(col("contig"), col("tile"))
       .agg((sum(col("contrib")) / lit(windowSize.toDouble)).as("mean_coverage"))
-  }
 }

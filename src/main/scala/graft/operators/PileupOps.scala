@@ -92,27 +92,6 @@ object PileupOps {
       ref: ReferenceSource): DataFrame =
     withDepthBy(perPos, reads, Nil, ref)
 
-  /** One-scan covered-segment rows `(keys..., contig, seg_start, seg_end)`
-    * via the codegen'd [[graft.functions.CigarCoveredSegments]] walk (no
-    * `cigar` column degrades to the solid `[pos_start, pos_end]`). */
-  private def segmentRows(reads: DataFrame, keys: Seq[String]): DataFrame = {
-    val k = keys.map(col)
-    val segArr =
-      if (reads.columns.contains("cigar")) {
-        import org.apache.spark.sql.graft.ColumnBridge
-        ColumnBridge.column(graft.functions.CigarCoveredSegments(
-          ColumnBridge.expression(col("pos_start").cast("int")),
-          ColumnBridge.expression(col("pos_end").cast("int")),
-          ColumnBridge.expression(coalesce(col("cigar"), lit("")))))
-      } else {
-        array(struct(col("pos_start").cast("int").as("seg_start"),
-          col("pos_end").cast("int").as("seg_end")))
-      }
-    reads.select(k ++ Seq(col("contig"), explode(segArr).as("seg")): _*)
-      .select(k ++ Seq(col("contig"), col("seg.seg_start").as("seg_start"),
-        col("seg.seg_end").as("seg_end")): _*)
-  }
-
   /** Naive threshold variant caller over the map-typed pileup — the
     * classic "alt fraction ≥ cutoff at depth ≥ minDepth" first-pass
     * caller, showing the pileup family composes downstream. The gate is
@@ -287,9 +266,10 @@ object PileupOps {
 
   /** [[withDepth]] generalized over group keys: depth per
     * `(keys, contig, pos)` from the pair-free count join over
-    * [[segmentRows]], with the keys as extra equality columns; the
-    * depth frame re-attaches to the map columns by equi-join on the keys
-    * both sides are already hash-partitioned on (no extra exchange). */
+    * [[CoverageOps.segmentRows]], with the keys as extra equality
+    * columns; the depth frame re-attaches to the map columns by equi-join
+    * on the keys both sides are already hash-partitioned on (no extra
+    * exchange). */
   private def withDepthBy(perPos0: DataFrame, reads: DataFrame,
       keys: Seq[String], ref: ReferenceSource): DataFrame = {
     val idCols = keys ++ Seq("contig", "pos")
@@ -298,7 +278,7 @@ object PileupOps {
     // barrier the whole alt aggregation would run twice.
     val perPos = CacheScope.persistTracked(perPos0)
     val pos = perPos.select(idCols.map(col): _*).hint("broadcast").as("p")
-    val segs = segmentRows(reads, keys).as("s")
+    val segs = CoverageOps.segmentRows(reads, keys).as("s")
     val cond = (keys.map(kc => col(s"p.$kc") === col(s"s.$kc")) ++ Seq(
       col("p.contig") === col("s.contig"),
       col("p.pos") >= col("s.seg_start"),

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.operators.{DedupOps, EmbeddingOps, TextOps}
+import graft.operators.{CoverageOps, DedupOps, EmbeddingOps, TextOps}
 import graft.plans.{BroadcastBudget, BroadcastProbe, CountProbe, IntervalProbe}
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.catalyst.expressions.AttributeReference
@@ -558,27 +558,17 @@ object StreamingOps {
 
   /** Streaming windowed coverage: mean depth per (event-time window,
     * contig, tile) over the reads arriving in each window — the
-    * incremental analogue of [[graft.operators.CoverageOps.windowed]],
-    * and the streaming member of the coverage family. Each read
-    * contributes `overlap × 1` to every `windowSize`-bp tile it spans
-    * (fan-out = read length / windowSize, small and bounded), then a
-    * standard watermarked aggregation sums contributions — state is per
-    * (window, contig, tile) and expires with the watermark, so the job
-    * runs indefinitely. The same blocks-not-positions trick as batch:
-    * nothing ever explodes to per-base rows. */
+    * incremental analogue of [[CoverageOps.windowed]], through the same
+    * tile fan-out ([[CoverageOps.tileOverlaps]]): each read contributes
+    * its overlap with every `windowSize`-bp tile it spans (fan-out = read
+    * length / windowSize, small and bounded), then a standard watermarked
+    * aggregation sums contributions — state is per (window, contig, tile)
+    * and expires with the watermark, so the job runs indefinitely.
+    * Nothing ever explodes to per-base rows. */
   def windowedCoverageStream(reads: Dataset[StreamRead], windowSize: Int,
       window_ : String = "1 hour", watermark: String = "2 hours"): DataFrame =
-    reads.toDF()
-      .withWatermark("ts", watermark)
-      .select(col("contig"), col("ts"),
-        explode(sequence(
-          (col("pos_start") - 1).divide(windowSize).cast("long"),
-          (col("pos_end") - 1).divide(windowSize).cast("long"))).as("tile"),
-        col("pos_start"), col("pos_end"))
-      .select(col("contig"), col("ts"), col("tile"),
-        (least(col("pos_end"), (col("tile") + 1) * windowSize)
-          - greatest(col("pos_start"), col("tile") * windowSize + 1) + 1)
-          .cast("long").as("contrib"))
+    CoverageOps.tileOverlaps(
+        reads.toDF().withWatermark("ts", watermark), windowSize, Seq("ts"))
       .groupBy(window(col("ts"), window_), col("contig"), col("tile"))
       .agg((sum(col("contrib")) / lit(windowSize.toDouble)).as("mean_coverage"))
       .select(col("window.start").as("window_start"),

@@ -2,7 +2,14 @@ package graft.operators
 
 import graft.SparkSpec
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.{HashPartitioning, RangePartitioning}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.TestListeners
+import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 
 import scala.util.Random
 
@@ -210,6 +217,111 @@ class CoverageSpec extends SparkSpec {
     val got = CoverageOps.windowed(reads, 500)
       .collect().toSeq.sortBy(r => (r.getString(0), r.getLong(1)))
     assert(got === expected)
+  }
+
+  private val cigarSchema = StructType(Seq(
+    StructField("contig", StringType), StructField("pos_start", IntegerType),
+    StructField("pos_end", IntegerType), StructField("cigar", StringType)))
+
+  private def cigarFrame(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize(rows, 4), cigarSchema)
+
+  /** Reads on 4 contigs with random CIGARs over M, =, X, D, N, I and S
+    * (long N gaps, segments up to 200 bp that cross tile edges), one in
+    * ten with an empty and one in ten with a null CIGAR, which cover the
+    * solid `[pos_start, pos_end]`. Built from an RDD, so no operator can
+    * take a size-estimate shortcut. */
+  private def cigarReads(n: Int, seed: Long): DataFrame = {
+    val rnd = new Random(seed)
+    def len(op: Char): Int = op match {
+      case 'M' | '=' | 'X' => rnd.nextInt(200) + 1
+      case 'N' => rnd.nextInt(1500) + 1
+      case _ => rnd.nextInt(20) + 1
+    }
+    cigarFrame(Seq.fill(n) {
+      val s = rnd.nextInt(4000) + 1
+      val (cigar, refLen) = rnd.nextInt(10) match {
+        case 0 => (null, rnd.nextInt(300) + 1)
+        case 1 => ("", rnd.nextInt(300) + 1)
+        case _ =>
+          val ops = Seq.fill(rnd.nextInt(5) + 1) { val op = "M=XDNIS"(rnd.nextInt(7)); (len(op), op) }
+          (ops.map { case (l, op) => s"$l$op" }.mkString,
+            math.max(1, ops.collect { case (l, op) if "M=XDN".contains(op) => l }.sum))
+      }
+      Row(rnd.nextInt(4).toString, s, s + refLen - 1, cigar)
+    })
+  }
+
+  /** The model: the tiling `windowed` ran over the RLE blocks before it
+    * summed covered segments — each block adds `overlap × coverage` to
+    * the tiles it spans. */
+  private def blocksTiling(reads: DataFrame, windowSize: Int): DataFrame =
+    CoverageOps.blocks(reads)
+      .select(col("contig"),
+        explode(sequence(
+          (col("pos_start") - 1).divide(windowSize).cast("long"),
+          (col("pos_end") - 1).divide(windowSize).cast("long"))).as("tile"),
+        col("pos_start"), col("pos_end"), col("coverage"))
+      .select(col("contig"), col("tile"),
+        (least(col("pos_end"), (col("tile") + 1) * windowSize)
+          - greatest(col("pos_start"), col("tile") * windowSize + 1) + 1)
+          .cast("long").multiply(col("coverage")).as("contrib"))
+      .groupBy(col("contig"), col("tile"))
+      .agg((sum(col("contrib")) / lit(windowSize.toDouble)).as("mean_coverage"))
+
+  private def tiles(df: DataFrame): Seq[Row] =
+    df.collect().toSeq.sortBy(r => (r.getString(0), r.getLong(1)))
+
+  test("windowed equals the blocks tiling exactly, with and without CIGARs") {
+    val withCigars = cigarReads(800, 11)
+    val solid = randomReads(400, 12)
+    for (w <- Seq(1, 7, 500, 1000); (name, reads) <- Seq("cigar" -> withCigars, "solid" -> solid)) {
+      val want = tiles(blocksTiling(reads, w))
+      assert(want.nonEmpty)
+      assert(tiles(CoverageOps.windowed(reads, w)) === want, s"$name reads, window $w")
+    }
+  }
+
+  test("windowed drops null-contig rows; null-bound and inverted reads cover nothing") {
+    val good = cigarReads(200, 31)
+    val junk = Seq(
+      Row(null, 10, 60, "51M"), Row(null, 10, 60, null),
+      Row("1", null, 60, "51M"), Row("1", null, 60, null),
+      Row("1", 10, null, "51M"), Row("1", 10, null, ""),
+      Row("2", 90, 40, null), Row("2", 90, 40, ""))
+    val noCigar = (df: DataFrame) => df.drop("cigar")
+    for (w <- Seq(7, 500); strip <- Seq(identity[DataFrame] _, noCigar)) {
+      val at = s"window $w, cigar column ${strip(good).columns.contains("cigar")}"
+      assert(tiles(CoverageOps.windowed(strip(good.unionAll(cigarFrame(junk))), w)) ===
+        tiles(CoverageOps.windowed(strip(good), w)), at)
+      assert(CoverageOps.windowed(strip(cigarFrame(junk)), w).isEmpty, at)
+    }
+  }
+
+  test("windowed submits no job when defined and plans one hash exchange on (contig, tile)") {
+    val reads = cigarReads(2000, 41)
+    val (_, jobs) = TestListeners.jobsIn(spark, "coverage-windowed-define")(
+      CoverageOps.windowed(reads, 500))
+    assert(jobs === 0, "defining windowed ran Spark jobs")
+    def shuffles(p: SparkPlan): Seq[ShuffleExchangeExec] = p.collect {
+      case s: ShuffleExchangeExec => Seq(s)
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case q: QueryStageExec => shuffles(q.plan)
+    }.flatten
+    for (aqe <- Seq("true", "false")) {
+      val old = spark.conf.get("spark.sql.adaptive.enabled")
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      try {
+        val df = CoverageOps.windowed(reads, 500)
+        df.collect()
+        val plan = df.queryExecution.executedPlan
+        val found = shuffles(plan)
+        assert(!found.exists(_.outputPartitioning.isInstanceOf[RangePartitioning]), s"AQE $aqe:\n$plan")
+        assert(found.map(_.outputPartitioning).collect {
+          case HashPartitioning(keys, _) => keys.collect { case a: Attribute => a.name }
+        } === Seq(Seq("contig", "tile")), s"AQE $aqe:\n$plan")
+      } finally spark.conf.set("spark.sql.adaptive.enabled", old)
+    }
   }
 
   test("callableLoci: gaps become NO_COVERAGE, adjacent same-status runs fuse") {

@@ -11,6 +11,13 @@ benchmark probe's `graftbench.span` local property shows that span id,
 and with --spans the span file written beside a benchmark result
 (`<run>.spans.jsonl`) turns it into the span's name and pass.
 
+The run's task slots are the cores of its executors (the log's
+executor-added events; `local[N]` gives N). A stage line shows its
+wall time (submission to completion), and one whose tasks were
+CPU-bound (CPU / run >= 0.8) but fewer than the slots is flagged when
+they ran at least 0.1 s: its work could have run on more cores. Every
+view ends with the list of flagged stages.
+
     python3 tools/stage_profile.py EVENTLOG [--spans RUN.spans.jsonl]
     python3 tools/stage_profile.py EVENTLOG --by span [--spans ...]
     python3 tools/stage_profile.py EVENTLOG --json
@@ -41,6 +48,8 @@ import sys
 FIELDS = ("tasks", "deser_s", "deser_cpu_s", "run_s", "cpu_s", "shuffle_write")
 TIMES = ("wall_s", "idle_s")
 SPAN_KEY = "graftbench.span"
+CPU_BOUND = 0.8
+MIN_RUN_S = 0.1
 
 
 def empty():
@@ -66,12 +75,25 @@ def log_lines(path):
 
 def read_log(path):
     """Jobs (id -> span id, stage ids, submission and completion in epoch
-    ms) and per-stage sums from one log."""
-    jobs, stages = {}, {}
+    ms), per-stage sums and the peak number of task slots (executor
+    cores) from one log."""
+    jobs, stages, cores = {}, {}, {}
+    slots = 0
     for line in log_lines(path):
         ev = json.loads(line)
         kind = ev.get("Event")
-        if kind == "SparkListenerJobStart":
+        if kind == "SparkListenerExecutorAdded":
+            cores[ev["Executor ID"]] = ev["Executor Info"].get("Total Cores", 0)
+            slots = max(slots, sum(cores.values()))
+        elif kind == "SparkListenerExecutorRemoved":
+            cores.pop(ev["Executor ID"], None)
+        elif kind == "SparkListenerStageCompleted":
+            info = ev["Stage Info"]
+            s = stages.setdefault(info["Stage ID"], {"name": info.get("Stage Name", ""),
+                                                     **empty()})
+            if info.get("Submission Time") and info.get("Completion Time"):
+                s["wall_s"] = (info["Completion Time"] - info["Submission Time"]) / 1e3
+        elif kind == "SparkListenerJobStart":
             props = ev.get("Properties") or {}
             jobs[ev["Job ID"]] = {"span": props.get(SPAN_KEY), "stages": ev["Stage IDs"],
                                   "start_ms": ev.get("Submission Time"), "end_ms": None}
@@ -92,7 +114,13 @@ def read_log(path):
             s["cpu_s"] += m.get("Executor CPU Time", 0) / 1e9
             s["shuffle_write"] += (m.get("Shuffle Write Metrics") or {}).get(
                 "Shuffle Bytes Written", 0)
-    return jobs, stages
+    return jobs, stages, slots
+
+
+def under_slots(s, slots):
+    """A CPU-bound stage that ran on fewer tasks than the run's slots."""
+    return (0 < s["tasks"] < slots and s["run_s"] >= MIN_RUN_S
+            and s["cpu_s"] / s["run_s"] >= CPU_BOUND)
 
 
 def read_spans(path):
@@ -186,15 +214,21 @@ def main():
     ap.add_argument("--by", choices=("stage", "span", "pass"), default="stage")
     ap.add_argument("--json", action="store_true")
     a = ap.parse_args()
-    jobs, stages = read_log(a.eventlog)
+    jobs, stages, slots = read_log(a.eventlog)
     spans = read_spans(a.spans) if a.spans else {}
     per_job = by_job(jobs, stages)
     total = empty()
-    for j in per_job.values():
+    flagged = []
+    for jid, j in per_job.items():
         add(total, j["total"])
+        for sid, s in j["stages"].items():
+            s["under_slots"] = under_slots(s, slots)
+            if s["under_slots"]:
+                flagged.append((jid, sid, s))
     if a.json:
-        print(json.dumps({"jobs": per_job, "total": total}, indent=1))
+        print(json.dumps({"slots": slots, "jobs": per_job, "total": total}, indent=1))
         return
+    print(f"task slots: {slots}")
     header = (f"{'':<44} {'tasks':>6} {'deser_s':>8} {'deser_cpu':>8} {'run_s':>8} "
               f"{'cpu_s':>8} {'off_cpu':>7} {'shuffle_w':>12}")
     if a.by in ("span", "pass"):
@@ -233,8 +267,14 @@ def main():
         for jid, j in per_job.items():
             print(row(f"job {jid} {span_label(j['span'], spans)}", j["total"], (j["wall_s"],)))
             for sid, s in j["stages"].items():
-                print(row(f"  stage {sid} {s['name']}", s))
+                flag = f" <{slots} slots" if s["under_slots"] else ""
+                print(row(f"  stage {sid} {s['name']}", s, (s.get("wall_s"),)) + flag)
     print(row("total", total))
+    print(f"CPU-bound stages (CPU/run >= {CPU_BOUND}) on fewer tasks than the {slots} "
+          f"task slots: {len(flagged)}")
+    for jid, sid, s in flagged:
+        label = f"  {span_label(per_job[jid]['span'], spans)} stage {sid} {s['name']}"
+        print(row(label, s, (s.get("wall_s"),)))
 
 
 if __name__ == "__main__":
